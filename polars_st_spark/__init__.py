@@ -13,8 +13,75 @@ over DataFrame columns), re-expressed Spark-first:
 - everything composes with normal Spark SQL (Catalyst optimizes around it)
 """
 
-def _maybe_prewarm_worker_arena() -> None:
-    """One-time malloc-arena retention setup inside PySpark worker processes.
+import os as _os
+import sys as _sys
+
+# Observable sentinel for tests: how many MiB the LAST arena set-up call
+# actually touched (0 when the touch is off or the process is a driver).
+# Asserting this instead of an absolute subprocess RSS makes the gating test
+# immune to ambient host load (the r7 flake: a 240 MB RSS threshold failed
+# at 619 MB under a concurrent Spark session, passed standalone).
+_prewarm_touched_mb = 0
+
+
+def _setup_worker_process() -> None:
+    """One-time set-up of a PySpark worker process, run when it imports the
+    package. A driver process returns at once: the single gate is
+    ``"pyspark.worker" in sys.modules``. In a worker it does two things:
+
+    1. :func:`_retain_malloc_arena` raises glibc's trim/mmap thresholds so
+       the batch kernels' large numpy temporaries recycle retained pages
+       instead of re-faulting fresh ones on every call.
+    2. :func:`_skip_unchanged_zip_rereads` stops every task from re-parsing
+       the central directory of each zip on the worker's import path.
+       PySpark calls ``importlib.invalidate_caches()`` at the start of every
+       task, and before CPython 3.12 each cached ``zipimporter`` then
+       re-reads its whole archive directory (``pyspark.zip`` alone has
+       1,328 entries and a dozen importers): 0.16-0.29 s per task, more
+       than most kernels here cost. After the patch an unchanged archive
+       costs one ``stat`` per importer per task and a rewritten one is
+       still re-read. On CPython 3.12 and later the invalidation is lazy
+       upstream (gh-103200), so this step does nothing there.
+
+    Both steps are idempotent; the hook may run again in the same process."""
+    if "pyspark.worker" not in _sys.modules:
+        return
+    _retain_malloc_arena()
+    _skip_unchanged_zip_rereads()
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimport.zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive's ``(st_ino, st_size, st_mtime_ns)``
+    differs from what that importer saw when it last read it. The first
+    call per importer still reads (its earlier read time is unknown), and an
+    archive that cannot be stat'ed is re-read on every call, as the stdlib
+    method does."""
+    if _sys.implementation.name != "cpython" or _sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_pst_stat_gated", False):
+        return
+
+    def invalidate_caches(self):
+        """Reload the file data of the archive path if the archive changed."""
+        try:
+            st = _os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        if key is None or self.__dict__.get("_pst_archive_key") != key:
+            reread(self)
+            self._pst_archive_key = key
+
+    invalidate_caches._pst_stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def _retain_malloc_arena() -> None:
+    """Malloc-arena retention inside a PySpark worker process.
 
     Two independent knobs, decoupled in r7 after per-stage accumulator
     profiling ("time to initialize Python workers") attributed a 75s/task
@@ -42,24 +109,12 @@ def _maybe_prewarm_worker_arena() -> None:
        instead, which the retained arena then holds). Re-enable for
        long-lived fixed-worker deployments via
        ``POLARS_ST_SPARK_PREWARM_MB`` (default 0)."""
-    import os
-    import sys
-
-    # Observable sentinel for tests: how many MiB the LAST call actually
-    # touched (0 when the touch is off/gated). Asserting this instead of an
-    # absolute subprocess RSS makes the gating test immune to ambient host
-    # load (the r7 flake: a 240 MB RSS threshold failed at 619 MB under a
-    # concurrent Spark session, passed standalone).
-    globals().setdefault("_prewarm_touched_mb", 0)
-
-    if "pyspark.worker" not in sys.modules:
-        return
     try:
-        thresh_mb = int(os.environ.get("POLARS_ST_SPARK_MALLOC_THRESH_MB", "512"))
+        thresh_mb = int(_os.environ.get("POLARS_ST_SPARK_MALLOC_THRESH_MB", "512"))
     except ValueError:
         thresh_mb = 512
     try:
-        mb = int(os.environ.get("POLARS_ST_SPARK_PREWARM_MB", "0"))
+        mb = int(_os.environ.get("POLARS_ST_SPARK_PREWARM_MB", "0"))
     except ValueError:
         mb = 0
     if thresh_mb > 0:
@@ -102,7 +157,7 @@ def _maybe_prewarm_worker_arena() -> None:
     globals()["_prewarm_touched_mb"] = mb
 
 
-_maybe_prewarm_worker_arena()
+_setup_worker_process()
 
 from polars_st_spark.frame import (
     geodataframe,

@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.geo.types import Geometry
 from polars_st_spark.geo.wkb import decode_batch, from_ewkb, to_ewkb
@@ -29,6 +29,7 @@ __all__ = [
     "spark_dt",
     "geom_arg",
     "arrow_series_udf",
+    "active_udf",
     "pa_binary_rows",
     "unary_geom",
     "unary_scalar",
@@ -135,6 +136,25 @@ def arrow_series_udf(ret):
         return udf
 
     return deco
+
+
+def active_udf(udf):
+    """``udf`` (a module-level UDF object) made safe to apply under the
+    active SparkContext. PySpark builds a UDF's JVM function once, under
+    the context that first applies it, and that function carries the
+    context's accumulator: after ``spark.stop()`` and a new session every
+    task would report to the stopped context's accumulator server (the
+    driver logs ``Failed to update accumulator ... Broken pipe``). Drop the
+    cached JVM function whenever the active context is not the one it was
+    built under; PySpark rebuilds it on the next application."""
+    from pyspark import SparkContext
+
+    u = getattr(udf, "_unwrapped", udf)
+    sc = SparkContext._active_spark_context
+    if u.__dict__.get("_pst_context") is not sc:
+        u._judf_placeholder = None
+        u._pst_context = sc
+    return udf
 
 
 def pa_binary_rows(flat: "np.ndarray", mask=None):

@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.functions.factory import (
     arrow_series_udf,

@@ -25,12 +25,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType, IntegerType, StringType
 
 from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
 from polars_st_spark.functions.factory import (
+    active_udf,
     arrow_series_udf,
     binary_scalar,
     col_or_lit,
@@ -97,7 +98,7 @@ def _geometry_type_udf(a):
 
 def st_geometry_type(col) -> Column:
     """Type name string (reference Enum, geometry.py:30; header-only parse)."""
-    return _geometry_type_udf(col_or_lit(col))
+    return active_udf(_geometry_type_udf)(col_or_lit(col))
 
 
 @arrow_udf(IntegerType())
@@ -110,7 +111,7 @@ def _srid_udf(a):
 
 def st_srid(col) -> Column:
     """(reference: functions.rs:433-435; header-only)"""
-    return _srid_udf(col_or_lit(col))
+    return active_udf(_srid_udf)(col_or_lit(col))
 
 
 @arrow_udf(spark_dt("boolean"))
@@ -130,11 +131,11 @@ def _has_m_meta_udf(a):
 
 
 def st_has_z(col) -> Column:
-    return _has_z_meta_udf(col_or_lit(col))
+    return active_udf(_has_z_meta_udf)(col_or_lit(col))
 
 
 def st_has_m(col) -> Column:
-    return _has_m_meta_udf(col_or_lit(col))
+    return active_udf(_has_m_meta_udf)(col_or_lit(col))
 
 
 @arrow_udf(spark_dt("int"))
@@ -148,7 +149,7 @@ def _coordinate_dimension_udf(a):
 
 def st_coordinate_dimension(col) -> Column:
     """2/3/4 from header flags (reference: functions.rs:427-431)."""
-    return _coordinate_dimension_udf(col_or_lit(col))
+    return active_udf(_coordinate_dimension_udf)(col_or_lit(col))
 
 
 def st_dimensions(col) -> Column:
@@ -239,11 +240,11 @@ def _y_udf(a):
 
 
 def st_x(col) -> Column:
-    return _x_udf(col_or_lit(col))
+    return active_udf(_x_udf)(col_or_lit(col))
 
 
 def st_y(col) -> Column:
-    return _y_udf(col_or_lit(col))
+    return active_udf(_y_udf)(col_or_lit(col))
 
 
 def st_z(col) -> Column:
@@ -322,7 +323,7 @@ def st_area(col) -> Column:
     numpy-vectorized shoelace path; mixed polygon batches (holes, varying
     vertex counts, multipolygons) take the ragged CSR path (geo/ragged.py) —
     per-row Python only for non-polygonal mixtures."""
-    return _area_udf(col_or_lit(col))
+    return active_udf(_area_udf)(col_or_lit(col))
 
 
 def _mixed_measure(s: pd.Series, which: str):
@@ -401,7 +402,7 @@ def _length_udf(a):
 def st_length(col) -> Column:
     """(reference: functions.rs:815-817). Vectorized for uniform ring batches
     and for ragged (Multi)LineString / (Multi)Polygon batches."""
-    return _length_udf(col_or_lit(col))
+    return active_udf(_length_udf)(col_or_lit(col))
 
 
 def st_distance(col, other) -> Column:
@@ -460,7 +461,7 @@ def st_distance(col, other) -> Column:
 
         c1, c2 = col_or_lit(col), col_or_lit(other_g)
         fused = fuse.apply_pair(_distance_pair_udf, "double", c1, c2)
-        return fused if fused is not None else _distance_pair_udf(c1, c2)
+        return fused if fused is not None else active_udf(_distance_pair_udf)(c1, c2)
     udf, oc = binary_scalar(algos.distance, "double", other_g)
     return udf(col_or_lit(col)) if oc is None else udf(col_or_lit(col), oc)
 
@@ -623,7 +624,7 @@ def _bounds_udf(a):
 
 
 def _bounds_udf_builder():
-    return _bounds_udf
+    return active_udf(_bounds_udf)
 
 
 def st_bounds(col) -> Column:

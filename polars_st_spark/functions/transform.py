@@ -13,7 +13,6 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
 
 from polars_st_spark.functions.factory import (
     arrow_series_udf,

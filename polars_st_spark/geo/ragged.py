@@ -3329,9 +3329,12 @@ def convex_hull_rows(coords: np.ndarray, row_start: np.ndarray, n: int):
 
     def half_chains(ascending: bool):
         """Scalar `half()` for every multi row at once. Returns per-row
-        (stack xs, stack ys CSR buffer, tops)."""
-        sx = np.empty(int(mcnt.sum()))
-        sy = np.empty(int(mcnt.sum()))
+        (stack xs, stack ys CSR buffer, tops). The stacks start zeroed:
+        the cross product is evaluated for every live row before the
+        ``can`` mask, so a row holding fewer than two points reads slots
+        nothing has written yet, and those must hold finite values."""
+        sx = np.zeros(int(mcnt.sum()))
+        sy = np.zeros(int(mcnt.sum()))
         top = np.zeros(M, dtype=np.int64)
         if ascending:
             ip = start[:-1][multi].copy()

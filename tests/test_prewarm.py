@@ -17,7 +17,7 @@ def test_prewarm_skips_outside_worker():
     # this test process is a driver: pyspark.worker is not in sys.modules,
     # so calling the hook must be a cheap no-op (no mallopt, no allocation)
     assert "pyspark.worker" not in sys.modules
-    st._maybe_prewarm_worker_arena()  # returns without side effects
+    st._setup_worker_process()  # returns without side effects
 
 
 def test_prewarm_runs_in_worker_context():
@@ -44,20 +44,20 @@ def test_prewarm_runs_in_worker_context():
         "import polars_st_spark as st\n"  # import-time hook fires (defaults)
         "assert st._prewarm_touched_mb == 0, "
         "f'eager touch ran by default: {st._prewarm_touched_mb} MiB'\n"
-        "st._maybe_prewarm_worker_arena()\n"  # idempotent when called again
+        "st._setup_worker_process()\n"  # idempotent when called again
         "assert st._prewarm_touched_mb == 0\n"
         "print('default-off-ok')\n"
         # opt-in: the sentinel reports the touch (set only after the write
         # loop completed over the full mb-MiB buffer)
         "before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024\n"
         "os.environ['POLARS_ST_SPARK_PREWARM_MB'] = '64'\n"
-        "st._maybe_prewarm_worker_arena()\n"
+        "st._retain_malloc_arena()\n"
         "after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024\n"
         "assert st._prewarm_touched_mb == 64, st._prewarm_touched_mb\n"
         "print('optin-ok', round(after - before, 1))\n"
         # disabled again via env: sentinel resets to 0
         "os.environ['POLARS_ST_SPARK_PREWARM_MB'] = '0'\n"
-        "st._maybe_prewarm_worker_arena()\n"
+        "st._retain_malloc_arena()\n"
         "assert st._prewarm_touched_mb == 0\n"
         "print('reset-ok')\n"
     )
@@ -72,10 +72,13 @@ def test_prewarm_runs_in_worker_context():
 
 def test_prewarm_env_disable(monkeypatch):
     # MALLOC_THRESH_MB=0 skips mallopt and PREWARM_MB<=0 skips the touch,
-    # so calling the hook in a fake worker context is safe in-process
-    monkeypatch.setitem(sys.modules, "pyspark.worker", sys)
+    # so the arena step is safe to call in-process. It is called directly,
+    # not through the worker gate, which would also patch this process's
+    # zipimport (see tests/test_zip_dir_cache.py).
     monkeypatch.setenv("POLARS_ST_SPARK_MALLOC_THRESH_MB", "0")
     monkeypatch.setenv("POLARS_ST_SPARK_PREWARM_MB", "0")
-    st._maybe_prewarm_worker_arena()  # fully disabled: no-op
+    st._retain_malloc_arena()  # fully disabled: no-op
+    assert st._prewarm_touched_mb == 0
     monkeypatch.setenv("POLARS_ST_SPARK_PREWARM_MB", "-5")
-    st._maybe_prewarm_worker_arena()  # negative: no-op
+    st._retain_malloc_arena()  # negative: no-op
+    assert st._prewarm_touched_mb == 0

@@ -1766,6 +1766,46 @@ def test_convex_hull_batch_bit_parity():
             assert g_ == to_ewkb(A.convex_hull(from_ewkb(b)))
 
 
+def test_convex_hull_batch_reads_no_unset_memory(monkeypatch):
+    """The monotone-chain stacks are read for rows holding fewer than two
+    points (the result is masked afterwards). With np.empty stacks those
+    reads hit leftover bits and warned "invalid value encountered in
+    subtract" on every worker batch. Float np.empty buffers are filled with
+    inf here, so any read of an unset slot warns, and warnings are errors;
+    the bytes must still equal the per-row hull."""
+    import warnings
+
+    bufs = []
+    for i in range(400):
+        cx, cy = i % 20 + 0.5, i // 20 + 0.5
+        if i % 2:  # holed regular n-gon, 5-12 shell vertices
+            t = np.linspace(0, 2 * np.pi, 5 + i % 8, endpoint=False)
+            shell = np.column_stack([cx + 0.4 * np.cos(t), cy + 0.4 * np.sin(t)])
+            hole = np.array([[cx - .1, cy - .1], [cx - .1, cy + .1],
+                             [cx + .1, cy + .1], [cx + .1, cy - .1]])
+            rings = [np.vstack([shell, shell[:1]]), np.vstack([hole, hole[:1]])]
+        else:  # axis rectangle
+            r = np.array([[cx, cy], [cx + .3, cy], [cx + .3, cy + .2], [cx, cy + .2]])
+            rings = [np.vstack([r, r[:1]])]
+        bufs.append(to_ewkb(Geometry(GeometryType.Polygon, rings=rings)))
+    vals = np.array(bufs, dtype=object)
+    want = [to_ewkb(algos.convex_hull(from_ewkb(b))) for b in bufs]
+
+    empty = np.empty
+
+    def poisoned(shape, dtype=float, *args, **kwargs):
+        out = empty(shape, dtype, *args, **kwargs)
+        if out.dtype.kind == "f":
+            out.fill(np.inf)
+        return out
+
+    monkeypatch.setattr(np, "empty", poisoned)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = ragged.convex_hull_batch(vals)
+    assert got == want
+
+
 def test_simplify_hull_spark_surface(spark):
     """st_simplify / st_convex_hull batch paths through the Spark column
     surface, mixed with nulls."""
