@@ -16,13 +16,6 @@ over DataFrame columns), re-expressed Spark-first:
 import os as _os
 import sys as _sys
 
-# Observable sentinel for tests: how many MiB the LAST arena set-up call
-# actually touched (0 when the touch is off or the process is a driver).
-# Asserting this instead of an absolute subprocess RSS makes the gating test
-# immune to ambient host load (the r7 flake: a 240 MB RSS threshold failed
-# at 619 MB under a concurrent Spark session, passed standalone).
-_prewarm_touched_mb = 0
-
 
 def _setup_worker_process() -> None:
     """One-time set-up of a PySpark worker process, run when it imports the
@@ -83,78 +76,33 @@ def _skip_unchanged_zip_rereads() -> None:
 def _retain_malloc_arena() -> None:
     """Malloc-arena retention inside a PySpark worker process.
 
-    Two independent knobs, decoupled in r7 after per-stage accumulator
-    profiling ("time to initialize Python workers") attributed a 75s/task
-    worker-init storm to the old coupled default:
-
-    1. **Retention thresholds (the load-bearing part, always on).** Raising
-       M_TRIM_THRESHOLD / M_MMAP_THRESHOLD makes glibc serve the batch
-       kernels' large numpy temporaries from the retained brk arena instead
-       of fresh mmaps, so first-touch faults are paid ONCE per worker
-       lifetime instead of once per call — on virtualized hosts a fresh
-       anonymous page faults at ~50-100x its steady price (measured here:
-       a 600k-row relate sweep 13.2s with per-call mmap churn vs 3.1s with
-       a retained arena). Costs nothing at startup. Tunable via
-       ``POLARS_ST_SPARK_MALLOC_THRESH_MB`` (default 512; 0 disables).
-
-    2. **Eager page touch (OFF by default since r7).** Touching N MiB at
-       import moves the arena's first-touch faults into worker startup.
-       That looked free when one long-lived session amortized it, but it
-       is quadratically wrong at session/worker spawn: local[32] forks 32
-       workers that each touch eagerly and CONCURRENTLY, and the
-       hypervisor's page-backing path serializes under that load —
-       measured r7: 256 MiB x 32 workers = 74.5s PER TASK of
-       "time to initialize Python workers" (a 222s first query; 5.2s with
-       the touch off; the kernels re-fault lazily at ~their own data size
-       instead, which the retained arena then holds). Re-enable for
-       long-lived fixed-worker deployments via
-       ``POLARS_ST_SPARK_PREWARM_MB`` (default 0)."""
+    Raising M_TRIM_THRESHOLD / M_MMAP_THRESHOLD makes glibc serve the batch
+    kernels' large numpy temporaries from the retained brk arena instead of
+    fresh mmaps, so first-touch faults are paid ONCE per worker lifetime
+    instead of once per call — on virtualized hosts a fresh anonymous page
+    faults at ~50-100x its steady price (measured: a 600k-row relate sweep
+    13.2s with per-call mmap churn vs 3.1s with a retained arena). Costs
+    nothing at startup. Tunable via ``POLARS_ST_SPARK_MALLOC_THRESH_MB``
+    (default 512; 0 disables)."""
     try:
         thresh_mb = int(_os.environ.get("POLARS_ST_SPARK_MALLOC_THRESH_MB", "512"))
     except ValueError:
         thresh_mb = 512
-    try:
-        mb = int(_os.environ.get("POLARS_ST_SPARK_PREWARM_MB", "0"))
-    except ValueError:
-        mb = 0
-    if thresh_mb > 0:
-        # Couple the retention floor to an enabled eager touch: if the touch
-        # buffer (mb MiB) exceeded M_MMAP_THRESHOLD it would be served by
-        # mmap and munmapped on free — a silently ineffective prewarm. Keep
-        # the thresholds at >= 2x the touch size so the buffer stays in (and
-        # seeds) the retained brk arena.
-        if mb > 0:
-            thresh_mb = max(thresh_mb, 2 * mb)
-        try:
-            import ctypes
-
-            libc = ctypes.CDLL("libc.so.6")
-            # mallopt takes C ints: clamp so big values can't overflow
-            # (ctypes would raise, the except would swallow it, and the
-            # retention thresholds would silently stay at defaults).
-            libc.mallopt.argtypes = (ctypes.c_int, ctypes.c_int)
-            thresh = min(thresh_mb * 1024 * 1024, 2**31 - 1)
-            libc.mallopt(-1, thresh)  # M_TRIM_THRESHOLD
-            libc.mallopt(-3, thresh)  # M_MMAP_THRESHOLD
-        except Exception:
-            pass  # non-glibc platform: retention is a no-op
-    elif mb > 0:
-        import warnings
-
-        warnings.warn(
-            "POLARS_ST_SPARK_PREWARM_MB is set but retention is disabled "
-            "(POLARS_ST_SPARK_MALLOC_THRESH_MB=0): the touched buffer will "
-            "be munmapped on free, making the prewarm ineffective."
-        )
-    globals()["_prewarm_touched_mb"] = 0
-    if mb <= 0:
+    if thresh_mb <= 0:
         return
-    import numpy as _np
+    try:
+        import ctypes
 
-    buf = _np.empty(mb * 131072, dtype=_np.float64)  # mb MiB
-    buf[::512] = 1.0  # one write per 4 KiB page
-    del buf
-    globals()["_prewarm_touched_mb"] = mb
+        libc = ctypes.CDLL("libc.so.6")
+        # mallopt takes C ints: clamp so big values can't overflow
+        # (ctypes would raise, the except would swallow it, and the
+        # retention thresholds would silently stay at defaults).
+        libc.mallopt.argtypes = (ctypes.c_int, ctypes.c_int)
+        thresh = min(thresh_mb * 1024 * 1024, 2**31 - 1)
+        libc.mallopt(-1, thresh)  # M_TRIM_THRESHOLD
+        libc.mallopt(-3, thresh)  # M_MMAP_THRESHOLD
+    except Exception:
+        pass  # non-glibc platform: retention is a no-op
 
 
 _setup_worker_process()

@@ -51,10 +51,11 @@ def union_series(s: pd.Series, grid_size: float | None = None) -> bytes:
     (``operators.grouped.union_all_two_phase``) runs the IDENTICAL code
     path (including the uniform axis-rect slab-union fast lane)."""
     from polars_st_spark.geo.rectregion import RectRegion, region_to_geometry
-    from polars_st_spark.geo.wkb import batch_uniform, header_info
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.wkb import header_info
 
     if len(s) and not s.isna().any():
-        fast = batch_uniform(s)
+        fast = uniform_batch_pa(s)
         if fast is not None and fast[0] == "ring" and fast[2]:
             c = fast[1]
             boxes = zip(

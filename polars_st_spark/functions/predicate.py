@@ -31,7 +31,7 @@ from polars_st_spark.geo import predicates as P
 from polars_st_spark.geo import ragged as RG
 from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 from polars_st_spark.geo.types import Geometry, GeometryType
-from polars_st_spark.geo.wkb import batch_uniform, from_ewkb, to_ewkb
+from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
 
 __all__ = [
     "st_intersects", "st_disjoint", "st_within", "st_contains",
@@ -43,7 +43,7 @@ __all__ = [
 
 
 def _as_boxes(fast):
-    """(x0, y0, x1, y1, is_point) from a batch_uniform result, or None."""
+    """(x0, y0, x1, y1, is_point) from a uniform_batch_pa result, or None."""
     if fast is None:
         return None
     if fast[0] == "point2d":
@@ -230,8 +230,8 @@ def _relate_fill(res, dec, fn, s1, s2, name, sA, sB) -> pd.Series:
         # rect×rect contact rows: closed-form DE-9IM (r11) — the exact
         # shape CSR containment/touch kernels leave undecided in
         # coverage-topology joins (shared edges/corners)
-        fa_ = batch_uniform(bA)
-        fb_ = batch_uniform(bB) if fa_ is not None else None
+        fa_ = uniform_batch_pa(bA)
+        fb_ = uniform_batch_pa(bB) if fa_ is not None else None
         if (fa_ is not None and fa_[0] == "ring" and fa_[2]
                 and fb_ is not None and fb_[0] == "ring" and fb_[2]):
             rr = _rect_relate_mats(_as_boxes(fa_), _as_boxes(fb_))
@@ -342,9 +342,9 @@ def _pair_udf(name: str, fn, ret="boolean"):
             and not s2.isna().any()
         ):
             if fa is None:
-                fa = batch_uniform(s1)
+                fa = uniform_batch_pa(s1)
             if fb is None:
-                fb = batch_uniform(s2)
+                fb = uniform_batch_pa(s2)
             if name in _FAST_NAMES and fa is not None and fb is not None:
                 A = _as_boxes(fa)
                 B = _as_boxes(fb) if A is not None else None
@@ -421,7 +421,7 @@ def _mk(name: str, fn, ret="boolean"):
             def eval1_pd(s: pd.Series, fast=None) -> pd.Series:
                 if (B_const is not None or loc_ok) and not s.isna().any():
                     if fast is None:
-                        fast = batch_uniform(s)
+                        fast = uniform_batch_pa(s)
                     if B_const is not None and fast is not None:
                         A = _as_boxes(fast)
                         if A is not None:
@@ -612,9 +612,9 @@ def _relate_matrices(s1: pd.Series, s2: pd.Series, fa=None, fb=None):
     parity; undecided rows need the per-row DE-9IM kernel."""
     n = len(s1)
     if fa is None:
-        fa = batch_uniform(s1)
+        fa = uniform_batch_pa(s1)
     if fb is None:
-        fb = batch_uniform(s2)
+        fb = uniform_batch_pa(s2)
     a_pt = fa is not None and fa[0] == "point2d"
     b_pt = fb is not None and fb[0] == "point2d"
     if a_pt and b_pt:
@@ -790,7 +790,7 @@ def _dwithin_impl(col, other, distance: float) -> Column:
         @arrow_series_udf("boolean")
         def udf1(s: pd.Series) -> pd.Series:
             if B_const is not None and B_const[4] and not s.isna().any():
-                A = _as_boxes(batch_uniform(s))
+                A = _as_boxes(uniform_batch_pa(s))
                 if A is not None and A[4]:
                     d = np.sqrt((A[0] - B_const[0]) ** 2 + (A[1] - B_const[1]) ** 2)
                     return pd.Series(d < distance)
@@ -819,8 +819,8 @@ def _dwithin_pair_udf(distance: float):
     @arrow_series_udf("boolean")
     def udf2(s1: pd.Series, s2: pd.Series) -> pd.Series:
         if len(s1) and not s1.isna().any() and not s2.isna().any():
-            fa = batch_uniform(s1)
-            fb = batch_uniform(s2)
+            fa = uniform_batch_pa(s1)
+            fb = uniform_batch_pa(s2)
             A = _as_boxes(fa)
             B = _as_boxes(fb) if A is not None else None
             if A is not None and B is not None and A[4] and B[4]:

@@ -44,13 +44,7 @@ from polars_st_spark.geo import geojson as _gj
 from polars_st_spark.geo import ragged
 from polars_st_spark.geo import wkt as _wkt
 from polars_st_spark.geo.types import GEOMETRY_TYPE_NAMES, Geometry, GeometryType
-from polars_st_spark.geo.wkb import (
-    batch_uniform,
-    ewkb_to_points,
-    from_ewkb,
-    header_info,
-    to_ewkb,
-)
+from polars_st_spark.geo.wkb import from_ewkb, header_info, to_ewkb
 
 __all__ = [
     "st_geometry_type", "st_srid", "st_has_z", "st_has_m",
@@ -180,11 +174,11 @@ def _coord_accessor(idx: int, needs_flag: str | None = None):
 
 # module-level UDF instances (constructed once, reused by every expression;
 # also the registrable objects behind register_sql_functions — sqlreg.py).
-# r11: the hot scalar UDFs are Spark 4.1 ``arrow_udf``s — the fast lane
-# parses the Arrow buffers zero-copy (geo/arrowwkb.uniform_batch_pa), and
-# only batches outside the uniform envelope pay the pandas bytes-object
-# materialization via the unchanged fallback bodies (guide §4.2: same
-# kernels, cheaper boundary; results identical, NaN→NULL preserved).
+# The hot scalar UDFs are Spark 4.1 ``arrow_udf``s that read the Arrow
+# batch directly: the uniform parser (geo/arrowwkb.uniform_batch_pa), then
+# the ragged CSR scanners (geo/ragged.py), then the family split for mixed
+# batches — all over the Arrow buffers. Only rows no batch lane takes are
+# materialized as bytes, for the per-row kernel (NaN→NULL preserved).
 
 
 def _double_out(vals: np.ndarray, mask=None):
@@ -197,46 +191,29 @@ def _double_out(vals: np.ndarray, mask=None):
     return pa.array(vals, type=pa.float64(), mask=nanm if nanm.any() else None)
 
 
-def _pd_out(series: pd.Series, pa_type):
-    import pyarrow as pa
-
-    return pa.Array.from_pandas(series, type=pa_type)
-
-
-def _x_pd(s: pd.Series) -> pd.Series:
-    fast = ewkb_to_points([b if b is not None else None for b in s]) if s.notna().all() else None
-    if fast is not None:
-        return pd.Series(fast[0])
-    acc = _coord_accessor(0)
-    return pd.Series([None if b is None else acc(from_ewkb(bytes(b))) for b in s], dtype=object)
-
-
-def _y_pd(s: pd.Series) -> pd.Series:
-    fast = ewkb_to_points([b if b is not None else None for b in s]) if s.notna().all() else None
-    if fast is not None:
-        return pd.Series(fast[1])
-    acc = _coord_accessor(1)
-    return pd.Series([None if b is None else acc(from_ewkb(bytes(b))) for b in s], dtype=object)
+def _per_row_double(fn, *arrs):
+    """The per-row kernel ``fn`` over the decoded rows of one or two binary
+    arrays → float64 Arrow; a null input row or a NaN result gives NULL."""
+    rows = zip(*(x.to_pylist() for x in arrs))
+    return _double_out(np.array(
+        [np.nan if None in r else fn(*map(from_ewkb, r)) for r in rows],
+        dtype=np.float64))
 
 
 @arrow_udf(DoubleType())
 def _x_udf(a):
-    import pyarrow as pa
-
     fast = uniform_batch_pa(a)
     if fast is not None and fast[0] == "point2d":
         return _double_out(np.ascontiguousarray(fast[1]))
-    return _pd_out(_x_pd(a.to_pandas()), pa.float64())
+    return _per_row_double(_coord_accessor(0), a)
 
 
 @arrow_udf(DoubleType())
 def _y_udf(a):
-    import pyarrow as pa
-
     fast = uniform_batch_pa(a)
     if fast is not None and fast[0] == "point2d":
         return _double_out(np.ascontiguousarray(fast[2]))
-    return _pd_out(_y_pd(a.to_pandas()), pa.float64())
+    return _per_row_double(_coord_accessor(1), a)
 
 
 def st_x(col) -> Column:
@@ -270,32 +247,6 @@ def _with_nulls(vals: np.ndarray, null_mask: np.ndarray) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def _area_pd(s: pd.Series) -> pd.Series:
-    fast = batch_uniform(s) if not s.isna().any() else None
-    if fast is not None:
-        if fast[0] == "point2d":
-            return pd.Series(np.zeros(len(s)))
-        if fast[0] == "ring":
-            c = fast[1]
-            # translate to each ring's first vertex (same cancellation
-            # robustness as the scalar _ring_signed_area)
-            x = c[:, :, 0] - c[:, :1, 0]
-            y = c[:, :, 1] - c[:, :1, 1]
-            a = 0.5 * np.abs(
-                np.sum(x * np.roll(y, -1, axis=1) - np.roll(x, -1, axis=1) * y, axis=1)
-            )
-            return pd.Series(a)
-    rp = ragged.parse_polygonal(s)
-    if rp is not None:
-        return _with_nulls(ragged.area(rp), rp.null_mask)
-    mixed = _mixed_measure(s, "area")
-    if mixed is not None:
-        return mixed
-    return pd.Series(
-        [None if b is None else algos.area(from_ewkb(bytes(b))) for b in s], dtype=object
-    )
-
-
 @arrow_udf(DoubleType())
 def _area_udf(a):
     import pyarrow as pa
@@ -305,17 +256,21 @@ def _area_udf(a):
         if fast[0] == "point2d":
             return pa.array(np.zeros(len(a)), type=pa.float64())
         c = fast[1]
-        # identical arithmetic (and order) to the pandas ring fast path
+        # translate to each ring's first vertex (same cancellation
+        # robustness as the scalar _ring_signed_area)
         x = c[:, :, 0] - c[:, :1, 0]
         y = c[:, :, 1] - c[:, :1, 1]
         v = 0.5 * np.abs(
             np.sum(x * np.roll(y, -1, axis=1) - np.roll(x, -1, axis=1) * y, axis=1)
         )
         return _double_out(v)
-    rp = ragged.parse_polygonal_pa(a)
+    rp = ragged.parse_polygonal(a)
     if rp is not None:
         return _double_out(ragged.area(rp), mask=rp.null_mask)
-    return _pd_out(_area_pd(a.to_pandas()), pa.float64())
+    mixed = _mixed_measure(a, "area")
+    if mixed is not None:
+        return mixed
+    return _per_row_double(algos.area, a)
 
 
 def st_area(col) -> Column:
@@ -326,57 +281,33 @@ def st_area(col) -> Column:
     return active_udf(_area_udf)(col_or_lit(col))
 
 
-def _mixed_measure(s: pd.Series, which: str):
+def _mixed_measure(a, which: str):
     """Mixed-family batches (points interleaved with polygons/lines): split
     by a vectorized header scan and route each family through its ragged
     kernel — points/multipoints contribute 0 to area/length. Returns None
     (caller falls back) when the batch has collections/Z/M rows or a
     family-subset parse fails."""
-    vals = s.to_numpy()
-    fam = ragged.split_families(vals)
+    fam = ragged.split_families(a)
     if fam is None:
         return None
     n_fams = sum(1 for k in ("line", "poly") if len(fam[k]))
     n_fams += 1 if (len(fam["point"]) or len(fam["mpoint"])) else 0
     if n_fams < 2:
         return None  # homogeneous: the dedicated paths already handle it
-    out = np.zeros(len(vals))
+    out = np.zeros(len(a))
     if len(fam["poly"]):
-        rp = ragged.parse_polygonal([vals[i] for i in fam["poly"]])
+        rp = ragged.parse_polygonal(a.take(fam["poly"]))
         if rp is None:
             return None
         out[fam["poly"]] = ragged.area(rp) if which == "area" else ragged.perimeter(rp)
     if which == "length" and len(fam["line"]):
-        rl = ragged.parse_lineal([vals[i] for i in fam["line"]])
+        rl = ragged.parse_lineal(a.take(fam["line"]))
         if rl is None:
             return None
         out[fam["line"]] = ragged.length(rl)
-    null_mask = np.zeros(len(vals), dtype=bool)
+    null_mask = np.zeros(len(a), dtype=bool)
     null_mask[fam["null"]] = True
-    return _with_nulls(out, null_mask)
-
-
-def _length_pd(s: pd.Series) -> pd.Series:
-    fast = batch_uniform(s) if not s.isna().any() else None
-    if fast is not None:
-        if fast[0] == "point2d":
-            return pd.Series(np.zeros(len(s)))
-        if fast[0] == "ring":
-            c = fast[1]
-            d = np.diff(c, axis=1)
-            return pd.Series(np.sqrt((d * d).sum(axis=2)).sum(axis=1))
-    rl = ragged.parse_lineal(s)
-    if rl is not None:
-        return _with_nulls(ragged.length(rl), rl.null_mask)
-    rp = ragged.parse_polygonal(s)
-    if rp is not None:
-        return _with_nulls(ragged.perimeter(rp), rp.null_mask)
-    mixed = _mixed_measure(s, "length")
-    if mixed is not None:
-        return mixed
-    return pd.Series(
-        [None if b is None else algos.length(from_ewkb(bytes(b))) for b in s], dtype=object
-    )
+    return _double_out(out, mask=null_mask)
 
 
 @arrow_udf(DoubleType())
@@ -390,13 +321,16 @@ def _length_udf(a):
         c = fast[1]
         d = np.diff(c, axis=1)
         return _double_out(np.sqrt((d * d).sum(axis=2)).sum(axis=1))
-    rl = ragged.parse_lineal_pa(a)
+    rl = ragged.parse_lineal(a)
     if rl is not None:
         return _double_out(ragged.length(rl), mask=rl.null_mask)
-    rp = ragged.parse_polygonal_pa(a)
+    rp = ragged.parse_polygonal(a)
     if rp is not None:
         return _double_out(ragged.perimeter(rp), mask=rp.null_mask)
-    return _pd_out(_length_pd(a.to_pandas()), pa.float64())
+    mixed = _mixed_measure(a, "length")
+    if mixed is not None:
+        return mixed
+    return _per_row_double(algos.length, a)
 
 
 def st_length(col) -> Column:
@@ -416,10 +350,9 @@ def st_distance(col, other) -> Column:
 
         @arrow_series_udf("double")
         def udf_fast(s: pd.Series) -> pd.Series:
-            if not s.isna().any():
-                fast = batch_uniform(s)
-                if fast is not None and fast[0] == "point2d":
-                    return pd.Series(np.sqrt((fast[1] - qx) ** 2 + (fast[2] - qy) ** 2))
+            fast = uniform_batch_pa(s)
+            if fast is not None and fast[0] == "point2d":
+                return pd.Series(np.sqrt((fast[1] - qx) ** 2 + (fast[2] - qy) ** 2))
             rp = ragged.parse_polygonal(s)
             if rp is not None:
                 n = len(s)
@@ -444,12 +377,11 @@ def st_distance(col, other) -> Column:
 
         @arrow_series_udf("double")
         def udf_pts(s: pd.Series) -> pd.Series:
-            if not s.isna().any():
-                fast = batch_uniform(s)
-                if fast is not None and fast[0] == "point2d":
-                    d = ragged.const_polygon_distance(g2, fast[1], fast[2])
-                    if d is not None:
-                        return pd.Series(d)
+            fast = uniform_batch_pa(s)
+            if fast is not None and fast[0] == "point2d":
+                d = ragged.const_polygon_distance(g2, fast[1], fast[2])
+                if d is not None:
+                    return pd.Series(d)
             return pd.Series(
                 [None if b is None else algos.distance(from_ewkb(bytes(b)), g2) for b in s],
                 dtype=object,
@@ -470,59 +402,42 @@ def st_distance(col, other) -> Column:
 # can register the identical vectorized UDF): row-paired point×point,
 # point×ragged-polygon (either direction, inside→0), point×ragged-line,
 # and geometry×geometry via the pairs_distance candidate sweep.
-# r11: arrow_udf wrapper — the dominant point×point case runs zero-copy.
-def _distance_pair_pd(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        if len(s1) and not s1.isna().any() and not s2.isna().any():
-            fa = batch_uniform(s1)
-            fb = batch_uniform(s2)
-            a_pt = fa is not None and fa[0] == "point2d"
-            b_pt = fb is not None and fb[0] == "point2d"
-            if a_pt and b_pt:
-                return pd.Series(np.hypot(fa[1] - fb[1], fa[2] - fb[2]))
-            for pt, other_s in ((fa, s2), (fb, s1)) if (a_pt or b_pt) else ():
-                if pt is None or pt[0] != "point2d":
-                    continue
-                rp = ragged.parse_polygonal(other_s)
-                if rp is not None:
-                    return pd.Series(ragged.distance_to_points(rp, pt[1], pt[2]))
-                rl = ragged.parse_lineal(other_s)
-                if rl is not None:
-                    return pd.Series(
-                        ragged.distance_lines_to_points(rl, pt[1], pt[2]))
-                break
-            if not (a_pt or b_pt):
-                # geometry×geometry pairs (r4e): intersects -> 0, else
-                # the scalar candidate set vectorized (pairs_distance)
-                pa = ragged.parse_polygonal(s1)
-                if pa is None:
-                    pa = ragged.parse_lineal(s1)
-                pb = None
-                if pa is not None:
-                    pb = ragged.parse_polygonal(s2)
-                    if pb is None:
-                        pb = ragged.parse_lineal(s2)
-                if pa is not None and pb is not None:
-                    d = ragged.pairs_distance(pa, pb)
-                    if d is not None:
-                        return pd.Series(d)  # NaN -> NULL at Arrow
-        return pd.Series(
-            [None if (a is None or b is None)
-             else algos.distance(from_ewkb(bytes(a)), from_ewkb(bytes(b)))
-             for a, b in zip(s1, s2)],
-            dtype=object,
-        )
-
-
 @arrow_udf(DoubleType())
 def _distance_pair_udf(a1, a2):
-    import pyarrow as pa
-
-    fa = uniform_batch_pa(a1)
-    if fa is not None and fa[0] == "point2d":
+    if len(a1) and not a1.null_count and not a2.null_count:
+        fa = uniform_batch_pa(a1)
         fb = uniform_batch_pa(a2)
-        if fb is not None and fb[0] == "point2d":
+        a_pt = fa is not None and fa[0] == "point2d"
+        b_pt = fb is not None and fb[0] == "point2d"
+        if a_pt and b_pt:
             return _double_out(np.hypot(fa[1] - fb[1], fa[2] - fb[2]))
-    return _pd_out(_distance_pair_pd(a1.to_pandas(), a2.to_pandas()), pa.float64())
+        for pt, other in ((fa, a2), (fb, a1)) if (a_pt or b_pt) else ():
+            if pt is None or pt[0] != "point2d":
+                continue
+            rp = ragged.parse_polygonal(other)
+            if rp is not None:
+                return _double_out(ragged.distance_to_points(rp, pt[1], pt[2]))
+            rl = ragged.parse_lineal(other)
+            if rl is not None:
+                return _double_out(
+                    ragged.distance_lines_to_points(rl, pt[1], pt[2]))
+            break
+        if not (a_pt or b_pt):
+            # geometry×geometry pairs (r4e): intersects -> 0, else the
+            # scalar candidate set vectorized (pairs_distance)
+            ra = ragged.parse_polygonal(a1)
+            if ra is None:
+                ra = ragged.parse_lineal(a1)
+            rb = None
+            if ra is not None:
+                rb = ragged.parse_polygonal(a2)
+                if rb is None:
+                    rb = ragged.parse_lineal(a2)
+            if ra is not None and rb is not None:
+                d = ragged.pairs_distance(ra, rb)
+                if d is not None:
+                    return _double_out(d)
+    return _per_row_double(algos.distance, a1, a2)
 
 
 def st_hausdorff_distance(col, other, densify: float | None = None) -> Column:
@@ -551,32 +466,6 @@ def st_project(col, other, normalized: bool = False) -> Column:
     return udf(col_or_lit(col)) if oc is None else udf(col_or_lit(col), oc)
 
 
-def _bounds_pd(s: pd.Series) -> pd.Series:
-    fast = batch_uniform(s) if not s.isna().any() else None
-    if fast is not None:
-        if fast[0] == "point2d":
-            x, y = fast[1], fast[2]
-            return pd.Series([[xi, yi, xi, yi] for xi, yi in zip(x, y)])
-        if fast[0] == "ring":
-            c = fast[1]
-            b = np.stack(
-                [c[:, :, 0].min(axis=1), c[:, :, 1].min(axis=1),
-                 c[:, :, 0].max(axis=1), c[:, :, 1].max(axis=1)], axis=1,
-            )
-            return pd.Series(list(b))
-    rg = (ragged.parse_polygonal(s) or ragged.parse_lineal(s)
-          or ragged.parse_multipoints(s))
-    if rg is not None:
-        return _with_nulls(ragged.bounds(rg), rg.null_mask)
-    mixed = _mixed_bounds(s)
-    if mixed is not None:
-        return mixed
-    return pd.Series(
-        [None if b is None else list(from_ewkb(bytes(b)).bounds()) for b in s],
-        dtype=object,
-    )
-
-
 def _bounds_list_out(mat: np.ndarray, null_rows: np.ndarray | None = None):
     """(n, 4) float64 → Arrow list<double> with 4 values per row, one
     vectorized construction (no per-row Python lists). NaN elements become
@@ -602,8 +491,6 @@ def _bounds_list_out(mat: np.ndarray, null_rows: np.ndarray | None = None):
 
 @arrow_udf(spark_dt("array<double>"))
 def _bounds_udf(a):
-    import pyarrow as pa
-
     fast = uniform_batch_pa(a)
     if fast is not None:
         if fast[0] == "point2d":
@@ -616,11 +503,19 @@ def _bounds_udf(a):
                  c[:, :, 0].max(axis=1), c[:, :, 1].max(axis=1)], axis=1,
             )
         return _bounds_list_out(mat)
-    rg = (ragged.parse_polygonal_pa(a) or ragged.parse_lineal_pa(a)
-          or ragged.parse_multipoints_pa(a))
+    rg = (ragged.parse_polygonal(a) or ragged.parse_lineal(a)
+          or ragged.parse_multipoints(a))
     if rg is not None:
         return _bounds_list_out(ragged.bounds(rg), null_rows=rg.null_mask)
-    return _pd_out(_bounds_pd(a.to_pandas()), pa.list_(pa.float64()))
+    mixed = _mixed_bounds(a)
+    if mixed is not None:
+        return mixed
+    rows = a.to_pylist()
+    mat = np.full((len(rows), 4), np.nan)
+    for i, b in enumerate(rows):
+        if b is not None:
+            mat[i] = from_ewkb(b).bounds()
+    return _bounds_list_out(mat, null_rows=a.is_null().to_numpy(zero_copy_only=False))
 
 
 def _bounds_udf_builder():
@@ -633,29 +528,28 @@ def st_bounds(col) -> Column:
     return _bounds_udf_builder()(col_or_lit(col))
 
 
-def _mixed_bounds(s: pd.Series):
+def _mixed_bounds(a):
     """Bounds over mixed point/multipoint/line/polygon batches: family
-    split + the ragged bounds kernels, bare points read straight from their
-    header bytes."""
-    vals = s.to_numpy()
-    fam = ragged.split_families(vals)
+    split + the ragged bounds kernels, bare points through the uniform
+    parser."""
+    fam = ragged.split_families(a)
     if fam is None:
         return None
     n_fams = sum(1 for k in ("point", "mpoint", "line", "poly") if len(fam[k]))
     if n_fams < 2:
         return None
-    out = np.full((len(vals), 4), np.nan)
+    out = np.full((len(a), 4), np.nan)
     for key, parse in (("poly", ragged.parse_polygonal), ("line", ragged.parse_lineal),
                        ("mpoint", ragged.parse_multipoints)):
         idx = fam[key]
         if len(idx):
-            rg = parse([vals[i] for i in idx])
+            rg = parse(a.take(idx))
             if rg is None:
                 return None
             out[idx] = ragged.bounds(rg)
     if len(fam["point"]):
         idx = fam["point"]
-        fastp = batch_uniform(pd.Series([vals[i] for i in idx]))
+        fastp = uniform_batch_pa(a.take(idx))
         if fastp is None or fastp[0] != "point2d":
             return None
         x, y = fastp[1], fastp[2]
@@ -663,9 +557,9 @@ def _mixed_bounds(s: pd.Series):
         out[idx, 1] = y
         out[idx, 2] = x
         out[idx, 3] = y
-    null_mask = np.zeros(len(vals), dtype=bool)
+    null_mask = np.zeros(len(a), dtype=bool)
     null_mask[fam["null"]] = True
-    return _with_nulls(out, null_mask)
+    return _bounds_list_out(out, null_rows=null_mask)
 
 
 # ----------------------------------------------------------------------

@@ -334,12 +334,13 @@ def _point_affine_udf(make_xy, fallback_fn, origin=None):
     The numpy expressions mirror geo/algos.py exactly — same elementwise
     ops, same order — so all paths agree bitwise."""
     from polars_st_spark.geo import ragged
-    from polars_st_spark.geo.wkb import batch_uniform, header_info, points_to_ewkb
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.wkb import header_info, points_to_ewkb
 
     @arrow_series_udf("binary")
     def udf(s: pd.Series) -> pd.Series:
         if not s.isna().any() and len(s):
-            fast = batch_uniform(s)
+            fast = uniform_batch_pa(s)
             if fast is not None and fast[0] == "point2d":
                 if make_xy is None or origin in ("center", "centroid"):
                     return s  # affine about a point's own center = identity
@@ -515,7 +516,8 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
     """(per-row kernel, batch fast path) shared by the constant-distance,
     per-row-distance, and SQL-registered buffer UDFs."""
     from polars_st_spark.geo import ragged
-    from polars_st_spark.geo.wkb import batch_uniform, header_info
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.wkb import header_info
 
     qs = int(quad_segs)
 
@@ -533,10 +535,6 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
         and cap_style in ("flat", "square"))
 
     def _lines_fast(s, dv):
-        import os
-
-        if os.environ.get("POLARS_ST_SPARK_NO_BUFFER_ROWS"):
-            return None  # measurement escape hatch: force the per-row kernel
         from polars_st_spark.geo import bufferrows
 
         res = bufferrows.buffer_lines_batch(
@@ -561,7 +559,7 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
                 return lineal
         if not can_batch or s.isna().any():
             return None
-        fast = batch_uniform(s)
+        fast = uniform_batch_pa(s)
         if fast is None or fast[0] != "point2d":
             return None
         x, y = fast[1], fast[2]
@@ -2770,7 +2768,8 @@ def st_polygonize(col) -> Column:
 
 def _to_srid_udf(srid: int):
     """UDF builder behind :func:`st_to_srid`; see its docstring."""
-    from polars_st_spark.geo.wkb import batch_uniform, header_info, points_to_ewkb
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.wkb import header_info, points_to_ewkb
 
     # snapshot of proj4-registered CRSs, captured into the UDF closure so
     # executors (which import a pristine module copy) can resolve them
@@ -2788,7 +2787,7 @@ def _to_srid_udf(srid: int):
     @arrow_series_udf("binary")
     def udf(s: pd.Series) -> pd.Series:
         if not s.isna().any() and len(s):
-            fast = batch_uniform(s)
+            fast = uniform_batch_pa(s)
             if fast is not None and fast[0] == "point2d":
                 src = header_info(bytes(s.iloc[0]))[3]
                 if src == srid:

@@ -1,32 +1,30 @@
-"""Zero-copy uniform-batch EWKB parse over pyarrow Binary arrays.
+"""The one reader that turns a batch of EWKB rows into numpy.
 
-The pandas-UDF boundary materializes one Python ``bytes`` object per row
-when Arrow hands a binary column to pandas, and ``geo.wkb.batch_uniform``
-then walks those objects in a Python loop (length + structural-prefix check
-per row, plus a ``b"".join`` copy). At bench grain that object churn IS the
-cost of the vectorized fast paths — the kernels themselves are numpy.
+Every batch parser in the package reads its input through this module:
 
-:func:`uniform_batch_pa` produces the **same contract as
-``geo.wkb.batch_uniform``** — ``("point2d", x, y)`` /
-``("ring", coords, axis_rect)`` / ``None`` — directly from the Arrow
-buffers (validity / int32 offsets / flat byte data) as numpy strided views:
-no per-row objects, no copies. Spark 4.1's ``arrow_udf`` hands scalar UDFs
-the raw ``pyarrow.Array``, so the hot ``st_*`` functions
-(``functions/scalar.py`` measures, ``functions/predicate.py`` pair
-predicates) parse through here and fall back to their existing
-pandas-Series bodies only for batches outside the uniform envelope —
-identical results either way (guide §4.2: same kernels, cheaper boundary).
+- :func:`as_binary_array` is the one input format. A pyarrow
+  Binary/LargeBinary array passes through (a chunked one is combined); a
+  sequence of bytes (list, object ndarray, pandas Series with None or NaN)
+  is converted to Arrow once.
+- :func:`flat_views` is the one buffer view: offsets, the flat data bytes
+  and the validity mask, read straight off the Arrow buffers with no
+  per-row ``bytes`` objects and no copy. The ragged CSR scanners
+  (``geo/ragged.py``) walk these views.
+- :func:`uniform_batch_pa` is the one uniform parser: ``("point2d", x,
+  y)`` / ``("ring", coords, axis_rect)`` / ``None``, as numpy strided
+  views into the Arrow data buffer. They are read-only: a caller that
+  keeps or mutates the arrays copies them first.
+- :func:`header_info_pa` decodes every row's header in one pass.
 
-Structural rules are byte-for-byte those of ``batch_uniform``: every row
-little-endian, no Z/M, all rows sharing the FULL structural prefix (endian
-byte, type word, SRID, ring/point count words) and byte length; points or
-single-ring polygons only. ``axis_rect`` is the same st_rectangle
-vertex-order test. Mixed/complex batches return None.
+The uniform envelope: every row little-endian, no Z/M, a known type code
+(Point or single-ring Polygon), all rows sharing the FULL structural prefix
+(endian byte, type word, SRID, ring/point count words) and byte length.
+``axis_rect`` is the st_rectangle vertex-order test. Anything else returns
+None, and the caller takes its ragged or per-row path.
 
-The strided-view trick (rows of identical length L → one ``(n, L)`` uint8
-view, coordinates as an ``(n, npts, 2)`` float64 view with row stride L) is
-shared with ``operators.arrowpath`` (the mapInArrow lane); this module is
-the Column-function (arrow_udf) counterpart.
+The strided-view trick: rows of identical length L form one ``(n, L)``
+uint8 view, and the coordinates one ``(n, npts, 2)`` float64 view with
+row stride L.
 """
 
 from __future__ import annotations
@@ -35,15 +33,31 @@ import struct
 
 import numpy as np
 
-__all__ = ["flat_views", "header_info_pa", "uniform_batch_pa"]
+__all__ = ["as_binary_array", "flat_views", "header_info_pa", "uniform_batch_pa"]
 
 _SRID_FLAG = 0x20000000
 _ZM_FLAGS = 0x80000000 | 0x40000000
 
 
+def as_binary_array(bufs):
+    """``bufs`` as a pyarrow Binary/LargeBinary array: an Arrow array passes
+    through (a chunked one is combined), and a sequence of bytes with None
+    or NaN for nulls is converted once."""
+    import pyarrow as pa
+
+    if isinstance(bufs, pa.ChunkedArray):
+        return bufs.combine_chunks()
+    if isinstance(bufs, pa.Array):
+        return bufs
+    if not len(bufs):
+        return pa.array([], type=pa.binary())
+    return pa.array(bufs, type=pa.binary(), from_pandas=True)
+
+
 def flat_views(arr):
     """(offsets int64 (n+1,), data uint8 view, valid bool mask or None) for
-    a pyarrow Binary/LargeBinary array, honoring the array offset."""
+    a pyarrow Binary/LargeBinary array, honoring the array offset. ``data``
+    is a read-only view of the Arrow data buffer."""
     bufs = arr.buffers()
     off_dt = np.int64 if "large" in str(arr.type) else np.int32
     offs = np.frombuffer(bufs[1], dtype=off_dt)[arr.offset: arr.offset + len(arr) + 1]
@@ -52,6 +66,7 @@ def flat_views(arr):
         if bufs[2] is not None
         else np.empty(0, np.uint8)
     )
+    data.flags.writeable = False  # Arrow memory: parsers only read it
     valid = None
     if arr.null_count:
         vbits = np.frombuffer(bufs[0], dtype=np.uint8)
@@ -60,9 +75,9 @@ def flat_views(arr):
     return offs.astype(np.int64), data, valid
 
 
-def uniform_batch_pa(arr):
-    """``batch_uniform``'s contract from a null-free pyarrow binary array,
-    zero-copy. Returns one of:
+def uniform_batch_pa(bufs):
+    """Parse a uniform batch (see the module docstring) from a pyarrow
+    binary array or a bytes sequence. Returns one of:
 
     - ``("point2d", x, y)`` — all rows little-endian 2-D points (x/y are
       float64 strided views into the Arrow data buffer)
@@ -70,13 +85,13 @@ def uniform_batch_pa(arr):
       with the same vertex count; ``coords`` is an ``(n, m, 2)`` float64
       strided view; ``axis_rect`` True when every row is an axis-aligned
       rectangle ring in st_rectangle vertex order
-    - ``None`` — nulls present, or mixed/complex batch; caller falls back
-      to its pandas/per-row path.
-    """
-    import pyarrow as pa
+    - ``None`` — empty batch, nulls present, or mixed/complex batch; the
+      caller falls back to its ragged or per-row path.
 
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+    The views are read-only (they alias Arrow memory): copy before keeping
+    or mutating them.
+    """
+    arr = as_binary_array(bufs)
     n = len(arr)
     if n == 0 or arr.null_count:
         return None
@@ -92,7 +107,7 @@ def uniform_batch_pa(arr):
     if word & _ZM_FLAGS:
         return None
     head = 5 + (4 if word & _SRID_FLAG else 0)
-    gtype = word & 0xFF
+    gtype = word & 0x0FFFFFFF
     if gtype == 1 and L == head + 16:  # Point
         prefix_len = head
         npts = 1
@@ -107,7 +122,9 @@ def uniform_batch_pa(arr):
     else:
         return None
     # every row must share the FULL structural prefix (endian, type word,
-    # srid, ring/point counts) — same rule as wkb.batch_uniform
+    # srid, ring/point counts) — a multi-ring polygon with a colliding
+    # byte length must not decode as single-ring with count words read as
+    # coordinates
     mat = np.ndarray(
         shape=(n, prefix_len), dtype=np.uint8, buffer=data,
         offset=base, strides=(L, 1),

@@ -1,16 +1,18 @@
 """Vectorized kernels over RAGGED geometry batches (CSR layout).
 
-`batch_uniform` (geo/wkb.py) only fires when every row in an Arrow batch has
+``geo/arrowwkb.uniform_batch_pa`` only fires when every row in a batch has
 the identical byte layout. Real mixed data — polygons with holes, varying
-vertex counts, multiparts — previously fell back to per-row Python object
-decode + scalar compute. This module removes that cost for every WKB
-family:
+vertex counts, multiparts — would otherwise fall back to per-row Python
+object decode + scalar compute. This module removes that cost for every
+WKB family. Its scanners read only Arrow buffers (``arrowwkb.flat_views``):
+the public parsers take a pyarrow Binary array or a bytes sequence, which
+is converted to Arrow once (``arrowwkb.as_binary_array``).
 
 - :func:`parse_polygonal` / :func:`parse_lineal` /
   :func:`parse_multipoints` parse a whole batch into a CSR (offset-array)
   layout — one flat ``(N, 2)`` coordinate matrix plus int offset arrays —
   via pure numpy scans: headers and structure words are gathered with
-  fancy-indexed u32 reads over one concatenated buffer, the Python loop
+  fancy-indexed u32 reads over the Arrow data buffer, the Python loop
   runs per NESTING LEVEL (part index × ring index, across all rows at
   once), and all coordinates arrive in one byte-gather + f8 view.
   Pathological nesting drops to per-ring loop parsers with identical
@@ -40,6 +42,7 @@ import struct
 
 import numpy as np
 
+from polars_st_spark.geo.arrowwkb import as_binary_array, flat_views
 from polars_st_spark.geo.types import GeometryType
 
 __all__ = [
@@ -119,71 +122,35 @@ def _header(buf: bytes):
 
 
 def parse_polygonal(bufs) -> RaggedPolygons | None:
-    """Parse a batch where every non-null row is a little-endian 2-D
-    Polygon or MultiPolygon. Returns None (caller falls back) otherwise.
+    """Parse a batch (pyarrow Binary array or bytes sequence) where every
+    non-null row is a little-endian 2-D Polygon or MultiPolygon. Returns
+    None (caller falls back) otherwise.
 
     Both single-part and MultiPolygon batches go through
     :func:`_parse_polygonal_vec` — structure words gathered with numpy, one
     fancy-indexed byte gather for all coordinates, Python iteration bounded
     by the maximum nesting; pathological nesting uses the per-ring loop."""
-    fast = _parse_polygonal_vec(bufs)
-    if fast is not _LOOP:
-        return fast
-    return _parse_polygonal_loop(bufs)
-
-
-_LOOP = object()  # sentinel: shape unsupported by the vectorized scan
-
-
-def _pa_view(arr):
-    """(u8, starts, lens, null_mask, n) for a pyarrow Binary/LargeBinary
-    array — the vectorized parsers' input view taken straight off the
-    Arrow buffers (r11): no per-row bytes objects, no concat copy. starts/
-    lens cover ALL slots; null slots are excluded via null_mask."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()
-    off_dt = np.int64 if "large" in str(arr.type) else np.int32
-    offs = np.frombuffer(bufs[1], dtype=off_dt)[
-        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-    u8 = (np.frombuffer(bufs[2], dtype=np.uint8)
-          if bufs[2] is not None else np.empty(0, np.uint8))
-    n = len(arr)
-    if arr.null_count:
-        vbits = np.frombuffer(bufs[0], dtype=np.uint8)
-        idx = np.arange(arr.offset, arr.offset + n)
-        null_mask = ~((vbits[idx >> 3] >> (idx & 7) & 1).astype(bool))
-    else:
-        null_mask = np.zeros(n, dtype=bool)
-    return u8, offs[:-1], np.diff(offs), null_mask, n
-
-
-def parse_polygonal_pa(arr):
-    """parse_polygonal over a pyarrow binary array, zero-copy (r11).
-    Identical result contract; the rare pathological-nesting fallback
-    materializes rows once via to_pylist."""
-    view = _pa_view(arr)
-    fast = _parse_polygonal_vec(None, pa_view=view)
+    arr = as_binary_array(bufs)
+    fast = _parse_polygonal_vec(arr)
     if fast is not _LOOP:
         return fast
     return _parse_polygonal_loop(arr.to_pylist())
 
 
-def parse_lineal_pa(arr):
-    """parse_lineal over a pyarrow binary array, zero-copy (r11)."""
-    view = _pa_view(arr)
-    fast = _parse_lineal_vec(None, pa_view=view)
-    if fast is not _LOOP:
-        return fast
-    return _parse_lineal_loop(arr.to_pylist())
+parse_polygonal_pa = parse_polygonal  # the r11 name, still called by perfbench
+
+_LOOP = object()  # sentinel: shape unsupported by the vectorized scan
 
 
-def parse_multipoints_pa(arr):
-    """parse_multipoints over a pyarrow binary array, zero-copy (r11)."""
-    return parse_multipoints(None, pa_view=_pa_view(arr))
-
+def _scan_view(bufs):
+    """(u8, starts, lens, null_mask, n): the vectorized scanners' input,
+    read off the Arrow buffers. starts/lens cover ALL slots; null slots are
+    excluded via null_mask."""
+    arr = as_binary_array(bufs)
+    offs, u8, valid = flat_views(arr)
+    n = len(arr)
+    null_mask = ~valid if valid is not None else np.zeros(n, dtype=bool)
+    return u8, offs[:-1], np.diff(offs), null_mask, n
 
 
 def _u32_at(u8: np.ndarray, off: np.ndarray) -> np.ndarray:
@@ -203,7 +170,7 @@ def _gather_rings(u8, order_off, order_npts):
 
     The index array IS the parse cost (profiled: arange+repeat dominate
     the whole polygonal parse), so it is built in int32 whenever the
-    concat buffer allows — Arrow batches are far below 2 GiB, and the
+    data buffer allows — Arrow batches are far below 2 GiB, and the
     int64 branch keeps correctness for pathological callers."""
     sizes = order_npts * 16
     total = int(sizes.sum())
@@ -211,7 +178,7 @@ def _gather_rings(u8, order_off, order_npts):
         return np.empty((0, 2))
     starts = np.cumsum(sizes) - sizes
     # one repeat: arange relative to each ring's flat start, shifted to its
-    # byte offset in the concat buffer
+    # byte offset in the data buffer
     shift = order_off - starts
     if total < 2**31 and len(u8) < 2**31:
         idx = np.arange(total, dtype=np.int32)
@@ -222,21 +189,14 @@ def _gather_rings(u8, order_off, order_npts):
     return u8[idx].view("<f8").reshape(-1, 2)
 
 
-def _parse_polygonal_vec(bufs, pa_view=None):
+def _parse_polygonal_vec(bufs):
     """Vectorized scan for 2-D Polygon / MultiPolygon batches: a two-level
     loop over (part index, ring index) — each level gathers structure words
     for ALL active rows at once, so Python iteration count is bounded by the
     batch's maximum nesting, not its total ring count. Returns a
     RaggedPolygons, None (not polygonal at all), or _LOOP (pathological
-    nesting / malformed edge — use the per-ring loop). ``pa_view`` feeds
-    the identical scan from Arrow buffers with no per-row bytes objects
-    (r11; see _pa_view)."""
-    if pa_view is not None:
-        u8_all, starts_all, lens_all, null_mask, n = pa_view
-    else:
-        rows = [None if b is None else bytes(b) for b in bufs]
-        n = len(rows)
-        null_mask = np.array([b is None for b in rows], dtype=bool)
+    nesting / malformed edge — use the per-ring loop)."""
+    u8, starts_all, lens_all, null_mask, n = _scan_view(bufs)
     nn = np.nonzero(~null_mask)[0]
     if not len(nn):
         rp = RaggedPolygons()
@@ -254,19 +214,10 @@ def _parse_polygonal_vec(bufs, pa_view=None):
         rp.spans = _EMPTY_SPANS
         rp.child_srid = False
         return rp
-    if pa_view is not None:
-        u8 = u8_all
-        starts = starts_all[nn]
-        lens = lens_all[nn]
-    else:
-        lens = np.array([len(rows[i]) for i in nn], dtype=np.int64)
+    starts = starts_all[nn]
+    lens = lens_all[nn]
     if lens.min() < 9:
         return None
-    if pa_view is None:
-        concat = b"".join(rows[i] for i in nn)
-        u8 = np.frombuffer(concat, dtype=np.uint8)
-        starts = np.zeros(len(nn), dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
     row_end = starts + lens
     if (u8[starts] != 1).any():
         return None
@@ -349,7 +300,7 @@ def _parse_polygonal_vec(bufs, pa_view=None):
         rrow = np.concatenate(rv_row)   # index into nn (non-null ordinal)
         rpp = np.concatenate(rv_p)
         rj = np.concatenate(rv_r)
-        roff = np.concatenate(rv_off)   # concat-relative coord byte offset
+        roff = np.concatenate(rv_off)   # data-buffer coord byte offset
         rn = np.concatenate(rv_n)
         order = np.lexsort((rj, rpp, rrow))  # row-major, parts then rings
         rrow, rpp, rj = rrow[order], rpp[order], rj[order]
@@ -495,26 +446,21 @@ def _parse_polygonal_loop(bufs) -> RaggedPolygons | None:
 
 
 def parse_lineal(bufs) -> RaggedLines | None:
-    """Parse a batch where every non-null row is a little-endian 2-D
-    LineString or MultiLineString via the vectorized scan (per-chain loop
-    for pathological nesting)."""
-    fast = _parse_lineal_vec(bufs)
+    """Parse a batch (pyarrow Binary array or bytes sequence) where every
+    non-null row is a little-endian 2-D LineString or MultiLineString via
+    the vectorized scan (per-chain loop for pathological nesting)."""
+    arr = as_binary_array(bufs)
+    fast = _parse_lineal_vec(arr)
     if fast is not _LOOP:
         return fast
-    return _parse_lineal_loop(bufs)
+    return _parse_lineal_loop(arr.to_pylist())
 
 
-def _parse_lineal_vec(bufs, pa_view=None):
+def _parse_lineal_vec(bufs):
     """Vectorized scan for 2-D LineString / MultiLineString batches — one
     level per chain index, gathered for all active rows at once (same
-    two-level trick as the polygonal scan, without the ring dimension).
-    ``pa_view`` feeds the scan from Arrow buffers (r11; see _pa_view)."""
-    if pa_view is not None:
-        u8_all, starts_all, lens_all, null_mask, n = pa_view
-    else:
-        rows = [None if b is None else bytes(b) for b in bufs]
-        n = len(rows)
-        null_mask = np.array([b is None for b in rows], dtype=bool)
+    two-level trick as the polygonal scan, without the ring dimension)."""
+    u8, starts_all, lens_all, null_mask, n = _scan_view(bufs)
     nn = np.nonzero(~null_mask)[0]
     rl = RaggedLines()
     rl.n = n
@@ -529,19 +475,10 @@ def _parse_lineal_vec(bufs, pa_view=None):
         rl.srid_uniform = True
         rl.spans = _EMPTY_SPANS
         return rl
-    if pa_view is not None:
-        u8 = u8_all
-        starts = starts_all[nn]
-        lens = lens_all[nn]
-    else:
-        lens = np.array([len(rows[i]) for i in nn], dtype=np.int64)
+    starts = starts_all[nn]
+    lens = lens_all[nn]
     if lens.min() < 9:
         return None
-    if pa_view is None:
-        concat = b"".join(rows[i] for i in nn)
-        u8 = np.frombuffer(concat, dtype=np.uint8)
-        starts = np.zeros(len(nn), dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
     row_end = starts + lens
     if (u8[starts] != 1).any():
         return None
@@ -1020,33 +957,29 @@ def split_families(bufs):
 
     Returns ``{"null", "point", "mpoint", "line", "poly"} -> int64 row-index
     arrays`` ("line" covers Multi, "poly" covers Multi), or None when any
-    row is big-endian / Z / M / ISO-coded / a GeometryCollection — the
-    caller falls back to the per-row path. Lets mixed batches (points
+    row is big-endian / Z / M / ISO-coded / a GeometryCollection, curve or
+    unknown type — the caller falls back to the per-row path. Lets mixed batches (points
     interleaved with polygons, etc.) route each family through its
     vectorized kernel instead of dropping the whole batch to per-row
     Python."""
-    rows = [None if b is None else bytes(b) for b in bufs]
-    nn_idx = [i for i, b in enumerate(rows) if b is not None]
-    null_idx = np.array([i for i, b in enumerate(rows) if b is None], dtype=np.int64)
+    u8, starts, lens, null_mask, _n = _scan_view(bufs)
+    nn = np.flatnonzero(~null_mask)
     empty = np.zeros(0, dtype=np.int64)
-    out = {"null": null_idx, "point": empty, "mpoint": empty,
+    out = {"null": np.flatnonzero(null_mask), "point": empty, "mpoint": empty,
            "line": empty, "poly": empty}
-    if not nn_idx:
+    if not len(nn):
         return out
-    if any(len(rows[i]) < 9 for i in nn_idx):
+    starts = starts[nn]
+    if (lens[nn] < 9).any():
         return None
-    heads = b"".join(rows[i][:5] for i in nn_idx)
-    hu = np.frombuffer(heads, dtype=np.uint8).reshape(-1, 5).astype(np.int64)
-    if (hu[:, 0] != 1).any():
+    if (u8[starts] != 1).any():
         return None
-    typ = hu[:, 1] | (hu[:, 2] << 8) | (hu[:, 3] << 16) | (hu[:, 4] << 24)
+    typ = _u32_at(u8, starts + 1)
     if ((typ & (_Z_FLAG | _M_FLAG)) != 0).any():
         return None
     base = typ & 0x0FFFFFFF
-    if (base >= 1000).any() | (base == GeometryType.GeometryCollection).any() \
-            | (base < 1).any():
+    if ((base < GeometryType.Point) | (base > GeometryType.MultiPolygon)).any():
         return None
-    nn = np.array(nn_idx, dtype=np.int64)
     out["point"] = nn[base == GeometryType.Point]
     out["mpoint"] = nn[base == GeometryType.MultiPoint]
     out["line"] = nn[(base == GeometryType.LineString)
@@ -1110,19 +1043,14 @@ def distance_lines_to_points(rl: RaggedLines, px: np.ndarray, py: np.ndarray) ->
     return out
 
 
-def parse_multipoints(bufs, pa_view=None) -> RaggedLines | None:
-    """Vectorized scan for 2-D MultiPoint batches into the RaggedLines
-    layout (one chain per point part — only ``coords`` / ``row_start`` /
-    ``chain_row`` / ``null_mask`` / ``srid`` are meaningful to callers).
-    Empty point parts (NaN coords) pass through as NaN rows. Returns None
-    for anything that is not purely little-endian 2-D MultiPoints.
-    ``pa_view`` feeds the scan from Arrow buffers (r11; see _pa_view)."""
-    if pa_view is not None:
-        u8_all, starts_all, lens_all, null_mask, n = pa_view
-    else:
-        rows = [None if b is None else bytes(b) for b in bufs]
-        n = len(rows)
-        null_mask = np.array([b is None for b in rows], dtype=bool)
+def parse_multipoints(bufs) -> RaggedLines | None:
+    """Vectorized scan for 2-D MultiPoint batches (pyarrow Binary array or
+    bytes sequence) into the RaggedLines layout (one chain per point part —
+    only ``coords`` / ``row_start`` / ``chain_row`` / ``null_mask`` /
+    ``srid`` are meaningful to callers). Empty point parts (NaN coords)
+    pass through as NaN rows. Returns None for anything that is not purely
+    little-endian 2-D MultiPoints."""
+    u8, starts_all, lens_all, null_mask, n = _scan_view(bufs)
     nn = np.nonzero(~null_mask)[0]
     rl = RaggedLines()
     rl.n = n
@@ -1137,19 +1065,10 @@ def parse_multipoints(bufs, pa_view=None) -> RaggedLines | None:
         rl.srid = 0
         rl.srid_uniform = True
         return rl
-    if pa_view is not None:
-        u8 = u8_all
-        starts = starts_all[nn]
-        lens = lens_all[nn]
-    else:
-        lens = np.array([len(rows[i]) for i in nn], dtype=np.int64)
+    starts = starts_all[nn]
+    lens = lens_all[nn]
     if lens.min() < 9:
         return None
-    if pa_view is None:
-        concat = b"".join(rows[i] for i in nn)
-        u8 = np.frombuffer(concat, dtype=np.uint8)
-        starts = np.zeros(len(nn), dtype=np.int64)
-        starts[1:] = np.cumsum(lens)[:-1]
     row_end = starts + lens
     if (u8[starts] != 1).any():
         return None
@@ -4275,12 +4194,11 @@ def rect_pair_intersection_batch(vals_a, vals_b):
     touching pairs fall through to the same line/point outputs; disjoint
     pairs give POLYGON EMPTY regardless of which early-exit fires).
     None → fallback."""
-    from polars_st_spark.geo.wkb import batch_uniform, header_info, points_to_ewkb
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.wkb import header_info, points_to_ewkb
 
-    if any(b is None for b in vals_a) or any(b is None for b in vals_b):
-        return None
-    fa = batch_uniform(vals_a)
-    fb = batch_uniform(vals_b)
+    fa = uniform_batch_pa(vals_a)
+    fb = uniform_batch_pa(vals_b)
     if (fa is None or fb is None or fa[0] != "ring" or fb[0] != "ring"
             or not fa[2] or not fb[2]
             or fa[1].shape[1] != 5 or fb[1].shape[1] != 5):

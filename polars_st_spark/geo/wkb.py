@@ -7,13 +7,15 @@ Wire format matches the reference exactly (reference: src/wkb.rs:17-68):
   ``WKBWriter::set_include_SRID(true)`` (reference: src/functions.rs:54-58)
 - ISO-WKB type codes (1001, 2003, 3007, ...) are accepted on read.
 
-Header-only fast paths (`header_info`, `batch_header`) parse just the first
-9-13 bytes without building geometry objects, mirroring the reference's O(1)
-metadata ops (reference: src/functions.rs:410-435).
+`header_info` parses just the first 9-13 bytes without building geometry
+objects, mirroring the reference's O(1) metadata ops (reference:
+src/functions.rs:410-435).
 
-For the hot path at scale (point-heavy tables), `points_to_ewkb` /
-`ewkb_to_points` encode/decode an entire batch of uniform Point rows with
-numpy slice assignment — no per-row Python.
+This module is the per-row codec. Batches are read into numpy by the one
+batch reader, ``geo/arrowwkb.py``; `decode_batch` builds Geometry objects
+through it and drops to `from_ewkb` only for rows outside its uniform
+envelope. `points_to_ewkb` encodes a batch of points with numpy slice
+assignment — no per-row Python.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ __all__ = [
     "to_ewkb",
     "header_info",
     "points_to_ewkb",
-    "ewkb_to_points",
 ]
 
 _Z_FLAG = 0x80000000
@@ -95,6 +96,8 @@ def _read_geometry(mv: memoryview, pos: int, inherited_srid: int) -> tuple[Geome
     if has_srid:
         (srid,) = struct.unpack_from(fmt + "I", mv, pos)
         pos += 4
+    if not GeometryType.Point <= base <= GeometryType.Triangle:
+        raise ValueError(f"Invalid WKB: unknown geometry type {base}")
     ndim = 2 + has_z + has_m
 
     if base == GeometryType.Point:
@@ -256,7 +259,7 @@ def decode_batch(bufs) -> list:
     numpy reinterpret instead of per-row struct unpacking; leftovers fall
     back to ``from_ewkb`` row-at-a-time (VERDICT r1 perf item 3: the generic
     fallback must not collapse to per-row speeds on mixed inputs)."""
-    from polars_st_spark.geo.types import Geometry, GeometryType
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
     rows = list(bufs)
     out: list = [None] * len(rows)
@@ -269,7 +272,7 @@ def decode_batch(bufs) -> list:
         groups.setdefault((len(bb), bb[:5]), []).append(i)
     for (_, _), idxs in groups.items():
         sub = [rows[i] for i in idxs]
-        res = batch_uniform(sub)
+        res = uniform_batch_pa(sub)
         if res is None:
             for i in idxs:
                 out[i] = from_ewkb(rows[i])
@@ -284,98 +287,8 @@ def decode_batch(bufs) -> list:
                     out[i] = Geometry(GeometryType.Point, srid=srid,
                                       coords=np.array([xs[k], ys[k]]))
         else:
-            _, coords, _ = res
+            # a copy: Geometry rings must not alias the batch's Arrow memory
+            coords = res[1].astype(np.float64)
             for k, i in enumerate(idxs):
                 out[i] = Geometry(GeometryType.Polygon, srid=srid, rings=[coords[k]])
     return out
-
-
-def batch_uniform(bufs):
-    """Vectorized decode of a uniform batch (the common case for geometry
-    derived from numeric columns at scale).
-
-    Returns one of:
-    - ("point2d", x, y)                      — all rows little-endian 2-D points
-    - ("ring", coords (n, m, 2), axis_rect)  — all rows single-ring 2-D polygons
-      with the same vertex count m; axis_rect is True when every row is an
-      axis-aligned rectangle ring in st_rectangle vertex order
-    - None — mixed/complex batch; caller falls back to per-row decode
-    """
-    rows = list(bufs)
-    if not rows:
-        return None
-    first = rows[0]
-    if first is None:
-        return None
-    L = len(first)
-    prefix_len = None
-    base, has_z, has_m, _ = header_info(first)
-    if first[0] != 1 or has_z or has_m:
-        return None
-    if base == GeometryType.Point and L in (21, 25):
-        prefix_len = L - 16
-    elif base == GeometryType.Polygon and L >= 9 + 8 + 4 * 16:
-        with_srid = L and bool(struct.unpack_from("<I", first, 1)[0] & _SRID_FLAG)
-        head = 1 + 4 + (4 if with_srid else 0)
-        (nrings,) = struct.unpack_from("<I", first, head)
-        if nrings != 1:
-            return None
-        (npts,) = struct.unpack_from("<I", first, head + 4)
-        if L != head + 8 + npts * 16:
-            return None
-        prefix_len = head + 8
-    else:
-        return None
-    # every row must share the FULL structural prefix (endian, type word,
-    # srid, ring/point counts) — matching only length + type word would let
-    # e.g. a multi-ring polygon with a colliding byte length be silently
-    # decoded as single-ring with count words read as coordinates
-    header = bytes(first[:prefix_len])
-    for b in rows[1:]:
-        if b is None or len(b) != L or bytes(b[:prefix_len]) != header:
-            return None
-    mat = np.frombuffer(b"".join(bytes(b) for b in rows), dtype=np.uint8).reshape(len(rows), L)
-    body = mat[:, prefix_len:].copy().view("<f8")
-    if base == GeometryType.Point:
-        xy = body.reshape(len(rows), 2)
-        return ("point2d", xy[:, 0].astype(np.float64), xy[:, 1].astype(np.float64))
-    coords = body.reshape(len(rows), -1, 2).astype(np.float64)
-    m = coords.shape[1]
-    axis_rect = False
-    if m == 5:
-        x, y = coords[:, :, 0], coords[:, :, 1]
-        axis_rect = bool(
-            np.all(x[:, 0] == x[:, 3]) and np.all(x[:, 0] == x[:, 4])
-            and np.all(x[:, 1] == x[:, 2])
-            and np.all(y[:, 0] == y[:, 1]) and np.all(y[:, 0] == y[:, 4])
-            and np.all(y[:, 2] == y[:, 3])
-        )
-    return ("ring", coords, axis_rect)
-
-
-def ewkb_to_points(bufs) -> tuple[np.ndarray, np.ndarray] | None:
-    """Decode a batch of uniform little-endian 2-D Point EWKB rows to (x, y).
-
-    Returns None when the batch is not uniform simple points — caller falls
-    back to the generic per-row decoder.
-    """
-    it = iter(bufs)
-    try:
-        first = next(it)
-    except StopIteration:
-        return np.empty(0), np.empty(0)
-    if first is None or len(first) not in (21, 25) or first[0] != 1:
-        return None
-    prefix_len = len(first) - 16
-    prefix = bytes(first[:prefix_len])
-    base, has_z, has_m, _ = header_info(first)
-    if base != GeometryType.Point or has_z or has_m:
-        return None
-    rows = [first]
-    for b in it:
-        if b is None or len(b) != len(first) or not b.startswith(prefix[:5]):
-            return None
-        rows.append(b)
-    mat = np.frombuffer(b"".join(rows), dtype=np.uint8).reshape(len(rows), len(first))
-    xy = mat[:, prefix_len:].copy().view("<f8").reshape(len(rows), 2)
-    return xy[:, 0].astype(np.float64), xy[:, 1].astype(np.float64)

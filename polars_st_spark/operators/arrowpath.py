@@ -5,12 +5,12 @@ The pandas-UDF path materializes one Python ``bytes`` object per row when
 Arrow hands the EWKB column to pandas — at 60 M rows that object churn IS
 the cost (the r8 100x ramp's ``b1_elementwise`` was memory-bandwidth bound
 at a 5.2 s floor). ``measure_arrow`` runs through ``mapInArrow`` instead:
-the worker receives the raw Arrow buffers (validity / int32 offsets /
-flat byte data) and the uniform-geometry fast parse operates directly on
-the flat buffer as numpy strided views — no per-row objects anywhere.
+the worker receives the raw Arrow batch and parses it with the package's
+one batch reader, ``geo/arrowwkb.uniform_batch_pa`` — numpy strided views
+of the Arrow buffers, no per-row objects anywhere.
 
 Semantics are identical to ``st_area`` / ``st_length`` (same translated
-shoelace / perimeter arithmetic as the pandas fast path in
+shoelace / perimeter arithmetic as the ring lane in
 ``functions/scalar.py``; rows outside the uniform envelope fall back to
 the exact per-row kernels), asserted row-for-row in
 ``tests/test_arrowpath.py`` and hash-checked against a closed-form DuckDB
@@ -22,114 +22,51 @@ is a physical-plan alternative, not new semantics.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 from pyspark.sql import DataFrame
 
+from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+
 __all__ = ["bounds_arrow", "measure_arrow", "predicate_arrow"]
 
-_SRID_FLAG = 0x20000000
-_ZM_FLAGS = 0x80000000 | 0x40000000
 
+def _uniform_rows(arr):
+    """Parsed coordinates for a batch whose VALID rows are structurally
+    uniform: ``(coords, gtype, rows)`` where ``coords`` is float64
+    ``(n_valid, npts, 2)``, ``gtype`` is 1 (Point) or 3 (single-ring
+    Polygon) and ``rows`` is the index array of the batch rows the coords
+    belong to (None when the batch has no nulls). Returns None when the
+    valid rows leave the uniform envelope of ``uniform_batch_pa``.
 
-def _flat_views(arr):
-    """(offsets int64 (n+1,), data uint8 view, valid mask or None) for a
-    pyarrow Binary/LargeBinary array, honoring the array offset."""
-    bufs = arr.buffers()
-    off_dt = np.int64 if "large" in str(arr.type) else np.int32
-    offs = np.frombuffer(bufs[1], dtype=off_dt)[arr.offset: arr.offset + len(arr) + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    valid = None
+    Nulls do not abort the batch (VERDICT r9 "What's wrong" #2 — one null
+    row used to drop a whole 10k-row Arrow batch to the per-row kernels):
+    the parser runs on the valid rows, gathered once, and callers scatter
+    the results back through ``rows``."""
+    rows = None
     if arr.null_count:
-        vbits = np.frombuffer(bufs[0], dtype=np.uint8)
-        idx = np.arange(arr.offset, arr.offset + len(arr))
-        valid = (vbits[idx >> 3] >> (idx & 7) & 1).astype(bool)
-    return offs.astype(np.int64), data, valid
+        rows = np.flatnonzero(arr.is_valid().to_numpy(zero_copy_only=False))
+        arr = arr.drop_null()
+    parsed = uniform_batch_pa(arr)
+    if parsed is None:
+        return None
+    if parsed[0] == "point2d":
+        return np.stack(parsed[1:], axis=-1)[:, None, :], 1, rows
+    return parsed[1], 3, rows
 
 
-def _uniform_coords(offs, data, valid):
-    """Parsed coordinates for a structurally-uniform batch: ``(coords,
-    gtype, rows)`` where ``coords`` is float64 ``(n_valid, npts, 2)``,
-    ``gtype`` is 1 (Point) or 3 (single-ring Polygon) and ``rows`` is the
-    int index array of the batch rows the coords belong to (all rows when
-    the batch has no nulls). Returns None when the VALID rows leave the
-    fast envelope (mixed layouts, Z/M, multi-ring, big-endian).
-
-    Nulls no longer abort the batch (VERDICT r9 "What's wrong" #2 — one
-    null row used to drop a whole 10k-row Arrow batch to the per-row
-    kernels, so at 100 TB with sparse nulls the fast lane would rarely
-    engage): null slots are simply excluded from the uniformity check and
-    the coords are GATHERED from the valid slots' offsets — one vectorized
-    fancy-index copy instead of n_valid Python objects. The no-null path
-    stays a true zero-copy strided view."""
-    n = len(offs) - 1
-    if n == 0:
-        return None
-    if valid is None:
-        rows = None
-        starts = None
-        lens = np.diff(offs)
-        nv = n
-    else:
-        rows = np.flatnonzero(valid)
-        nv = len(rows)
-        if nv == 0:
-            return None
-        starts = offs[rows]
-        lens = offs[rows + 1] - starts
-    L = int(lens[0])
-    if L < 21 or not bool((lens == L).all()):
-        return None
-    base_off = int(offs[0] if starts is None else starts[0])
-    if data[base_off] != 1:
-        return None
-    (word,) = struct.unpack_from("<I", data, base_off + 1)
-    if word & _ZM_FLAGS:
-        return None
-    head = 5 + (4 if word & _SRID_FLAG else 0)
-    gtype = word & 0xFF
-    if gtype == 1 and L == head + 16:  # Point
-        prefix_len = head
-        npts = 1
-    elif gtype == 3 and L >= head + 8 + 4 * 16:  # Polygon
-        (nrings,) = struct.unpack_from("<I", data, base_off + head)
-        if nrings != 1:
-            return None
-        (npts,) = struct.unpack_from("<I", data, base_off + head + 4)
-        if L != head + 8 + npts * 16:
-            return None
-        prefix_len = head + 8
-    else:
-        return None
-    if starts is None:
-        # every row must share the FULL structural prefix (endian, type
-        # word, srid, count words) — same rule as wkb.batch_uniform
-        mat = np.ndarray(shape=(nv, prefix_len), dtype=np.uint8,
-                         buffer=data, offset=base_off, strides=(L, 1))
-        if not bool((mat == mat[0]).all()):
-            return None
-        coords = np.ndarray(shape=(nv, npts * 2), dtype="<f8",
-                            buffer=data, offset=base_off + prefix_len,
-                            strides=(L, 8)).reshape(nv, npts, 2)
-    else:
-        pref = data[starts[:, None] + np.arange(prefix_len)]
-        if not bool((pref == pref[0]).all()):
-            return None
-        cb = data[starts[:, None] + (prefix_len + np.arange(npts * 16))]
-        coords = np.ascontiguousarray(cb).view("<f8").reshape(nv, npts, 2)
-    return coords, gtype, rows
+def _null_mask(arr):
+    return arr.is_null().to_numpy(zero_copy_only=False) if arr.null_count else None
 
 
-def _uniform_measures(offs, data, valid):
+def _uniform_measures(arr):
     """(area, length) float64 arrays (full batch length, NaN at null
     slots) for a structurally-uniform batch, or None when the valid rows
     leave the fast envelope."""
-    parsed = _uniform_coords(offs, data, valid)
+    parsed = _uniform_rows(arr)
     if parsed is None:
         return None
     c, gtype, rows = parsed
-    n = len(offs) - 1
+    n = len(arr)
     if gtype == 1:
         area = np.zeros(n, dtype=np.float64)
         length = np.zeros(n, dtype=np.float64)
@@ -190,17 +127,9 @@ def measure_arrow(df: DataFrame, col: str, keep: tuple = ()) -> DataFrame:
     def fn(batches):
         for rb in batches:
             arr = rb.column(rb.schema.get_field_index(gcol))
-            offs, data, valid = _flat_views(arr)
-            fast = _uniform_measures(offs, data, valid)
-            if fast is None:
-                area, length = _fallback_measures(arr)
-            else:
-                area, length = fast
-            mask = None
-            if valid is not None:
-                mask = ~valid
-            elif fast is None:
-                mask = np.array([arr[i].as_py() is None for i in range(len(arr))])
+            fast = _uniform_measures(arr)
+            area, length = fast if fast is not None else _fallback_measures(arr)
+            mask = _null_mask(arr)
             cols = [rb.column(rb.schema.get_field_index(k)) for k in names[:-2]]
             cols.append(pa.array(area, type=pa.float64(),
                                  mask=mask if mask is not None else None))
@@ -328,13 +257,12 @@ def predicate_arrow(df: DataFrame, lcol: str, rcol: str,
     def _side(arr):
         """(box full-length arrays, exact mask, valid mask or None) or
         None when the side leaves the uniform envelope entirely."""
-        offs, data, valid = _flat_views(arr)
-        parsed = _uniform_coords(offs, data, valid)
+        parsed = _uniform_rows(arr)
         if parsed is None:
             return None
         coords, gtype, rows = parsed
         box, ok = _rect_box(coords, gtype)
-        n = len(offs) - 1
+        n = len(arr)
         if rows is None:
             return box, ok, None
         full_box = []
@@ -396,11 +324,11 @@ def predicate_arrow(df: DataFrame, lcol: str, rcol: str,
     return df.mapInArrow(fn, out_schema)
 
 
-def _uniform_bounds(offs, data, valid):
+def _uniform_bounds(arr):
     """(xmin, ymin, xmax, ymax) float64 arrays (full batch length, NaN at
     null slots) for a structurally-uniform batch, or None outside the fast
     envelope (same rules and null handling as _uniform_measures)."""
-    parsed = _uniform_coords(offs, data, valid)
+    parsed = _uniform_rows(arr)
     if parsed is None:
         return None
     c, _gtype, rows = parsed
@@ -408,7 +336,7 @@ def _uniform_bounds(offs, data, valid):
     vals = (x.min(axis=1), y.min(axis=1), x.max(axis=1), y.max(axis=1))
     if rows is None:
         return vals
-    n = len(offs) - 1
+    n = len(arr)
     out = []
     for v in vals:
         full = np.full(n, np.nan)
@@ -450,15 +378,9 @@ def bounds_arrow(df: DataFrame, col: str, keep: tuple = ()) -> DataFrame:
     def fn(batches):
         for rb in batches:
             arr = rb.column(rb.schema.get_field_index(gcol))
-            offs, data, valid = _flat_views(arr)
-            fast = _uniform_bounds(offs, data, valid)
-            if fast is None:
-                vals = _fallback_bounds(arr)
-                mask = np.array(
-                    [arr[i].as_py() is None for i in range(len(arr))])
-            else:
-                vals = fast
-                mask = ~valid if valid is not None else None
+            fast = _uniform_bounds(arr)
+            vals = fast if fast is not None else _fallback_bounds(arr)
+            mask = _null_mask(arr)
             cols = [rb.column(rb.schema.get_field_index(k)) for k in names[:-4]]
             for v in vals:
                 cols.append(pa.array(np.ascontiguousarray(v),

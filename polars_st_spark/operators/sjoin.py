@@ -216,7 +216,7 @@ def _sjoin_broadcast(left, right, predicate, how, lsuffix, rsuffix, left_on,
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from polars_st_spark.geo import ragged as RG
         from polars_st_spark.geo.algos import _is_axis_rect
-        from polars_st_spark.geo.wkb import batch_uniform
+        from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
         rpdf = bc.value
         right_wkbs = [None if b is None else bytes(b) for b in rpdf[right_on]]
@@ -255,7 +255,7 @@ def _sjoin_broadcast(left, right, predicate, how, lsuffix, rsuffix, left_on,
             lgeo = pdf[left_on]
             decoded = None
             if fast_rects and not lgeo.isnull().values.any():
-                decoded = batch_uniform(list(lgeo))
+                decoded = uniform_batch_pa(lgeo)
             if decoded is not None and decoded[0] == "point2d":
                 # numpy box test per rect over the whole batch — no per-row
                 # Python decode (VERDICT r1 perf item 2)
@@ -440,9 +440,9 @@ def _sjoin_grid(left, right, predicate, how, lsuffix, rsuffix, left_on, right_on
     def _bounds_once():
         @arrow_series_udf("array<double>")
         def _b(s: pd.Series) -> pd.Series:
-            from polars_st_spark.geo.wkb import batch_uniform
+            from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
-            fast = batch_uniform(s) if not s.isna().any() else None
+            fast = uniform_batch_pa(s)
             if fast is not None:
                 if fast[0] == "point2d":
                     return pd.Series([[x, y, x, y] for x, y in zip(fast[1], fast[2])])

@@ -1,9 +1,10 @@
-"""Dump .explain("formatted") for the round-12 optimization surfaces to
-plans/r12/<query>_<tag>.txt.
+"""Dump .explain("formatted") for the 8 headline queries and the round-12
+optimization surfaces to <out_dir>/<query>_<tag>.txt.
 
-Usage: python scripts/dump_plans_r12.py before|after
+Usage: python scripts/dump_plans.py before|after [out_dir]
 
-Covers the surfaces r12 touches (VERDICT r11 items 2-6, 8b):
+``out_dir`` defaults to plans/r12 (relative paths are taken from the repo
+root). Covers the surfaces r12 touches (VERDICT r11 items 2-6, 8b):
   - b2a_relate_adjacent: the mixed-argument construct→relate chain
   - relate_point_chain / predicate_point_chain: predicate(col, st_point)
   - distance_point_chain: st_distance(col, st_point(...))
@@ -28,19 +29,20 @@ _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
+OUT = os.path.join(_HERE, sys.argv[2] if len(sys.argv) > 2 else os.path.join("plans", "r12"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
-OUT = os.path.join(_HERE, "plans", "r12")
-os.makedirs(OUT, exist_ok=True)
 
 
 def main():
     import numpy as np
+
+    os.makedirs(OUT, exist_ok=True)
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("r12-plan-dump")
+        .appName("plan-dump")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")

@@ -129,20 +129,20 @@ def test_null_rows_keep_fast_lane(spark):
 
     import pyarrow as pa
 
+    from polars_st_spark.geo.arrowwkb import flat_views
     from polars_st_spark.operators.arrowpath import (
-        _flat_views, _uniform_bounds, _uniform_measures)
+        _uniform_bounds, _uniform_measures)
     rect_rows = [r["g"] for r in df.limit(300).collect()]
     arr = pa.array([None if b is None else bytes(b) for b in rect_rows],
                    type=pa.binary())
-    assert arr.null_count > 0
-    offs, data, valid = _flat_views(arr)
-    fast = _uniform_measures(offs, data, valid)
+    assert arr.null_count > 0 and flat_views(arr)[2] is not None
+    fast = _uniform_measures(arr)
     assert fast is not None, "null bitmap must not abort the uniform lane"
     area, length = fast
     import numpy as np
     assert np.isnan(area[3]) and np.isnan(length[3])  # id=3 is the null
     assert area[0] == 1.0 * 2.0
-    fastb = _uniform_bounds(offs, data, valid)
+    fastb = _uniform_bounds(arr)
     assert fastb is not None and np.isnan(fastb[0][3]) and fastb[2][1] == 2.0
 
 

@@ -1,8 +1,10 @@
 """r11 optimization kernels: parity tests.
 
-1. ``geo.arrowwkb.uniform_batch_pa`` must return byte-identical results to
-   ``geo.wkb.batch_uniform`` (the pandas-era parser) on every batch shape —
-   the arrow_udf fast lanes dispatch on its output.
+1. ``geo.arrowwkb`` is the one batch reader: ``uniform_batch_pa`` and the
+   ragged scanners it feeds must agree with the per-row ``from_ewkb``
+   decoder, and give identical results whether a batch arrives as a pyarrow
+   array or as the same rows in a list, an object ndarray or a pandas
+   Series — the batch lanes dispatch on their output.
 2. ``functions.predicate._rect_relate_mats`` (closed-form rect×rect DE-9IM)
    must equal the scalar ``geo.predicates.relate`` for every axis-interval
    configuration (13×13 Allen-relation grid plus containment/equality and
@@ -20,7 +22,7 @@ from polars_st_spark.functions.predicate import _rect_relate_mats
 from polars_st_spark.geo import predicates as P
 from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 from polars_st_spark.geo.types import Geometry, GeometryType
-from polars_st_spark.geo.wkb import batch_uniform, to_ewkb
+from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
 
 
 def _pt(x, y, srid=0):
@@ -44,81 +46,108 @@ def _line(coords, srid=0):
                             coords=np.array(coords, dtype=np.float64)))
 
 
-def _assert_same(bufs):
-    """uniform_batch_pa(arrow array of bufs) vs batch_uniform(Series).
+def _input_forms(bufs):
+    """The same rows in every accepted batch input form."""
+    return [
+        list(bufs),
+        np.array(bufs, dtype=object),
+        pd.Series([np.nan if b is None else b for b in bufs], dtype=object),
+    ]
 
-    uniform_batch_pa may accept a SUPERSET of batch_uniform's envelope
-    (e.g. 4-point no-SRID rings, which batch_uniform's length guard
-    assumes a 9-byte header for) — when it accepts a batch the pandas
-    parser declined, the parsed coordinates must equal the per-row
-    decode; when both accept, results must be identical."""
-    from polars_st_spark.geo.wkb import from_ewkb
 
-    ref = batch_uniform(pd.Series(bufs, dtype=object)) if None not in bufs \
-        else None
-    got = uniform_batch_pa(pa.array(bufs, type=pa.binary()))
-    if ref is None:
-        if got is None:
-            return
-        # superset acceptance: verify against the scalar decoder
-        if got[0] == "point2d":
-            for i, b in enumerate(bufs):
-                g = from_ewkb(b)
-                assert (g.coords[0], g.coords[1]) == (got[1][i], got[2][i])
+def _same_uniform(got, ref):
+    assert (got is None) == (ref is None)
+    if ref is not None:
+        assert got[0] == ref[0]
+        np.testing.assert_array_equal(np.asarray(got[1]), np.asarray(ref[1]))
+        if ref[0] == "point2d":
+            np.testing.assert_array_equal(np.asarray(got[2]), np.asarray(ref[2]))
         else:
-            for i, b in enumerate(bufs):
-                g = from_ewkb(b)
-                np.testing.assert_array_equal(np.asarray(got[1][i]), g.rings[0])
+            assert got[2] == ref[2]
+
+
+def _assert_same(bufs, expect):
+    """uniform_batch_pa over an Arrow array of ``bufs`` returns ``expect``
+    ("point2d", "ring" or None), its coordinates equal the per-row
+    ``from_ewkb`` decode, ``axis_rect`` equals the per-row st_rectangle
+    vertex-order test, and every other input form gives the identical
+    result."""
+    got = uniform_batch_pa(pa.array(bufs, type=pa.binary()))
+    for form in _input_forms(bufs):
+        _same_uniform(uniform_batch_pa(form), got)
+    if expect is None:
+        assert got is None
         return
-    assert got is not None and got[0] == ref[0]
-    if ref[0] == "point2d":
-        np.testing.assert_array_equal(np.asarray(got[1]), ref[1])
-        np.testing.assert_array_equal(np.asarray(got[2]), ref[2])
-    else:
-        np.testing.assert_array_equal(np.asarray(got[1]), ref[1])
-        assert got[2] == ref[2]
+    assert got is not None and got[0] == expect
+    geoms = [from_ewkb(b) for b in bufs]
+    if expect == "point2d":
+        assert all(g.type_id == GeometryType.Point for g in geoms)
+        np.testing.assert_array_equal(np.asarray(got[1]), [g.coords[0] for g in geoms])
+        np.testing.assert_array_equal(np.asarray(got[2]), [g.coords[1] for g in geoms])
+        return
+    assert all(g.type_id == GeometryType.Polygon and len(g.rings) == 1 for g in geoms)
+    np.testing.assert_array_equal(np.asarray(got[1]), np.stack([g.rings[0] for g in geoms]))
+    rect = got[1].shape[1] == 5 and all(
+        r[0, 0] == r[3, 0] == r[4, 0] and r[1, 0] == r[2, 0]
+        and r[0, 1] == r[1, 1] == r[4, 1] and r[2, 1] == r[3, 1]
+        for r in (g.rings[0] for g in geoms))
+    assert got[2] == rect
 
 
 class TestUniformBatchPa:
     def test_points(self):
-        _assert_same([_pt(1.5, -2.0), _pt(0.0, 3.25), _pt(7.0, 7.0)])
+        _assert_same([_pt(1.5, -2.0), _pt(0.0, 3.25), _pt(7.0, 7.0)], "point2d")
 
     def test_points_srid(self):
-        _assert_same([_pt(1.0, 2.0, srid=4326), _pt(3.0, 4.0, srid=4326)])
+        _assert_same([_pt(1.0, 2.0, srid=4326), _pt(3.0, 4.0, srid=4326)], "point2d")
 
     def test_points_mixed_srid_falls_back(self):
-        # differing structural prefix → both parsers decline
-        got = uniform_batch_pa(pa.array(
-            [_pt(1.0, 2.0, srid=4326), _pt(3.0, 4.0, srid=3857)],
-            type=pa.binary()))
-        assert got is None
+        # differing structural prefix → declined
+        _assert_same([_pt(1.0, 2.0, srid=4326), _pt(3.0, 4.0, srid=3857)], None)
 
     def test_rects(self):
-        _assert_same([_rect(0, 0, 2, 3), _rect(1, 1, 5, 9), _rect(-4, -4, -1, -2)])
+        _assert_same([_rect(0, 0, 2, 3), _rect(1, 1, 5, 9), _rect(-4, -4, -1, -2)],
+                     "ring")
 
     def test_rects_srid(self):
-        _assert_same([_rect(0, 0, 2, 3, srid=32610), _rect(1, 1, 5, 9, srid=32610)])
+        _assert_same([_rect(0, 0, 2, 3, srid=32610), _rect(1, 1, 5, 9, srid=32610)],
+                     "ring")
 
     def test_nonrect_rings(self):
         tri = _ring([[0, 0], [4, 0], [2, 3], [0, 0]])
         tri2 = _ring([[1, 1], [5, 1], [3, 4], [1, 1]])
-        _assert_same([tri, tri2])
+        _assert_same([tri, tri2], "ring")
 
     def test_ring_vertex_count_mismatch(self):
-        _assert_same([_rect(0, 0, 2, 3), _ring([[0, 0], [4, 0], [2, 3], [0, 0]])])
+        _assert_same([_rect(0, 0, 2, 3), _ring([[0, 0], [4, 0], [2, 3], [0, 0]])],
+                     None)
 
     def test_mixed_types(self):
-        _assert_same([_pt(0, 0), _rect(0, 0, 1, 1)])
+        _assert_same([_pt(0, 0), _rect(0, 0, 1, 1)], None)
 
     def test_lines_decline(self):
-        _assert_same([_line([[0, 0], [1, 1]]), _line([[2, 2], [3, 3]])])
+        _assert_same([_line([[0, 0], [1, 1]]), _line([[2, 2], [3, 3]])], None)
 
     def test_nulls_decline(self):
-        got = uniform_batch_pa(pa.array([_pt(0, 0), None], type=pa.binary()))
-        assert got is None
+        _assert_same([_pt(0, 0), None], None)
 
     def test_empty_batch(self):
         assert uniform_batch_pa(pa.array([], type=pa.binary())) is None
+        for form in ([], np.array([], dtype=object), pd.Series([], dtype=object)):
+            assert uniform_batch_pa(form) is None
+
+    def test_z_m_big_endian_iso_decline(self):
+        pz = to_ewkb(Geometry(GeometryType.Point, has_z=True,
+                              coords=np.array([1.0, 2.0, 3.0])))
+        _assert_same([pz, pz], None)
+        pm = to_ewkb(Geometry(GeometryType.Point, has_m=True,
+                              coords=np.array([1.0, 2.0, 3.0])))
+        _assert_same([pm, pm], None)
+        be = to_ewkb(from_ewkb(_pt(1.0, 2.0)), byte_order=0)
+        _assert_same([be, be], None)
+        iso = b"\x01" + (1001).to_bytes(4, "little") + np.array(
+            [1.0, 2.0, 3.0]).tobytes()
+        _assert_same([iso, iso], None)
 
     def test_sliced_array(self):
         arr = pa.array([_pt(9, 9), _pt(1, 2), _pt(3, 4)], type=pa.binary())
@@ -132,6 +161,40 @@ class TestUniformBatchPa:
         got = uniform_batch_pa(arr)
         assert got is not None and got[0] == "point2d"
         np.testing.assert_array_equal(np.asarray(got[1]), [1.0, 3.0])
+        _same_uniform(uniform_batch_pa(arr.cast(pa.binary())), got)
+
+    def test_returns_read_only_views(self):
+        got = uniform_batch_pa([_rect(0, 0, 2, 3), _rect(1, 1, 5, 9)])
+        with pytest.raises(ValueError):
+            got[1][0, 0, 0] = 9.0
+
+
+def _row(word, payload=(0.0, 0.0)):
+    """One little-endian row: endian byte, raw type word, float64 payload."""
+    return b"\x01" + int(word).to_bytes(4, "little") + np.array(
+        payload, dtype="<f8").tobytes()
+
+
+class TestMalformedTypeWords:
+    """A type word whose base type is not a known geometry type is invalid
+    WKB: the per-row decoder raises (as GEOS's reader does) and every batch
+    parser declines — none may read it as a point or a collection."""
+
+    @pytest.mark.parametrize("word", [0x101, 0])
+    def test_per_row_decoder_raises(self, word):
+        with pytest.raises(ValueError, match="unknown geometry type"):
+            from_ewkb(_row(word))
+
+    @pytest.mark.parametrize("word", [0x101, 0])
+    def test_batch_parsers_decline(self, word):
+        from polars_st_spark.geo import ragged as RG
+
+        batch = [_row(word, (1.0, 2.0)), _row(word, (3.0, 4.0))]
+        for form in [pa.array(batch, type=pa.binary())] + _input_forms(batch):
+            assert uniform_batch_pa(form) is None
+            for parse in (RG.parse_polygonal, RG.parse_lineal,
+                          RG.parse_multipoints, RG.split_families):
+                assert parse(form) is None, parse.__name__
 
 
 def _boxes_of(rects):
@@ -148,21 +211,54 @@ def _mpoly(parts, srid=0):
     return to_ewkb(Geometry(GeometryType.MultiPolygon, srid=srid, geoms=geoms))
 
 
-class TestRaggedPaParity:
-    """parse_*_pa (Arrow-buffer entries) must produce CSR structures
-    identical to the pandas-Series parsers."""
+_RAGGED_FIELDS = ("n", "coords", "row_start", "ring_start", "ring_row",
+                  "ring_part", "ring_hole", "part_row", "chain_start",
+                  "chain_row", "null_mask", "srid", "srid_uniform", "spans",
+                  "child_srid")
 
-    def _cmp(self, parse_pd, parse_pa, bufs):
-        ref = parse_pd(pd.Series(bufs, dtype=object))
-        got = parse_pa(pa.array(bufs, type=pa.binary()))
-        if ref is None:
-            assert got is None
-            return
-        assert got is not None
-        np.testing.assert_array_equal(ref.coords, got.coords)
-        np.testing.assert_array_equal(ref.row_start, got.row_start)
-        np.testing.assert_array_equal(ref.null_mask, got.null_mask)
-        assert ref.srid == got.srid and ref.srid_uniform == got.srid_uniform
+
+def _same_fields(got, ref):
+    assert (got is None) == (ref is None)
+    if ref is None:
+        return
+    if isinstance(ref, dict):  # split_families
+        assert got.keys() == ref.keys()
+        for k in ref:
+            np.testing.assert_array_equal(got[k], ref[k])
+        return
+    for f in _RAGGED_FIELDS:
+        if not hasattr(type(ref), f):
+            continue
+        a, b = getattr(got, f), getattr(ref, f)
+        if isinstance(b, tuple):
+            assert len(a) == len(b)
+            for x, y in zip(a, b):
+                np.testing.assert_array_equal(x, y)
+        else:
+            np.testing.assert_array_equal(a, b, err_msg=f)
+
+
+class TestRaggedPaParity:
+    """The ragged scanners read Arrow buffers only: an Arrow array and the
+    same rows as a list, an object ndarray or a pandas Series with NaN for
+    nulls give identical fields, as do sliced and large_binary arrays."""
+
+    def _cmp(self, parse, bufs):
+        arr = pa.array(bufs, type=pa.binary())
+        ref = parse(arr)
+        for form in _input_forms(bufs):
+            _same_fields(parse(form), ref)
+        _same_fields(parse(arr.cast(pa.large_binary())), ref)
+        padded = pa.array([b"\x00" * 7] + list(bufs) + [None], type=pa.binary())
+        _same_fields(parse(padded.slice(1, len(bufs))), ref)
+        return ref
+
+    def _cmp_all(self, bufs):
+        from polars_st_spark.geo import ragged as RG
+
+        return [self._cmp(fn, bufs) for fn in (
+            RG.parse_polygonal, RG.parse_lineal, RG.parse_multipoints,
+            RG.split_families)]
 
     def test_polygons_with_holes_and_nulls(self):
         from polars_st_spark.geo import ragged as RG
@@ -174,24 +270,82 @@ class TestRaggedPaParity:
         ], [
             [[10, 10], [12, 10], [12, 12], [10, 12], [10, 10]],
         ]], srid=4326)
-        self._cmp(RG.parse_polygonal, RG.parse_polygonal_pa, [sq, holed, None, sq])
+        bufs = [sq, holed, None, sq]
+        rp, rl, mp, fam = self._cmp_all(bufs)
+        assert rl is None and mp is None
+        assert rp is not None and not rp.srid_uniform
+        np.testing.assert_array_equal(rp.null_mask, [False, False, True, False])
+        np.testing.assert_array_equal(fam["poly"], [0, 1, 3])
+        _same_fields(rp, RG._parse_polygonal_loop(bufs))
 
     def test_lines(self):
         from polars_st_spark.geo import ragged as RG
 
-        l1 = _line([[0, 0], [1, 1], [2, 0]])
-        l2 = _line([[5, 5], [6, 6]])
-        self._cmp(RG.parse_lineal, RG.parse_lineal_pa, [l1, None, l2])
+        l1 = _line([[0, 0], [1, 1], [2, 0]], srid=3857)
+        l2 = _line([[5, 5], [6, 6]], srid=3857)
+        bufs = [l1, None, l2]
+        rp, rl, mp, fam = self._cmp_all(bufs)
+        assert rp is None and mp is None and rl.srid == 3857 and rl.srid_uniform
+        _same_fields(rl, RG._parse_lineal_loop(bufs))
+        np.testing.assert_array_equal(fam["line"], [0, 2])
+
+    def test_multipoints(self):
+        from polars_st_spark.geo.types import Geometry as G
+
+        def mp(*pts):
+            return to_ewkb(G(GeometryType.MultiPoint, geoms=[
+                G(GeometryType.Point, coords=np.array(p, dtype=np.float64))
+                for p in pts]))
+
+        bufs = [mp((0, 0), (1, 2)), None, mp((5, 5))]
+        rp, rl, mpt, fam = self._cmp_all(bufs)
+        assert rp is None and rl is None
+        np.testing.assert_array_equal(mpt.coords, [[0, 0], [1, 2], [5, 5]])
+        np.testing.assert_array_equal(fam["mpoint"], [0, 2])
+
+    def test_mixed_families_and_empty(self):
+        bufs = [_pt(1, 2), _line([[0, 0], [1, 1]]), None,
+                _ring([[0, 0], [4, 0], [4, 4], [0, 0]])]
+        rp, rl, mp, fam = self._cmp_all(bufs)
+        assert rp is None and rl is None and mp is None
+        for key, rows in (("null", [2]), ("point", [0]), ("line", [1]), ("poly", [3])):
+            np.testing.assert_array_equal(fam[key], rows)
+        for out in self._cmp_all([None, None]):
+            assert out is not None
+        for out in self._cmp_all([])[:3]:
+            assert out is not None and out.n == 0
+
+    def test_curve_rows_leave_the_family_split(self):
+        """A curve row belongs to no ragged family: split_families declines
+        the batch, so the mixed-family measures cannot drop the row (its
+        length and bounds come from the per-row kernel)."""
+        from polars_st_spark.functions import scalar as S
+        from polars_st_spark.geo import algos
+
+        arc = to_ewkb(Geometry(GeometryType.CircularString,
+                               coords=np.array([[0, 0], [1, 1], [2, 0]], dtype=np.float64)))
+        bufs = [_rect(0, 0, 4, 4), _line([[0, 0], [3, 4]]), arc]
+        assert self._cmp_all(bufs)[3] is None
+        arr = pa.array(bufs, type=pa.binary())
+        geoms = [from_ewkb(b) for b in bufs]
+        assert S._length_udf.func(arr).to_pylist() == [algos.length(g) for g in geoms]
+        assert S._bounds_udf.func(arr).to_pylist() == [list(g.bounds()) for g in geoms]
 
     def test_decline_mixed(self):
         from polars_st_spark.geo import ragged as RG
 
         assert RG.parse_polygonal_pa(
             pa.array([_line([[0, 0], [1, 1]])], type=pa.binary())) is None
+        pz = to_ewkb(Geometry(GeometryType.LineString, has_z=True,
+                              coords=np.array([[0.0, 0, 1], [1, 1, 1]])))
+        be = to_ewkb(from_ewkb(_line([[0, 0], [1, 1]])), byte_order=0)
+        iso = b"\x01" + (1002).to_bytes(4, "little") + (2).to_bytes(
+            4, "little") + np.zeros(6).tobytes()
+        for bad in (pz, be, iso):
+            assert all(out is None for out in self._cmp_all([bad, bad]))
 
     def test_area_matches_scalar(self):
         from polars_st_spark.geo import algos, ragged as RG
-        from polars_st_spark.geo.wkb import from_ewkb
 
         holed = _mpoly([[
             [[0, 0], [8, 0], [8, 8], [0, 8], [0, 0]],
