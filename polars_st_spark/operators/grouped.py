@@ -17,10 +17,10 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_st_spark.geo import setops
 from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
+from polars_st_spark.plans import plan_stats
 
 __all__ = [
     "union_all_grouped",
@@ -89,7 +89,6 @@ def union_all_grouped(
     result_col: str = "union_geom",
     strategy: str = "auto",
     hot_group_threshold: int = 100_000,
-    sample_fraction: float = 0.02,
     stats_max_group_rows: int | None = None,
     probe_partitions: int = 8,
 ) -> DataFrame:
@@ -113,13 +112,17 @@ def union_all_grouped(
     1. ``stats_max_group_rows`` — a caller-supplied statistic (table
        stats, a cached earlier count): no probe runs at all. The 100 TB
        path when the caller knows its keys.
-    2. a BOUNDED-I/O probe (:func:`_probe_max_group_rows`) that computes
+    2. Catalyst's row count of the whole input
+       (:func:`~polars_st_spark.plans.plan_stats`, no job): no group is
+       larger than the input, so a count at or below
+       ``hot_group_threshold`` proves ``"single"``. Cached, local and
+       ``range`` inputs carry an exact count.
+    3. a BOUNDED-I/O probe (:func:`_probe_max_group_rows`) that computes
        only ``probe_partitions`` evenly-spaced partitions of the
-       group-column projection via ``sc.runJob`` — r11; the r10
-       ``sample(fraction)`` probe read the whole input once before the
-       union started. ``sample_fraction`` is kept for callers who pass
-       ``probe_partitions=None`` (a shuffle-fed input where partition
-       probing would recompute the shuffle map side anyway).
+       group-column projection via ``sc.runJob`` — for inputs Catalyst
+       cannot size (row count unknown, e.g. after a filter) or sizes above
+       the threshold. This is the only step that runs a job before the
+       action.
 
     Two-phase is chosen when the estimate exceeds
     ``hot_group_threshold``. The returned DataFrame carries the decision
@@ -127,14 +130,10 @@ def union_all_grouped(
     if strategy == "auto":
         if stats_max_group_rows is not None:
             top = int(stats_max_group_rows)
-        elif probe_partitions is None:
-            probe = (df.sample(fraction=sample_fraction, seed=7)
-                     if sample_fraction < 1.0 else df)
-            top = int(((probe.groupBy(*group_cols).count()
-                        .agg(F.max("count").alias("mx")).collect()[0]["mx"])
-                       or 0) / sample_fraction)
         else:
-            top = _probe_max_group_rows(df, group_cols, probe_partitions)
+            _, top = plan_stats(df)
+            if top is None or top > hot_group_threshold:
+                top = _probe_max_group_rows(df, group_cols, probe_partitions)
         strategy = "two_phase" if top > hot_group_threshold else "single"
     if strategy == "two_phase":
         out = union_all_two_phase(df, group_cols, geom_col, result_col)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_st_spark.functions.scalar import st_bounds
+from polars_st_spark.plans import bounded_fetch
 
 __all__ = ["st_sjoin_nearest", "nearest_cell_stats"]
 
@@ -75,7 +76,16 @@ def st_sjoin_nearest(
     instead of the ``"cross"`` plan's O(n_left · n_right) full cross-join
     scoring (kept available for audit; identical distances, ties may pick
     a different equal-distance row — strtree ties break on a stable
-    content digest of the right row)."""
+    content digest of the right row). Both collect the right side through
+    the driver when called, in ONE fetch that is also the
+    ``broadcast_limit`` guard: a plain fetch when Catalyst's row count
+    (:func:`~polars_st_spark.plans.plan_stats`) proves the side fits,
+    otherwise ``limit(broadcast_limit + 1)``; more rows fetched than the
+    limit raise. The grid strategy runs no job before the action unless
+    ``max_cell_candidates`` is set.
+
+    The chosen plan (``"strtree"``, ``"cross"`` or ``"grid"``) is exposed
+    on the result as ``df._chosen_strategy``."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if how not in ("inner", "left"):
@@ -120,17 +130,20 @@ def st_sjoin_nearest(
     if max_distance is None:
         if strategy not in ("auto", "strtree", "cross"):
             raise ValueError(f"strategy must be auto/strtree/cross, got {strategy!r}")
-        n_right = rstaged.count()
-        if n_right > broadcast_limit:
+        # the guard and the strtree payload are ONE fetch
+        rpdf = bounded_fetch(rstaged, broadcast_limit).toPandas()
+        if len(rpdf) > broadcast_limit:
             raise ValueError(
-                f"right side has {n_right} rows > broadcast_limit="
-                f"{broadcast_limit}; pass max_distance= for the scalable "
-                "grid strategy (or raise broadcast_limit explicitly)"
+                f"right side has more than broadcast_limit={broadcast_limit} "
+                "rows; pass max_distance= for the scalable grid strategy (or "
+                "raise broadcast_limit explicitly)"
             )
         if strategy in ("auto", "strtree"):
             ranked = _nearest_strtree(
-                lstaged, rstaged, k, left_on, r_geom, distance_col, lid)
-            return _finish_how(ranked, lstaged, lid, how)
+                lstaged, rstaged, rpdf, k, left_on, r_geom, distance_col, lid)
+            out = _finish_how(ranked, lstaged, lid, how)
+            out._chosen_strategy = "strtree"
+            return out
         # null/empty left geometries produce null distance for EVERY
         # candidate; drop those pairs so the strategies agree (the grid
         # path never cells such rows) and how='left' routes them to the
@@ -220,7 +233,9 @@ def st_sjoin_nearest(
         .where(F.col("__nn_rank") <= k)
         .drop("__nn_rank")
     )
-    return _finish_how(ranked, lstaged, lid, how)
+    out = _finish_how(ranked, lstaged, lid, how)
+    out._chosen_strategy = "cross" if max_distance is None else "grid"
+    return out
 
 
 def _finish_how(ranked: DataFrame, lstaged: DataFrame, lid: str, how: str) -> DataFrame:
@@ -244,6 +259,7 @@ def _finish_how(ranked: DataFrame, lstaged: DataFrame, lid: str, how: str) -> Da
 def _nearest_strtree(
     lstaged: DataFrame,
     rstaged: DataFrame,
+    rpdf,
     k: int,
     left_on: str,
     r_geom: str,
@@ -252,20 +268,20 @@ def _nearest_strtree(
 ) -> DataFrame:
     """Broadcast expanding-ring STRtree k-NN (the r5 no-cap default).
 
-    The right table is collected (``broadcast_limit``-guarded by the
-    caller) with its bboxes; each worker bulk-loads one STR-packed R-tree
-    and answers every left row with an expanding box query: start at a
-    density-derived radius, double until >= k candidates AND the k-th
-    candidate distance fits inside the ring (an item whose bbox misses a
-    box expanded by r is > r away — Chebyshev bound), then rank exact
-    distances. Ties break on a stable content digest of the right row
-    (rerun- and partitioning-independent). Null/empty left rows emit
-    nothing — how='left' routes them to the unmatched set."""
+    The right table arrives collected as ``rpdf`` (``broadcast_limit``-
+    guarded by the caller) and is broadcast with its bboxes; each worker
+    bulk-loads one STR-packed R-tree and answers every left row with an
+    expanding box query: start at a density-derived radius, double until
+    >= k candidates AND the k-th candidate distance fits inside the ring
+    (an item whose bbox misses a box expanded by r is > r away —
+    Chebyshev bound), then rank exact distances. Ties break on a stable
+    content digest of the right row (rerun- and partitioning-independent).
+    Null/empty left rows emit nothing — how='left' routes them to the
+    unmatched set."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = lstaged.sparkSession
-    rpdf = rstaged.toPandas()
     n_right = len(rpdf)
     rbounds = _driver_bounds(rpdf[r_geom].to_numpy())
     digest = pd.util.hash_pandas_object(rpdf, index=False).to_numpy() \

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polars_st_spark.plans import plan_stats
+
 __all__ = ["filter_pairs"]
 
 _PREDICATES = {
@@ -174,11 +176,8 @@ def _suffixed(l: DataFrame, r: DataFrame, on, broadcast) -> DataFrame:
 
 def _cross_or_join(l: DataFrame, r: DataFrame, on, broadcast) -> DataFrame:
     if broadcast == "auto":
-        try:
-            size = int(r._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            broadcast = size <= 64 * 1024 * 1024
-        except Exception:
-            broadcast = False
+        size, _ = plan_stats(r)
+        broadcast = size is not None and size <= 64 * 1024 * 1024
     if broadcast:
         r = F.broadcast(r)
     return l.crossJoin(r) if on is None else l.join(r, on)

@@ -37,6 +37,7 @@ from pyspark.sql.types import StructType
 from polars_st_spark.geo import predicates as P
 from polars_st_spark.geo.index import STRtree
 from polars_st_spark.geo.wkb import from_ewkb
+from polars_st_spark.plans import bounded_fetch, plan_stats
 
 __all__ = ["st_sjoin", "SJOIN_PREDICATES"]
 
@@ -90,6 +91,9 @@ def st_sjoin(
     (asserted in tests/test_sjoin.py). Off by default: detection costs a
     sampled counting job, and AQE's skew-join split already covers moderate
     skew at run time.
+
+    The strategy used (``"broadcast"`` or ``"grid"``) is exposed on the
+    result as ``df._chosen_strategy``.
     """
     if predicate not in SJOIN_PREDICATES:
         raise ValueError(f"Unknown predicate {predicate!r}; valid: {sorted(SJOIN_PREDICATES)}")
@@ -104,19 +108,16 @@ def st_sjoin(
         # The broadcast path collects the ENTIRE right side through the
         # driver. The auto path only picks it under a 64 MB Catalyst-stats
         # guard below; a caller who hardcodes strategy='broadcast' on a big
-        # side would get a driver OOM instead of an error. r11 (guide §1.2:
-        # remove a pass): the bounded guard and the broadcast payload are
-        # now ONE job — ``limit(cap+1).collect()`` both enforces the row
-        # cap and yields the rows _sjoin_broadcast needs, where the old
-        # path paid a ``limit(cap+1).count()`` probe job AND a full
-        # ``collect()`` job. Driver exposure is unchanged in magnitude: at
-        # most cap+1 rows materialize, the same order as any successful
-        # forced broadcast. (A Catalyst-stats shortcut was tried and
-        # reverted — broadcast_threshold is a caller ROW cap and byte
-        # estimates must not override it,
-        # tests/test_sjoin.py::test_forced_broadcast_oversized_right_raises.)
+        # side would get a driver OOM instead of an error. The guard and the
+        # broadcast payload are ONE fetch of at most cap+1 rows, a plain
+        # collect when Catalyst's row count proves the cap. broadcast_threshold
+        # is a caller ROW cap: a byte estimate never overrides it, and the cap
+        # is checked on what was fetched. A count above the cap does not raise
+        # without the fetch, because Catalyst counts a sample by its fraction
+        # and a semi/anti join by its left side: an estimate or a bound, not
+        # a proof.
         cap = max(int(broadcast_threshold), 1) * 10
-        right_rows = right.limit(cap + 1).collect()
+        right_rows = bounded_fetch(right, cap).collect()
         if len(right_rows) > cap:
             raise ValueError(
                 f"strategy='broadcast' was forced but the right side has more "
@@ -131,13 +132,10 @@ def st_sjoin(
         # to a bounded count probe only when stats are unavailable. The
         # broadcast path collects the right side through the driver, so the
         # threshold is deliberately conservative.
-        strategy = None
-        try:
-            size = int(right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size, _ = plan_stats(right)
+        if size is not None:
             strategy = "broadcast" if size <= 64 * 1024 * 1024 else "grid"
-        except Exception:
-            pass
-        if strategy is None:
+        else:
             n_right = right.limit(broadcast_threshold + 1).count()
             strategy = "broadcast" if n_right <= broadcast_threshold else "grid"
 
@@ -151,8 +149,15 @@ def st_sjoin(
     else:
         raise ValueError(f"Unknown strategy {strategy!r}")
 
-    if how in ("inner", "left"):
-        return out
+    if how not in ("inner", "left"):
+        out = _finish_how(left, right, out, how, lsuffix, rsuffix)
+    out._chosen_strategy = strategy
+    return out
+
+
+def _finish_how(left: DataFrame, right: DataFrame, out: DataFrame, how: str,
+                lsuffix: str, rsuffix: str) -> DataFrame:
+    """semi / anti / right / full joins from the inner-or-left pair set."""
     lnames, rnames = _suffix_schema(left, right, lsuffix, rsuffix)
 
     def null_safe_cond(a, b, cols_a, cols_b):

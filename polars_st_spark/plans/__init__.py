@@ -1,5 +1,5 @@
-"""Plan-level helpers: pushdown-friendly bbox materialization and explain
-utilities.
+"""Plan-level helpers: pushdown-friendly bbox materialization, explain
+utilities and Catalyst's plan statistics.
 
 Pandas UDFs are opaque to Catalyst (SURVEY §4): a filter written as
 ``st_intersects(geom, window)`` cannot reach the Parquet scan. The mitigation
@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["materialize_bbox", "bbox_filter", "push_window_filter", "explain_str", "write_bucketed"]
+__all__ = ["materialize_bbox", "bbox_filter", "push_window_filter", "explain_str",
+           "plan_stats", "bounded_fetch", "write_bucketed"]
 
 BBOX_COLS = ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")
 
@@ -65,6 +66,36 @@ def push_window_filter(
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     """The formatted plan as a string (for assertions on pushdown/codegen)."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)  # type: ignore[attr-defined]
+
+
+def plan_stats(df: DataFrame) -> tuple[int | None, int | None]:
+    """``(size_bytes, row_count)`` of ``df`` as Catalyst's optimizer
+    estimates them — read off the optimized logical plan, so no Spark job
+    runs. ``row_count`` is None where Catalyst does not know it (after a
+    filter, a Python UDF projection or an aggregate; an RDD-backed frame);
+    it is exact for cached, local and ``range`` inputs, renames of them and
+    limits over them. Both are None when there is no JVM plan to read
+    (e.g. a Spark Connect DataFrame)."""
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        rows = stats.rowCount()
+        return (int(stats.sizeInBytes()),
+                int(rows.get()) if rows.isDefined() else None)
+    except Exception:
+        return None, None
+
+
+def bounded_fetch(df: DataFrame, max_rows: int) -> DataFrame:
+    """The frame to collect when at most ``max_rows`` rows of ``df`` may
+    reach the driver: ``df`` itself when Catalyst's row count proves it fits
+    (one job), otherwise ``df.limit(max_rows + 1)`` (a limit collect scans
+    partitions in growing rounds, often several jobs). Catalyst's count can
+    be an estimate (a sample's), so the caller checks the length of what it
+    fetched. The count is read off the limited frame, so collecting that
+    frame reuses the plan Catalyst already optimized."""
+    bounded = df.limit(max_rows + 1)
+    _, rows = plan_stats(bounded)
+    return df if rows is not None and rows <= max_rows else bounded
 
 
 def write_bucketed(

@@ -345,8 +345,7 @@ def test_union_all_grouped_cost_based(spark):
         st.st_rectangle((F.col("id") % 31) * 1.0, F.lit(0.0),
                         (F.col("id") % 31) + 2.0, F.lit(2.0)).alias("geom"))
     # 4 groups x 5000 rows, threshold 1000 -> hot -> two-phase
-    hot = union_all_grouped(df, ["grp"], "geom", hot_group_threshold=1_000,
-                            sample_fraction=0.5)
+    hot = union_all_grouped(df, ["grp"], "geom", hot_group_threshold=1_000)
     assert "MapInPandas" in hot._jdf.queryExecution().executedPlan().toString()
     # threshold far above any group -> single-phase
     cold = union_all_grouped(df, ["grp"], "geom",
@@ -407,8 +406,3 @@ def test_union_all_grouped_probe_bounded(spark):
                                stats_max_group_rows=1_000_000)
     assert hinted._chosen_strategy == "two_phase"
     assert acc.value == 0, "stats hint must skip the probe"
-
-    # legacy sample probe still reachable
-    samp = union_all_grouped(df, ["grp"], "geom", probe_partitions=None,
-                             sample_fraction=0.5, hot_group_threshold=10_000)
-    assert samp._chosen_strategy == "single"
