@@ -1,11 +1,17 @@
 """Spatial aggregations (reference: §2.7, expressions.rs:873-999).
 
-Implemented as GROUPED_AGG pandas UDFs (usable in ``groupBy().agg(...)`` and
-whole-frame ``select``), plus a pure-Spark-SQL ``st_total_bounds`` that needs
-no Python at all for the aggregation step.
+Every geometry aggregate is an Arrow grouped-aggregate UDF (evalType 252,
+planned as ``ArrowAggregatePython``; usable in ``groupBy().agg(...)``,
+whole-frame ``select`` and SQL ``GROUP BY``): one kernel per aggregate,
+``pa.Array`` of EWKB in, EWKB bytes out. ``st_total_bounds`` is pure Spark
+SQL and needs no Python at all for the aggregation step.
+
+Spark plans one eval type per ``.agg()``: a user's own pandas
+``GROUPED_AGG`` UDF (evalType 202) cannot share a ``.agg()`` with these;
+write it as an ``arrow_udf`` or aggregate it separately and join.
 
 Scale notes (100 TB):
-- GROUPED_AGG ships all group values to one task. ``union_all`` /
+- A grouped aggregate ships all group values to one task. ``union_all`` /
   ``intersection_all`` are associative+commutative (reference:
   expressions.rs:985-999), so for huge groups use
   :func:`polars_st_spark.operators.grouped.union_all_two_phase`, which does a
@@ -18,12 +24,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from polars_st_spark.functions.factory import col_or_lit
+from polars_st_spark.functions.factory import col_or_lit, spark_dt
 from polars_st_spark.geo import setops
 from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
 
@@ -41,21 +47,35 @@ __all__ = [
 ]
 
 
-def _decode_series(s: pd.Series):
-    return [None if b is None else from_ewkb(bytes(b)) for b in s]
+def geom_agg(kernel, **params):
+    """Arrow grouped aggregate (evalType 252) running
+    ``kernel(a, **params)`` on each group's ``pa.Array`` of EWKB."""
+
+    def agg(a: pa.Array) -> bytes:
+        return kernel(a, **params)
+
+    return arrow_udf(agg, spark_dt("binary"))
 
 
-def union_series(s: pd.Series, grid_size: float | None = None) -> bytes:
-    """EWKB union of one pandas Series of EWKB values — the kernel behind
-    ``st_union_all``, exposed so the two-phase map side
-    (``operators.grouped.union_all_two_phase``) runs the IDENTICAL code
-    path (including the uniform axis-rect slab-union fast lane)."""
-    from polars_st_spark.geo.rectregion import RectRegion, region_to_geometry
+def _decode(a: pa.Array) -> list:
+    return [None if b is None else from_ewkb(b) for b in a.to_pylist()]
+
+
+def _non_null(a: pa.Array) -> list:
+    return [from_ewkb(b) for b in a.to_pylist() if b is not None]
+
+
+def union_array(a: pa.Array, grid_size: float | None = None) -> bytes:
+    """EWKB union of one Arrow array of EWKB values — the kernel behind
+    ``st_union_all``, also run by the two-phase map side
+    (``operators.grouped.union_all_two_phase``), so both take the same
+    uniform axis-rect slab-union fast lane."""
     from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.rectregion import RectRegion, region_to_geometry
     from polars_st_spark.geo.wkb import header_info
 
-    if len(s) and not s.isna().any():
-        fast = uniform_batch_pa(s)
+    if len(a) and a.null_count == 0:
+        fast = uniform_batch_pa(a)
         if fast is not None and fast[0] == "ring" and fast[2]:
             c = fast[1]
             boxes = zip(
@@ -64,9 +84,9 @@ def union_series(s: pd.Series, grid_size: float | None = None) -> bytes:
             )
             region = RectRegion([tuple(map(float, b)) for b in boxes])
             region = region.union(RectRegion())  # normalize to disjoint
-            srid = header_info(bytes(s.iloc[0]))[3]
+            srid = header_info(a[0].as_py())[3]
             return to_ewkb(region_to_geometry(region, srid))
-    geoms = _decode_series(s)
+    geoms = _decode(a)
     if grid_size is None and geoms and all(g is not None for g in geoms):
         # rectilinear fast path (r10): inputs that are hole-free axis-rect
         # (multi)polygons — the exact shape the two-phase union's partials
@@ -90,32 +110,79 @@ def union_series(s: pd.Series, grid_size: float | None = None) -> bytes:
     return to_ewkb(setops.union_all(geoms, grid_size))
 
 
-def _union_all_udf(grid_size: float | None = None):
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        return union_series(s, grid_size)
+def _intersection_all(a: pa.Array, grid_size: float | None = None) -> bytes:
+    return to_ewkb(setops.intersection_all(_decode(a), grid_size))
 
-    return agg
+
+def _difference_all(a: pa.Array, grid_size: float | None = None) -> bytes:
+    return to_ewkb(setops.difference_all(_decode(a), grid_size))
+
+
+def _symmetric_difference_all(a: pa.Array, grid_size: float | None = None) -> bytes:
+    return to_ewkb(setops.symmetric_difference_all(_decode(a), grid_size))
+
+
+def _coverage_union_all(a: pa.Array) -> bytes:
+    return to_ewkb(setops.union_all(_decode(a)))
+
+
+def _collect(a: pa.Array, into: int | None = None) -> bytes:
+    return to_ewkb(setops.collect(_non_null(a), into=into))
+
+
+def _polygonize_agg(a: pa.Array) -> bytes:
+    import numpy as np
+
+    from polars_st_spark.geo.algos import line_merge
+    from polars_st_spark.geo.types import Geometry, GeometryType, empty_collection
+
+    gs = _non_null(a)
+    if not gs:
+        return to_ewkb(empty_collection())
+    merged = setops.collect(gs)
+    lm = line_merge(merged)
+    chains = [lm.coords] if lm.type_id == GeometryType.LineString else [
+        g.coords for g in (lm.geoms or [])
+    ]
+    polys = [
+        Geometry(GeometryType.Polygon, srid=merged.srid, rings=[c.copy()])
+        for c in chains
+        if c is not None and len(c) >= 4 and np.allclose(c[0], c[-1])
+    ]
+    return to_ewkb(Geometry(GeometryType.GeometryCollection, srid=merged.srid, geoms=polys))
+
+
+def _voronoi_polygons_agg(a: pa.Array, tolerance: float = 0.0) -> bytes:
+    from polars_st_spark.geo.triangulate import voronoi_polygons
+    from polars_st_spark.geo.types import empty_collection
+
+    gs = _non_null(a)
+    if not gs:
+        return to_ewkb(empty_collection())
+    return to_ewkb(voronoi_polygons(setops.collect(gs), tolerance))
+
+
+def _delaunay_triangles_agg(a: pa.Array, tolerance: float = 0.0,
+                            only_edges: bool = False) -> bytes:
+    from polars_st_spark.geo.triangulate import delaunay_triangles
+    from polars_st_spark.geo.types import empty_collection
+
+    gs = _non_null(a)
+    if not gs:
+        return to_ewkb(empty_collection())
+    return to_ewkb(delaunay_triangles(setops.collect(gs), tolerance, only_edges))
 
 
 def st_union_all(col, grid_size: float | None = None) -> Column:
     """Aggregate union; empty/all-null → GEOMETRYCOLLECTION EMPTY
     (reference: expressions.rs:985-999). Uniform axis-rect groups take a
     vectorized slab-union path with no per-row decode."""
-    return _union_all_udf(grid_size)(col_or_lit(col))
-
-
-def _intersection_all_udf(grid_size: float | None = None):
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        return to_ewkb(setops.intersection_all(_decode_series(s), grid_size))
-
-    return agg
+    return geom_agg(union_array, grid_size=grid_size)(col_or_lit(col))
 
 
 def st_intersection_all(col, grid_size: float | None = None) -> Column:
     """(reference: expressions.rs:901-914)"""
-    return _intersection_all_udf(grid_size)(col_or_lit(col))
+    return geom_agg(_intersection_all, grid_size=grid_size)(col_or_lit(col))
 
 
 def st_difference_all(col, grid_size: float | None = None) -> Column:
@@ -125,120 +192,40 @@ def st_difference_all(col, grid_size: float | None = None) -> Column:
     shuffle delivers. For deterministic results use
     :func:`polars_st_spark.operators.grouped.difference_all_ordered` with an
     explicit sort key (SURVEY §7 hard part 4)."""
-
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        return to_ewkb(setops.difference_all(_decode_series(s), grid_size))
-
-    return agg(col_or_lit(col))
+    return geom_agg(_difference_all, grid_size=grid_size)(col_or_lit(col))
 
 
 def st_symmetric_difference_all(col, grid_size: float | None = None) -> Column:
     """Order-dependent left fold (reference: expressions.rs:932-948); same
     ordering caveat as st_difference_all."""
-
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        return to_ewkb(setops.symmetric_difference_all(_decode_series(s), grid_size))
-
-    return agg(col_or_lit(col))
-
-
-def _polygonize_agg_udf():
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        from polars_st_spark.geo.setops import collect as _collect
-
-        gs = [g for g in _decode_series(s) if g is not None]
-        merged = _collect(gs) if gs else None
-        if merged is None:
-            from polars_st_spark.geo.types import empty_collection
-
-            return to_ewkb(empty_collection())
-        import numpy as np
-
-        from polars_st_spark.geo.algos import line_merge as _lm
-        from polars_st_spark.geo.types import Geometry, GeometryType
-
-        lm = _lm(merged)
-        chains = [lm.coords] if lm.type_id == GeometryType.LineString else [
-            g.coords for g in (lm.geoms or [])
-        ]
-        polys = [
-            Geometry(GeometryType.Polygon, srid=merged.srid, rings=[c.copy()])
-            for c in chains
-            if c is not None and len(c) >= 4 and np.allclose(c[0], c[-1])
-        ]
-        return to_ewkb(Geometry(GeometryType.GeometryCollection, srid=merged.srid, geoms=polys))
-
-    return agg
+    return geom_agg(_symmetric_difference_all, grid_size=grid_size)(col_or_lit(col))
 
 
 def st_polygonize_agg(col) -> Column:
     """Polygonize the group's combined linework (reference: functions.rs:1221-1226)."""
-    return _polygonize_agg_udf()(col_or_lit(col))
+    return geom_agg(_polygonize_agg)(col_or_lit(col))
 
 
 def st_voronoi_polygons_agg(col, tolerance: float = 0.0) -> Column:
     """Voronoi diagram of all the group's vertices (reference: functions.rs:1791-1802)."""
-
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        from polars_st_spark.geo.setops import collect as _collect
-        from polars_st_spark.geo.triangulate import voronoi_polygons
-        from polars_st_spark.geo.types import empty_collection
-
-        gs = [g for g in _decode_series(s) if g is not None]
-        if not gs:
-            return to_ewkb(empty_collection())
-        return to_ewkb(voronoi_polygons(_collect(gs), tolerance))
-
-    return agg(col_or_lit(col))
+    return geom_agg(_voronoi_polygons_agg, tolerance=tolerance)(col_or_lit(col))
 
 
 def st_delaunay_triangles_agg(col, tolerance: float = 0.0, only_edges: bool = False) -> Column:
     """Triangulation of all the group's vertices (reference: functions.rs:1364-1373)."""
-
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        from polars_st_spark.geo.setops import collect as _collect
-        from polars_st_spark.geo.triangulate import delaunay_triangles
-        from polars_st_spark.geo.types import empty_collection
-
-        gs = [g for g in _decode_series(s) if g is not None]
-        if not gs:
-            return to_ewkb(empty_collection())
-        return to_ewkb(delaunay_triangles(_collect(gs), tolerance, only_edges))
-
-    return agg(col_or_lit(col))
-
-
-def _coverage_union_all_udf():
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        return to_ewkb(setops.union_all(_decode_series(s)))
-
-    return agg
+    return geom_agg(_delaunay_triangles_agg, tolerance=tolerance,
+                    only_edges=only_edges)(col_or_lit(col))
 
 
 def st_coverage_union_all(col) -> Column:
     """Union of a non-overlapping coverage (reference: functions.rs:1213-1219)."""
-    return _coverage_union_all_udf()(col_or_lit(col))
-
-
-def _collect_udf(into: int | None = None):
-    @pandas_udf("binary")
-    def agg(s: pd.Series) -> bytes:
-        gs = [g for g in _decode_series(s) if g is not None]
-        return to_ewkb(setops.collect(gs, into=into))
-
-    return agg
+    return geom_agg(_coverage_union_all)(col_or_lit(col))
 
 
 def st_collect(col, into: int | None = None) -> Column:
     """Gather group geometries into Multi*/GeometryCollection with supertype
     inference (reference: functions.rs:1238-1276)."""
-    return _collect_udf(into)(col_or_lit(col))
+    return geom_agg(_collect, into=into)(col_or_lit(col))
 
 
 def st_total_bounds(bounds_col) -> list[Column]:

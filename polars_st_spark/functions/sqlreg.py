@@ -11,23 +11,22 @@ Coverage (r9): the full elementwise inventory — measures, accessors,
 counts, unary predicates, the twelve binary predicates, relate/dwithin/
 equals_exact, serialization in/out, constructive ops, affine transforms,
 parameterized ops (buffer/simplify/segmentize/to_srid/...), pairwise set
-ops, and GROUPED_AGG aggregates (``st_union_all``/``st_collect``/...)
+ops, and the Arrow grouped aggregates (``st_union_all``/``st_collect``/...)
 usable in SQL ``GROUP BY``.
 
 Parameter semantics: SQL parameters arrive as per-row columns (literals
 become constant columns). ``_param_dispatch`` groups each batch by its
 distinct parameter tuples — the literal case is ONE group running the
-exact Column-API batch function over the whole batch; genuinely per-row
-parameters run one batch call per distinct value. Rows with a null
-parameter yield null.
+exact Column-API Arrow batch function over the batch's arrays as they
+are; genuinely per-row parameters run one batch call per distinct value
+on sub-arrays cut with ``take``, scattered back into one array. Rows with
+a null parameter yield null.
 
 Reference surface: every sugar function (reference:
 polars_st/sugar.py:112-625).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 __all__ = [
     "register_sql_functions",
@@ -38,12 +37,16 @@ __all__ = [
 
 def _param_dispatch(builder, ret_type, nparams, ngeom=1, casts=None):
     """SQL wrapper for a parameterized op: ``builder(*params)`` must return
-    the pandas UDF the Column API would apply for those parameter values.
+    the Arrow UDF the Column API would apply for those parameter values.
     The wrapper takes ``ngeom`` data columns + ``nparams`` parameter
     columns and dispatches per distinct parameter tuple (see module
     docstring). Builders are cached per parameter tuple, so repeated
     batches with the same literal reuse one UDF's batch function."""
-    from polars_st_spark.functions.factory import arrow_series_udf
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    from polars_st_spark.functions.factory import pa_dt, spark_dt
 
     cache: dict[tuple, object] = {}
 
@@ -52,29 +55,7 @@ def _param_dispatch(builder, ret_type, nparams, ngeom=1, casts=None):
         if hit is None:
             if len(cache) >= 64:
                 cache.clear()
-            u = builder(*vals)
-            f = u.func
-            if getattr(u, "evalType", None) == 250:
-                # r11: the factory builders are arrow_udfs now (pa.Array
-                # in/out); this dispatcher feeds pandas Series — adapt at
-                # the call boundary. All current dispatched builders take
-                # EWKB binary data columns; force binary only when the
-                # series actually holds bytes so a future numeric/string
-                # builder converts by inference instead of erroring
-                # (ADVICE r11).
-                import pyarrow as pa_
-
-                def f(*series, _f=u.func):
-                    def conv(s: pd.Series):
-                        nonnull = s.dropna()
-                        if len(nonnull) and not isinstance(
-                                nonnull.iloc[0], (bytes, bytearray)):
-                            return pa_.Array.from_pandas(s)
-                        # bytes or all-null: the EWKB default (binary)
-                        return pa_.Array.from_pandas(s, type=pa_.binary())
-
-                    return _f(*[conv(s) for s in series]).to_pandas()
-            hit = cache[vals] = f
+            hit = cache[vals] = builder(*vals).func
         return hit
 
     def norm(raw: tuple):
@@ -86,39 +67,39 @@ def _param_dispatch(builder, ret_type, nparams, ngeom=1, casts=None):
             out.append(c(v))
         return tuple(out)
 
-    @arrow_series_udf(ret_type)
-    def udf(*cols: pd.Series) -> pd.Series:
+    @arrow_udf(spark_dt(ret_type))
+    def udf(*cols):
         data, ps = cols[:ngeom], cols[ngeom:]
         n = len(data[0])
         if n == 0:
-            return pd.Series([], dtype=object)
-        keys = list(zip(*[p.tolist() for p in ps]))
+            return pa.array([], type=pa_dt(ret_type))
+        keys = list(zip(*[p.to_pylist() for p in ps]))
         first = norm(keys[0])
         if first is not None and all(k == keys[0] for k in keys):
-            return fn_for(first)(*(d.reset_index(drop=True) for d in data))
-        import numpy as np
-
-        out = np.empty(n, dtype=object)
-        out[:] = None
+            return fn_for(first)(*data)
         groups: dict[tuple, list] = {}
         for i, k in enumerate(keys):
             nk = norm(k)
             if nk is not None:
                 groups.setdefault(nk, []).append(i)
+        if not groups:
+            return pa.nulls(n, type=pa_dt(ret_type))
+        rows, parts = [], []
         for nk, idxs in groups.items():
-            subs = [d.iloc[idxs].reset_index(drop=True) for d in data]
-            res = fn_for(nk)(*subs)
-            for j, i in enumerate(idxs):
-                out[i] = res.iloc[j]
-        return pd.Series(out, dtype=object)
+            take = pa.array(idxs, type=pa.int64())
+            parts.append(fn_for(nk)(*(d.take(take) for d in data)))
+            rows += idxs
+        # scatter: output row rows[j] is the j-th result row; rows whose
+        # parameters are null take a null index
+        src = np.full(n, -1, dtype=np.int64)
+        src[rows] = np.arange(len(rows))
+        return pa.concat_arrays(parts).take(pa.array(src, mask=src < 0))
 
     return udf
 
 
 def _registry():
     """name -> UDF object for every scalar SQL function."""
-    from pyspark.sql.functions import pandas_udf
-
     from polars_st_spark.functions import construct as C
     from polars_st_spark.functions import predicate as P
     from polars_st_spark.functions import scalar as S
@@ -355,15 +336,15 @@ def _to_srid_builder(T):
 
 
 def _agg_registry():
-    """name -> GROUPED_AGG UDF object (usable in SQL GROUP BY)."""
+    """name -> Arrow grouped-aggregate UDF (usable in SQL GROUP BY)."""
     from polars_st_spark.functions import agg as A
 
     return {
-        "st_union_all": A._union_all_udf(),
-        "st_intersection_all": A._intersection_all_udf(),
-        "st_coverage_union_all": A._coverage_union_all_udf(),
-        "st_collect": A._collect_udf(),
-        "st_polygonize_agg": A._polygonize_agg_udf(),
+        "st_union_all": A.geom_agg(A.union_array),
+        "st_intersection_all": A.geom_agg(A._intersection_all),
+        "st_coverage_union_all": A.geom_agg(A._coverage_union_all),
+        "st_collect": A.geom_agg(A._collect),
+        "st_polygonize_agg": A.geom_agg(A._polygonize_agg),
     }
 
 

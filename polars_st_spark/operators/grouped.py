@@ -1,6 +1,6 @@
 """Frame-level grouped spatial aggregations.
 
-Covers the cases plain GROUPED_AGG can't do correctly or efficiently:
+Covers the cases a plain grouped aggregate can't do correctly or efficiently:
 
 - **two-phase union** (treeAggregate pattern): union is associative and
   commutative (reference: expressions.rs:985-999), so a map-side partial
@@ -10,12 +10,15 @@ Covers the cases plain GROUPED_AGG can't do correctly or efficiently:
 - **order-sensitive folds**: ``difference_all`` / ``symmetric_difference_all``
   are left folds in row order (reference: expressions.rs:873-886,932-948);
   Spark shuffles are unordered, so these sort each group by an explicit key
-  inside applyInPandas.
+  inside ``applyInArrow``.
+
+Both stay on Arrow, so group keys keep their types (an int64 key stays
+int64 next to a null key).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from polars_st_spark.geo import setops
@@ -153,18 +156,18 @@ def union_all_two_phase(df: DataFrame, group_cols: list[str], geom_col: str,
                         result_col: str = "union_geom",
                         min_partitions: int | str | None = "auto") -> DataFrame:
     """groupBy(group_cols).agg(union_all) with a TRUE map-side partial:
-    phase 1 is a NARROW ``mapInPandas`` pass (no shuffle — GROUPED_AGG
-    pandas UDFs have no partial-merge support in Spark, and a
+    phase 1 is a NARROW ``mapInArrow`` pass (no shuffle — Spark's grouped
+    aggregate UDFs have no partial-merge support, and a
     ``groupBy(group, spark_partition_id())`` first stage would still hash-
     shuffle every row because ``_pid`` carries no co-partitioning
     guarantee to Catalyst; r10 fixed exactly that) that unions each
     group's rows WITHIN each input partition through the identical
-    ``union_series`` kernel as ``st_union_all`` (slab fast lane included),
+    ``union_array`` kernel as ``st_union_all`` (slab fast lane included),
     emitting one partial geometry per (group, partition). Phase 2 shuffles
     only those partials — at 100 TB the shuffle payload drops from all
     rows to ≤ groups × partitions geometries, and a hot group's rows
     never meet in a single reducer."""
-    from polars_st_spark.functions.agg import st_union_all, union_series
+    from polars_st_spark.functions.agg import st_union_all, union_array
 
     # phase-1 parallelism is the INPUT partitioning (that's the point — no
     # shuffle). At 100 TB a scan has thousands of splits; a small local
@@ -184,25 +187,20 @@ def union_all_two_phase(df: DataFrame, group_cols: list[str], geom_col: str,
 
     def partials(batches):
         # one task sees ONE input partition as an iterator of Arrow-sized
-        # batches. Concat once and group ONCE per partition, iterating the
-        # geometry SERIES per group — a per-batch groupby would construct
-        # n_groups sub-frames per 10k-row Arrow batch (measured: 6M
-        # sub-frame builds at sf1 = 72.5s of phase-1 wall vs ~8s this way),
-        # and frame-per-group output has the same problem. Memory: one
-        # partition in pandas, same residency as applyInPandas.
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        keys, vals = [], []
-        for key, s in whole.groupby(gcols, dropna=False, sort=False)[geom_col]:
-            keys.append(key if isinstance(key, tuple) else (key,))
-            vals.append(union_series(s))
-        out = pd.DataFrame(keys, columns=gcols)
-        out["_partial"] = vals
-        yield out
+        # batches. Group ONCE per partition — a per-batch group-by would
+        # build n_groups partials per 10k-row batch. Arrow's hash group-by
+        # keeps null keys as a group, and single-threaded it keeps groups
+        # in first-appearance order and each list in row order.
+        batches = list(batches)
+        if batches:
+            grouped = pa.Table.from_batches(batches).group_by(
+                gcols, use_threads=False).aggregate([(geom_col, "list")])
+            lists = grouped.column(f"{geom_col}_list")
+            vals = [union_array(lists[i].values) for i in range(len(lists))]
+            yield from grouped.select(gcols).append_column(
+                "_partial", pa.array(vals, type=pa.binary())).to_batches()
 
-    partial = df.select(*gcols, geom_col).mapInPandas(partials, schema=schema)
+    partial = df.select(*gcols, geom_col).mapInArrow(partials, schema=schema)
     return partial.groupBy(*gcols).agg(st_union_all("_partial").alias(result_col))
 
 
@@ -214,15 +212,15 @@ def _ordered_fold(fold_fn):
         )
         schema = f"{out_fields}, {result_col} binary"
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order_col, kind="stable")
-            geoms = [None if b is None else from_ewkb(bytes(b)) for b in pdf[geom_col]]
-            res = to_ewkb(fold_fn(geoms))
-            head = {c: [pdf[c].iloc[0]] for c in group_cols}
-            head[result_col] = [res]
-            return pd.DataFrame(head)
+        def fold(tab: pa.Table) -> pa.Table:
+            # stable sort; rows with a null order key fold last
+            tab = tab.sort_by([(order_col, "ascending")], null_placement="at_end")
+            geoms = [None if b is None else from_ewkb(b)
+                     for b in tab.column(geom_col).to_pylist()]
+            res = pa.array([to_ewkb(fold_fn(geoms))], type=pa.binary())
+            return tab.select(group_cols).slice(0, 1).append_column(result_col, res)
 
-        return df.groupBy(*group_cols).applyInPandas(fold, schema=schema)
+        return df.groupBy(*group_cols).applyInArrow(fold, schema=schema)
 
     return run
 

@@ -1,10 +1,12 @@
 """Dump .explain("formatted") for the 8 headline queries and the round-12
 optimization surfaces to <out_dir>/<query>_<tag>.txt.
 
-Usage: python scripts/dump_plans.py before|after [out_dir]
+Usage: python scripts/dump_plans.py before|after out_dir
 
-``out_dir`` defaults to plans/r12 (relative paths are taken from the repo
-root). Covers the surfaces r12 touches (VERDICT r11 items 2-6, 8b):
+``out_dir`` is required (a relative path is taken from the repo root);
+write to a directory outside the tracked ``plans/`` records, e.g. one per
+checkout when comparing two commits. Covers the surfaces r12 touches
+(VERDICT r11 items 2-6, 8b):
   - b2a_relate_adjacent: the mixed-argument construct→relate chain
   - relate_point_chain / predicate_point_chain: predicate(col, st_point)
   - distance_point_chain: st_distance(col, st_point(...))
@@ -28,16 +30,15 @@ from contextlib import redirect_stdout
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
-TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
-OUT = os.path.join(_HERE, sys.argv[2] if len(sys.argv) > 2 else os.path.join("plans", "r12"))
+USAGE = "usage: python scripts/dump_plans.py before|after out_dir"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
 
-def main():
+def main(tag: str, out: str):
     import numpy as np
 
-    os.makedirs(OUT, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
@@ -149,7 +150,7 @@ def main():
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            path = os.path.join(OUT, f"{name}_{TAG}.txt")
+            path = os.path.join(out, f"{name}_{tag}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print("wrote", path)
@@ -159,4 +160,6 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) != 3 or sys.argv[1] not in ("before", "after"):
+        sys.exit(USAGE)
+    main(sys.argv[1], os.path.join(_HERE, sys.argv[2]))

@@ -126,7 +126,7 @@ def test_union_all_two_phase(spark):
 
 def test_union_all_two_phase_single_shuffle(spark):
     """r10 plan-shape assertion (VERDICT r9 item 3): phase 1 is a NARROW
-    mapInPandas — the whole two-phase union plan carries exactly ONE
+    mapInArrow — the whole two-phase union plan carries exactly ONE
     Exchange (the partials groupBy); the row data itself never shuffles."""
     from pyspark.sql import functions as F
 
@@ -139,7 +139,7 @@ def test_union_all_two_phase_single_shuffle(spark):
     out = union_all_two_phase(df, ["grp"], "geom")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     # and the numbers agree with the one-phase aggregate
     one = {r["grp"]: r["a"] for r in df.groupBy("grp")
            .agg(st.st_union_all("geom").alias("u"))
@@ -346,11 +346,11 @@ def test_union_all_grouped_cost_based(spark):
                         (F.col("id") % 31) + 2.0, F.lit(2.0)).alias("geom"))
     # 4 groups x 5000 rows, threshold 1000 -> hot -> two-phase
     hot = union_all_grouped(df, ["grp"], "geom", hot_group_threshold=1_000)
-    assert "MapInPandas" in hot._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in hot._jdf.queryExecution().executedPlan().toString()
     # threshold far above any group -> single-phase
     cold = union_all_grouped(df, ["grp"], "geom",
                              hot_group_threshold=10_000_000)
-    assert "MapInPandas" not in cold._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in cold._jdf.queryExecution().executedPlan().toString()
     h = {r["grp"]: r["a"] for r in hot.select(
         "grp", st.st_area("union_geom").alias("a")).collect()}
     c = {r["grp"]: r["a"] for r in cold.select(
