@@ -10,20 +10,20 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.functions.factory import (
-    arrow_series_udf,
     col_or_lit,
     pa_binary_rows,
+    pa_out,
+    per_row,
     spark_dt,
 )
 from polars_st_spark.geo import geojson as _gj
 from polars_st_spark.geo import wkt as _wkt
 from polars_st_spark.geo.types import Geometry, GeometryType
-from polars_st_spark.geo.wkb import from_ewkb, points_to_ewkb_matrix, to_ewkb
+from polars_st_spark.geo.wkb import points_to_ewkb_matrix
 
 __all__ = [
     "st_point",
@@ -131,20 +131,28 @@ def st_rectangle(xmin, ymin, xmax, ymax, srid: int = 0) -> Column:
         udf, col_or_lit(xmin), col_or_lit(ymin), col_or_lit(xmax), col_or_lit(ymax))
 
 
-def _parser_udf(parse, srid: int | None = None):
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            g = parse(v)
-            if srid:
-                g = g.with_srid(srid)
-            return to_ewkb(g)
+def _row_udf(one):
+    """Binary UDF building each row's geometry with ``one(value)`` (the
+    per-row constructors: text and nested-list inputs)."""
 
-        return s.map(one)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        return pa_out(per_row(one, a), "binary")
 
     return udf
+
+
+def _parser_udf(parse, srid: int | None = None):
+    def one(v):
+        g = parse(v)
+        return g.with_srid(srid) if srid else g
+
+    return _row_udf(one)
+
+
+def _f8(c) -> np.ndarray:
+    """One coordinate list as float64 (a null element reads as NaN)."""
+    return np.asarray(c, dtype=np.float64)
 
 
 def st_from_wkt(col, srid: int = 0) -> Column:
@@ -165,7 +173,8 @@ def st_from_wkb(col, srid: int = 0) -> Column:
     """Validate/normalize WKB → EWKB (reference: parsing.py:323-338)."""
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(_parser_udf(lambda b: from_ewkb(bytes(b)), srid), col_or_lit(col))
+    # the binary input arrives decoded (factory.per_row)
+    return tagged(_parser_udf(lambda g: g, srid), col_or_lit(col))
 
 
 def st_from_geojson(col, srid: int = 0) -> Column:
@@ -178,27 +187,20 @@ def st_from_geojson(col, srid: int = 0) -> Column:
 def st_linestring(coords_col, srid: int = 0) -> Column:
     """LineString from array<array<double>> column (reference: parsing.py:117-167)."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            arr = np.asarray([np.asarray(c, dtype=np.float64) for c in v])
-            if arr.ndim == 1:
-                arr = arr.reshape(0, 2)
-            g = Geometry(
-                GeometryType.LineString,
-                srid=srid,
-                has_z=arr.shape[1] >= 3 if len(arr) else False,
-                coords=arr,
-            )
-            return to_ewkb(g)
-
-        return s.map(one)
+    def one(v):
+        arr = np.asarray([_f8(c) for c in v])
+        if arr.ndim == 1:
+            arr = arr.reshape(0, 2)
+        return Geometry(
+            GeometryType.LineString,
+            srid=srid,
+            has_z=arr.shape[1] >= 3 if len(arr) else False,
+            coords=arr,
+        )
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(coords_col))
+    return tagged(_row_udf(one), col_or_lit(coords_col))
 
 
 def st_circularstring(coords_col, srid: int = 0) -> Column:
@@ -206,131 +208,97 @@ def st_circularstring(coords_col, srid: int = 0) -> Column:
     Stored/propagated as EWKB; header-level ops work, GEOS-style computations
     on curves raise (SURVEY §7 hard part 1 — curve support)."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            arr = np.asarray([np.asarray(c, dtype=np.float64) for c in v])
-            if arr.ndim == 1:
-                arr = arr.reshape(0, 2)
-            return to_ewkb(
-                Geometry(
-                    GeometryType.CircularString,
-                    srid=srid,
-                    has_z=arr.shape[1] >= 3 if len(arr) else False,
-                    coords=arr,
-                )
-            )
-
-        return s.map(one)
+    def one(v):
+        arr = np.asarray([_f8(c) for c in v])
+        if arr.ndim == 1:
+            arr = arr.reshape(0, 2)
+        return Geometry(
+            GeometryType.CircularString,
+            srid=srid,
+            has_z=arr.shape[1] >= 3 if len(arr) else False,
+            coords=arr,
+        )
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(coords_col))
+    return tagged(_row_udf(one), col_or_lit(coords_col))
 
 
 def st_multilinestring(lines_col, srid: int = 0) -> Column:
     """MultiLineString from array<array<array<double>>>."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            lines = [
-                Geometry(
-                    GeometryType.LineString,
-                    srid=srid,
-                    has_z=bool(len(c) and len(c[0]) >= 3),
-                    coords=np.asarray([list(map(float, p)) for p in c]),
-                )
-                for c in v
-            ]
-            return to_ewkb(
-                Geometry(GeometryType.MultiLineString, srid=srid,
-                         has_z=any(l.has_z for l in lines), geoms=lines)
+    def one(v):
+        lines = [
+            Geometry(
+                GeometryType.LineString,
+                srid=srid,
+                has_z=bool(len(c) and len(c[0]) >= 3),
+                coords=np.asarray([_f8(p) for p in c]),
             )
-
-        return s.map(one)
+            for c in v
+        ]
+        return Geometry(GeometryType.MultiLineString, srid=srid,
+                        has_z=any(l.has_z for l in lines), geoms=lines)
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(lines_col))
+    return tagged(_row_udf(one), col_or_lit(lines_col))
 
 
 def st_polygon(rings_col, srid: int = 0) -> Column:
     """Polygon from array<array<array<double>>> (reference: parsing.py:170-247)."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            rings = [np.asarray([list(map(float, c)) for c in ring]) for ring in v]
-            has_z = bool(rings and len(rings[0]) and rings[0].shape[1] >= 3)
-            return to_ewkb(Geometry(GeometryType.Polygon, srid=srid, has_z=has_z, rings=rings))
-
-        return s.map(one)
+    def one(v):
+        rings = [np.asarray([_f8(c) for c in ring]) for ring in v]
+        has_z = bool(rings and len(rings[0]) and rings[0].shape[1] >= 3)
+        return Geometry(GeometryType.Polygon, srid=srid, has_z=has_z, rings=rings)
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(rings_col))
+    return tagged(_row_udf(one), col_or_lit(rings_col))
 
 
 def st_multipoint(coords_col, srid: int = 0) -> Column:
     """MultiPoint from array<array<double>> (reference: parsing.py:80-114)."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            pts = [
-                Geometry(GeometryType.Point, srid=srid, has_z=len(c) >= 3,
-                         coords=np.asarray(c, dtype=np.float64))
-                for c in v
-            ]
-            return to_ewkb(Geometry(GeometryType.MultiPoint, srid=srid,
-                                    has_z=any(p.has_z for p in pts), geoms=pts))
-
-        return s.map(one)
+    def one(v):
+        pts = [
+            Geometry(GeometryType.Point, srid=srid, has_z=len(c) >= 3,
+                     coords=_f8(c))
+            for c in v
+        ]
+        return Geometry(GeometryType.MultiPoint, srid=srid,
+                        has_z=any(p.has_z for p in pts), geoms=pts)
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(coords_col))
+    return tagged(_row_udf(one), col_or_lit(coords_col))
 
 
 def st_from_coords(col, srid: int = 0) -> Column:
     """Infer Point/LineString/Polygon from nesting depth
     (reference: parsing.py:285-320, expressions.rs:192-209)."""
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        def depth(v) -> int:
-            d = 0
-            while isinstance(v, (list, np.ndarray)) and len(v):
-                v = v[0]
-                d += 1
-            return d
+    def depth(v) -> int:
+        d = 0
+        while isinstance(v, list) and len(v):
+            v = v[0]
+            d += 1
+        return d
 
-        def one(v):
-            if v is None:
-                return None
-            d = depth(v)
-            if d == 1:
-                return to_ewkb(Geometry(GeometryType.Point, srid=srid, has_z=len(v) >= 3,
-                                        coords=np.asarray(v, dtype=np.float64)))
-            if d == 2:
-                arr = np.asarray([list(map(float, c)) for c in v])
-                return to_ewkb(Geometry(GeometryType.LineString, srid=srid,
-                                        has_z=arr.shape[1] >= 3, coords=arr))
-            rings = [np.asarray([list(map(float, c)) for c in ring]) for ring in v]
-            return to_ewkb(Geometry(GeometryType.Polygon, srid=srid,
-                                    has_z=bool(rings and rings[0].shape[1] >= 3), rings=rings))
-
-        return s.map(one)
+    def one(v):
+        d = depth(v)
+        if d == 1:
+            return Geometry(GeometryType.Point, srid=srid, has_z=len(v) >= 3,
+                            coords=_f8(v))
+        if d == 2:
+            arr = np.asarray([_f8(c) for c in v])
+            return Geometry(GeometryType.LineString, srid=srid,
+                            has_z=arr.shape[1] >= 3, coords=arr)
+        rings = [np.asarray([_f8(c) for c in ring]) for ring in v]
+        return Geometry(GeometryType.Polygon, srid=srid,
+                        has_z=bool(rings and rings[0].shape[1] >= 3), rings=rings)
 
     from polars_st_spark.functions.fuse import tagged
 
-    return tagged(udf, col_or_lit(col))
+    return tagged(_row_udf(one), col_or_lit(col))

@@ -131,40 +131,24 @@ def st_crs_from_code(col):
     CRS WKT string (r5: graduates the crs helpers from driver-only to a
     distributed, oracle-checkable surface). Unknown codes → NULL (the
     driver form raises; a NULL is the elementwise convention)."""
-    import pandas as pd
-    from polars_st_spark.functions.factory import arrow_series_udf, col_or_lit
+    from polars_st_spark.functions.factory import col_or_lit, unary_scalar
 
-    @arrow_series_udf("string")
-    def udf(s):
-        out = []
-        for v in s:
-            if v is None or v != v:
-                out.append(None)
-                continue
-            try:
-                out.append(get_crs_from_code(int(v)))
-            except ValueError:
-                out.append(None)
-        return pd.Series(out, dtype=object)
+    def one(v):
+        try:
+            return get_crs_from_code(int(v))
+        except ValueError:
+            return None
 
-    return udf(col_or_lit(col))
+    return unary_scalar(one, "string")(col_or_lit(col))
 
 
 def st_crs_authority(col):
     """Column form of :func:`get_crs_authority` — CRS WKT / 'AUTH:code'
     string → 'AUTH:code' string (None when undetectable)."""
-    import pandas as pd
-    from polars_st_spark.functions.factory import arrow_series_udf, col_or_lit
+    from polars_st_spark.functions.factory import col_or_lit, unary_scalar
 
-    @arrow_series_udf("string")
-    def udf(s):
-        out = []
-        for v in s:
-            if v is None:
-                out.append(None)
-                continue
-            a = get_crs_authority(str(v))
-            out.append(None if a is None else f"{a[0]}:{a[1]}")
-        return pd.Series(out, dtype=object)
+    def one(v):
+        a = get_crs_authority(str(v))
+        return None if a is None else f"{a[0]}:{a[1]}"
 
-    return udf(col_or_lit(col))
+    return unary_scalar(one, "string")(col_or_lit(col))

@@ -1,11 +1,20 @@
-"""Pandas-UDF factory for geometry functions.
+"""UDF factory for geometry functions.
 
-Every ``st_*`` scalar function is an Arrow-batched vectorized pandas UDF
-(JVM → Arrow → Python worker per batch), the Spark-idiomatic equivalent of
-the reference's per-chunk plugin kernels (reference: geoexpr.py:35-58).
+Every ``st_*`` scalar function is an ``arrow_udf`` (evalType 250): each
+Arrow batch reaches the Python worker as ``pa.Array`` arguments and the
+body returns one ``pa.Array``, the Spark-idiomatic equivalent of the
+reference's per-chunk plugin kernels (reference: geoexpr.py:35-58). Keep
+every geometry UDF at 250: Spark fuses adjacent Python UDFs into one
+ArrowEvalPython node only when their eval types match, so a UDF at another
+eval type costs a second worker round-trip over the whole stream.
+
+Batch lanes read the Arrow buffers directly (``geo/arrowwkb.py``); rows
+no lane takes go through :func:`per_row`, and Python values are built
+only for those rows. :func:`pa_out` turns Python values into the output.
 
 Conventions (matching the reference):
-- null in → null out, elementwise (reference: src/arity.rs:56-59)
+- null in → null out, elementwise (reference: src/arity.rs:56-59); a NaN
+  double parameter counts as null, and a NaN double result becomes null
 - geometry outputs are EWKB with SRID embedded (reference: functions.rs:54-58)
 - SRID of the (first) geometry input is propagated to geometry outputs
 """
@@ -15,22 +24,22 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.geo.types import Geometry
 from polars_st_spark.geo.wkb import decode_batch, from_ewkb, to_ewkb
-from polars_st_spark.geo.wkt import from_ewkt, from_wkt
+from polars_st_spark.geo.wkt import from_ewkt
 
 __all__ = [
     "col_or_lit",
     "spark_dt",
     "geom_arg",
-    "arrow_series_udf",
     "active_udf",
     "pa_binary_rows",
+    "pa_out",
+    "per_row",
     "unary_geom",
     "unary_scalar",
     "unary_scalar_param",
@@ -44,7 +53,7 @@ _DT_CACHE: dict = {}
 
 def spark_dt(t):
     """Resolve a DDL type string to a DataType instance WITHOUT a session —
-    pandas_udf parses string return types via the JVM, which breaks when a
+    a UDF parses a string return type via the JVM, which breaks when a
     UDF builder runs inside an executor worker (the SQL registry's
     parameterized dispatch does exactly that). Unknown strings pass
     through (driver-side use only)."""
@@ -76,12 +85,10 @@ _PA_CACHE: dict = {}
 
 
 def pa_dt(t):
-    """DDL type string → pyarrow DataType (no session, no JVM). The r11
-    arrow_udf builders construct their output arrays explicitly, so the
-    exact pyarrow type must be derivable from the same strings spark_dt
-    accepts. Coercion parity with the pandas_udf boundary (None rows, NaN
-    scalars, NaN inside list elements, nested lists) is probe-verified in
-    tests/test_r11_kernels.py::TestFactoryArrowParity."""
+    """DDL type string → pyarrow DataType (no session, no JVM): the
+    arrow_udf bodies build their output arrays themselves, so the exact
+    pyarrow type must be derivable from the same strings spark_dt
+    accepts."""
     hit = _PA_CACHE.get(t)
     if hit is not None:
         return hit
@@ -100,42 +107,6 @@ def pa_dt(t):
         raise TypeError(f"pa_dt: unsupported return type {t!r}")
     _PA_CACHE[t] = out
     return out
-
-
-def _pa_in(a) -> pd.Series:
-    """pyarrow array → pandas Series (the one per-batch conversion each
-    arrow builder pays; the kernel bodies below are byte-identical to the
-    old pandas_udf bodies)."""
-    return a.to_pandas()
-
-
-def arrow_series_udf(ret):
-    """Decorator: wrap a pandas-Series kernel (Series in → Series out) as
-    an ``arrow_udf`` (evalType 250).
-
-    Spark's ExtractPythonUDFs only fuses adjacent Python UDFs of the SAME
-    eval type; after the factory builders moved to 250, any direct
-    ``@pandas_udf`` definition left at 200 forced a second ArrowEvalPython
-    node — a second worker round-trip over the whole stream — into every
-    projection that mixed them (measured on the b2a construct+relate chain
-    at sf1: 11.8 s floor unfused vs 1.9 s + 3.4 s for the two pieces).
-    Bodies stay byte-identical pandas kernels; this boundary converts once
-    per batch, with the same Arrow coercions the factory builders use."""
-    rt = spark_dt(ret)
-
-    def deco(fn):
-        @arrow_udf(rt)
-        def udf(*arrs):
-            import pyarrow as pa
-
-            res = fn(*[a.to_pandas() for a in arrs])
-            if not isinstance(res, pd.Series):
-                res = pd.Series(res, dtype=object)
-            return pa.Array.from_pandas(res, type=pa_dt(ret))
-
-        return udf
-
-    return deco
 
 
 def active_udf(udf):
@@ -190,10 +161,55 @@ def pa_binary_rows(flat: "np.ndarray", mask=None):
         null_count=null_count)
 
 
-def _pa_out(out: list, t):
+def pa_out(values, t):
+    """The one output converter: Python values (a list, or a numpy array
+    of values) → ``pa.Array`` of the DDL type ``t``. None is null, and so
+    is a NaN double, also inside a list — the coercion a pandas UDF
+    applies (tests/test_r11_kernels.py::TestFactoryArrowParity)."""
     import pyarrow as pa
 
-    return pa.Array.from_pandas(pd.Series(out, dtype=object), type=pa_dt(t))
+    return pa.array(values, type=pa_dt(t), from_pandas=True)
+
+
+def _missing(v) -> bool:
+    return v is None or (v.__class__ is float and v != v)
+
+
+def per_row(fn, *args, rows=None, out=None) -> list:
+    """The one per-row fallback: ``out[i] = fn(*args at row i)`` for every
+    row ``i`` in ``rows`` (all rows when None), and None where an input is
+    null or a NaN double. ``args`` are ``pa.Array`` inputs or constants
+    passed to every row as they are. Binary inputs are EWKB and arrive as
+    Geometry (``decode_batch``); a Geometry result is encoded to EWKB.
+    Python values are built only for ``rows``. Returns ``out``, a new list
+    when None, else filled in place (a batch lane's output with holes)."""
+    import pyarrow as pa
+
+    at = [k for k, a in enumerate(args) if isinstance(a, pa.Array)]
+    n = len(args[at[0]])
+    if out is None:
+        out = [None] * n
+    if rows is None:
+        rows = range(n)
+    elif not len(rows):
+        return out
+    cols = []
+    for k in at:
+        a = args[k]
+        if not isinstance(rows, range):
+            a = a.take(np.asarray(rows, dtype=np.int64))
+        binary = pa.types.is_binary(a.type) or pa.types.is_large_binary(a.type)
+        cols.append(decode_batch(a) if binary else a.to_pylist())
+    call = list(args)
+    for i, vals in zip(rows, zip(*cols)):
+        if any(_missing(v) for v in vals):
+            out[i] = None
+            continue
+        for k, v in zip(at, vals):
+            call[k] = v
+        r = fn(*call)
+        out[i] = to_ewkb(r) if isinstance(r, Geometry) else r
+    return out
 
 
 def col_or_lit(c) -> Column:
@@ -236,47 +252,22 @@ def geom_arg(other) -> "Geometry | Column":
     raise TypeError(f"Cannot interpret {type(other).__name__} as geometry")
 
 
-def _decode(b) -> Geometry | None:
-    if b is None:
-        return None
-    return from_ewkb(bytes(b))
-
-
-def _encode(g: Geometry | None) -> bytes | None:
-    if g is None:
-        return None
-    return to_ewkb(g)
-
-
-def unary_geom(fn: Callable[[Geometry], Geometry], name: str = "st_fn"):
-    """geometry → geometry column (EWKB in, EWKB out, null-safe).
-
-    r11: all factory builders are ``arrow_udf`` (evalType 250) so they
-    fuse with the zero-copy hot-kernel UDFs into ONE ArrowEvalPython node
-    per projection — a mixed 200/250 projection pays a second Python
-    round-trip over the whole stream. Bodies are unchanged."""
-
-    @arrow_udf(spark_dt("binary"))
-    def udf(a):
-        s = _pa_in(a)
-        return _pa_out(
-            [None if g is None else _encode(fn(g)) for g in decode_batch(s)],
-            "binary",
-        )
-
-    return udf
-
-
 def unary_scalar(fn: Callable[[Geometry], Any], return_type: str, name: str = "st_fn"):
-    """geometry → scalar column. None passthrough; fn errors propagate."""
+    """One column → ``return_type`` column, ``fn`` per row (:func:`per_row`:
+    a geometry input arrives decoded, a Geometry result is encoded, so
+    this is also :func:`unary_geom`). None passthrough; fn errors
+    propagate."""
 
     @arrow_udf(spark_dt(return_type))
     def udf(a):
-        s = _pa_in(a)
-        out = [None if g is None else fn(g) for g in decode_batch(s)]
-        return _pa_out(out, return_type)
+        return pa_out(per_row(fn, a), return_type)
 
     return udf
+
+
+def unary_geom(fn: Callable[[Geometry], Geometry], name: str = "st_fn"):
+    """geometry → geometry column (EWKB in, EWKB out, null-safe)."""
+    return unary_scalar(fn, "binary", name)
 
 
 def unary_scalar_param(
@@ -288,8 +279,9 @@ def unary_scalar_param(
     """geometry + numeric parameter → scalar column, with the reference's
     broadcastable-Expr parameter semantics (src/arity.rs:63-85): a Python
     scalar closes over the kernel (single-column UDF, vectorized fast paths
-    untouched), while a Column / column name zips a per-row parameter series
-    against the geometry batch. Null or NaN in either input → null out."""
+    untouched), while a Column / column name zips a per-row parameter
+    array against the geometry batch. Null or NaN in either input → null
+    out."""
     if not isinstance(param, (Column, str)):
 
         def single(col) -> Column:
@@ -298,15 +290,7 @@ def unary_scalar_param(
         return single
 
     p = col_or_lit(param)
-
-    @arrow_udf(spark_dt(return_type))
-    def udf(a, av):
-        s, v = _pa_in(a), _pa_in(av)
-        out = [
-            None if g is None or pd.isna(x) else fn(g, x)
-            for g, x in zip(decode_batch(s), v)
-        ]
-        return _pa_out(out, return_type)
+    udf = binary_scalar(fn, return_type, None, name)[0]
 
     def paired(col) -> Column:
         return udf(col_or_lit(col), p)
@@ -315,36 +299,30 @@ def unary_scalar_param(
 
 
 def binary_scalar(
-    fn: Callable[[Geometry, Geometry], Any],
+    fn: Callable[[Geometry, Any], Any],
     return_type: str,
     other,
     name: str = "st_fn",
 ):
-    """(geometry, geometry) → scalar. ``other`` may be a Column or a constant
-    geometry (broadcast, decoded once)."""
+    """(geometry, geometry) → ``return_type``; a Geometry result is
+    encoded, so this is also :func:`binary_geom`. ``other`` may be a
+    Column or a constant geometry (broadcast, decoded once); with
+    ``other=None`` the bare two-column UDF comes back (the SQL registry
+    applies it to both sides itself — no driver Column is built, so this
+    path is safe inside executor workers)."""
     if isinstance(other, Geometry):
         g2 = other
 
         @arrow_udf(spark_dt(return_type))
         def udf(a):
-            s = _pa_in(a)
-            out = [None if g is None else fn(g, g2) for g in decode_batch(s)]
-            return _pa_out(out, return_type)
+            return pa_out(per_row(fn, a, g2), return_type)
 
         return udf, None
 
     @arrow_udf(spark_dt(return_type))
     def udf2(a1, a2):
-        s1, s2 = _pa_in(a1), _pa_in(a2)
-        out = [
-            None if (g1 is None or g2 is None) else fn(g1, g2)
-            for g1, g2 in zip(decode_batch(s1), decode_batch(s2))
-        ]
-        return _pa_out(out, return_type)
+        return pa_out(per_row(fn, a1, a2), return_type)
 
-    # other=None: return the bare two-column UDF (SQL registry; the caller
-    # applies it to both sides itself — no driver Column is built, so this
-    # path is safe inside executor workers)
     return udf2, (col_or_lit(other) if other is not None else None)
 
 
@@ -354,26 +332,4 @@ def binary_geom(
     name: str = "st_fn",
 ):
     """(geometry, geometry) → geometry."""
-    if isinstance(other, Geometry):
-        g2 = other
-
-        @arrow_udf(spark_dt("binary"))
-        def udf(a):
-            s = _pa_in(a)
-            return _pa_out(
-                [None if g is None else _encode(fn(g, g2)) for g in decode_batch(s)],
-                "binary",
-            )
-
-        return udf, None
-
-    @arrow_udf(spark_dt("binary"))
-    def udf2(a1, a2):
-        s1, s2 = _pa_in(a1), _pa_in(a2)
-        out = [
-            None if (g1 is None or g2 is None) else _encode(fn(g1, g2))
-            for g1, g2 in zip(decode_batch(s1), decode_batch(s2))
-        ]
-        return _pa_out(out, "binary")
-
-    return udf2, (col_or_lit(other) if other is not None else None)
+    return binary_scalar(fn, "binary", other, name)

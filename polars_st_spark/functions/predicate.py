@@ -16,22 +16,23 @@ not approximations. Everything else falls back to the per-row kernels.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.functions.factory import (
-    arrow_series_udf,
     binary_scalar,
     col_or_lit,
     geom_arg,
+    pa_out,
+    per_row,
     spark_dt,
 )
 from polars_st_spark.geo import predicates as P
 from polars_st_spark.geo import ragged as RG
 from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 from polars_st_spark.geo.types import Geometry, GeometryType
-from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
+from polars_st_spark.geo.wkb import to_ewkb
 
 __all__ = [
     "st_intersects", "st_disjoint", "st_within", "st_contains",
@@ -159,16 +160,13 @@ def _const_box(o: Geometry):
     return None
 
 
-def _scalar_fill(res: np.ndarray, dec: np.ndarray, fn, s1, s2) -> pd.Series:
+def _scalar_fill(res: np.ndarray, dec: np.ndarray, fn, a1, a2):
     """Certain rows from a trivalent CSR kernel + scalar fills for the
     undecided remainder."""
     undec = np.nonzero(~dec)[0]
     if not len(undec):
-        return pd.Series(res)
-    out_res = res.astype(object)
-    for k in undec:
-        out_res[k] = fn(from_ewkb(bytes(s1.iloc[k])), from_ewkb(bytes(s2.iloc[k])))
-    return pd.Series(out_res, dtype=object)
+        return res
+    return per_row(fn, a1, a2, rows=undec, out=res.astype(object))
 
 
 def _transpose_mat(m: str) -> str:
@@ -206,25 +204,23 @@ def _matrix_predicate(name: str, m: str, da: int, db: int) -> bool:
     raise ValueError(name)
 
 
-def _relate_fill(res, dec, fn, s1, s2, name, sA, sB) -> pd.Series:
+def _relate_fill(res, dec, fn, a1, a2, name, aA, aB):
     """Stage 2 for the boolean pair predicates (r4g): rows the trivalent
     kernel left undecided carry genuine boundary contact — exactly the
     shapes the full DE-9IM CSR kernel's contact buckets decide
     closed-form. Run ``pairs_relate`` on just the undecided subset and
     read the predicate off each decided matrix with the scalar's own
     pattern; only rows the relate kernel ALSO leaves undecided take the
-    per-row scalar fallback. ``sA/sB`` are in the matrix-evaluation order
-    (inner, outer for the containment family); ``s1/s2`` stay in caller
-    order for the scalar fn."""
+    per-row scalar fallback. ``aA/aB`` (null-free ``pa.Array``s) are in
+    the matrix-evaluation order (inner, outer for the containment
+    family); ``a1/a2`` stay in caller order for the scalar fn."""
     undec = np.nonzero(~dec)[0]
     if not len(undec):
-        return pd.Series(res)
+        return res
     out_res = res.astype(object)
     solved = np.zeros(len(undec), dtype=bool)
-    sub = [k for k in undec if sA.iloc[k] is not None and sB.iloc[k] is not None]
-    if len(sub) >= 4:
-        bA = pd.Series([sA.iloc[k] for k in sub])
-        bB = pd.Series([sB.iloc[k] for k in sub])
+    if len(undec) >= 4:
+        bA, bB = aA.take(undec), aB.take(undec)
         rr = None
         da = db = 2
         # rect×rect contact rows: closed-form DE-9IM (r11) — the exact
@@ -246,15 +242,11 @@ def _relate_fill(res, dec, fn, s1, s2, name, sA, sB) -> pd.Series:
                 rr = RG.pairs_relate(qa, qb)
         if rr is not None:
             mats, dec2 = rr
-            pos = {k: j for j, k in enumerate(undec)}
-            for j, k in enumerate(sub):
+            for j, k in enumerate(undec):
                 if dec2[j]:
                     out_res[k] = _matrix_predicate(name, mats[j], da, db)
-                    solved[pos[k]] = True
-    for j, k in enumerate(undec):
-        if not solved[j]:
-            out_res[k] = fn(from_ewkb(bytes(s1.iloc[k])), from_ewkb(bytes(s2.iloc[k])))
-    return pd.Series(out_res, dtype=object)
+                    solved[j] = True
+    return per_row(fn, a1, a2, rows=undec[~solved], out=out_res)
 
 
 _PAIRED_KERNEL_NAMES = frozenset({
@@ -263,147 +255,109 @@ _PAIRED_KERNEL_NAMES = frozenset({
 })
 
 
-def eval_pairs_predicate(name: str, s1: pd.Series, s2: pd.Series, fn) -> pd.Series:
+def eval_pairs_predicate(name: str, a1: pa.Array, a2: pa.Array, fn):
     """Row-paired boolean pair predicate over aligned null-free EWKB
-    Series through the full batched stack: the family's trivalent CSR
+    arrays through the full batched stack: the family's trivalent CSR
     kernel where one exists, the DE-9IM contact buckets for its undecided
     boundary-contact rows (stage-2 ``_relate_fill``), and the per-row
-    scalar only as the last resort. Shared by the Column predicate
-    dispatch and (r4h) the sjoin broadcast refinement, so STRtree
-    candidate verification is batch-speed for every predicate, not just
-    intersects. Callers route null rows elsewhere."""
-    def parse_any(s):
-        pp = RG.parse_polygonal(s)
-        return pp if pp is not None else RG.parse_lineal(s)
+    scalar only as the last resort. Returns one bool per row (an ndarray
+    or list). Shared by the Column predicate dispatch and (r4h) the sjoin
+    broadcast refinement, so STRtree candidate verification is batch-speed
+    for every predicate, not just intersects. Callers route null rows
+    elsewhere."""
+    def parse_any(a):
+        pp = RG.parse_polygonal(a)
+        return pp if pp is not None else RG.parse_lineal(a)
 
     if name in ("intersects", "disjoint"):
         # row-paired polygonal/lineal pairs: CSR probe + segment-pair
         # kernel; None = pair product too large for one allocation, the
         # scalar loop amortizes better there
-        rpa = parse_any(s1)
-        rpb = parse_any(s2) if rpa is not None else None
+        rpa = parse_any(a1)
+        rpb = parse_any(a2) if rpa is not None else None
         if rpa is not None and rpb is not None:
             r = RG.pairs_intersect(rpa, rpb)
             if r is not None:
-                return pd.Series(r if name == "intersects" else ~r)
+                return r if name == "intersects" else ~r
     elif name in ("within", "contains", "covers", "covered_by",
                   "contains_properly"):
         # conservative CSR containment: certain rows vectorized,
         # boundary-contact rows resolve through the relate contact buckets
         swap = name in ("contains", "covers", "contains_properly")
-        sA_, sB_ = (s2, s1) if swap else (s1, s2)
-        pb2 = RG.parse_polygonal(sB_)
-        pa2 = parse_any(sA_) if pb2 is not None else None
+        aA, aB = (a2, a1) if swap else (a1, a2)
+        pb2 = RG.parse_polygonal(aB)
+        pa2 = parse_any(aA) if pb2 is not None else None
         if pa2 is not None and pb2 is not None:
             res, dec = RG.pairs_within(pa2, pb2)
-            return _relate_fill(res, dec, fn, s1, s2, name, sA_, sB_)
+            return _relate_fill(res, dec, fn, a1, a2, name, aA, aB)
     elif name == "touches":
-        pa3 = parse_any(s1)
-        pb3 = parse_any(s2) if pa3 is not None else None
+        pa3 = parse_any(a1)
+        pb3 = parse_any(a2) if pa3 is not None else None
         if pa3 is not None and pb3 is not None:
             res, dec = RG.pairs_touches(pa3, pb3)
-            return _relate_fill(res, dec, fn, s1, s2, name, s1, s2)
+            return _relate_fill(res, dec, fn, a1, a2, name, a1, a2)
     elif name in ("crosses", "overlaps"):
-        pa4 = parse_any(s1)
-        pb4 = parse_any(s2) if pa4 is not None else None
+        pa4 = parse_any(a1)
+        pb4 = parse_any(a2) if pa4 is not None else None
         if pa4 is not None and pb4 is not None:
             kern = RG.pairs_crosses if name == "crosses" else RG.pairs_overlaps
             res, dec = kern(pa4, pb4)
-            return _relate_fill(res, dec, fn, s1, s2, name, s1, s2)
-    return pd.Series(
-        [fn(from_ewkb(bytes(a)), from_ewkb(bytes(b))) for a, b in zip(s1, s2)],
-        dtype=object,
-    )
+            return _relate_fill(res, dec, fn, a1, a2, name, a1, a2)
+    return per_row(fn, a1, a2)
 
 
 def _pair_udf(name: str, fn, ret="boolean"):
-    """Two-geometry-column pandas UDF for predicate ``name`` — constructed
+    """Two-geometry-column arrow UDF for predicate ``name`` — constructed
     once per predicate at module import (BooleanType instance, no session
     needed) and exposed via ``st_<name>._sql_udf`` so
     register_sql_functions can install the exact same vectorized kernel as
-    a Spark SQL function."""
+    a Spark SQL function. Null-free batches try, in order: the interval
+    algebra when both sides parse as uniform point/axis-rect batches (on
+    zero-copy views of the Arrow buffers — the b2/filter_pairs refinement
+    shape), row-paired point location against a ragged polygon column, and
+    the full pair stack (:func:`eval_pairs_predicate`); everything else is
+    per-row."""
     loc_ok2 = ret == "boolean" and name in _LOC_NAMES
-    pair_ok = ret == "boolean" and name in (
-        "intersects", "disjoint", "within", "contains", "covers",
-        "covered_by", "contains_properly", "touches", "crosses", "overlaps",
-    )
+    pair_ok = ret == "boolean" and name in _PAIRED_KERNEL_NAMES
     from pyspark.sql.types import BooleanType, StringType
 
     rt = BooleanType() if ret == "boolean" else StringType()
 
-    def eval_pd(s1: pd.Series, s2: pd.Series, fa=None, fb=None) -> pd.Series:
-        """The pandas evaluation stack (unchanged from the pandas-UDF era);
-        ``fa``/``fb`` let the arrow wrapper pass already-parsed uniform
-        batches so the fast dispatch is not re-derived per lane."""
-        if (
-            ret == "boolean"
-            and (name in _FAST_NAMES or loc_ok2 or pair_ok)
-            and not s1.isna().any()
-            and not s2.isna().any()
-        ):
-            if fa is None:
-                fa = uniform_batch_pa(s1)
-            if fb is None:
-                fb = uniform_batch_pa(s2)
-            if name in _FAST_NAMES and fa is not None and fb is not None:
-                A = _as_boxes(fa)
-                B = _as_boxes(fb) if A is not None else None
-                if A is not None and B is not None:
-                    r = _vec_predicate(name, A, B)
-                    if r is not None:
-                        return pd.Series(r)
-            if loc_ok2:
-                # row-paired point vs arbitrary-polygon columns (either side)
-                if fa is not None and fa[0] == "point2d":
-                    rp = RG.parse_polygonal(s2)
+    def lanes(a1, a2):
+        fa = uniform_batch_pa(a1)
+        fb = uniform_batch_pa(a2)
+        if name in _FAST_NAMES and fa is not None and fb is not None:
+            A = _as_boxes(fa)
+            B = _as_boxes(fb) if A is not None else None
+            if A is not None and B is not None:
+                r = _vec_predicate(name, A, B)
+                if r is not None:
+                    return r
+        if loc_ok2:
+            # row-paired point vs arbitrary-polygon columns (either side)
+            for pt, other, point_is_a in ((fa, a2, True), (fb, a1, False)):
+                if pt is not None and pt[0] == "point2d":
+                    rp = RG.parse_polygonal(other)
                     if rp is not None:
-                        loc = RG.locate_points(rp, fa[1], fa[2])
-                        r = _loc_predicate(name, loc, point_is_a=True)
+                        loc = RG.locate_points(rp, pt[1], pt[2])
+                        r = _loc_predicate(name, loc, point_is_a=point_is_a)
                         if r is not None:
-                            return pd.Series(r)
-                elif fb is not None and fb[0] == "point2d":
-                    rp = RG.parse_polygonal(s1)
-                    if rp is not None:
-                        loc = RG.locate_points(rp, fb[1], fb[2])
-                        r = _loc_predicate(name, loc, point_is_a=False)
-                        if r is not None:
-                            return pd.Series(r)
-            if name in _PAIRED_KERNEL_NAMES:
-                # full batched stack: family CSR kernel -> relate
-                # contact buckets -> per-row scalar (shared with the
-                # sjoin broadcast refinement)
-                return eval_pairs_predicate(name, s1, s2, fn)
-        return pd.Series(
-            [
-                None if (a is None or b is None) else fn(from_ewkb(bytes(a)), from_ewkb(bytes(b)))
-                for a, b in zip(s1, s2)
-            ],
-            dtype=object,
-        )
+                            return r
+                    break
+        if pair_ok:
+            # full batched stack: family CSR kernel -> relate contact
+            # buckets -> per-row scalar (shared with the sjoin broadcast
+            # refinement)
+            return eval_pairs_predicate(name, a1, a2, fn)
+        return None
 
-    # r11 (guide §4.2): the two-column predicate is an arrow_udf — when BOTH
-    # sides parse as uniform point/axis-rect batches the interval algebra
-    # runs on zero-copy views of the Arrow buffers (no bytes-object
-    # materialization at all: the b2/filter_pairs refinement shape); every
-    # other batch converts to pandas once and runs the identical stack.
     @arrow_udf(rt)
     def udf2(a1, a2):
-        import pyarrow as pa
-
-        fa = fb = None
-        if ret == "boolean" and name in _FAST_NAMES:
-            fa = uniform_batch_pa(a1)
-            fb = uniform_batch_pa(a2) if fa is not None else None
-            if fa is not None and fb is not None:
-                A = _as_boxes(fa)
-                B = _as_boxes(fb) if A is not None else None
-                if A is not None and B is not None:
-                    r = _vec_predicate(name, A, B)
-                    if r is not None:
-                        return pa.array(np.asarray(r, dtype=bool), type=pa.bool_())
-        out = eval_pd(a1.to_pandas(), a2.to_pandas(), fa, fb)
-        return pa.Array.from_pandas(
-            out, type=pa.bool_() if ret == "boolean" else pa.string())
+        out = None
+        if (ret == "boolean" and (name in _FAST_NAMES or loc_ok2 or pair_ok)
+                and not a1.null_count and not a2.null_count):
+            out = lanes(a1, a2)
+        return pa_out(out if out is not None else per_row(fn, a1, a2), ret)
 
     return udf2
 
@@ -418,68 +372,43 @@ def _mk(name: str, fn, ret="boolean"):
             B_const = _const_box(o) if ret == "boolean" and name in _FAST_NAMES else None
             o_is_point = o.type_id == GeometryType.Point and o.coords is not None
 
-            def eval1_pd(s: pd.Series, fast=None) -> pd.Series:
-                if (B_const is not None or loc_ok) and not s.isna().any():
-                    if fast is None:
-                        fast = uniform_batch_pa(s)
-                    if B_const is not None and fast is not None:
-                        A = _as_boxes(fast)
-                        if A is not None:
-                            r = _vec_predicate(name, A, B_const)
-                            if r is not None:
-                                return pd.Series(r)
-                    if loc_ok and fast is not None and fast[0] == "point2d":
-                        # point column vs constant areal geometry
-                        loc = _point_locs_const_poly(o, fast[1], fast[2])
-                        if loc is not None:
-                            r = _loc_predicate(name, loc, point_is_a=True)
-                            if r is not None:
-                                return pd.Series(r)
-                    if loc_ok and o_is_point and (fast is None or fast[0] != "point2d"):
-                        # ragged polygon column vs constant point
-                        rp = RG.parse_polygonal(s)
-                        if rp is not None:
-                            n = len(s)
-                            loc = RG.locate_points(
-                                rp,
-                                np.full(n, float(o.coords[0])),
-                                np.full(n, float(o.coords[1])),
-                            )
-                            r = _loc_predicate(name, loc, point_is_a=False)
-                            if r is not None:
-                                return pd.Series(r)
-                return pd.Series(
-                    [None if b is None else fn(from_ewkb(bytes(b)), o) for b in s],
-                    dtype=object,
-                )
+            def lanes1(a1):
+                fast = uniform_batch_pa(a1)
+                if B_const is not None and fast is not None:
+                    A = _as_boxes(fast)
+                    if A is not None:
+                        r = _vec_predicate(name, A, B_const)
+                        if r is not None:
+                            return r
+                if loc_ok and fast is not None and fast[0] == "point2d":
+                    # point column vs constant areal geometry
+                    loc = _point_locs_const_poly(o, fast[1], fast[2])
+                    if loc is not None:
+                        r = _loc_predicate(name, loc, point_is_a=True)
+                        if r is not None:
+                            return r
+                if loc_ok and o_is_point and (fast is None or fast[0] != "point2d"):
+                    # ragged polygon column vs constant point
+                    rp = RG.parse_polygonal(a1)
+                    if rp is not None:
+                        n = len(a1)
+                        loc = RG.locate_points(
+                            rp,
+                            np.full(n, float(o.coords[0])),
+                            np.full(n, float(o.coords[1])),
+                        )
+                        return _loc_predicate(name, loc, point_is_a=False)
+                return None
 
             # r11: arrow lane — zero-copy interval algebra against the
             # constant box (point-in-rect sweeps etc.); the point-vs-const-
             # polygon locate path reads x/y straight off the Arrow buffers
             @arrow_udf(spark_dt(ret))
             def udf1(a1):
-                import pyarrow as pa
-
-                fast = None
-                if (B_const is not None or loc_ok):
-                    fast = uniform_batch_pa(a1)
-                    if B_const is not None and fast is not None:
-                        A = _as_boxes(fast)
-                        if A is not None:
-                            r = _vec_predicate(name, A, B_const)
-                            if r is not None:
-                                return pa.array(
-                                    np.asarray(r, dtype=bool), type=pa.bool_())
-                    if loc_ok and fast is not None and fast[0] == "point2d":
-                        loc = _point_locs_const_poly(o, fast[1], fast[2])
-                        if loc is not None:
-                            r = _loc_predicate(name, loc, point_is_a=True)
-                            if r is not None:
-                                return pa.array(
-                                    np.asarray(r, dtype=bool), type=pa.bool_())
-                out = eval1_pd(a1.to_pandas(), fast)
-                return pa.Array.from_pandas(
-                    out, type=pa.bool_() if ret == "boolean" else pa.string())
+                out = None
+                if (B_const is not None or loc_ok) and not a1.null_count:
+                    out = lanes1(a1)
+                return pa_out(out if out is not None else per_row(fn, a1, o), ret)
 
             from polars_st_spark.functions import fuse
 
@@ -525,10 +454,10 @@ _PT_POLY_MATS = ("FF0FFF212", "F0FFFF212", "0FFFFF212")  # A point, B areal
 _POLY_PT_MATS = ("FF2FF10F2", "FF20F1FF2", "0F2FF1FF2")  # A areal, B point
 
 
-def _parse_family(s: pd.Series):
-    p = RG.parse_polygonal(s)
+def _parse_family(a):
+    p = RG.parse_polygonal(a)
     if p is None:
-        p = RG.parse_lineal(s)
+        p = RG.parse_lineal(a)
     return p
 
 
@@ -604,7 +533,7 @@ def _rect_relate_mats(A, B):
     return mats, nondeg
 
 
-def _relate_matrices(s1: pd.Series, s2: pd.Series, fa=None, fb=None):
+def _relate_matrices(s1: pa.Array, s2: pa.Array, fa=None, fb=None):
     """(matrices object-array, decided bool-array) from the vectorized
     CSR kernels (point×point, point×polygon both directions, rect×rect
     closed-form, and geo.ragged.pairs_relate for polygonal/lineal pairs),
@@ -644,19 +573,15 @@ def _relate_matrices(s1: pd.Series, s2: pd.Series, fa=None, fb=None):
     return RG.pairs_relate(pa, pb)
 
 
-def _relate_series(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    if not s1.isna().any() and not s2.isna().any():
-        rm = _relate_matrices(s1, s2)
+def _relate_series(a1: pa.Array, a2: pa.Array):
+    """DE-9IM matrix strings (None at null rows) for two aligned EWKB
+    arrays: the vectorized kernels of :func:`_relate_matrices`, then the
+    per-row scalar for the rows they leave undecided."""
+    if not a1.null_count and not a2.null_count:
+        rm = _relate_matrices(a1, a2)
         if rm is not None:
-            return _scalar_fill(rm[0], rm[1], P.relate, s1, s2)
-    return pd.Series(
-        [
-            None if (a is None or b is None)
-            else P.relate(from_ewkb(bytes(a)), from_ewkb(bytes(b)))
-            for a, b in zip(s1, s2)
-        ],
-        dtype=object,
-    )
+            return _scalar_fill(rm[0], rm[1], P.relate, a1, a2)
+    return per_row(P.relate, a1, a2)
 
 
 _REL_CONST_MAX = 1 << 26  # cap on replicated constant bytes per batch
@@ -672,14 +597,11 @@ def st_relate(col, other) -> Column:
     if isinstance(o, Geometry):
         ob = bytes(to_ewkb(o))
 
-        @arrow_series_udf("string")
-        def udf1(s: pd.Series) -> pd.Series:
-            if len(s) * len(ob) <= _REL_CONST_MAX:
-                return _relate_series(s, pd.Series([ob] * len(s)))
-            return pd.Series(
-                [None if b is None else P.relate(from_ewkb(bytes(b)), o) for b in s],
-                dtype=object,
-            )
+        @arrow_udf(spark_dt("string"))
+        def udf1(a):
+            if len(a) * len(ob) <= _REL_CONST_MAX:
+                return pa_out(_relate_series(a, _repeat(ob, len(a))), "string")
+            return pa_out(per_row(P.relate, a, o), "string")
 
         from polars_st_spark.functions import fuse
 
@@ -697,27 +619,17 @@ def st_relate(col, other) -> Column:
 
 def _relate_pair_udf():
     """Two-geometry-column relate UDF builder (shared with the SQL
-    registry). r11: arrow_udf — rect×rect batches (coverage topology,
-    the adjacency_relate shape) decide entirely in the closed-form kernel
-    on zero-copy Arrow views; anything else converts to pandas once and
-    runs the unchanged _relate_series stack."""
+    registry)."""
 
     @arrow_udf(spark_dt("string"))
     def udf2(a1, a2):
-        import pyarrow as pa_
-
-        if a1.null_count == 0 and a2.null_count == 0:
-            fa = uniform_batch_pa(a1)
-            fb = uniform_batch_pa(a2) if fa is not None else None
-            if (fa is not None and fa[0] == "ring" and fa[2]
-                    and fb is not None and fb[0] == "ring" and fb[2]):
-                mats, dec = _rect_relate_mats(_as_boxes(fa), _as_boxes(fb))
-                if dec.all():
-                    return pa_.array(list(mats), type=pa_.string())
-        return pa_.Array.from_pandas(
-            _relate_series(a1.to_pandas(), a2.to_pandas()), type=pa_.string())
+        return pa_out(_relate_series(a1, a2), "string")
 
     return udf2
+
+
+def _repeat(b: bytes, n: int) -> pa.Array:
+    return pa.array([b] * n, type=pa.binary())
 
 
 def st_relate_pattern(col, other, pattern: str) -> Column:
@@ -725,27 +637,16 @@ def st_relate_pattern(col, other, pattern: str) -> Column:
     the same vectorized matrix path as :func:`st_relate`."""
     o = geom_arg(other)
 
-    def match(ser: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if m is None else P._matches(pattern, m) for m in ser],
-            dtype=object,
-        )
-
     if isinstance(o, Geometry):
         ob = bytes(to_ewkb(o))
 
-        @arrow_series_udf("boolean")
-        def udf1(s: pd.Series) -> pd.Series:
-            if len(s) * len(ob) <= _REL_CONST_MAX:
-                return match(_relate_series(s, pd.Series([ob] * len(s))))
-            return pd.Series(
-                [
-                    None if b is None
-                    else P.relate_pattern(from_ewkb(bytes(b)), o, pattern)
-                    for b in s
-                ],
-                dtype=object,
-            )
+        @arrow_udf(spark_dt("boolean"))
+        def udf1(a):
+            if len(a) * len(ob) <= _REL_CONST_MAX:
+                out = _match(pattern, _relate_series(a, _repeat(ob, len(a))))
+            else:
+                out = per_row(lambda g: P.relate_pattern(g, o, pattern), a)
+            return pa_out(out, "boolean")
 
         from polars_st_spark.functions import fuse
 
@@ -761,17 +662,17 @@ def st_relate_pattern(col, other, pattern: str) -> Column:
     return fused if fused is not None else udf2(c, o)
 
 
+def _match(pattern: str, mats) -> list:
+    return [None if m is None else P._matches(pattern, m) for m in mats]
+
+
 def _relate_pattern_pair_udf(pattern: str):
     """Two-geometry-column relate_pattern UDF builder (shared with the SQL
     registry)."""
 
-    @arrow_series_udf("boolean")
-    def udf2(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        ms = _relate_series(s1, s2)
-        return pd.Series(
-            [None if m is None else P._matches(pattern, m) for m in ms],
-            dtype=object,
-        )
+    @arrow_udf(spark_dt("boolean"))
+    def udf2(a1, a2):
+        return pa_out(_match(pattern, _relate_series(a1, a2)), "boolean")
 
     return udf2
 
@@ -787,17 +688,14 @@ def _dwithin_impl(col, other, distance: float) -> Column:
     if isinstance(o, Geometry):
         B_const = _const_box(o)
 
-        @arrow_series_udf("boolean")
-        def udf1(s: pd.Series) -> pd.Series:
-            if B_const is not None and B_const[4] and not s.isna().any():
-                A = _as_boxes(uniform_batch_pa(s))
+        @arrow_udf(spark_dt("boolean"))
+        def udf1(a):
+            if B_const is not None and B_const[4]:
+                A = _as_boxes(uniform_batch_pa(a))
                 if A is not None and A[4]:
                     d = np.sqrt((A[0] - B_const[0]) ** 2 + (A[1] - B_const[1]) ** 2)
-                    return pd.Series(d < distance)
-            return pd.Series(
-                [None if b is None else P.dwithin(from_ewkb(bytes(b)), o, distance) for b in s],
-                dtype=object,
-            )
+                    return pa_out(d < distance, "boolean")
+            return pa_out(per_row(P.dwithin, a, o, distance), "boolean")
 
         from polars_st_spark.functions import fuse
 
@@ -816,55 +714,48 @@ def _dwithin_impl(col, other, distance: float) -> Column:
 def _dwithin_pair_udf(distance: float):
     """Two-geometry-column dwithin UDF builder (shared with the SQL registry)."""
 
-    @arrow_series_udf("boolean")
-    def udf2(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        if len(s1) and not s1.isna().any() and not s2.isna().any():
-            fa = uniform_batch_pa(s1)
-            fb = uniform_batch_pa(s2)
-            A = _as_boxes(fa)
-            B = _as_boxes(fb) if A is not None else None
-            if A is not None and B is not None and A[4] and B[4]:
-                d = np.sqrt((A[0] - B[0]) ** 2 + (A[1] - B[1]) ** 2)
-                return pd.Series(d < distance)
-            # point column vs ragged polygon/line column (either order, r4b):
-            # the CSR distance sweep + strict-< (NaN empties -> False, like
-            # the scalar kernel)
-            a_pt = fa is not None and fa[0] == "point2d"
-            b_pt = fb is not None and fb[0] == "point2d"
-            for pt, other_s in ((fa, s2), (fb, s1)) if (a_pt or b_pt) else ():
-                if pt is None or pt[0] != "point2d":
-                    continue
-                rp = RG.parse_polygonal(other_s)
-                if rp is not None:
-                    d = RG.distance_to_points(rp, pt[1], pt[2])
-                    return pd.Series(d < distance)
-                rl = RG.parse_lineal(other_s)
-                if rl is not None:
-                    d = RG.distance_lines_to_points(rl, pt[1], pt[2])
-                    return pd.Series(d < distance)
-            if not (a_pt or b_pt):
-                # geometry×geometry pairs (r4e): the row-paired distance
-                # kernel + strict-< (NaN empties -> False, scalar parity)
-                pa = RG.parse_polygonal(s1)
-                if pa is None:
-                    pa = RG.parse_lineal(s1)
-                pb = None
-                if pa is not None:
-                    pb = RG.parse_polygonal(s2)
-                    if pb is None:
-                        pb = RG.parse_lineal(s2)
-                if pa is not None and pb is not None:
-                    d = RG.pairs_distance(pa, pb)
-                    if d is not None:
-                        with np.errstate(invalid="ignore"):
-                            return pd.Series(d < distance)
-        return pd.Series(
-            [
-                None if (a is None or b is None) else P.dwithin(from_ewkb(bytes(a)), from_ewkb(bytes(b)), distance)
-                for a, b in zip(s1, s2)
-            ],
-            dtype=object,
-        )
+    def lanes(a1, a2):
+        fa = uniform_batch_pa(a1)
+        fb = uniform_batch_pa(a2)
+        A = _as_boxes(fa)
+        B = _as_boxes(fb) if A is not None else None
+        if A is not None and B is not None and A[4] and B[4]:
+            return np.sqrt((A[0] - B[0]) ** 2 + (A[1] - B[1]) ** 2) < distance
+        # point column vs ragged polygon/line column (either order, r4b):
+        # the CSR distance sweep + strict-< (NaN empties -> False, like
+        # the scalar kernel)
+        a_pt = fa is not None and fa[0] == "point2d"
+        b_pt = fb is not None and fb[0] == "point2d"
+        for pt, other in ((fa, a2), (fb, a1)) if (a_pt or b_pt) else ():
+            if pt is None or pt[0] != "point2d":
+                continue
+            rp = RG.parse_polygonal(other)
+            if rp is not None:
+                return RG.distance_to_points(rp, pt[1], pt[2]) < distance
+            rl = RG.parse_lineal(other)
+            if rl is not None:
+                return RG.distance_lines_to_points(rl, pt[1], pt[2]) < distance
+        if not (a_pt or b_pt):
+            # geometry×geometry pairs (r4e): the row-paired distance
+            # kernel + strict-< (NaN empties -> False, scalar parity)
+            pa_, pb_ = _parse_family(a1), None
+            if pa_ is not None:
+                pb_ = _parse_family(a2)
+            if pa_ is not None and pb_ is not None:
+                d = RG.pairs_distance(pa_, pb_)
+                if d is not None:
+                    with np.errstate(invalid="ignore"):
+                        return d < distance
+        return None
+
+    @arrow_udf(spark_dt("boolean"))
+    def udf2(a1, a2):
+        out = None
+        if len(a1) and not a1.null_count and not a2.null_count:
+            out = lanes(a1, a2)
+        if out is None:
+            out = per_row(P.dwithin, a1, a2, distance)
+        return pa_out(out, "boolean")
 
     return udf2
 

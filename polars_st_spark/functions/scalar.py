@@ -11,8 +11,8 @@ points (the dominant case for point tables at scale).
 
 NaN convention: the reference returns NaN sentinels for some cases (x/y of a
 non-Point, distance to an empty geometry — functions.rs:448-452, 823-825).
-pandas/Arrow treat NaN as the missing marker, so those sentinels surface as
-SQL NULL here. This engine documents **NaN → NULL** as its convention for all
+The UDF output converters treat NaN as the missing marker (``factory.pa_out``,
+``_double_out``), so those sentinels surface as SQL NULL here. This engine documents **NaN → NULL** as its convention for all
 double-returning functions; input nulls also yield NULL (null passthrough),
 matching Spark-native semantics.
 """
@@ -22,7 +22,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
@@ -32,10 +31,11 @@ from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
 from polars_st_spark.functions.factory import (
     active_udf,
-    arrow_series_udf,
     binary_scalar,
     col_or_lit,
     geom_arg,
+    pa_out,
+    per_row,
     spark_dt,
     unary_scalar,
 )
@@ -191,21 +191,12 @@ def _double_out(vals: np.ndarray, mask=None):
     return pa.array(vals, type=pa.float64(), mask=nanm if nanm.any() else None)
 
 
-def _per_row_double(fn, *arrs):
-    """The per-row kernel ``fn`` over the decoded rows of one or two binary
-    arrays → float64 Arrow; a null input row or a NaN result gives NULL."""
-    rows = zip(*(x.to_pylist() for x in arrs))
-    return _double_out(np.array(
-        [np.nan if None in r else fn(*map(from_ewkb, r)) for r in rows],
-        dtype=np.float64))
-
-
 @arrow_udf(DoubleType())
 def _x_udf(a):
     fast = uniform_batch_pa(a)
     if fast is not None and fast[0] == "point2d":
         return _double_out(np.ascontiguousarray(fast[1]))
-    return _per_row_double(_coord_accessor(0), a)
+    return pa_out(per_row(_coord_accessor(0), a), "double")
 
 
 @arrow_udf(DoubleType())
@@ -213,7 +204,7 @@ def _y_udf(a):
     fast = uniform_batch_pa(a)
     if fast is not None and fast[0] == "point2d":
         return _double_out(np.ascontiguousarray(fast[2]))
-    return _per_row_double(_coord_accessor(1), a)
+    return pa_out(per_row(_coord_accessor(1), a), "double")
 
 
 def st_x(col) -> Column:
@@ -235,17 +226,6 @@ def st_m(col) -> Column:
 # ----------------------------------------------------------------------
 # Measures
 # ----------------------------------------------------------------------
-
-def _with_nulls(vals: np.ndarray, null_mask: np.ndarray) -> pd.Series:
-    """Float/array values → Series with None at null positions."""
-    if not null_mask.any():
-        return pd.Series(list(vals)) if vals.ndim > 1 else pd.Series(vals)
-    out = np.empty(len(vals), dtype=object)
-    for i in range(len(vals)):
-        if not null_mask[i]:
-            out[i] = list(vals[i]) if vals.ndim > 1 else vals[i]
-    return pd.Series(out, dtype=object)
-
 
 @arrow_udf(DoubleType())
 def _area_udf(a):
@@ -270,7 +250,7 @@ def _area_udf(a):
     mixed = _mixed_measure(a, "area")
     if mixed is not None:
         return mixed
-    return _per_row_double(algos.area, a)
+    return pa_out(per_row(algos.area, a), "double")
 
 
 def st_area(col) -> Column:
@@ -330,7 +310,7 @@ def _length_udf(a):
     mixed = _mixed_measure(a, "length")
     if mixed is not None:
         return mixed
-    return _per_row_double(algos.length, a)
+    return pa_out(per_row(algos.length, a), "double")
 
 
 def st_length(col) -> Column:
@@ -348,20 +328,17 @@ def st_distance(col, other) -> Column:
     if isinstance(other_g, Geometry) and other_g.type_id == GeometryType.Point and other_g.coords is not None:
         qx, qy = float(other_g.coords[0]), float(other_g.coords[1])
 
-        @arrow_series_udf("double")
-        def udf_fast(s: pd.Series) -> pd.Series:
-            fast = uniform_batch_pa(s)
+        @arrow_udf(DoubleType())
+        def udf_fast(a):
+            fast = uniform_batch_pa(a)
             if fast is not None and fast[0] == "point2d":
-                return pd.Series(np.sqrt((fast[1] - qx) ** 2 + (fast[2] - qy) ** 2))
-            rp = ragged.parse_polygonal(s)
+                return _double_out(np.sqrt((fast[1] - qx) ** 2 + (fast[2] - qy) ** 2))
+            rp = ragged.parse_polygonal(a)
             if rp is not None:
-                n = len(s)
+                n = len(a)
                 d = ragged.distance_to_points(rp, np.full(n, qx), np.full(n, qy))
-                return pd.Series(d)  # NaN (empty/null rows) -> NULL at Arrow
-            return pd.Series(
-                [None if b is None else algos.distance(from_ewkb(bytes(b)), other_g) for b in s],
-                dtype=object,
-            )
+                return _double_out(d)  # NaN (empty/null rows) -> NULL
+            return pa_out(per_row(algos.distance, a, other_g), "double")
 
         return udf_fast(col_or_lit(col))
     from polars_st_spark.geo.curves import _is_curved
@@ -375,17 +352,14 @@ def st_distance(col, other) -> Column:
         # point column vs constant areal geometry
         g2 = other_g
 
-        @arrow_series_udf("double")
-        def udf_pts(s: pd.Series) -> pd.Series:
-            fast = uniform_batch_pa(s)
+        @arrow_udf(DoubleType())
+        def udf_pts(a):
+            fast = uniform_batch_pa(a)
             if fast is not None and fast[0] == "point2d":
                 d = ragged.const_polygon_distance(g2, fast[1], fast[2])
                 if d is not None:
-                    return pd.Series(d)
-            return pd.Series(
-                [None if b is None else algos.distance(from_ewkb(bytes(b)), g2) for b in s],
-                dtype=object,
-            )
+                    return _double_out(d)
+            return pa_out(per_row(algos.distance, a, g2), "double")
 
         return udf_pts(col_or_lit(col))
     if not isinstance(other_g, Geometry):
@@ -437,7 +411,7 @@ def _distance_pair_udf(a1, a2):
                 d = ragged.pairs_distance(ra, rb)
                 if d is not None:
                     return _double_out(d)
-    return _per_row_double(algos.distance, a1, a2)
+    return pa_out(per_row(algos.distance, a1, a2), "double")
 
 
 def st_hausdorff_distance(col, other, densify: float | None = None) -> Column:
@@ -469,8 +443,8 @@ def st_project(col, other, normalized: bool = False) -> Column:
 def _bounds_list_out(mat: np.ndarray, null_rows: np.ndarray | None = None):
     """(n, 4) float64 → Arrow list<double> with 4 values per row, one
     vectorized construction (no per-row Python lists). NaN elements become
-    null elements and ``null_rows`` become null rows — matching what the
-    pandas boundary does to NaN-bearing lists (engine NaN→NULL rule)."""
+    null elements and ``null_rows`` become null rows — matching what
+    ``factory.pa_out`` does to NaN-bearing lists (engine NaN→NULL rule)."""
     import pyarrow as pa
 
     n = len(mat)
@@ -574,16 +548,16 @@ def st_count_coordinates(col) -> Column:
 
 
 def _count_coordinates_udf():
-    @arrow_series_udf("int")
-    def udf(s: pd.Series) -> pd.Series:
-        rg = (ragged.parse_polygonal(s) or ragged.parse_lineal(s)
-              or ragged.parse_multipoints(s))
+    @arrow_udf(IntegerType())
+    def udf(a):
+        import pyarrow as pa
+
+        rg = (ragged.parse_polygonal(a) or ragged.parse_lineal(a)
+              or ragged.parse_multipoints(a))
         if rg is not None:
-            return _with_nulls(np.diff(rg.row_start).astype(np.int32), rg.null_mask)
-        return pd.Series(
-            [None if b is None else len(from_ewkb(bytes(b)).raw_coords()) for b in s],
-            dtype=object,
-        )
+            return pa.array(np.diff(rg.row_start).astype(np.int32),
+                            mask=rg.null_mask if rg.null_mask.any() else None)
+        return pa_out(per_row(lambda g: len(g.raw_coords()), a), "int")
 
     return udf
 

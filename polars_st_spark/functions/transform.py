@@ -11,14 +11,17 @@ import math
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
+from pyspark.sql.functions import arrow_udf
 
 from polars_st_spark.functions.factory import (
-    arrow_series_udf,
     binary_geom,
     col_or_lit,
     geom_arg,
+    pa_out,
+    per_row,
     unary_geom,
     spark_dt,
 )
@@ -56,40 +59,32 @@ def _centroid_udf():
     ``register_sql_functions`` installs, so SQL and Column API share the
     exact batch dispatch."""
     from polars_st_spark.geo import ragged
-    from polars_st_spark.geo.wkb import from_ewkb, points_to_ewkb, to_ewkb
+    from polars_st_spark.geo.wkb import points_to_ewkb
 
-    def _emit(s, cx, cy, ok, null_mask, srid):
+    def _emit(a, cx, cy, ok, null_mask, srid):
         okm = ok & ~null_mask
-        out = np.empty(len(s), dtype=object)
-        out[:] = None
+        out: list = [None] * len(a)
         if okm.any():
             enc = points_to_ewkb(cx[okm], cy[okm], srid=srid)
             for j, i in enumerate(np.flatnonzero(okm)):
                 out[i] = enc[j]
-        for i in np.flatnonzero(~okm & ~null_mask):
-            out[i] = to_ewkb(algos.centroid(from_ewkb(bytes(s.iloc[i]))))
-        return pd.Series(out, dtype=object)
+        return per_row(algos.centroid, a, rows=np.flatnonzero(~okm & ~null_mask),
+                       out=out)
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        rp = ragged.parse_polygonal(s)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        rp = ragged.parse_polygonal(a)
         if rp is not None and rp.srid_uniform:
-            cx, cy, ok = ragged.centroid(rp)
-            return _emit(s, cx, cy, ok, rp.null_mask, rp.srid)
-        rl = ragged.parse_lineal(s)
-        if rl is not None and rl.srid_uniform:
+            out = _emit(a, *ragged.centroid(rp), rp.null_mask, rp.srid)
+        elif (rl := ragged.parse_lineal(a)) is not None and rl.srid_uniform:
             # r4b: length-weighted line centroids, vectorized
-            cx, cy, ok = ragged.centroid_lines(rl)
-            return _emit(s, cx, cy, ok, rl.null_mask, rl.srid)
-        mp = ragged.parse_multipoints(s)
-        if mp is not None and mp.srid_uniform:
+            out = _emit(a, *ragged.centroid_lines(rl), rl.null_mask, rl.srid)
+        elif (mp := ragged.parse_multipoints(a)) is not None and mp.srid_uniform:
             # r4c: point-mean centroids for MultiPoint batches
-            cx, cy, ok = ragged.centroid_points(mp)
-            return _emit(s, cx, cy, ok, mp.null_mask, mp.srid)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.centroid(from_ewkb(bytes(b)))) for b in s],
-            dtype=object,
-        )
+            out = _emit(a, *ragged.centroid_points(mp), mp.null_mask, mp.srid)
+        else:
+            out = per_row(algos.centroid, a)
+        return pa_out(out, "binary")
 
     return udf
 
@@ -110,16 +105,12 @@ st_point_on_surface = _u(algos.point_on_surface)
 
 def _convex_hull_udf():
     from polars_st_spark.geo import ragged
-    from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.convex_hull_batch(s.to_numpy())
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.convex_hull(from_ewkb(bytes(b))))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.convex_hull_batch(a)
+        return pa_out(fast if fast is not None else per_row(algos.convex_hull, a),
+                      "binary")
 
     return udf
 
@@ -151,14 +142,11 @@ def st_disjoint_subset_union(col, grid_size: float | None = None) -> Column:
 def _envelope_udf():
     from polars_st_spark.geo import ragged
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.envelope_batch(s.to_numpy())
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.envelope(from_ewkb(bytes(b))))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.envelope_batch(a)
+        return pa_out(fast if fast is not None else per_row(algos.envelope, a),
+                      "binary")
 
     return udf
 
@@ -174,14 +162,11 @@ def st_envelope(col) -> Column:
 def _boundary_udf():
     from polars_st_spark.geo import ragged
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.boundary_polygonal_batch(s.to_numpy())
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.boundary(from_ewkb(bytes(b))))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.boundary_polygonal_batch(a)
+        return pa_out(fast if fast is not None else per_row(algos.boundary, a),
+                      "binary")
 
     return udf
 
@@ -200,14 +185,11 @@ st_force_2d = _u(algos.force_2d)
 def _reverse_udf():
     from polars_st_spark.geo import ragged
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.reverse_units_batch(s.to_numpy())
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.reverse_geom(from_ewkb(bytes(b))))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.reverse_units_batch(a)
+        return pa_out(fast if fast is not None else per_row(algos.reverse_geom, a),
+                      "binary")
 
     return udf
 
@@ -226,20 +208,16 @@ st_multi = _u(algos.multi)
 
 def _simplify_udf(tolerance: float, preserve_topology: bool = True):
     from polars_st_spark.geo import ragged
-    from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
 
     tol = float(tolerance)
     pt = preserve_topology
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.simplify_batch(s.to_numpy(), tol)
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else
-             to_ewkb(algos.simplify(from_ewkb(bytes(b)), tol, pt))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.simplify_batch(a, tol)
+        if fast is None:
+            fast = per_row(lambda g: algos.simplify(g, tol, pt), a)
+        return pa_out(fast, "binary")
 
     return udf
 
@@ -260,14 +238,12 @@ def _segmentize_udf(max_segment_length: float):
     if ml <= 0:
         raise ValueError("max_segment_length must be positive")
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        fast = ragged.segmentize_batch(s.to_numpy(), ml)
-        if fast is not None:
-            return pd.Series(fast, dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(algos.segmentize(from_ewkb(bytes(b)), ml))
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.segmentize_batch(a, ml)
+        if fast is None:
+            fast = per_row(lambda g: algos.segmentize(g, ml), a)
+        return pa_out(fast, "binary")
 
     return udf
 
@@ -284,21 +260,16 @@ def _remove_repeated_udf(tolerance: float = 0.0):
 
     tol = float(tolerance)
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        vals = s.to_numpy()
-        fast = ragged.remove_repeated_batch(vals, tol)
-        if fast is not None:
-            out, need = fast
-            for i in np.nonzero(need)[0]:
-                b = vals[i]
-                out[i] = None if b is None else to_ewkb(
-                    algos.remove_repeated_points(from_ewkb(bytes(b)), tol))
-            return pd.Series(out, dtype=object)
-        return pd.Series(
-            [None if b is None else
-             to_ewkb(algos.remove_repeated_points(from_ewkb(bytes(b)), tol))
-             for b in s], dtype=object)
+    def fn(g):
+        return algos.remove_repeated_points(g, tol)
+
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = ragged.remove_repeated_batch(a, tol)
+        if fast is None:
+            return pa_out(per_row(fn, a), "binary")
+        out, need = fast
+        return pa_out(per_row(fn, a, rows=np.nonzero(need)[0], out=out), "binary")
 
     return udf
 
@@ -316,7 +287,7 @@ def st_force_3d(col, z: float = 0.0) -> Column:
 
 
 def _point_affine_udf(make_xy, fallback_fn, origin=None):
-    """Pandas UDF applying an elementwise coordinate map to whole batches.
+    """Arrow UDF applying an elementwise coordinate map to whole batches.
 
     Fast paths, in order:
     1. uniform 2-D point batch — ``make_xy(x, y)`` on the stacked arrays,
@@ -333,28 +304,27 @@ def _point_affine_udf(make_xy, fallback_fn, origin=None):
 
     The numpy expressions mirror geo/algos.py exactly — same elementwise
     ops, same order — so all paths agree bitwise."""
+    from polars_st_spark.functions.factory import pa_binary_rows
     from polars_st_spark.geo import ragged
     from polars_st_spark.geo.arrowwkb import uniform_batch_pa
-    from polars_st_spark.geo.wkb import header_info, points_to_ewkb
+    from polars_st_spark.geo.wkb import header_info, points_to_ewkb_matrix
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        if not s.isna().any() and len(s):
-            fast = uniform_batch_pa(s)
-            if fast is not None and fast[0] == "point2d":
-                if make_xy is None or origin in ("center", "centroid"):
-                    return s  # affine about a point's own center = identity
-                srid = header_info(bytes(s.iloc[0]))[3]
-                x2, y2 = make_xy(fast[1], fast[2])
-                return pd.Series(points_to_ewkb(
-                    np.asarray(x2, dtype=np.float64),
-                    np.asarray(y2, dtype=np.float64), srid=srid))
-        if make_xy is not None and len(s):
-            vals = s.to_numpy()
-            parsed = ragged.parse_polygonal(vals)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = uniform_batch_pa(a)
+        if fast is not None and fast[0] == "point2d":
+            if make_xy is None or origin in ("center", "centroid"):
+                return a  # affine about a point's own center = identity
+            srid = header_info(a[0].as_py())[3]
+            x2, y2 = make_xy(fast[1], fast[2])
+            return pa_binary_rows(points_to_ewkb_matrix(
+                np.asarray(x2, dtype=np.float64),
+                np.asarray(y2, dtype=np.float64), srid=srid))
+        if make_xy is not None and len(a):
+            parsed = ragged.parse_polygonal(a)
             is_poly = parsed is not None
             if parsed is None:
-                parsed = ragged.parse_lineal(vals)
+                parsed = ragged.parse_lineal(a)
             if parsed is not None and len(parsed.coords):
                 x = parsed.coords[:, 0]
                 y = parsed.coords[:, 1]
@@ -375,16 +345,13 @@ def _point_affine_udf(make_xy, fallback_fn, origin=None):
                         ox = np.repeat(np.nan_to_num(ox_r), counts)
                         oy = np.repeat(np.nan_to_num(oy_r), counts)
                         x2, y2 = make_xy(x, y, ox, oy)
-                        return pd.Series(ragged.splice_coords(
-                            vals, parsed, np.column_stack([x2, y2])), dtype=object)
+                        return pa_out(ragged.splice_coords(
+                            a, parsed, np.column_stack([x2, y2])), "binary")
                 else:
                     x2, y2 = make_xy(x, y)
-                    return pd.Series(ragged.splice_coords(
-                        vals, parsed, np.column_stack([x2, y2])), dtype=object)
-        return pd.Series(
-            [None if b is None else to_ewkb(fallback_fn(from_ewkb(bytes(b)))) for b in s],
-            dtype=object,
-        )
+                    return pa_out(ragged.splice_coords(
+                        a, parsed, np.column_stack([x2, y2])), "binary")
+        return pa_out(per_row(fallback_fn, a), "binary")
 
     return udf
 
@@ -522,8 +489,8 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
     qs = int(quad_segs)
 
     def _scalar(g, d):
-        return to_ewkb(algos.buffer(
-            g, float(d), qs, cap_style, join_style, mitre_limit, single_sided))
+        return algos.buffer(
+            g, float(d), qs, cap_style, join_style, mitre_limit, single_sided)
 
     can_batch = (not single_sided) and cap_style in ("round", "square")
     # r12 line lane (geo/bufferrows.py): round joins with flat/square caps
@@ -534,36 +501,32 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
         (not single_sided) and join_style == "round"
         and cap_style in ("flat", "square"))
 
-    def _lines_fast(s, dv):
+    def _lines_fast(a, dv):
         from polars_st_spark.geo import bufferrows
 
-        res = bufferrows.buffer_lines_batch(
-            s.to_numpy(), dv, qs, cap_style)
+        res = bufferrows.buffer_lines_batch(a, dv, qs, cap_style)
         if res is None:
             return None
         outv, needv = res
-        if needv.any():
-            vals = s.to_numpy()
-            for i in np.nonzero(needv)[0]:
-                b = vals[i]
-                outv[i] = None if b is None else _scalar(
-                    from_ewkb(bytes(b)), float(dv[i]))
-        return pd.Series(outv, dtype=object)
+        return per_row(_scalar, a, pa.array(dv), rows=np.nonzero(needv)[0],
+                       out=outv)
 
-    def _fast(s, dv):
-        if not len(s):
+    def _fast(a, dv):
+        """EWKB list from a batch lane, or None; ``dv`` is the float64
+        distance per row."""
+        if not len(a):
             return None
         if can_batch_lines:
-            lineal = _lines_fast(s, dv)
+            lineal = _lines_fast(a, dv)
             if lineal is not None:
                 return lineal
-        if not can_batch or s.isna().any():
+        if not can_batch:
             return None
-        fast = uniform_batch_pa(s)
+        fast = uniform_batch_pa(a)
         if fast is None or fast[0] != "point2d":
             return None
         x, y = fast[1], fast[2]
-        srid = header_info(bytes(s.iloc[0]))[3]
+        srid = header_info(a[0].as_py())[3]
         m = len(x)
         if cap_style == "round":
             n = max(4, 4 * qs)
@@ -582,10 +545,10 @@ def _buffer_kernels(quad_segs: int, cap_style: str, join_style: str,
         coords[:, 0] = rxc.ravel()
         coords[:, 1] = ryc.ravel()
         idx = np.arange(m, dtype=np.int64)
-        return pd.Series(ragged.encode_polygonal_rows(
+        return ragged.encode_polygonal_rows(
             m, np.full(m, 3, dtype=np.int64), idx, idx,
             np.full(m, npts, dtype=np.int64), coords, srid,
-            np.zeros(m, dtype=bool)), dtype=object)
+            np.zeros(m, dtype=bool))
 
     return _scalar, _fast
 
@@ -598,15 +561,11 @@ def _buffer_udf(distance: float, quad_segs: int = 8, cap_style: str = "round",
         quad_segs, cap_style, join_style, mitre_limit, single_sided)
     dconst = float(distance)
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        if dconst > 0:
-            out = _fast(s, np.full(len(s), dconst))
-            if out is not None:
-                return out
-        return pd.Series(
-            [None if b is None else _scalar(from_ewkb(bytes(b)), dconst)
-             for b in s], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        out = _fast(a, np.full(len(a), dconst)) if dconst > 0 else None
+        return pa_out(out if out is not None else per_row(_scalar, a, dconst),
+                      "binary")
 
     return udf
 
@@ -618,16 +577,14 @@ def _buffer_pair_udf(quad_segs: int = 8, cap_style: str = "round",
     _scalar, _fast = _buffer_kernels(
         quad_segs, cap_style, join_style, mitre_limit, single_sided)
 
-    @arrow_series_udf("binary")
-    def udf2(s: pd.Series, v: pd.Series) -> pd.Series:
-        dv = v.to_numpy(dtype=np.float64, na_value=np.nan)
-        if len(s) and not np.isnan(dv).any() and (dv > 0).all():
-            out = _fast(s, dv)
-            if out is not None:
-                return out
-        return pd.Series(
-            [None if (b is None or pd.isna(x)) else _scalar(from_ewkb(bytes(b)), x)
-             for b, x in zip(s, v)], dtype=object)
+    @arrow_udf(spark_dt("binary"))
+    def udf2(a, v):
+        dv = pc.fill_null(pc.cast(v, pa.float64()), np.nan).to_numpy(
+            zero_copy_only=False)
+        out = None
+        if len(a) and not np.isnan(dv).any() and (dv > 0).all():
+            out = _fast(a, dv)
+        return pa_out(out if out is not None else per_row(_scalar, a, v), "binary")
 
     return udf2
 
@@ -667,22 +624,18 @@ def st_clip_by_rect(col, xmin: float, ymin: float, xmax: float, ymax: float) -> 
     batches keep the per-row scalar."""
     x0, y0, x1, y1 = float(xmin), float(ymin), float(xmax), float(ymax)
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
+    def fn(g):
+        return setops.clip_by_rect(g, x0, y0, x1, y1)
+
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
         from polars_st_spark.geo import shclip as _shc
 
-        vals = s.to_numpy()
-        fast = _shc.clip_rect_const_batch(vals, x0, y0, x1, y1)
+        fast = _shc.clip_rect_const_batch(a, x0, y0, x1, y1)
         if fast is None:
-            return pd.Series(
-                [None if b is None else
-                 to_ewkb(setops.clip_by_rect(from_ewkb(bytes(b)), x0, y0, x1, y1))
-                 for b in s], dtype=object)
+            return pa_out(per_row(fn, a), "binary")
         out, need = fast
-        for i in np.nonzero(need)[0]:
-            out[i] = to_ewkb(
-                setops.clip_by_rect(from_ewkb(bytes(vals[i])), x0, y0, x1, y1))
-        return pd.Series(out, dtype=object)
+        return pa_out(per_row(fn, a, rows=np.nonzero(need)[0], out=out), "binary")
 
     return udf(col_or_lit(col))
 
@@ -696,18 +649,13 @@ def st_snap(col, other, tolerance) -> Column:
         other_is_col = isinstance(og, Column)
         const_g = None if other_is_col else og
 
-        @arrow_series_udf("binary")
-        def udf3(s1, s2, sv):
-            from polars_st_spark.geo.wkb import decode_batch, to_ewkb as _enc
-            import pandas as _pd
+        def fn(a, b, x):
+            return algos.snap(a, b, float(x))
 
-            g2s = decode_batch(s2) if other_is_col else [const_g] * len(s1)
-            out = [
-                None if a is None or b is None or _pd.isna(x)
-                else _enc(algos.snap(a, b, float(x)))
-                for a, b, x in zip(decode_batch(s1), g2s, sv)
-            ]
-            return _pd.Series(out, dtype=object)
+        @arrow_udf(spark_dt("binary"))
+        def udf3(a1, a2, av):
+            return pa_out(per_row(fn, a1, a2 if other_is_col else const_g, av),
+                          "binary")
 
         if other_is_col:
             return udf3(col_or_lit(col), og, tol)
@@ -755,23 +703,18 @@ def _union_pair_udf(op: str, scalar_fn):
     """Two-geometry-column UDF builder for union / symmetric_difference —
     shared by the Column API and the SQL registry."""
     from polars_st_spark.geo import shclip as _shc
-    from polars_st_spark.geo.wkb import from_ewkb as _fe, to_ewkb as _te
 
-    @arrow_series_udf("binary")
-    def udf2(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        v1, v2 = s1.to_numpy(), s2.to_numpy()
-        fast = _shc.union_symdiff_disjoint_batch(v1, v2, op)
-        if fast is not None:
-            out, need = fast
-            for i in np.nonzero(need)[0]:
-                b1, b2 = v1[i], v2[i]
-                out[i] = None if (b1 is None or b2 is None) else _te(
-                    scalar_fn(_fe(bytes(b1)), _fe(bytes(b2)), None))
-            return pd.Series(out, dtype=object)
-        return pd.Series(
-            [None if (b1 is None or b2 is None) else _te(
-                scalar_fn(_fe(bytes(b1)), _fe(bytes(b2)), None))
-             for b1, b2 in zip(v1, v2)], dtype=object)
+    def fn(g1, g2):
+        return scalar_fn(g1, g2, None)
+
+    @arrow_udf(spark_dt("binary"))
+    def udf2(a1, a2):
+        fast = _shc.union_symdiff_disjoint_batch(a1, a2, op)
+        if fast is None:
+            return pa_out(per_row(fn, a1, a2), "binary")
+        out, need = fast
+        return pa_out(per_row(fn, a1, a2, rows=np.nonzero(need)[0], out=out),
+                      "binary")
 
     return udf2
 
@@ -801,16 +744,17 @@ def _clip_pair_udf(mode: str, scalar_fn):
     shared by the Column API and the SQL registry."""
     from polars_st_spark.geo import ragged as _rg
     from polars_st_spark.geo import shclip as _shc
-    from polars_st_spark.geo.wkb import from_ewkb as _fe, to_ewkb as _te
 
-    @arrow_series_udf("binary")
-    def udf2(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        v1, v2 = s1.to_numpy(), s2.to_numpy()
+    def fn(g1, g2):
+        return scalar_fn(g1, g2, None)
+
+    @arrow_udf(spark_dt("binary"))
+    def udf2(v1, v2):
         if mode == "in":
             # uniform axis-rect pairs: min/max closed form (bbox clip)
             rfast = _rg.rect_pair_intersection_batch(v1, v2)
             if rfast is not None:
-                return pd.Series(rfast, dtype=object)
+                return pa_out(rfast, "binary")
         fast = _rg.clip_line_poly_batch(v1, v2, mode)
         if fast is None and mode == "in":
             # polygon ∩ line order: same clip, polygon side's SRID
@@ -822,17 +766,11 @@ def _clip_pair_udf(mode: str, scalar_fn):
         if fast is None and mode == "out":
             # uniformly lower-dimensional right side: a.copy() rows
             fast = _shc.difference_lower_dim_batch(v1, v2)
-        if fast is not None:
-            out, need = fast
-            for i in np.nonzero(need)[0]:
-                b1, b2 = v1[i], v2[i]
-                out[i] = None if (b1 is None or b2 is None) else _te(
-                    scalar_fn(_fe(bytes(b1)), _fe(bytes(b2)), None))
-            return pd.Series(out, dtype=object)
-        return pd.Series(
-            [None if (b1 is None or b2 is None) else _te(
-                scalar_fn(_fe(bytes(b1)), _fe(bytes(b2)), None))
-             for b1, b2 in zip(v1, v2)], dtype=object)
+        if fast is None:
+            return pa_out(per_row(fn, v1, v2), "binary")
+        out, need = fast
+        return pa_out(per_row(fn, v1, v2, rows=np.nonzero(need)[0], out=out),
+                      "binary")
 
     return udf2
 
@@ -870,10 +808,9 @@ def st_unary_union(col, grid_size: float | None = None) -> Column:
 def _set_srid_udf(srid: int):
     new_srid = struct.pack("<I", srid)
 
-    def patch(b) -> bytes | None:
-        if b is None:
+    def patch(bb) -> bytes | None:
+        if bb is None:
             return None
-        bb = bytes(b)
         if bb[0] != 1:  # big-endian: rewrite via the codec
             return to_ewkb(from_ewkb(bb).with_srid(srid))
         (raw,) = struct.unpack_from("<I", bb, 1)
@@ -886,9 +823,9 @@ def _set_srid_udf(srid: int):
             return bb
         return bb[:1] + struct.pack("<I", raw & ~0x20000000) + bb[9:]
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        return s.map(patch)
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        return pa_out([patch(b) for b in a.to_pylist()], "binary")
 
     return udf
 
@@ -2768,8 +2705,9 @@ def st_polygonize(col) -> Column:
 
 def _to_srid_udf(srid: int):
     """UDF builder behind :func:`st_to_srid`; see its docstring."""
+    from polars_st_spark.functions.factory import pa_binary_rows
     from polars_st_spark.geo.arrowwkb import uniform_batch_pa
-    from polars_st_spark.geo.wkb import header_info, points_to_ewkb
+    from polars_st_spark.geo.wkb import header_info, points_to_ewkb_matrix
 
     # snapshot of proj4-registered CRSs, captured into the UDF closure so
     # executors (which import a pristine module copy) can resolve them
@@ -2784,21 +2722,21 @@ def _to_srid_udf(srid: int):
             raise ValueError(f"Unsupported SRID transform {src} -> {srid} (no pyproj in runtime)")
         return g.map_coords(f).with_srid(srid)
 
-    @arrow_series_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        if not s.isna().any() and len(s):
-            fast = uniform_batch_pa(s)
-            if fast is not None and fast[0] == "point2d":
-                src = header_info(bytes(s.iloc[0]))[3]
-                if src == srid:
-                    return s  # bytes already carry the target SRID
-                if src != 0:
-                    f = _lookup_transform(src, srid, _custom)
-                    if f is not None:
-                        arr = np.stack([fast[1], fast[2]], axis=1)
-                        out = f(arr.copy())
-                        return pd.Series(points_to_ewkb(out[:, 0], out[:, 1], srid=srid))
-        if len(s):
+    @arrow_udf(spark_dt("binary"))
+    def udf(a):
+        fast = uniform_batch_pa(a)
+        if fast is not None and fast[0] == "point2d":
+            src = header_info(a[0].as_py())[3]
+            if src == srid:
+                return a  # bytes already carry the target SRID
+            if src != 0:
+                f = _lookup_transform(src, srid, _custom)
+                if f is not None:
+                    arr = np.stack([fast[1], fast[2]], axis=1)
+                    out = f(arr.copy())
+                    return pa_binary_rows(
+                        points_to_ewkb_matrix(out[:, 0], out[:, 1], srid=srid))
+        if len(a):
             # ragged (multi)polygon / line batches (r4b): one projection call
             # over the whole flat coordinate matrix, coordinates spliced back
             # over the original bytes, SRID header word patched per row. The
@@ -2806,8 +2744,7 @@ def _to_srid_udf(srid: int):
             # scalar map_coords path.
             from polars_st_spark.geo import ragged
 
-            vals = s.to_numpy()
-            parsed = ragged.parse_polygonal(vals) or ragged.parse_lineal(vals)
+            parsed = ragged.parse_polygonal(a) or ragged.parse_lineal(a)
             if (
                 parsed is not None
                 and parsed.srid_uniform
@@ -2815,20 +2752,14 @@ def _to_srid_udf(srid: int):
                 and not parsed.child_srid
             ):
                 if parsed.srid == srid:
-                    return s
+                    return a
                 f = _lookup_transform(parsed.srid, srid, _custom)
                 if f is not None:
                     out = f(parsed.coords.copy())
-                    return pd.Series(
-                        ragged.splice_coords(vals, parsed, out, set_srid=srid),
-                        dtype=object,
-                    )
-        from polars_st_spark.geo.wkb import from_ewkb, to_ewkb
-
-        return pd.Series(
-            [None if b is None else to_ewkb(fn(from_ewkb(bytes(b)))) for b in s],
-            dtype=object,
-        )
+                    return pa_out(
+                        ragged.splice_coords(a, parsed, out, set_srid=srid),
+                        "binary")
+        return pa_out(per_row(fn, a), "binary")
 
     return udf
 

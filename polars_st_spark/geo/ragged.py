@@ -933,23 +933,29 @@ def splice_coords(bufs, parsed, new_coords: np.ndarray, set_srid: int | None = N
     """Rebuild each row's EWKB with ``new_coords`` (same (N, 2) layout as
     ``parsed.coords``) spliced over the original coordinate bytes. Because
     only coordinates change, every header/count/type byte is reused verbatim
-    — a batch affine transform is a byte copy plus one contiguous f8 write
-    per ring (O(rings) Python, zero per-vertex work). Works for both
-    RaggedPolygons and RaggedLines (only ``spans`` is used).
+    — a batch affine transform is one copy of the Arrow data buffer plus one
+    contiguous f8 write per ring (O(rings) Python, zero per-vertex work).
+    Works for both RaggedPolygons and RaggedLines (only ``spans`` is used).
+    Returns a list of bytes/None.
 
     ``set_srid`` overwrites the top-level header SRID word (callers must
     ensure every non-null row carries the SRID flag — true whenever
     ``parsed.srid_uniform`` and ``parsed.srid != 0``)."""
-    rows = [None if b is None else bytearray(bytes(b)) for b in bufs]
+    offs, data, valid = flat_views(as_binary_array(bufs))
+    buf = data[offs[0]:offs[-1]].copy()
+    offs = offs - offs[0]
     flat = np.ascontiguousarray(new_coords, dtype="<f8")
     for row, boff, foff, npts in zip(*parsed.spans):
-        rows[row][boff : boff + 16 * npts] = flat[foff : foff + npts].tobytes()
+        at = offs[row] + boff
+        buf[at : at + 16 * npts] = flat[foff : foff + npts].view(np.uint8).ravel()
+    live = np.ones(len(offs) - 1, dtype=bool) if valid is None else valid
     if set_srid is not None:
-        srid_word = struct.pack("<I", set_srid)
-        for r in rows:
-            if r is not None:
-                r[5:9] = srid_word
-    return [None if r is None else bytes(r) for r in rows]
+        at = offs[:-1][live]
+        buf[(at[:, None] + np.arange(5, 9)).ravel()] = np.tile(
+            np.frombuffer(struct.pack("<I", set_srid), dtype=np.uint8), len(at))
+    bts = buf.tobytes()
+    return [bts[s:e] if ok else None
+            for s, e, ok in zip(offs[:-1].tolist(), offs[1:].tolist(), live.tolist())]
 
 
 def split_families(bufs):
@@ -3349,11 +3355,23 @@ def convex_hull_rows(coords: np.ndarray, row_start: np.ndarray, n: int):
 
 
 def _rows_type_byte(vals, null_mask) -> np.ndarray:
-    out = np.zeros(len(vals), dtype=np.int64)
-    for i, b in enumerate(vals):
-        if not null_mask[i]:
-            out[i] = b[1]
+    """Low byte of each row's type word (0 at null rows), read off the
+    Arrow buffers."""
+    offs, data, _ = flat_views(as_binary_array(vals))
+    out = np.zeros(len(null_mask), dtype=np.int64)
+    live = ~null_mask
+    out[live] = data[offs[:-1][live] + 1]
     return out
+
+
+def _copy_rows(out, vals, rows) -> None:
+    """``out[i]`` = the input bytes of row ``i`` for every ``i`` in
+    ``rows`` (a verbatim passthrough); bytes are built only for those
+    rows."""
+    rows = np.asarray(rows, dtype=np.int64)
+    if len(rows):
+        for i, b in zip(rows, as_binary_array(vals).take(rows).to_pylist()):
+            out[i] = b
 
 
 def simplify_batch(vals, tol: float):
@@ -3417,6 +3435,7 @@ def convex_hull_batch(vals):
     from polars_st_spark.geo.wkb import points_to_ewkb, to_ewkb
     from polars_st_spark.geo.types import empty_collection
 
+    vals = as_binary_array(vals)
     p = parse_polygonal(vals)
     if p is None:
         p = parse_lineal(vals)
@@ -3432,7 +3451,7 @@ def convex_hull_batch(vals):
         for key in ("mpoint", "line", "poly"):
             idx = fam[key]
             if len(idx):
-                sub = convex_hull_batch(np.asarray(vals, dtype=object)[idx])
+                sub = convex_hull_batch(vals.take(idx))
                 if sub is None:
                     return None
                 for j, i in enumerate(idx):
@@ -3441,8 +3460,8 @@ def convex_hull_batch(vals):
             from polars_st_spark.geo.algos import convex_hull as _ch
             from polars_st_spark.geo.wkb import from_ewkb as _fe, to_ewkb as _te
 
-            for i in fam["point"]:
-                out[i] = _te(_ch(_fe(bytes(vals[i]))))
+            for i, b in zip(fam["point"], vals.take(fam["point"]).to_pylist()):
+                out[i] = _te(_ch(_fe(b)))
         return out
     if not p.srid_uniform:
         return None
@@ -3886,8 +3905,7 @@ def clip_line_poly_batch(vals_l, vals_p, mode: str,
     out = encode_lineal_rows(
         n, row_type, chain_row2, chain_npts2, coords2,
         rp.srid if use_poly_srid else rl.srid, enc_null)
-    for i in np.nonzero(passthrough)[0]:
-        out[i] = bytes(vals_l[i])
+    _copy_rows(out, vals_l, np.nonzero(passthrough)[0])
     for i in np.nonzero(nulls & ~need_scalar)[0]:
         out[i] = None
     return out, need_scalar
@@ -4106,8 +4124,8 @@ def envelope_batch(vals):
     group encoded by its batched writer — bit-identical to the scalar
     ``algos.envelope``. Mixed families route through the header split."""
     from polars_st_spark.geo.wkb import points_to_ewkb, to_ewkb
-    from polars_st_spark.geo.types import Geometry, GeometryType
 
+    vals = as_binary_array(vals)
     p = parse_polygonal(vals)
     if p is None:
         p = parse_lineal(vals)
@@ -4121,7 +4139,7 @@ def envelope_batch(vals):
         for key in ("mpoint", "line", "poly"):
             idx = fam[key]
             if len(idx):
-                sub = envelope_batch(np.asarray(vals, dtype=object)[idx])
+                sub = envelope_batch(vals.take(idx))
                 if sub is None:
                     return None
                 for j, i in enumerate(idx):
@@ -4130,8 +4148,8 @@ def envelope_batch(vals):
             from polars_st_spark.geo.algos import envelope as _env
             from polars_st_spark.geo.wkb import from_ewkb as _fe
 
-            for i in fam["point"]:
-                out[i] = to_ewkb(_env(_fe(bytes(vals[i]))))
+            for i, b in zip(fam["point"], vals.take(fam["point"]).to_pylist()):
+                out[i] = to_ewkb(_env(_fe(b)))
         return out
     if not p.srid_uniform:
         return None
@@ -4204,7 +4222,7 @@ def rect_pair_intersection_batch(vals_a, vals_b):
             or fa[1].shape[1] != 5 or fb[1].shape[1] != 5):
         return None
     ca, cb = fa[1], fb[1]
-    srid = header_info(bytes(vals_a[0]))[3]
+    srid = header_info(as_binary_array(vals_a)[0].as_py())[3]
     ax0, ay0 = ca[:, 0, 0], ca[:, 0, 1]
     ax1, ay1 = ca[:, 2, 0], ca[:, 2, 1]
     bx0, by0 = cb[:, 0, 0], cb[:, 0, 1]

@@ -27,6 +27,7 @@ from __future__ import annotations
 import numpy as np
 
 from polars_st_spark.geo import ragged as RG
+from polars_st_spark.geo.arrowwkb import as_binary_array
 
 
 def _row_ring_counts(rp) -> np.ndarray:
@@ -258,11 +259,11 @@ def _puntal_nulls(vals) -> np.ndarray | None:
     (their coordinate values never matter to the lower-dim passthrough);
     None otherwise."""
     nulls = np.zeros(len(vals), dtype=bool)
-    for i, b in enumerate(vals):
+    for i, b in enumerate(as_binary_array(vals).to_pylist()):
         if b is None:
             nulls[i] = True
             continue
-        h = RG._header(bytes(b))
+        h = RG._header(b)
         if h is None or h[0] not in (1, 4) or h[1] or h[2]:
             return None
     return nulls
@@ -296,8 +297,7 @@ def difference_lower_dim_batch(vals_a, vals_b):
     nulls = ra.null_mask | b_nulls
     need_scalar = ~nulls & (meas <= 0.0)
     out: list = [None] * ra.n
-    for i in np.nonzero(~nulls & ~need_scalar)[0]:
-        out[i] = bytes(vals_a[i])
+    RG._copy_rows(out, vals_a, np.nonzero(~nulls & ~need_scalar)[0])
     return out, need_scalar
 
 
@@ -372,10 +372,8 @@ def union_symdiff_disjoint_batch(vals_a, vals_b, op: str):
     out = RG.encode_polygonal_rows(
         n, np.full(n, 6, dtype=np.int64), part_row, ring_part, npts_o,
         coords, ra.srid, enc_null)
-    for i in np.nonzero(a_empty & ~nulls)[0]:
-        out[i] = bytes(vals_b[i])
-    for i in np.nonzero(b_empty & ~a_empty & ~nulls)[0]:
-        out[i] = bytes(vals_a[i])
+    RG._copy_rows(out, vals_b, np.nonzero(a_empty & ~nulls)[0])
+    RG._copy_rows(out, vals_a, np.nonzero(b_empty & ~a_empty & ~nulls)[0])
     return out, need_scalar
 
 
@@ -411,8 +409,7 @@ def clip_poly_poly_batch(vals_a, vals_b, mode: str):
     if mode == "out":
         need_scalar = cand.copy()
         out: list = [None] * n
-        for i in np.nonzero(~nulls & ~cand)[0]:
-            out[i] = bytes(vals_a[i])
+        RG._copy_rows(out, vals_a, np.nonzero(~nulls & ~cand)[0])
         return out, need_scalar
     if mode != "in":
         return None

@@ -12,10 +12,11 @@ objects, mirroring the reference's O(1) metadata ops (reference:
 src/functions.rs:410-435).
 
 This module is the per-row codec. Batches are read into numpy by the one
-batch reader, ``geo/arrowwkb.py``; `decode_batch` builds Geometry objects
-through it and drops to `from_ewkb` only for rows outside its uniform
-envelope. `points_to_ewkb` encodes a batch of points with numpy slice
-assignment — no per-row Python.
+batch reader, ``geo/arrowwkb.py``; `decode_batch` takes a pyarrow Binary
+array (or a bytes sequence), builds Geometry objects through that reader
+and drops to `from_ewkb` only for rows outside its uniform envelope.
+`points_to_ewkb` encodes a batch of points with numpy slice assignment —
+no per-row Python.
 """
 
 from __future__ import annotations
@@ -251,28 +252,28 @@ def points_to_ewkb_matrix(
 
 
 def decode_batch(bufs) -> list:
-    """Decode a batch of EWKB buffers to Geometry objects, vectorizing the
-    byte-level parse wherever a subset of rows is structurally uniform.
+    """Decode a batch of EWKB rows — a pyarrow Binary array, or a sequence
+    of bytes with None for nulls (``arrowwkb.as_binary_array``) — to a list
+    of Geometry/None, vectorizing the byte-level parse wherever a subset of
+    rows is structurally uniform.
 
-    Mixed batches are grouped by (length, 5-byte header); each group that
-    matches the uniform point/single-ring-polygon layout decodes via one
-    numpy reinterpret instead of per-row struct unpacking; leftovers fall
-    back to ``from_ewkb`` row-at-a-time (VERDICT r1 perf item 3: the generic
-    fallback must not collapse to per-row speeds on mixed inputs)."""
-    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    Mixed batches are grouped by (length, 5-byte header); each group of
+    two or more rows that matches the uniform point/single-ring-polygon
+    layout decodes via one numpy reinterpret instead of per-row struct
+    unpacking; leftovers fall back to ``from_ewkb`` row-at-a-time
+    (VERDICT r1 perf item 3: the generic fallback must not collapse to
+    per-row speeds on mixed inputs)."""
+    from polars_st_spark.geo.arrowwkb import as_binary_array, uniform_batch_pa
 
-    rows = list(bufs)
+    rows = as_binary_array(bufs).to_pylist()
     out: list = [None] * len(rows)
     groups: dict[tuple, list] = {}
     for i, b in enumerate(rows):
-        if b is None:
-            continue
-        bb = bytes(b)
-        rows[i] = bb
-        groups.setdefault((len(bb), bb[:5]), []).append(i)
+        if b is not None:
+            groups.setdefault((len(b), b[:5]), []).append(i)
     for (_, _), idxs in groups.items():
         sub = [rows[i] for i in idxs]
-        res = uniform_batch_pa(sub)
+        res = uniform_batch_pa(sub) if len(sub) > 1 else None
         if res is None:
             for i in idxs:
                 out[i] = from_ewkb(rows[i])

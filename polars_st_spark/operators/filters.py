@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from polars_st_spark.functions.factory import col_or_lit
+from polars_st_spark.functions.factory import col_or_lit, spark_dt
 from polars_st_spark.operators.textops import (
     STOPWORDS,
     shingles,
@@ -389,7 +389,7 @@ def _bloom_prescreen(doc_grams: DataFrame, bench_grams: DataFrame, fpp: float) -
     - bit positions are ``pmod(xxhash64(i, gram), m)`` computed JVM-side
       (whole-stage codegen) on BOTH sides — no string hashing in Python;
     - the build side folds its positions into per-partition numpy bitmaps
-      (mapInPandas) which the driver ORs into one m-bit array (driver
+      (mapInArrow) which the driver ORs into one m-bit array (driver
       memory m/8 bytes — ~12 MB per 10⁷ benchmark n-grams at 1% fpp);
     - the probe side tests k positions per n-gram with one broadcast
       numpy gather per Arrow batch.
@@ -403,7 +403,7 @@ def _bloom_prescreen(doc_grams: DataFrame, bench_grams: DataFrame, fpp: float) -
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     n_items = max(1024, bench_grams.count())
     m = int(math.ceil(-n_items * math.log(fpp) / (math.log(2.0) ** 2)))
@@ -418,36 +418,34 @@ def _bloom_prescreen(doc_grams: DataFrame, bench_grams: DataFrame, fpp: float) -
     def build(batches):
         bits = np.zeros(nbytes, dtype=np.uint8)
         any_rows = False
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
             any_rows = True
-            pos = np.concatenate(pdf["_pos"].to_list()).astype(np.int64)
+            pos = rb.column(0).flatten().to_numpy().astype(np.int64)
             np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
         if any_rows:
-            yield pd.DataFrame({"bm": [bits.tobytes()]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([bits.tobytes()], type=pa.binary())], names=["bm"])
 
     partials = (
         bench_grams.select(positions(F.col("_g")).alias("_pos"))
-        .mapInPandas(build, "bm binary")
+        .mapInArrow(build, "bm binary")
     )
     bitmap = np.zeros(nbytes, dtype=np.uint8)
     for row in partials.toLocalIterator():
         bitmap |= np.frombuffer(row["bm"], dtype=np.uint8)
     bc = doc_grams.sparkSession.sparkContext.broadcast(bitmap)
 
-    # no type hints: postponed-annotation strings would resolve `pd` in the
-    # module globals, where pandas is only imported locally
-    from polars_st_spark.functions.factory import arrow_series_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @arrow_series_udf("boolean")
-    def might(pos_s):
+    @arrow_udf(spark_dt("boolean"))
+    def might(pos_a):
         bm = bc.value
-        if not len(pos_s):
-            return pd.Series([], dtype=bool)
-        pos = np.stack(pos_s.to_numpy()).astype(np.int64)  # (rows, k)
+        # k positions per row, read straight off the list's value buffer
+        pos = pos_a.flatten().to_numpy().astype(np.int64).reshape(len(pos_a), k)
         hit = (bm[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
+        return pa.array(hit.all(axis=1), type=pa.bool_())
 
     return (
         doc_grams.withColumn("_pos", positions(F.col("_g")))

@@ -131,8 +131,8 @@ def st_sjoin_nearest(
         if strategy not in ("auto", "strtree", "cross"):
             raise ValueError(f"strategy must be auto/strtree/cross, got {strategy!r}")
         # the guard and the strtree payload are ONE fetch
-        rpdf = bounded_fetch(rstaged, broadcast_limit).toPandas()
-        if len(rpdf) > broadcast_limit:
+        rtab = bounded_fetch(rstaged, broadcast_limit).toArrow()
+        if rtab.num_rows > broadcast_limit:
             raise ValueError(
                 f"right side has more than broadcast_limit={broadcast_limit} "
                 "rows; pass max_distance= for the scalable grid strategy (or "
@@ -140,7 +140,7 @@ def st_sjoin_nearest(
             )
         if strategy in ("auto", "strtree"):
             ranked = _nearest_strtree(
-                lstaged, rstaged, rpdf, k, left_on, r_geom, distance_col, lid)
+                lstaged, rstaged, rtab, k, left_on, r_geom, distance_col, lid)
             out = _finish_how(ranked, lstaged, lid, how)
             out._chosen_strategy = "strtree"
             return out
@@ -256,10 +256,30 @@ def _finish_how(ranked: DataFrame, lstaged: DataFrame, lid: str, how: str) -> Da
     )
 
 
+def _tie_digest(rtab, tz: str) -> np.ndarray:
+    """uint64 content digest per right row: ``pd.util.hash_pandas_object``
+    of the rows as ``DataFrame.toPandas()`` gives them, so equal-distance
+    winners do not depend on how the side was fetched. ``toArrow()``
+    timestamps are tz-aware UTC microseconds where ``toPandas()`` gives
+    naive nanoseconds in the session time zone; they are converted before
+    hashing. Array columns are not hashable here (nor by ``toPandas()``'s
+    frame): the digest raises TypeError for them."""
+    import pandas as pd
+
+    pdf = rtab.to_pandas()
+    for c in pdf.columns:
+        col = pdf[c]
+        if isinstance(col.dtype, pd.DatetimeTZDtype):
+            col = col.dt.tz_convert(tz).dt.tz_localize(None)
+        if pd.api.types.is_datetime64_dtype(col.dtype):
+            pdf[c] = col.astype("datetime64[ns]")
+    return pd.util.hash_pandas_object(pdf, index=False).to_numpy()
+
+
 def _nearest_strtree(
     lstaged: DataFrame,
     rstaged: DataFrame,
-    rpdf,
+    rtab,
     k: int,
     left_on: str,
     r_geom: str,
@@ -268,39 +288,42 @@ def _nearest_strtree(
 ) -> DataFrame:
     """Broadcast expanding-ring STRtree k-NN (the r5 no-cap default).
 
-    The right table arrives collected as ``rpdf`` (``broadcast_limit``-
-    guarded by the caller) and is broadcast with its bboxes; each worker
-    bulk-loads one STR-packed R-tree and answers every left row with an
-    expanding box query: start at a density-derived radius, double until
-    >= k candidates AND the k-th candidate distance fits inside the ring
-    (an item whose bbox misses a box expanded by r is > r away —
-    Chebyshev bound), then rank exact distances. Ties break on a stable
-    content digest of the right row (rerun- and partitioning-independent).
+    The right table arrives collected as the Arrow table ``rtab``
+    (``broadcast_limit``-guarded by the caller) and is broadcast with its
+    bboxes; each worker bulk-loads one STR-packed R-tree and answers every
+    left row with an expanding box query: start at a density-derived
+    radius, double until >= k candidates AND the k-th candidate distance
+    fits inside the ring (an item whose bbox misses a box expanded by r is
+    > r away — Chebyshev bound), then rank exact distances. Ties break on
+    a stable content digest of the right row (:func:`_tie_digest` —
+    rerun- and partitioning-independent). Output rows are ``take``s of the
+    left batch and the right table, so every column keeps its Arrow type.
     Null/empty left rows emit nothing — how='left' routes them to the
     unmatched set."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = lstaged.sparkSession
-    n_right = len(rpdf)
-    rbounds = _driver_bounds(rpdf[r_geom].to_numpy())
-    digest = pd.util.hash_pandas_object(rpdf, index=False).to_numpy() \
-        if n_right else np.empty(0, dtype=np.uint64)
-    bc = spark.sparkContext.broadcast((rpdf, rbounds, digest))
+    rbatch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in rtab.columns], names=rtab.column_names)
+    rbounds = _driver_bounds(rbatch.column(r_geom))
+    digest = (_tie_digest(rtab, spark.conf.get("spark.sql.session.timeZone"))
+              if rbatch.num_rows else np.empty(0, dtype=np.uint64))
+    bc = spark.sparkContext.broadcast((rbatch, rbounds, digest))
     out_schema = StructType(
         list(lstaged.schema.fields)
         + list(rstaged.schema.fields)
         + [StructField(distance_col, DoubleType())]
     )
-    lcols = list(lstaged.columns)
-    rcols = list(rstaged.columns)
+    names = list(lstaged.columns) + list(rstaged.columns) + [distance_col]
 
     def fn(batches):
         from polars_st_spark.geo import algos
         from polars_st_spark.geo.index import STRtree
         from polars_st_spark.geo.wkb import from_ewkb
 
-        rpdf_, rb, dg = bc.value
+        rbatch_, rb, dg = bc.value
+        rgeo = rbatch_.column(r_geom)
         tree = STRtree(rb)
         with np.errstate(invalid="ignore"):
             valid = ~np.isnan(rb[:, 0])
@@ -315,22 +338,22 @@ def _nearest_strtree(
         def rget(j):
             g = rcache.get(j)
             if g is None:
-                g = from_ewkb(bytes(rpdf_[r_geom].iloc[j]))
+                g = from_ewkb(rgeo[int(j)].as_py())
                 rcache[j] = g
             return g
 
-        for pdf in batches:
-            if not nv or not len(pdf):
-                yield pd.DataFrame(columns=lcols + rcols + [distance_col])
+        for batch in batches:
+            if not nv or not batch.num_rows:
                 continue
-            lb = _driver_bounds(pdf[left_on].to_numpy())
+            lgeo = batch.column(left_on)
+            lb = _driver_bounds(lgeo)
             li_out: list = []
             ri_out: list = []
             d_out: list = []
-            for i in range(len(pdf)):
+            for i in range(batch.num_rows):
                 if np.isnan(lb[i, 0]):
                     continue
-                gl = from_ewkb(bytes(pdf[left_on].iloc[i]))
+                gl = from_ewkb(lgeo[i].as_py())
                 r = r0
                 kk = min(k, nv)
                 while True:
@@ -357,16 +380,14 @@ def _nearest_strtree(
                     if r > 4 * span and len(cand) == nv:
                         break
             if not li_out:
-                yield pd.DataFrame(columns=lcols + rcols + [distance_col])
                 continue
-            out = pdf.iloc[li_out][lcols].reset_index(drop=True)
-            rsel = rpdf_.iloc[ri_out][rcols].reset_index(drop=True)
-            for c in rcols:
-                out[c] = rsel[c]
-            out[distance_col] = np.asarray(d_out, dtype=np.float64)
-            yield out
+            lpart = batch.take(pa.array(li_out, type=pa.int64()))
+            rpart = rbatch_.take(pa.array(ri_out, type=pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                lpart.columns + rpart.columns
+                + [pa.array(d_out, type=pa.float64())], names=names)
 
-    return lstaged.mapInPandas(fn, schema=out_schema)
+    return lstaged.mapInArrow(fn, schema=out_schema)
 
 
 def _driver_bounds(bufs) -> np.ndarray:
@@ -381,10 +402,10 @@ def _driver_bounds(bufs) -> np.ndarray:
         if p is not None:
             return ragged.bounds(p)
     out = np.full((len(bufs), 4), np.nan)
-    for i, b in enumerate(bufs):
+    for i, b in enumerate(ragged.as_binary_array(bufs).to_pylist()):
         if b is None:
             continue
-        g = from_ewkb(bytes(b))
+        g = from_ewkb(b)
         bb = g.bounds()
         if bb[0] == bb[0]:
             out[i] = bb

@@ -225,7 +225,8 @@ def _sjoin_broadcast(left, right, predicate, how, lsuffix, rsuffix, left_on,
         from polars_st_spark.geo.arrowwkb import uniform_batch_pa
 
         rb = bc.value
-        right_wkbs = rb.column(rgeo_at).to_pylist()
+        rgeo = rb.column(rgeo_at)
+        right_wkbs = rgeo.to_pylist()
         rgeoms = [None if b is None else from_ewkb(b) for b in right_wkbs]
         rbounds = np.array(
             [g.bounds() if g is not None else (np.nan,) * 4 for g in rgeoms]
@@ -293,14 +294,9 @@ def _sjoin_broadcast(left, right, predicate, how, lsuffix, rsuffix, left_on,
                 # predicate stack (family kernel -> relate contact
                 # buckets -> scalar) — r4h: was intersects-only, every
                 # other predicate paid the per-candidate scalar loop
-                import pandas as pd
-
-                hit = np.asarray(list(eval_pairs_predicate(
-                    predicate,
-                    pd.Series(lgeo.take(pa.array(li)).to_pylist()),
-                    pd.Series([right_wkbs[j] for j in ri]),
-                    pred_fn,
-                )), dtype=bool)
+                hit = np.asarray(eval_pairs_predicate(
+                    predicate, lgeo.take(pa.array(li)),
+                    rgeo.take(pa.array(ri)), pred_fn), dtype=bool)
                 return np.asarray(li)[hit], np.asarray(ri)[hit]
             for i, b in enumerate(lgeo.to_pylist()):
                 if b is None:

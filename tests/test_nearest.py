@@ -232,3 +232,52 @@ def test_strtree_equals_cross_strategy(frames, spark):
     brute = st_sjoin_nearest(left.limit(20), rects, k=1, strategy="cross")
     want = {r["lid_val"]: r["rid_val"] for r in brute.collect()}
     assert got == want
+
+
+def test_strtree_keeps_int64_right_column_with_null(spark):
+    """The strtree strategy carries the right side as Arrow: a bigint
+    column holding a null next to 2^60 + 1 comes back exact (a float64
+    pandas frame rounded it to 2^60)."""
+    right = spark.createDataFrame(
+        [(2**60 + 1, 0.0, 0.0), (None, 50.0, 50.0)], "zid bigint, x double, y double",
+    ).select("zid", st.st_point("x", "y").alias("geometry"))
+    left = spark.createDataFrame([(0, 1.0, 1.0), (1, 49.0, 49.0)], "i int, x double, y double",
+                                 ).select("i", st.st_point("x", "y").alias("geometry"))
+    for strategy in ("strtree", "cross"):
+        out = st_sjoin_nearest(left, right, k=1, strategy=strategy)
+        assert {r["i"]: r["zid"] for r in out.collect()} == {0: 2**60 + 1, 1: None}
+
+
+def test_strtree_ties_follow_topandas_digest(spark):
+    """Equal-distance winners break ties on the pandas content digest of
+    the right rows as ``toPandas()`` gives them — bigint with a null,
+    string, binary, double and timestamp columns, under a non-UTC session
+    time zone."""
+    import datetime
+
+    import pandas as pd
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        ts = datetime.datetime(2021, 3, 14, 1, 30)
+        right = spark.createDataFrame(
+            [(0, 7, "a", b"\x01", 0.5, ts, 1.0, 0.0),
+             (1, None, "b", b"\x02", None, None, -1.0, 0.0),
+             (2, 2**60 + 1, None, None, 2.5, ts, 0.0, 1.0),
+             (3, -3, "d", b"", float("nan"), ts, 0.0, -1.0)],
+            "rid int, z bigint, s string, b binary, d double, t timestamp, "
+            "x double, y double",
+        ).select("rid", "z", "s", "b", "d", "t",
+                 st.st_point("x", "y").alias("geometry")).coalesce(1)
+        left = spark.createDataFrame([(0, 0.0, 0.0)], "i int, x double, y double") \
+            .select("i", st.st_point("x", "y").alias("geometry"))
+        digest = pd.util.hash_pandas_object(right.toPandas(), index=False).to_numpy()
+        by_digest = [int(j) for j in np.argsort(digest, kind="stable")]
+        for k in (1, 2, 3):
+            out = st_sjoin_nearest(left, right, k=k, strategy="strtree")
+            assert out._chosen_strategy == "strtree"
+            got = [r["rid"] for r in out.collect()]
+            assert sorted(got) == sorted(by_digest[:k]), (k, got, by_digest)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

@@ -221,3 +221,32 @@ def test_group_cap_single_shuffle(spark):
     plan = explain_str(group_cap(df, "dom", "doc_id", 3))
     assert plan.count("Exchange") <= 2  # hashpartitioning (+AQE coalesce read)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_geometry_udfs_fuse_into_one_python_node(spark):
+    """One projection mixing batch-lane UDFs (st_simplify, st_convex_hull),
+    a factory builder (st_concave_hull), a per-row constructor
+    (st_from_wkt) and a predicate against a constant plans exactly ONE
+    ArrowEvalPython node: every geometry UDF is an ``arrow_udf`` (eval
+    type 250), and Spark fuses adjacent Python UDFs only when their eval
+    types match — one UDF at another eval type would add a second worker
+    round-trip over the whole stream."""
+    from polars_st_spark.geo.wkb import to_ewkb
+    from polars_st_spark.geo.wkt import from_wkt
+
+    wkts = [f"POLYGON (({i} 0, {i + 2} 0, {i + 1} 1, {i + 2} 2, {i} 2, {i} 0))"
+            for i in range(6)]
+    df = spark.createDataFrame(
+        [(w, to_ewkb(from_wkt(w))) for w in wkts], "wkt string, g binary")
+    out = df.select(
+        st.st_simplify("g", 0.1).alias("s"),
+        st.st_convex_hull("g").alias("h"),
+        st.st_concave_hull("g").alias("c"),
+        st.st_from_wkt("wkt").alias("w"),
+        st.st_intersects("g", "POLYGON ((0 0, 3 0, 3 3, 0 3, 0 0))").alias("p"),
+    )
+    plan = explain_str(out)
+    assert _count(plan, "ArrowEvalPython") == 1, plan
+    rows = out.collect()
+    assert [r["p"] for r in rows] == [True, True, True, True, False, False]
+    assert all(r["w"] is not None and r["h"] is not None for r in rows)

@@ -424,7 +424,7 @@ class TestFactoryArrowParity:
     def test_boundary_parity_vs_pandas_udf(self, spark):
         from pyspark.sql.functions import arrow_udf, pandas_udf
 
-        from polars_st_spark.functions.factory import _pa_out
+        from polars_st_spark.functions.factory import pa_out
 
         df = spark.createDataFrame([(i,) for i in range(5)], "i int").coalesce(1)
         for t, vals in self.CASES.items():
@@ -437,12 +437,75 @@ class TestFactoryArrowParity:
             def make_au(t=t, vals=vals):
                 @arrow_udf(t)
                 def au(a):
-                    return _pa_out([vals[int(v)] for v in a.to_pandas()], t)
+                    return pa_out([vals[int(v)] for v in a.to_pylist()], t)
                 return au
 
             r_pd = [r[0] for r in df.select(make_pu()("i")).collect()]
             r_pa = [r[0] for r in df.select(make_au()("i")).collect()]
             assert repr(r_pd) == repr(r_pa), (t, r_pd, r_pa)
+
+    def test_param_null_and_nan_give_null(self, spark):
+        """A per-row double parameter holding null or NaN gives a null
+        row (``unary_scalar_param``), as a null geometry does."""
+        from polars_st_spark.functions.factory import unary_scalar_param
+
+        g = _pt(1.0, 2.0)
+        df = spark.createDataFrame(
+            [(0, g, 1.5), (1, g, None), (2, g, float("nan")), (3, None, 2.0)],
+            "i int, g binary, d double").coalesce(1)
+        twice = unary_scalar_param(lambda _g, d: 2.0 * d, "double", "d")
+        got = [r[0] for r in df.orderBy("i").select(twice("g")).collect()]
+        assert got == [3.0, None, None, None]
+
+    def test_double_lanes_emit_nan_as_null(self, spark):
+        """NaN from a batch lane or the per-row kernel is null: x of POINT
+        EMPTY in a uniform point batch, distance from an empty point, z of
+        a 2-D point."""
+        import polars_st_spark as st
+
+        empty = to_ewkb(Geometry(GeometryType.Point, coords=None))
+        df = spark.createDataFrame(
+            [(0, _pt(3.0, 4.0)), (1, empty)], "i int, g binary").coalesce(1)
+        rows = df.orderBy("i").select(
+            st.st_x("g"), st.st_distance("g", "POINT (0 0)"), st.st_z("g"),
+        ).collect()
+        assert [tuple(r) for r in rows] == [(3.0, 5.0, None), (None, None, None)]
+
+    def test_null_geometry_rows_per_module(self, spark):
+        """A null row stays null through one converted UDF of each module
+        (transform, construct, scalar, predicate, crs), next to live rows
+        that keep their per-row kernel values."""
+        import polars_st_spark as st
+        from polars_st_spark.geo import algos
+        from polars_st_spark.geo.wkt import from_wkt
+
+        a = _rect(0.0, 0.0, 2.0, 2.0)
+        b = _rect(1.0, 1.0, 3.0, 3.0)
+        df = spark.createDataFrame(
+            [(0, a, b, "POINT (1 2)", 4326, 0.5),
+             (1, None, b, None, None, None),
+             (2, a, None, "LINESTRING (0 0, 1 1)", 3857, float("nan"))],
+            "i int, a binary, b binary, wkt string, code int, d double",
+        ).coalesce(1)
+        rows = df.orderBy("i").select(
+            st.st_convex_hull("a"),
+            st.st_buffer("a", "d", quad_segs=2),
+            st.st_from_wkt("wkt"),
+            st.st_count_coordinates("a"),
+            st.st_intersects("a", "b"),
+            st.st_relate("a", "b"),
+            st.st_crs_authority(st.st_crs_from_code("code")),
+        ).collect()
+        buf = algos.buffer(from_ewkb(a), 0.5, 2, "round", "round", 5.0, False)
+        assert tuple(rows[0]) == (
+            to_ewkb(algos.convex_hull(from_ewkb(a))), to_ewkb(buf),
+            to_ewkb(from_wkt("POINT (1 2)")), 5, True,
+            P.relate(from_ewkb(a), from_ewkb(b)), "EPSG:4326")
+        assert tuple(rows[1]) == (None,) * 7
+        assert tuple(rows[2]) == (
+            to_ewkb(algos.convex_hull(from_ewkb(a))), None,
+            to_ewkb(from_wkt("LINESTRING (0 0, 1 1)")), 5, None, None,
+            "EPSG:3857")
 
     def test_pa_dt_rejects_unknown(self):
         from polars_st_spark.functions.factory import pa_dt
