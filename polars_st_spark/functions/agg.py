@@ -111,7 +111,41 @@ def union_array(a: pa.Array, grid_size: float | None = None) -> bytes:
 
 
 def _intersection_all(a: pa.Array, grid_size: float | None = None) -> bytes:
+    """EWKB intersection of one Arrow array of EWKB values. A group of
+    two or more non-null single axis rectangles whose common box has
+    positive area is one max/min reduction; every other group folds
+    pairwise (``setops.intersection_all``)."""
+    if grid_size is None:
+        rect = _common_rect(a.drop_null())
+        if rect is not None:
+            return rect
     return to_ewkb(setops.intersection_all(_decode(a), grid_size))
+
+
+def _common_rect(a: pa.Array) -> bytes | None:
+    """The rectangle lane of :func:`_intersection_all`, or None. The fold
+    intersects rectangles through ``geometry_to_region``, which rounds
+    each coordinate to 12 decimals; ``round`` is monotone, so the max/min
+    of the raw coordinates rounded once equals the fold's max/min of
+    rounded ones. The box is encoded through the same
+    ``region_to_geometry`` with the first row's SRID, as the fold's last
+    step does."""
+    from polars_st_spark.geo.arrowwkb import uniform_batch_pa
+    from polars_st_spark.geo.rectregion import RectRegion, region_to_geometry
+    from polars_st_spark.geo.wkb import header_info
+
+    if len(a) < 2:
+        return None
+    fast = uniform_batch_pa(a)
+    if fast is None or fast[0] != "ring" or not fast[2]:
+        return None
+    x, y = fast[1][:, :, 0], fast[1][:, :, 1]
+    x0, y0 = round(float(x.min(axis=1).max()), 12), round(float(y.min(axis=1).max()), 12)
+    x1, y1 = round(float(x.max(axis=1).min()), 12), round(float(y.max(axis=1).min()), 12)
+    if not (x0 < x1 and y0 < y1):
+        return None
+    srid = header_info(a[0].as_py())[3]
+    return to_ewkb(region_to_geometry(RectRegion([(x0, y0, x1, y1)]), srid))
 
 
 def _difference_all(a: pa.Array, grid_size: float | None = None) -> bytes:

@@ -37,6 +37,7 @@ __all__ = [
     "spark_dt",
     "geom_arg",
     "active_udf",
+    "evaluate_once",
     "pa_binary_rows",
     "pa_out",
     "per_row",
@@ -126,6 +127,20 @@ def active_udf(udf):
         u._judf_placeholder = None
         u._pst_context = sc
     return udf
+
+
+def evaluate_once(udf):
+    """A non-deterministic ``arrow_udf`` copy of the module-level kernel
+    ``udf`` (same body, same return type), for one query-local
+    application. Catalyst may clone a deterministic Python UDF: its filter
+    pushdown copies the expression below a projection (an inferred
+    ``isnotnull(udf(...))``, a filter on the UDF's column), and every copy
+    becomes one more ArrowEvalPython pass over the stream. It neither
+    clones nor moves a non-deterministic expression, so the copy is
+    evaluated exactly once, where it is staged, and later filters and
+    sorts read the materialized column. Values are unchanged: the kernel
+    is pure, only the plan moves."""
+    return arrow_udf(udf.func, udf.returnType).asNondeterministic()
 
 
 def pa_binary_rows(flat: "np.ndarray", mask=None):

@@ -322,8 +322,8 @@ def st_length(col) -> Column:
 def st_distance(col, other) -> Column:
     """NaN→NULL if either empty (reference: functions.rs:819-829).
     Vectorized for uniform point batches, ragged polygon batches vs a
-    constant point (CSR segment sweep), and point batches vs a constant
-    areal geometry."""
+    constant point (CSR segment sweep), point batches vs a constant
+    areal geometry, and column × column pairs (:func:`distance_pairs`)."""
     other_g = geom_arg(other)
     if isinstance(other_g, Geometry) and other_g.type_id == GeometryType.Point and other_g.coords is not None:
         qx, qy = float(other_g.coords[0]), float(other_g.coords[1])
@@ -331,8 +331,9 @@ def st_distance(col, other) -> Column:
         @arrow_udf(DoubleType())
         def udf_fast(a):
             fast = uniform_batch_pa(a)
-            if fast is not None and fast[0] == "point2d":
-                return _double_out(np.sqrt((fast[1] - qx) ** 2 + (fast[2] - qy) ** 2))
+            xy = _point_xy(fast) if fast is not None and fast[0] == "point2d" else None
+            if xy is not None:
+                return _double_out(algos.math_hypot(xy[0] - qx, xy[1] - qy))
             rp = ragged.parse_polygonal(a)
             if rp is not None:
                 n = len(a)
@@ -373,45 +374,107 @@ def st_distance(col, other) -> Column:
 
 
 # column × column distance (r4b; module-level since r8 so the SQL surface
-# can register the identical vectorized UDF): row-paired point×point,
-# point×ragged-polygon (either direction, inside→0), point×ragged-line,
-# and geometry×geometry via the pairs_distance candidate sweep.
+# can register the identical vectorized UDF).
 @arrow_udf(DoubleType())
 def _distance_pair_udf(a1, a2):
-    if len(a1) and not a1.null_count and not a2.null_count:
-        fa = uniform_batch_pa(a1)
-        fb = uniform_batch_pa(a2)
-        a_pt = fa is not None and fa[0] == "point2d"
-        b_pt = fb is not None and fb[0] == "point2d"
+    return _double_out(distance_pairs(a1, a2))
+
+
+_DIST_FAMILIES = ("point", "mpoint", "line", "poly")
+
+
+def distance_pairs(a1, a2) -> np.ndarray:
+    """Row-paired ``algos.distance`` of two EWKB arrays as float64, NaN
+    where either side is null or empty — the kernel of ``st_distance``'s
+    column × column UDF and of the k-nearest join's candidate scoring.
+
+    Whole batches go through :func:`_distance_lanes`; a batch the lanes
+    decline is split by (left family, right family) with
+    ``ragged.split_families`` and each family pair tries the lanes on its
+    own rows. Only the rows no lane takes (and every row of a batch the
+    family scan declines: Z/M, curves, collections) pay the per-row
+    ``algos.distance``."""
+    n = len(a1)
+    if not n:
+        return np.empty(0)
+    whole_tried = not a1.null_count and not a2.null_count
+    if whole_tried:
+        d = _distance_lanes(a1, a2)
+        if d is not None:
+            return d
+    out = np.full(n, np.nan)
+    rest = np.arange(n, dtype=np.int64)
+    f1, f2 = ragged.split_families(a1), ragged.split_families(a2)
+    if f1 is not None and f2 is not None:
+        code = np.full((2, n), -1, dtype=np.int64)
+        for c, key in enumerate(_DIST_FAMILIES):
+            code[0, f1[key]] = c
+            code[1, f2[key]] = c
+        live = (code >= 0).all(axis=0)  # null rows stay NaN
+        combo = code[0] * len(_DIST_FAMILIES) + code[1]
+        left = []
+        for cb in np.unique(combo[live]):
+            idx = np.flatnonzero(live & (combo == cb))
+            d = None
+            if not (whole_tried and len(idx) == n):
+                d = _distance_lanes(a1.take(idx), a2.take(idx))
+            if d is None:
+                left.append(idx)
+            else:
+                out[idx] = d
+        rest = np.concatenate(left) if left else rest[:0]
+    if len(rest):
+        vals = per_row(algos.distance, a1, a2, rows=rest)
+        out[rest] = [np.nan if vals[i] is None else vals[i] for i in rest]
+    return out
+
+
+def _point_xy(fast):
+    """(x, y) of a ``uniform_batch_pa`` 2-D point batch, or None when it
+    holds a NaN coordinate (empty points go to the per-row path)."""
+    x, y = fast[1], fast[2]
+    if np.isnan(x).any() or np.isnan(y).any():
+        return None
+    return x, y
+
+
+def _distance_lanes(a1, a2) -> np.ndarray | None:
+    """Batch lanes of :func:`distance_pairs` for two null-free row-paired
+    EWKB arrays, or None when no lane takes them: point×point
+    (``math.hypot``, as ``algos.distance`` scores two points),
+    point×ragged-polygon (either direction, inside→0), point×ragged-line,
+    and polygon/line × polygon/line via the ``pairs_distance`` candidate
+    sweep (r4e). Each is byte-identical to ``algos.distance``."""
+    fa = uniform_batch_pa(a1)
+    fb = uniform_batch_pa(a2)
+    a_pt = fa is not None and fa[0] == "point2d"
+    b_pt = fb is not None and fb[0] == "point2d"
+    if a_pt or b_pt:
+        xya = _point_xy(fa) if a_pt else None
+        xyb = _point_xy(fb) if b_pt else None
+        if (a_pt and xya is None) or (b_pt and xyb is None):
+            return None
         if a_pt and b_pt:
-            return _double_out(np.hypot(fa[1] - fb[1], fa[2] - fb[2]))
-        for pt, other in ((fa, a2), (fb, a1)) if (a_pt or b_pt) else ():
-            if pt is None or pt[0] != "point2d":
-                continue
-            rp = ragged.parse_polygonal(other)
-            if rp is not None:
-                return _double_out(ragged.distance_to_points(rp, pt[1], pt[2]))
-            rl = ragged.parse_lineal(other)
-            if rl is not None:
-                return _double_out(
-                    ragged.distance_lines_to_points(rl, pt[1], pt[2]))
-            break
-        if not (a_pt or b_pt):
-            # geometry×geometry pairs (r4e): intersects -> 0, else the
-            # scalar candidate set vectorized (pairs_distance)
-            ra = ragged.parse_polygonal(a1)
-            if ra is None:
-                ra = ragged.parse_lineal(a1)
-            rb = None
-            if ra is not None:
-                rb = ragged.parse_polygonal(a2)
-                if rb is None:
-                    rb = ragged.parse_lineal(a2)
-            if ra is not None and rb is not None:
-                d = ragged.pairs_distance(ra, rb)
-                if d is not None:
-                    return _double_out(d)
-    return pa_out(per_row(algos.distance, a1, a2), "double")
+            return algos.math_hypot(xya[0] - xyb[0], xya[1] - xyb[1])
+        (x, y), other = (xya, a2) if a_pt else (xyb, a1)
+        rp = ragged.parse_polygonal(other)
+        if rp is not None:
+            return ragged.distance_to_points(rp, x, y)
+        rl = ragged.parse_lineal(other)
+        if rl is not None:
+            return ragged.distance_lines_to_points(rl, x, y)
+        return None
+    ra = ragged.parse_polygonal(a1)
+    if ra is None:
+        ra = ragged.parse_lineal(a1)
+    rb = None
+    if ra is not None:
+        rb = ragged.parse_polygonal(a2)
+        if rb is None:
+            rb = ragged.parse_lineal(a2)
+    if ra is not None and rb is not None:
+        return ragged.pairs_distance(ra, rb)
+    return None
 
 
 def st_hausdorff_distance(col, other, densify: float | None = None) -> Column:

@@ -104,6 +104,17 @@ def _closed(r: np.ndarray) -> np.ndarray:
     return r
 
 
+def math_hypot(dx: np.ndarray, dy: np.ndarray) -> np.ndarray:
+    """Elementwise ``math.hypot`` — NOT ``np.hypot``. CPython's 2-argument
+    hypot (3.8+) uses a compensated, correctly-rounded algorithm that can
+    differ from libm's in the last ulp, and the scalar kernels
+    (``distance``'s point pairs, ``_seg_dirs``, ``union_many``'s perimeter)
+    go through ``math.hypot``; byte parity requires the exact same values."""
+    return np.fromiter(
+        map(math.hypot, np.asarray(dx).tolist(), np.asarray(dy).tolist()),
+        dtype=np.float64, count=len(dx))
+
+
 def _seg_dist_point(px, py, ax, ay, bx, by):
     """Vectorized point-to-segment distances."""
     dx, dy = bx - ax, by - ay

@@ -44,22 +44,12 @@ import math
 
 import numpy as np
 
+from polars_st_spark.geo.algos import math_hypot
 from polars_st_spark.geo.overlay import _grid_join, _stitch_edges
 from polars_st_spark.geo.predicates import _EPS
 from polars_st_spark.geo.types import Geometry, GeometryType
 
 __all__ = ["buffer_lines_batch"]
-
-
-def _math_hypot(dx: np.ndarray, dy: np.ndarray) -> np.ndarray:
-    """Elementwise ``math.hypot`` — NOT ``np.hypot``. CPython's 2-argument
-    hypot (3.8+) uses a compensated, correctly-rounded algorithm that can
-    differ from libm's in the last ulp, and the scalar kernels
-    (``_seg_dirs``, ``union_many``'s perimeter) go through ``math.hypot``;
-    byte parity requires the exact same values."""
-    return np.fromiter(
-        map(math.hypot, dx.tolist(), dy.tolist()),
-        dtype=np.float64, count=len(dx))
 
 
 def _grid_join_rows(abb, arow, obb, orow, margin):
@@ -434,7 +424,7 @@ def buffer_lines_batch(vals, dv, quad_segs: int, cap_style: str):
     Pst = coords[pidx]
     Qst = coords[pidx + 1]
     dxy = Qst - Pst
-    ln = _math_hypot(dxy[:, 0], dxy[:, 1])  # scalar _seg_dirs: math.hypot
+    ln = math_hypot(dxy[:, 0], dxy[:, 1])  # scalar _seg_dirs: math.hypot
     kept = ln >= 1e-12
     nk_of = np.zeros(n, dtype=np.int64)
     np.add.at(nk_of, srow_raw[kept], 1)
@@ -627,7 +617,7 @@ def buffer_lines_batch(vals, dv, quad_segs: int, cap_style: str):
     scale_env = np.ones(R, dtype=np.float64)
     for cidx in range(4):
         np.maximum.at(scale_env, seg_rowc, np.abs(A[:, cidx]))
-    hyps = _math_hypot(A[:, 2] - A[:, 0], A[:, 3] - A[:, 1])
+    hyps = math_hypot(A[:, 2] - A[:, 0], A[:, 3] - A[:, 1])
     # segments are row-grouped (pieces are row-sorted): sequential per-row
     # sums — same accumulation order as the scalar '+=' loop
     perim = np.add.reduceat(hyps, row_seg_start)

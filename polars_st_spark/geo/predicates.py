@@ -31,6 +31,7 @@ __all__ = [
     "covers",
     "covered_by",
     "touches",
+    "interiors_intersect",
     "crosses",
     "overlaps",
     "equals",
@@ -147,13 +148,16 @@ def _point_in_ring(p: np.ndarray, ring: np.ndarray) -> int:
     n = len(ring)
     if n < 3:
         return 0
-    x, y = p[0], p[1]
+    # Python floats: the same IEEE arithmetic as numpy scalars, faster
+    pts = ring.tolist() if isinstance(ring, np.ndarray) else ring
+    x, y = float(p[0]), float(p[1])
+    p = (x, y)
     inside = False
     j = n - 1
     for i in range(n):
-        xi, yi = ring[i, 0], ring[i, 1]
-        xj, yj = ring[j, 0], ring[j, 1]
-        if _on_segment(p, ring[i, :2], ring[j, :2]):
+        xi, yi = pts[i][0], pts[i][1]
+        xj, yj = pts[j][0], pts[j][1]
+        if _on_segment(p, pts[i], pts[j]):
             return 1
         if (yi > y) != (yj > y):
             x_int = (xj - xi) * (y - yi) / (yj - yi) + xi
@@ -380,31 +384,26 @@ def relate(ga: Geometry, gb: Geometry) -> str:
     # big polygonal/lineal inputs the 1-row batch kernel computes the
     # same matrices (decided buckets are exact scalar parity, proven by
     # the r4 cross-check suite); undecided rows fall through to scalar
-    if not da.points and not db.points:
-        ca_ = (sum(len(c) for c in da.lines)
-               + sum(len(r) for rings in da.polys for r in rings))
-        cb_ = (sum(len(c) for c in db.lines)
-               + sum(len(r) for rings in db.polys for r in rings))
-        if ca_ * cb_ > 65536:
-            from polars_st_spark.geo import ragged as RG
-            from polars_st_spark.geo.wkb import to_ewkb as _te
+    if _relate_delegates(da, db):
+        from polars_st_spark.geo import ragged as RG
+        from polars_st_spark.geo.wkb import to_ewkb as _te
 
-            try:
-                ea, eb = [_te(ga)], [_te(gb)]
-                pa = RG.parse_polygonal(ea)
-                if pa is None:
-                    pa = RG.parse_lineal(ea)
-                pb = RG.parse_polygonal(eb) if pa is not None else None
-                if pb is None and pa is not None:
-                    pb = RG.parse_lineal(eb)
-                if pa is not None and pb is not None:
-                    res = RG.pairs_relate(pa, pb)
-                    if res is not None:
-                        mats, dec = res
-                        if dec[0] and mats[0] is not None:
-                            return str(mats[0])
-            except Exception:
-                pass  # any kernel refusal -> scalar path below
+        try:
+            ea, eb = [_te(ga)], [_te(gb)]
+            pa = RG.parse_polygonal(ea)
+            if pa is None:
+                pa = RG.parse_lineal(ea)
+            pb = RG.parse_polygonal(eb) if pa is not None else None
+            if pb is None and pa is not None:
+                pb = RG.parse_lineal(eb)
+            if pa is not None and pb is not None:
+                res = RG.pairs_relate(pa, pb)
+                if res is not None:
+                    mats, dec = res
+                    if dec[0] and mats[0] is not None:
+                        return str(mats[0])
+        except Exception:
+            pass  # any kernel refusal -> scalar path below
 
     ba = _line_boundary_points(da.lines)
     bb = _line_boundary_points(db.lines)
@@ -436,6 +435,19 @@ def relate(ga: Geometry, gb: Geometry) -> str:
     # residual exterior terms: does any part of A lie outside B, and vice versa
     _exterior_terms(da, db, ba, bb, im)
     return im.pattern()
+
+
+def _relate_delegates(da: _Decomp, db: _Decomp) -> bool:
+    """relate's size gate: two point-free operands whose coordinate-count
+    product exceeds 65536 try the CSR pair kernel before the scalar
+    sweep."""
+    if da.points or db.points:
+        return False
+    ca = (sum(len(c) for c in da.lines)
+          + sum(len(r) for rings in da.polys for r in rings))
+    cb = (sum(len(c) for c in db.lines)
+          + sum(len(r) for rings in db.polys for r in rings))
+    return ca * cb > 65536
 
 
 def _boundary_dim(d: _Decomp) -> int:
@@ -557,17 +569,11 @@ def _relate_line_poly(dl: _Decomp, dp: _Decomp, bl, im: _IM, swap: bool) -> None
                 up(_I, tgt, 1)
 
 
-def _split_midpoints_segs(a2: np.ndarray, b2: np.ndarray, seg_pairs,
-                          avoid_pts=()) -> list:
-    """Midpoints of segment ab split at every crossing with the given
-    segments (same param extraction as _relate_line_poly); degenerate
-    sub-pieces (< 1e-12 of the segment) are skipped. ``avoid_pts``:
-    bisect a piece whose midpoint lands within _EPS of one of these
-    points (a line's OWN boundary points — on self-overlapping
-    multilines a chain midpoint can coincide with another chain's
-    endpoint, and a boundary-point sample is NOT an interior sample:
-    the exterior-terms probe lost EI/IE=1 there, bug found by the r4g
-    lineal relate kernel cross-check)."""
+def _split_params(a2, b2, seg_pairs) -> list[float]:
+    """Sorted distinct parameters along segment ab at which it is split by
+    the given segments (proper-crossing points, touch and overlap
+    endpoints; same param extraction as _relate_line_poly), 0 and 1
+    included."""
     ts = {0.0, 1.0}
     for c, e in seg_pairs:
         c2, e2 = c[:2], e[:2]
@@ -586,7 +592,20 @@ def _split_midpoints_segs(a2: np.ndarray, b2: np.ndarray, seg_pairs,
             for p in (a2, b2):
                 if _on_segment(p, c2, e2):
                     ts.add(min(max(_seg_param(a2, b2, p), 0.0), 1.0))
-    tl = sorted(ts)
+    return sorted(ts)
+
+
+def _split_midpoints_segs(a2: np.ndarray, b2: np.ndarray, seg_pairs,
+                          avoid_pts=()) -> list:
+    """Midpoints of segment ab split at every crossing with the given
+    segments (:func:`_split_params`); degenerate sub-pieces (< 1e-12 of
+    the segment) are skipped. ``avoid_pts``: bisect a piece whose
+    midpoint lands within _EPS of one of these points (a line's OWN
+    boundary points — on self-overlapping multilines a chain midpoint can
+    coincide with another chain's endpoint, and a boundary-point sample
+    is NOT an interior sample: the exterior-terms probe lost EI/IE=1
+    there, bug found by the r4g lineal relate kernel cross-check)."""
+    tl = _split_params(a2, b2, seg_pairs)
     out = []
     for t0, t1 in zip(tl[:-1], tl[1:]):
         if t1 - t0 < 1e-12:
@@ -953,6 +972,56 @@ def touches(a: Geometry, b: Geometry) -> bool:
         return False
     m = relate(a, b)
     return _matches("FT*******", m) or _matches("F**T*****", m) or _matches("F***T****", m)
+
+
+def _interiors_witness(a: Geometry, b: Geometry) -> bool:
+    """True on the first of relate's own interior-interior signals for two
+    polygonal operands — an exterior-ring vertex strictly inside the
+    other, a proper boundary crossing, or a boundary sub-piece midpoint
+    strictly inside the other — each computed by the same primitives as
+    in ``_relate_poly_poly`` (on Python floats: the same IEEE arithmetic
+    without numpy's per-scalar overhead). Any of them makes relate's II
+    entry 2, so ``touches`` is False. False proves nothing (and is always
+    the answer outside the scalar relate's domain: non-areal operands or
+    operands past relate's CSR size gate)."""
+    da, db = _decompose(a), _decompose(b)
+    if not da.polys or not db.polys or _relate_delegates(da, db):
+        return False
+    pa_ = [[r.tolist() for r in rings] for rings in da.polys]
+    pb_ = [[r.tolist() for r in rings] for rings in db.polys]
+    for polys, other in ((pa_, pb_), (pb_, pa_)):
+        for rings in polys:
+            for v in rings[0]:
+                if _loc_in_polys(v, other) == 2:
+                    return True
+    segs_a = [(p, q) for rings in pa_ for p, q in _poly_segments(rings)]
+    segs_b = [(c, e) for rings in pb_ for c, e in _poly_segments(rings)]
+    for p, q in segs_a:
+        for c, e in segs_b:
+            if _seg_intersect_kind(p, q, c, e) == 2:
+                return True
+    for segs, other_segs, other in ((segs_a, segs_b, pb_), (segs_b, segs_a, pa_)):
+        for p, q in segs:
+            tl = _split_params(p, q, other_segs)
+            for t0, t1 in zip(tl[:-1], tl[1:]):
+                if t1 - t0 < 1e-12:
+                    continue
+                tm = (t0 + t1) / 2.0
+                mid = (p[0] + tm * (q[0] - p[0]), p[1] + tm * (q[1] - p[1]))
+                if _loc_in_polys(mid, other) == 2:
+                    return True
+    return False
+
+
+def interiors_intersect(a: Geometry, b: Geometry) -> bool:
+    """``intersects(a, b) and not touches(a, b)`` — the overlap test that
+    picks ``union_all``'s overlay clusters — without the full DE-9IM
+    ``relate`` behind ``touches`` when :func:`_interiors_witness` finds a
+    witness (the boolean is the same by construction). Only pairs with no
+    witness, touching pairs among them, pay the exact expression."""
+    if not intersects(a, b):
+        return False
+    return _interiors_witness(a, b) or not touches(a, b)
 
 
 def crosses(a: Geometry, b: Geometry) -> bool:

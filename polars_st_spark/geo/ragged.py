@@ -1022,11 +1022,15 @@ def centroid_lines(rl: RaggedLines) -> tuple[np.ndarray, np.ndarray, np.ndarray]
 
 
 def distance_lines_to_points(rl: RaggedLines, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-    """Row-paired distance from (px[i], py[i]) to row i's (Multi)LineString —
-    min over all segment distances (vertex distances included, covering
-    degenerate single-point chains). NaN for empty rows (NaN→NULL
-    convention downstream)."""
-    from polars_st_spark.geo.algos import _seg_dist_point
+    """Row-paired distance from (px[i], py[i]) to row i's (Multi)LineString,
+    in ``algos.distance``'s own arithmetic: 0 when the scalar's
+    ``intersects`` holds (the point inside the row's bbox AND within
+    ``_on_segment`` tolerance of a segment or ``_EPS`` of a single-vertex
+    chain), else the min of the ``_seg_dist_point`` segment distances and
+    the ``math.hypot`` distances to single-vertex chains. NaN for empty
+    rows (NaN→NULL convention downstream)."""
+    from polars_st_spark.geo.algos import _seg_dist_point, math_hypot
+    from polars_st_spark.geo.predicates import _EPS
 
     out = np.full(rl.n, np.nan)
     c = rl.coords
@@ -1034,18 +1038,39 @@ def distance_lines_to_points(rl: RaggedLines, px: np.ndarray, py: np.ndarray) ->
     if not N:
         return out
     counts = np.diff(rl.chain_start)
-    cid = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
     best = np.full(rl.n, np.inf)
-    vrow = rl.chain_row[cid]
-    dv = np.hypot(c[:, 0] - px[vrow], c[:, 1] - py[vrow])
-    np.minimum.at(best, vrow, dv)
+    hit = np.zeros(rl.n, dtype=bool)
+    one = np.flatnonzero(counts == 1)
+    if len(one):
+        # a one-vertex chain decomposes to a point: hypot and the _EPS
+        # coincidence test of predicates.intersects
+        v, vrow = rl.chain_start[one], rl.chain_row[one]
+        dx, dy = px[vrow] - c[v, 0], py[vrow] - c[v, 1]
+        np.minimum.at(best, vrow, math_hypot(dx, dy))
+        hit[vrow[(np.abs(dx) <= _EPS) & (np.abs(dy) <= _EPS)]] = True
     if N > 1:
+        cid = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
         valid = cid[:-1] == cid[1:]
         srow = rl.chain_row[cid[:-1]]
-        d = _seg_dist_point(px[srow], py[srow], c[:-1, 0], c[:-1, 1], c[1:, 0], c[1:, 1])
+        PX, PY = px[srow], py[srow]
+        ax, ay, bx, by = c[:-1, 0], c[:-1, 1], c[1:, 0], c[1:, 1]
+        d = _seg_dist_point(PX, PY, ax, ay, bx, by)
         np.minimum.at(best, srow, np.where(valid, d, np.inf))
+        # predicates._on_segment, elementwise in the same operation order
+        with np.errstate(invalid="ignore"):
+            cross = (bx - ax) * (PY - ay) - (by - ay) * (PX - ax)
+            scale = np.maximum(np.maximum(np.abs(bx - ax), np.abs(by - ay)), 1.0)
+            on = (
+                valid & (np.abs(cross) <= _EPS * scale * scale)
+                & (np.minimum(ax, bx) - _EPS <= PX) & (PX <= np.maximum(ax, bx) + _EPS)
+                & (np.minimum(ay, by) - _EPS <= PY) & (PY <= np.maximum(ay, by) + _EPS)
+            )
+        hit[srow[on]] = True
+    box = bounds(rl)
+    with np.errstate(invalid="ignore"):
+        inbox = (box[:, 0] <= px) & (px <= box[:, 2]) & (box[:, 1] <= py) & (py <= box[:, 3])
     nonempty = rl.row_start[:-1] != rl.row_start[1:]
-    out[nonempty] = best[nonempty]
+    out[nonempty] = np.where(hit & inbox, 0.0, best)[nonempty]
     return out
 
 
@@ -1815,28 +1840,22 @@ def pairs_overlaps(rpa, rpb, max_pairs: int = 64_000_000, chunk: int = 1 << 20):
 
 
 def _vertex_targets(p, row_mask):
-    """(vx, vy, vrow) all vertices of masked rows; plus (px, py, prow)
-    isolated single-point units (degenerate chains/rings) which act as
-    point targets exactly like algos._min_dist_point_to_chain's len==1
-    branch."""
+    """(vx, vy, vrow): all vertices of masked rows."""
     unit_start, unit_row = _unit_arrays(p)
     counts = np.diff(unit_start)
     unit_per_coord = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
     rows_per_coord = unit_row[unit_per_coord]
     sel = np.nonzero(row_mask[rows_per_coord])[0]
-    vx, vy = p.coords[sel, 0], p.coords[sel, 1]
-    vrow = rows_per_coord[sel]
-    one = np.nonzero((counts == 1) & row_mask[unit_row])[0]
-    pts = unit_start[:-1][one]
-    return vx, vy, vrow, p.coords[pts, 0], p.coords[pts, 1], unit_row[one]
+    return p.coords[sel, 0], p.coords[sel, 1], rows_per_coord[sel]
 
 
 def _min_vertex_to_side(best, vsrc, ssrc, row_mask, max_pairs, chunk):
     """Fold min distance from every vertex of ``vsrc`` to every segment
-    (and isolated point) of ``ssrc`` into ``best`` — _seg_dist_point /
-    hypot arithmetic identical to algos.distance's candidate set. Returns
-    False when the pair product exceeds max_pairs."""
-    vx, vy, vrow, qx, qy, qrow = _vertex_targets(vsrc, row_mask)
+    of ``ssrc`` into ``best`` — _seg_dist_point arithmetic identical to
+    algos.distance's candidate set (single-coordinate units, which the
+    scalar scores by hypot, never reach here: ``pairs_distance`` declines
+    them). Returns False when the pair product exceeds max_pairs."""
+    vx, vy, vrow = _vertex_targets(vsrc, row_mask)
     ax, ay, bx, by, srow = _row_segments(ssrc, row_mask)
     n = len(best)
     nv = np.bincount(vrow, minlength=n)
@@ -1876,23 +1895,6 @@ def _min_vertex_to_side(best, vsrc, ssrc, row_mask, max_pairs, chunk):
             cxp, cyp = AX + t * dx, AY + t * dy
             d = np.sqrt((PX - cxp) ** 2 + (PY - cyp) ** 2)
             np.minimum.at(best, srow[isg], d)
-    # vertices vs isolated point targets (hypot, the scalar len==1 branch)
-    if len(qrow):
-        nq = np.bincount(qrow, minlength=n)
-        offsQ = np.concatenate([[0], np.cumsum(nq)])
-        qorder = np.argsort(qrow, kind="stable")
-        qx_s, qy_s = qx[qorder], qy[qorder]
-        sizes = nq[vrow]
-        total = int(sizes.sum())
-        if total > max_pairs:
-            return False
-        if total:
-            blk = np.cumsum(sizes) - sizes
-            shift = blk - offsQ[vrow]
-            ivx = np.repeat(np.arange(len(vx), dtype=np.int64), sizes)
-            iq = np.arange(total, dtype=np.int64) - np.repeat(shift, sizes)
-            d = np.hypot(vx[ivx] - qx_s[iq], vy[ivx] - qy_s[iq])
-            np.minimum.at(best, vrow[ivx], d)
     return True
 
 
@@ -2930,10 +2932,14 @@ def pairs_distance(
     (every vertex of one side against every segment / isolated point of
     the other, both directions, same _seg_dist_point arithmetic) — so
     results are float-equal to the scalar kernel. None when the pair
-    product exceeds ``max_pairs`` (caller falls back per-row)."""
+    product exceeds ``max_pairs`` or a row has a single-coordinate chain
+    or ring (caller falls back per-row)."""
     n = rpa.n
     if rpb.n != n:
         raise ValueError(f"row counts differ: {n} vs {rpb.n}")
+    for p in (rpa, rpb):
+        if (np.diff(_unit_arrays(p)[0]) == 1).any():
+            return None  # single-coordinate units: per-row (hypot terms)
     inter = pairs_intersect(rpa, rpb, max_pairs=max_pairs, chunk=chunk)
     if inter is None:
         return None

@@ -34,6 +34,7 @@ from polars_st_spark.geo.predicates import (
     contains,
     covers,
     equals,
+    interiors_intersect,
     intersects,
     point_in_polygon,
     touches,
@@ -1417,6 +1418,57 @@ def _nonnull(geoms) -> list[Geometry]:
     return [g for g in geoms if g is not None]
 
 
+def _areal_cluster(kept: list[Geometry], kb: np.ndarray, i: int, j: int,
+                   eps: float) -> list[int]:
+    """Sorted indices of the connected component holding ``i`` and ``j``
+    in the graph whose edges join areal parts with ``eps``-overlapping
+    boxes and ``interiors_intersect``. The component does not depend on
+    the order its edges are found in, so it grows through witness edges
+    first (``intersects`` plus ``_interiors_witness``: no ``relate``
+    call), depth first — a member's scan pauses at each new member and
+    resumes after it, so a chain of overlaps is walked with few failed
+    tests and no pair is tested twice — and only then tests each part
+    still outside it exactly against every member. A group whose overlaps
+    all have witnesses (a polygon tiled by overlapping pieces) takes no
+    ``relate`` call at all."""
+    from polars_st_spark.geo.predicates import _interiors_witness
+
+    n = len(kept)
+    areal = [g.dimensions() == 2 for g in kept]
+
+    def boxok(u: int, v: int) -> bool:
+        with np.errstate(invalid="ignore"):
+            return bool(
+                kb[v, 0] <= kb[u, 2] + eps and kb[u, 0] <= kb[v, 2] + eps
+                and kb[v, 1] <= kb[u, 3] + eps and kb[u, 1] <= kb[v, 3] + eps
+            )
+
+    comp = {i, j}
+    stack = [(i, 0), (j, 0)]  # (member, next part index to test against it)
+    while stack:
+        while stack:
+            u, start = stack.pop()
+            for v in range(start, n):
+                if (v not in comp and areal[v] and boxok(u, v)
+                        and intersects(kept[u], kept[v])
+                        and _interiors_witness(kept[u], kept[v])):
+                    comp.add(v)
+                    stack.append((u, v + 1))
+                    stack.append((v, 0))
+                    break
+        # every (member, outsider) pair has had its witness test: the
+        # exact expression decides the rest
+        for v in range(n):
+            if v in comp or not areal[v]:
+                continue
+            if any(boxok(u, v) and intersects(kept[u], kept[v])
+                   and not touches(kept[u], kept[v]) for u in sorted(comp)):
+                comp.add(v)
+                stack.append((v, 0))
+                break
+    return sorted(comp)
+
+
 def union_all(geoms, grid_size: float | None = None) -> Geometry:
     """N-ary union; empty input → GEOMETRYCOLLECTION EMPTY
     (reference: expressions.rs:985-999).
@@ -1497,37 +1549,16 @@ def union_all(geoms, grid_size: float | None = None) -> Geometry:
             if not ov[j]:
                 continue
             a, b = kept[i], kept[j]
-            if intersects(a, b) and not touches(a, b):
+            if interiors_intersect(a, b):
                 ra, rb = _axis_rect(a), _axis_rect(b)
                 if ra and rb:
                     continue  # rect pair resolved below
                 if a.dimensions() == 2 and b.dimensions() == 2:
-                    from polars_st_spark.geo.overlay import union_many
-
                     # grow the full overlapping-areal cluster and union it
                     # in ONE multi-piece pass — the old pair-merge restarted
                     # the whole fold once per overlap (r5)
-                    comp = {i, j}
-                    frontier = [i, j]
-                    while frontier:
-                        u = frontier.pop()
-                        for k2 in range(len(kept)):
-                            if k2 in comp or kept[k2].dimensions() != 2:
-                                continue
-                            with np.errstate(invalid="ignore"):
-                                boxok = (
-                                    kb[k2, 0] <= kb[u, 2] + _eps
-                                    and kb[u, 0] <= kb[k2, 2] + _eps
-                                    and kb[k2, 1] <= kb[u, 3] + _eps
-                                    and kb[u, 1] <= kb[k2, 3] + _eps
-                                )
-                            if not boxok:
-                                continue
-                            if intersects(kept[u], kept[k2]) and not touches(
-                                    kept[u], kept[k2]):
-                                comp.add(k2)
-                                frontier.append(k2)
-                    cluster = [kept[k] for k in sorted(comp)]
+                    comp = _areal_cluster(kept, kb, i, j, _eps)
+                    cluster = [kept[k] for k in comp]
                     merged_pair = _union_areal_cluster(cluster, srid)
                     rest = [g for k2, g in enumerate(kept) if k2 not in comp]
                     return union_all(rest + [merged_pair], grid_size)
@@ -1571,7 +1602,7 @@ def union_all(geoms, grid_size: float | None = None) -> Geometry:
     for ii in range(len(rect_idx)):
         for jj in range(ii + 1, len(rect_idx)):
             a, b = kept[rect_idx[ii]], kept[rect_idx[jj]]
-            if intersects(a, b) and not touches(a, b):
+            if interiors_intersect(a, b):
                 overlapping_rects.add(rect_idx[ii])
                 overlapping_rects.add(rect_idx[jj])
     if overlapping_rects:

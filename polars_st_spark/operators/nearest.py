@@ -112,20 +112,15 @@ def st_sjoin_nearest(
     r_geom = right_on + rsuffix if right_on in overlap else right_on
 
     tie = F.xxhash64(*[F.col(c) for c in rstaged.columns])
-    # r12 (guide §4.4, VERDICT r11 item 4): the distance UDF expression used
-    # to appear in the candidate filter AND the output projection/window
-    # order — Spark's filter pushdown duplicated it into TWO full
-    # ArrowEvalPython passes over the candidate stream (plan nodes (21)+(24)
-    # in plans/r12/p6_nearest_join_before.txt). A query-local
-    # non-deterministic copy of the same kernel pins ONE evaluation in a
-    # staged projection; the filter and the rank read the materialized
-    # column. Values are unchanged (the kernel is pure) — only the plan is.
-    from pyspark.sql.functions import arrow_udf
-
+    # the distance UDF appears in the candidate filter AND the rank order;
+    # a deterministic copy would be cloned by filter pushdown into a second
+    # ArrowEvalPython pass over the candidate stream. The evaluate-once
+    # copy pins ONE evaluation in a staged projection; the filter and the
+    # rank read the materialized column.
+    from polars_st_spark.functions.factory import evaluate_once
     from polars_st_spark.functions.scalar import _distance_pair_udf
 
-    _nn_dist = arrow_udf(_distance_pair_udf.func, "double").asNondeterministic()
-    dist = _nn_dist(F.col(left_on), F.col(r_geom))
+    dist = evaluate_once(_distance_pair_udf)(F.col(left_on), F.col(r_geom))
 
     if max_distance is None:
         if strategy not in ("auto", "strtree", "cross"):
@@ -262,13 +257,21 @@ def _tie_digest(rtab, tz: str) -> np.ndarray:
     winners do not depend on how the side was fetched. ``toArrow()``
     timestamps are tz-aware UTC microseconds where ``toPandas()`` gives
     naive nanoseconds in the session time zone; they are converted before
-    hashing. Array columns are not hashable here (nor by ``toPandas()``'s
-    frame): the digest raises TypeError for them."""
+    hashing. Nested cells (array, map and struct columns) are not
+    hashable as pandas gives them; each such cell is hashed as the
+    ``repr`` of its Python value (``to_pylist``), so the digest of every
+    other column type is unchanged."""
     import pandas as pd
+    import pyarrow as pa
 
     pdf = rtab.to_pandas()
-    for c in pdf.columns:
+    for c, field in zip(pdf.columns, rtab.schema):
         col = pdf[c]
+        if pa.types.is_nested(field.type):
+            pdf[c] = pd.Series(
+                [repr(v) for v in rtab.column(field.name).to_pylist()],
+                index=pdf.index, dtype=object)
+            continue
         if isinstance(col.dtype, pd.DatetimeTZDtype):
             col = col.dt.tz_convert(tz).dt.tz_localize(None)
         if pd.api.types.is_datetime64_dtype(col.dtype):
@@ -299,7 +302,9 @@ def _nearest_strtree(
     rerun- and partitioning-independent). Output rows are ``take``s of the
     left batch and the right table, so every column keeps its Arrow type.
     Null/empty left rows emit nothing — how='left' routes them to the
-    unmatched set."""
+    unmatched set. The ring rounds run per Arrow batch for all unresolved
+    left rows together, scoring each round's candidate pairs in one batch
+    distance call (:func:`_knn_rounds`)."""
     import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -318,76 +323,86 @@ def _nearest_strtree(
     names = list(lstaged.columns) + list(rstaged.columns) + [distance_col]
 
     def fn(batches):
-        from polars_st_spark.geo import algos
         from polars_st_spark.geo.index import STRtree
-        from polars_st_spark.geo.wkb import from_ewkb
 
         rbatch_, rb, dg = bc.value
         rgeo = rbatch_.column(r_geom)
         tree = STRtree(rb)
-        with np.errstate(invalid="ignore"):
-            valid = ~np.isnan(rb[:, 0])
-        nv = int(valid.sum())
-        if nv:
-            gx0, gy0 = np.nanmin(rb[:, 0]), np.nanmin(rb[:, 1])
-            gx1, gy1 = np.nanmax(rb[:, 2]), np.nanmax(rb[:, 3])
-            span = max(gx1 - gx0, gy1 - gy0, 1e-9)
-            r0 = max(span * ((min(k, nv) / nv) ** 0.5), span * 1e-6)
-        rcache: dict = {}
-
-        def rget(j):
-            g = rcache.get(j)
-            if g is None:
-                g = from_ewkb(rgeo[int(j)].as_py())
-                rcache[j] = g
-            return g
-
         for batch in batches:
-            if not nv or not batch.num_rows:
+            li, ri, d = _knn_rounds(batch.column(left_on), rgeo, tree, rb, dg, k)
+            if not len(li):
                 continue
-            lgeo = batch.column(left_on)
-            lb = _driver_bounds(lgeo)
-            li_out: list = []
-            ri_out: list = []
-            d_out: list = []
-            for i in range(batch.num_rows):
-                if np.isnan(lb[i, 0]):
-                    continue
-                gl = from_ewkb(lgeo[i].as_py())
-                r = r0
-                kk = min(k, nv)
-                while True:
-                    cand = tree.query(lb[i, 0] - r, lb[i, 1] - r,
-                                      lb[i, 2] + r, lb[i, 3] + r)
-                    if len(cand) >= kk or len(cand) == nv:
-                        ds = np.array([algos.distance(gl, rget(j)) for j in cand])
-                        ok = ~np.isnan(ds)
-                        cand2, ds2 = cand[ok], ds[ok]
-                        if len(cand2) >= kk or len(cand) == nv:
-                            if len(cand2):
-                                order = np.lexsort((dg[cand2], ds2))
-                                top = order[:kk]
-                                dk = ds2[top[-1]] if len(top) else np.inf
-                                if dk <= r or len(cand) == nv:
-                                    for t in top:
-                                        li_out.append(i)
-                                        ri_out.append(cand2[t])
-                                        d_out.append(ds2[t])
-                                    break
-                            elif len(cand) == nv:
-                                break
-                    r *= 2.0
-                    if r > 4 * span and len(cand) == nv:
-                        break
-            if not li_out:
-                continue
-            lpart = batch.take(pa.array(li_out, type=pa.int64()))
-            rpart = rbatch_.take(pa.array(ri_out, type=pa.int64()))
+            lpart = batch.take(pa.array(li, type=pa.int64()))
+            rpart = rbatch_.take(pa.array(ri, type=pa.int64()))
             yield pa.RecordBatch.from_arrays(
                 lpart.columns + rpart.columns
-                + [pa.array(d_out, type=pa.float64())], names=names)
+                + [pa.array(d, type=pa.float64())], names=names)
 
     return lstaged.mapInArrow(fn, schema=out_schema)
+
+
+def _knn_rounds(lgeo, rgeo, tree, rb: np.ndarray, dg: np.ndarray, k: int):
+    """(left rows, right rows, distances) of the ``k`` nearest right rows
+    of every non-empty row of the left EWKB array ``lgeo``, by expanding
+    rings over ``tree`` (the STRtree of the right bboxes ``rb``); ties
+    rank by the right-row digest ``dg``. Output is ordered by left row,
+    then rank.
+
+    Every unresolved left row takes one ring round per pass: its
+    candidates are ``tree.query`` of its box grown by its radius; a row
+    with enough candidates is scored, and all scored rows' pairs are
+    gathered with ``take`` and scored by ONE ``distance_pairs`` call. A
+    row resolves when its k-th distance fits inside its ring, or when
+    the ring holds every valid right row; otherwise its radius doubles.
+    Each row's rounds, candidates and ranking are those of a
+    row-at-a-time loop."""
+    from polars_st_spark.functions.scalar import distance_pairs
+
+    with np.errstate(invalid="ignore"):
+        nv = int((~np.isnan(rb[:, 0])).sum())
+    empty = np.empty(0, dtype=np.int64)
+    if not nv or not len(lgeo):
+        return empty, empty, np.empty(0)
+    span = max(np.nanmax(rb[:, 2]) - np.nanmin(rb[:, 0]),
+               np.nanmax(rb[:, 3]) - np.nanmin(rb[:, 1]), 1e-9)
+    kk = min(k, nv)
+    r0 = max(span * ((kk / nv) ** 0.5), span * 1e-6)
+    lb = _driver_bounds(lgeo)
+    rows = np.flatnonzero(~np.isnan(lb[:, 0]))
+    radius = np.full(len(rows), r0)
+    hits: dict = {}  # left row -> (right rows, distances) in rank order
+    while len(rows):
+        cands = [tree.query(lb[i, 0] - r, lb[i, 1] - r, lb[i, 2] + r, lb[i, 3] + r)
+                 for i, r in zip(rows.tolist(), radius.tolist())]
+        full = np.array([len(c) == nv for c in cands], dtype=bool)
+        scored = [t for t, c in enumerate(cands) if len(c) >= kk or full[t]]
+        done = np.zeros(len(rows), dtype=bool)
+        if scored:
+            lens = [len(cands[t]) for t in scored]
+            ds_all = distance_pairs(
+                lgeo.take(np.repeat(rows[scored], lens)),
+                rgeo.take(np.concatenate([cands[t] for t in scored])))
+            for t, ds in zip(scored, np.split(ds_all, np.cumsum(lens)[:-1])):
+                cand = cands[t]
+                ok = ~np.isnan(ds)
+                cand2, ds2 = cand[ok], ds[ok]
+                if len(cand2) >= kk or full[t]:
+                    if len(cand2):
+                        top = np.lexsort((dg[cand2], ds2))[:kk]
+                        if ds2[top[-1]] <= radius[t] or full[t]:
+                            hits[int(rows[t])] = (cand2[top], ds2[top])
+                            done[t] = True
+                    elif full[t]:
+                        done[t] = True
+        radius = radius * 2.0
+        done |= (radius > 4 * span) & full
+        rows, radius = rows[~done], radius[~done]
+    if not hits:
+        return empty, empty, np.empty(0)
+    order = sorted(hits)
+    return (np.repeat(np.asarray(order, dtype=np.int64), [len(hits[i][0]) for i in order]),
+            np.concatenate([hits[i][0] for i in order]),
+            np.concatenate([hits[i][1] for i in order]))
 
 
 def _driver_bounds(bufs) -> np.ndarray:

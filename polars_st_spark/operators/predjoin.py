@@ -69,14 +69,16 @@ def _prune(predicate: str, lb, rb, distance: float | None) -> Column:
 def _with_box(df: DataFrame, geom: str, box, tag: str) -> DataFrame:
     """Attach ``_{tag}box`` array<double>[4]. ``box`` = names of existing
     native xmin/ymin/xmax/ymax columns (zero Python); None derives it from
-    the geometry with ONE st_bounds evaluation (single Arrow pass per side —
-    n + m rows instead of n*m pairs)."""
+    the geometry with ONE bounds evaluation (single Arrow pass per side —
+    n + m rows instead of n*m pairs), through the evaluate-once copy of
+    ``st_bounds``'s kernel (see :func:`filter_pairs`)."""
     if box is not None:
         expr = F.array(*[F.col(c).cast("double") for c in box])
     else:
-        from polars_st_spark.functions.scalar import st_bounds
+        from polars_st_spark.functions.factory import evaluate_once
+        from polars_st_spark.functions.scalar import _bounds_udf
 
-        expr = st_bounds(geom)
+        expr = evaluate_once(_bounds_udf)(F.col(geom))
     return df.withColumn(f"_{tag}box", expr)
 
 
@@ -99,6 +101,13 @@ def filter_pairs(
     stats say it fits (<=64MB). Right columns that clash with left names get
     a ``_right`` suffix. ``distance`` is required for ``dwithin`` (strict
     ``<``, matching ``st_dwithin``).
+
+    Derived boxes (``lbox``/``rbox`` None) cost one bounds evaluation per
+    side. The box join condition rejects nulls, so Catalyst infers
+    ``isnotnull`` on each box and pushes it below the projection that
+    computes the box; a deterministic bounds UDF would be cloned into
+    that filter as a second Python pass per side. The boxes use
+    ``factory.evaluate_once``, which Catalyst does not clone.
 
     ``exact`` picks the physical lane for the refinement that runs on the
     bbox-prune survivors: ``"udf"`` (default) evaluates the pandas-UDF
@@ -159,7 +168,9 @@ def filter_pairs(
         refine = getattr(P, f"st_{predicate}")(lcol, rgeom)
     # One AND-filter: Catalyst's python-UDF extraction evaluates the bbox
     # conjunct join-side (codegen) and places ArrowEvalPython after it, so
-    # only prune survivors reach Python (asserted in tests/test_plans.py).
+    # only prune survivors reach Python. With one bounds pass per side the
+    # plan has 3 ArrowEvalPython nodes: 2 bounds + 1 refine (asserted in
+    # tests/test_plans.py).
     return pairs.where(prune & refine).drop("_lbox", "_rbox")
 
 

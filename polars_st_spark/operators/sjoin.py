@@ -33,7 +33,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import StructType
 
 from polars_st_spark.geo import predicates as P
@@ -399,37 +398,17 @@ def _sjoin_grid(left, right, predicate, how, lsuffix, rsuffix, left_on, right_on
             )
         )
 
-    # nondeterministic marking stops Catalyst from duplicating the bounds UDF
-    # stack through the explode (it is pure; the marking is purely a placement
-    # constraint so each side evaluates geometry→bounds exactly once)
-    from polars_st_spark.functions.factory import spark_dt
-
-    def _bounds_once():
-        @arrow_udf(spark_dt("array<double>"))
-        def _b(a):
-            from polars_st_spark.geo.arrowwkb import uniform_batch_pa
-
-            fast = uniform_batch_pa(a)
-            if fast is not None and fast[0] == "point2d":
-                out = [[x, y, x, y] for x, y in zip(fast[1], fast[2])]
-            elif fast is not None and fast[0] == "ring":
-                out = [
-                    [float(r[:, 0].min()), float(r[:, 1].min()),
-                     float(r[:, 0].max()), float(r[:, 1].max())]
-                    for r in fast[1]
-                ]
-            else:
-                out = [None if b is None else list(from_ewkb(b).bounds())
-                       for b in a.to_pylist()]
-            # from_pandas: a NaN bound (empty geometry) becomes null
-            return pa.array(out, type=pa.list_(pa.float64()), from_pandas=True)
-
-        return _b.asNondeterministic()
+    # the evaluate-once copy of st_bounds' kernel stops Catalyst from
+    # duplicating the bounds UDF through the explode (it is pure; the
+    # marking is purely a placement constraint so each side evaluates
+    # geometry→bounds exactly once)
+    from polars_st_spark.functions.factory import evaluate_once
+    from polars_st_spark.functions.scalar import _bounds_udf
 
     def prepare(df, cols, geom_col, row_name, box_name):
         boxed = df.select(
             F.struct(*[F.col(c) for c in cols]).alias(row_name),
-            _bounds_once()(F.col(geom_col)).alias(box_name),
+            evaluate_once(_bounds_udf)(F.col(geom_col)).alias(box_name),
         ).where(~F.isnan(F.col(box_name)[0]))
         boxed = boxed.select(row_name, box_name, cell_array(F.col(box_name)).alias("_cells"))
         exploded = boxed.select(row_name, box_name, F.explode("_cells").alias("_cell"))

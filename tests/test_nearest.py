@@ -281,3 +281,159 @@ def test_strtree_ties_follow_topandas_digest(spark):
             assert sorted(got) == sorted(by_digest[:k]), (k, got, by_digest)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_strtree_right_array_column(spark):
+    """A right side carrying array<double> (and struct) columns takes the
+    default strategy: list cells hash by their values, so equal-distance
+    ties are broken deterministically and the columns come back as they
+    went in."""
+    right = spark.createDataFrame(
+        [(0, [1.0, 2.0], (1, "a"), 1.0, 0.0), (1, [3.0], (2, "b"), -1.0, 0.0),
+         (2, None, None, 0.0, 1.0), (3, [], (3, None), 5.0, 5.0)],
+        "rid int, arr array<double>, s struct<n:int,t:string>, x double, y double",
+    ).select("rid", "arr", "s", st.st_point("x", "y").alias("geometry"))
+    left = spark.createDataFrame([(0, 0.0, 0.0), (1, 5.0, 4.0)], "i int, x double, y double") \
+        .select("i", st.st_point("x", "y").alias("geometry"))
+    for k in (1, 2, 3):
+        first = st_sjoin_nearest(left, right, k=k).collect()
+        again = st_sjoin_nearest(left, right, k=k).collect()
+        assert first == again
+        got = {}
+        for r in first:
+            got.setdefault(r["i"], []).append(r["rid"])
+        assert got[1][0] == 3 and len(got[0]) == k and set(got[0]) <= {0, 1, 2}
+        assert {r["rid"]: r["arr"] for r in first}.get(3, []) == []
+
+
+def test_tie_digest_keeps_scalar_columns_and_hashes_lists():
+    import pandas as pd
+    import pyarrow as pa
+
+    from polars_st_spark.operators.nearest import _tie_digest
+
+    scalar = pa.table({"a": pa.array([1, None, 3], pa.int64()),
+                       "s": pa.array(["x", "y", None]),
+                       "g": pa.array([b"\x01", b"", None], pa.binary())})
+    want = pd.util.hash_pandas_object(scalar.to_pandas(), index=False).to_numpy()
+    assert (_tie_digest(scalar, "UTC") == want).all()
+    nested = scalar.append_column("arr", pa.array([[1.0, 2.0], None, [1.0, 2.0]]))
+    d1 = _tie_digest(nested, "UTC")
+    assert (d1 == _tie_digest(nested, "UTC")).all()
+    same_arr = nested.set_column(3, "arr", pa.array([[1.0, 2.0], [5.0], [1.0, 2.0]]))
+    d2 = _tie_digest(same_arr, "UTC")
+    assert d1[0] == d2[0] and d1[2] == d2[2] and d1[1] != d2[1]
+
+
+# ---------------------------------------------------------------------------
+# batched ring rounds == the row-at-a-time loop with per-pair algos.distance
+# ---------------------------------------------------------------------------
+
+def _rounds_per_row(lgeo, rgeo, rb, dg, k):
+    """The row-at-a-time expanding-ring loop, scoring each candidate pair
+    with its own decoded algos.distance call."""
+    from polars_st_spark.geo import algos
+    from polars_st_spark.geo.index import STRtree
+    from polars_st_spark.geo.wkb import from_ewkb
+    from polars_st_spark.operators.nearest import _driver_bounds
+
+    tree = STRtree(rb)
+    valid = ~np.isnan(rb[:, 0])
+    nv = int(valid.sum())
+    li, ri, dd = [], [], []
+    if not nv:
+        return li, ri, dd
+    span = max(np.nanmax(rb[:, 2]) - np.nanmin(rb[:, 0]),
+               np.nanmax(rb[:, 3]) - np.nanmin(rb[:, 1]), 1e-9)
+    r0 = max(span * ((min(k, nv) / nv) ** 0.5), span * 1e-6)
+    lb = _driver_bounds(lgeo)
+    for i in range(len(lgeo)):
+        if np.isnan(lb[i, 0]):
+            continue
+        gl = from_ewkb(lgeo[i].as_py())
+        r, kk = r0, min(k, nv)
+        while True:
+            cand = tree.query(lb[i, 0] - r, lb[i, 1] - r, lb[i, 2] + r, lb[i, 3] + r)
+            if len(cand) >= kk or len(cand) == nv:
+                ds = np.array([algos.distance(gl, from_ewkb(rgeo[int(j)].as_py()))
+                               for j in cand])
+                ok = ~np.isnan(ds)
+                cand2, ds2 = cand[ok], ds[ok]
+                if len(cand2) >= kk or len(cand) == nv:
+                    if len(cand2):
+                        top = np.lexsort((dg[cand2], ds2))[:kk]
+                        if ds2[top[-1]] <= r or len(cand) == nv:
+                            li += [i] * len(top)
+                            ri += list(cand2[top])
+                            dd += list(ds2[top])
+                            break
+                    elif len(cand) == nv:
+                        break
+            r *= 2.0
+            if r > 4 * span and len(cand) == nv:
+                break
+    return li, ri, dd
+
+
+def _nearest_inputs(seed):
+    from polars_st_spark.geo.types import Geometry, GeometryType as T
+    from polars_st_spark.geo.wkb import to_ewkb
+
+    rng = np.random.default_rng(seed)
+
+    def pt(x, y, srid=0):
+        return to_ewkb(Geometry(T.Point, srid=srid, coords=np.array([x, y])))
+
+    def line(c):
+        return to_ewkb(Geometry(T.LineString, coords=np.asarray(c, dtype=float)))
+
+    def poly(c, r, n):
+        t = np.sort(rng.uniform(0, 2 * np.pi, n))
+        ring = np.stack([c[0] + r * np.cos(t), c[1] + r * np.sin(t)], 1)
+        return to_ewkb(Geometry(T.Polygon, rings=[np.vstack([ring, ring[:1]])]))
+
+    empty = to_ewkb(Geometry(T.Point, coords=None))
+    lp = rng.uniform(0, 50, (60, 2))
+    rp = rng.uniform(0, 50, (25, 2))
+    lpts = [pt(x, y) for x, y in lp]
+    rpts = [pt(x, y) for x, y in rp]
+    rpolys = [poly(c, rng.uniform(0.5, 3), int(rng.integers(3, 7))) for c in rp]
+    rlines = [line([c, c + rng.uniform(-4, 4, 2), c + rng.uniform(-4, 4, 2)]) for c in rp]
+    mixed = [[rpts, rpolys, rlines][j % 3][j] for j in range(len(rp))]
+    lmixed = [[lpts[i], poly(lp[i], 1.0, 4), line([lp[i], lp[i] + 1])][i % 3]
+              for i in range(len(lp))]
+    # ties: duplicated right points equidistant from the grid-snapped left
+    grid = np.round(rp[:8])
+    tie_r = [pt(x + dx, y) for x, y in grid for dx in (-1.0, 1.0)] + [pt(x, y + 1) for x, y in grid]
+    tie_l = [pt(x, y) for x, y in grid]
+    return {
+        "points": (lpts, rpts),
+        "polygons": (lpts, rpolys),
+        "lines": (lpts, rlines),
+        "mixed_right": (lpts, mixed),
+        "mixed_both": (lmixed, mixed),
+        "nulls_empties": ([None, empty] + lpts[:20] + [None], rpts[:10] + [None, empty] + rpts[10:]),
+        "srid": ([pt(x, y, 4326) for x, y in lp], [pt(x, y, 4326) for x, y in rp]),
+        "ties": (tie_l, tie_r),
+    }
+
+
+@pytest.mark.parametrize("case", ["points", "polygons", "lines", "mixed_right",
+                                  "mixed_both", "nulls_empties", "srid", "ties"])
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_batched_rounds_match_per_pair_loop(case, k):
+    import pyarrow as pa
+
+    from polars_st_spark.geo.index import STRtree
+    from polars_st_spark.operators.nearest import _driver_bounds, _knn_rounds
+
+    left, right = _nearest_inputs(17)[case]
+    lgeo, rgeo = pa.array(left, pa.binary()), pa.array(right, pa.binary())
+    rb = _driver_bounds(rgeo)
+    # a digest with collisions, so exact (distance, digest) ties also occur
+    dg = (np.arange(len(right), dtype=np.uint64) * np.uint64(7)) % np.uint64(3)
+    li, ri, d = _knn_rounds(lgeo, rgeo, STRtree(rb), rb, dg, k)
+    wl, wr, wd = _rounds_per_row(lgeo, rgeo, rb, dg, k)
+    assert list(li) == wl and list(ri) == wr
+    assert np.asarray(d, dtype=np.float64).tobytes() == np.asarray(wd, dtype=np.float64).tobytes()
+    assert len(wl) > 0

@@ -56,6 +56,33 @@ def test_grid_sjoin_no_udf_duplication(spark):
     assert _count(plan, "ArrowEvalPython") <= 6
 
 
+def test_filter_pairs_one_bounds_pass_per_side(spark):
+    """filter_pairs plans exactly 3 ArrowEvalPython nodes: one bounds pass
+    per side and the refine. The bbox join condition rejects nulls, so
+    Catalyst infers isnotnull(_lbox)/isnotnull(_rbox) and pushes it below
+    the box projection; a deterministic bounds UDF was cloned into that
+    filter (5 nodes)."""
+    import numpy as np
+
+    from polars_st_spark.geo.types import Geometry, GeometryType
+    from polars_st_spark.geo.wkb import to_ewkb
+
+    def rect(i, x0, y0, x1, y1):
+        ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+        return (i, bytearray(to_ewkb(Geometry(GeometryType.Polygon, rings=[ring]))))
+
+    parcels = spark.createDataFrame(
+        [rect(i, i * 1.0, 0.0, i + 1.5, 1.0) for i in range(40)], "pid long, geom binary")
+    zones = spark.createDataFrame(
+        [rect(i, i * 10.0, -1.0, i * 10.0 + 4.0, 2.0) for i in range(4)], "zid long, geom binary")
+    out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom", rcol="geom")
+    plan = explain_str(out)
+    assert _count(plan, "ArrowEvalPython") == 3, plan
+    assert out.count() == sum(
+        1 for i in range(40) for z in range(4)
+        if i <= z * 10.0 + 4.0 and z * 10.0 <= i + 1.5)
+
+
 def test_geoparquet_pushdown(spark, tmp_path):
     """bbox-materialized parquet: the window filter must reach the scan."""
     from polars_st_spark.plans import materialize_bbox, push_window_filter

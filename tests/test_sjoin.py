@@ -62,6 +62,30 @@ def test_sjoin_grid_matches_broadcast(zones_points):
     assert _pairs(b) == _pairs(g)
 
 
+def test_sjoin_grid_empty_and_null_rows_drop_out(spark):
+    """The grid boxes come from st_bounds' kernel evaluated once per side:
+    empty and null geometries get no box and drop out of the join, on
+    batches that take the uniform, ragged and per-row bounds paths."""
+    zones = spark.createDataFrame(
+        [(1, "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"),
+         (2, "POLYGON EMPTY"), (3, None),
+         (4, "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0), (12 2, 14 2, 14 4, 12 4, 12 2))")],
+        "zone_id int, wkt string",
+    ).select("zone_id", st.st_from_wkt("wkt").alias("geometry"))
+    for pts_wkt in (
+        ["POINT (5 5)", "POINT (13 3)", "POINT (15 5)", "POINT (50 50)"],
+        ["POINT (5 5)", "POINT EMPTY", None, "LINESTRING (1 1, 2 2)", "POINT (15 5)"],
+    ):
+        pts = spark.createDataFrame(
+            list(enumerate(pts_wkt)), "pt_id int, wkt string",
+        ).select("pt_id", st.st_from_wkt("wkt").alias("geometry"))
+        for predicate in ("within", "intersects"):
+            b = st_sjoin(pts, zones, predicate=predicate, strategy="broadcast")
+            g = st_sjoin(pts, zones, predicate=predicate, strategy="grid", cell_size=7.0)
+            assert _pairs(b) == _pairs(g)
+            assert all(z in (1, 4) for _, z in _pairs(g))
+
+
 def test_sjoin_left(zones_points):
     zones, pts = zones_points
     out = st_sjoin(pts, zones, predicate="within", how="left", strategy="broadcast")
