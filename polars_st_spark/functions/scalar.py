@@ -323,7 +323,7 @@ def st_distance(col, other) -> Column:
     """NaN→NULL if either empty (reference: functions.rs:819-829).
     Vectorized for uniform point batches, ragged polygon batches vs a
     constant point (CSR segment sweep), point batches vs a constant
-    areal geometry, and column × column pairs (:func:`distance_pairs`)."""
+    areal geometry, and column × column pairs (:func:`distance_lanes`)."""
     other_g = geom_arg(other)
     if isinstance(other_g, Geometry) and other_g.type_id == GeometryType.Point and other_g.coords is not None:
         qx, qy = float(other_g.coords[0]), float(other_g.coords[1])
@@ -377,56 +377,11 @@ def st_distance(col, other) -> Column:
 # can register the identical vectorized UDF).
 @arrow_udf(DoubleType())
 def _distance_pair_udf(a1, a2):
-    return _double_out(distance_pairs(a1, a2))
-
-
-_DIST_FAMILIES = ("point", "mpoint", "line", "poly")
-
-
-def distance_pairs(a1, a2) -> np.ndarray:
-    """Row-paired ``algos.distance`` of two EWKB arrays as float64, NaN
-    where either side is null or empty — the kernel of ``st_distance``'s
-    column × column UDF and of the k-nearest join's candidate scoring.
-
-    Whole batches go through :func:`_distance_lanes`; a batch the lanes
-    decline is split by (left family, right family) with
-    ``ragged.split_families`` and each family pair tries the lanes on its
-    own rows. Only the rows no lane takes (and every row of a batch the
-    family scan declines: Z/M, curves, collections) pay the per-row
-    ``algos.distance``."""
-    n = len(a1)
-    if not n:
-        return np.empty(0)
-    whole_tried = not a1.null_count and not a2.null_count
-    if whole_tried:
-        d = _distance_lanes(a1, a2)
+    if len(a1) and not a1.null_count and not a2.null_count:
+        d = distance_lanes(a1, a2)
         if d is not None:
-            return d
-    out = np.full(n, np.nan)
-    rest = np.arange(n, dtype=np.int64)
-    f1, f2 = ragged.split_families(a1), ragged.split_families(a2)
-    if f1 is not None and f2 is not None:
-        code = np.full((2, n), -1, dtype=np.int64)
-        for c, key in enumerate(_DIST_FAMILIES):
-            code[0, f1[key]] = c
-            code[1, f2[key]] = c
-        live = (code >= 0).all(axis=0)  # null rows stay NaN
-        combo = code[0] * len(_DIST_FAMILIES) + code[1]
-        left = []
-        for cb in np.unique(combo[live]):
-            idx = np.flatnonzero(live & (combo == cb))
-            d = None
-            if not (whole_tried and len(idx) == n):
-                d = _distance_lanes(a1.take(idx), a2.take(idx))
-            if d is None:
-                left.append(idx)
-            else:
-                out[idx] = d
-        rest = np.concatenate(left) if left else rest[:0]
-    if len(rest):
-        vals = per_row(algos.distance, a1, a2, rows=rest)
-        out[rest] = [np.nan if vals[i] is None else vals[i] for i in rest]
-    return out
+            return _double_out(d)
+    return pa_out(per_row(algos.distance, a1, a2), "double")
 
 
 def _point_xy(fast):
@@ -438,9 +393,12 @@ def _point_xy(fast):
     return x, y
 
 
-def _distance_lanes(a1, a2) -> np.ndarray | None:
-    """Batch lanes of :func:`distance_pairs` for two null-free row-paired
-    EWKB arrays, or None when no lane takes them: point×point
+def distance_lanes(a1, a2) -> np.ndarray | None:
+    """Row-paired ``algos.distance`` of two null-free EWKB arrays as
+    float64 (NaN where a side is empty) — the batch lanes of
+    ``st_distance``'s column × column UDF and of the k-nearest join's
+    candidate scoring — or None when no lane takes the whole batch
+    (the caller then scores per pair): point×point
     (``math.hypot``, as ``algos.distance`` scores two points),
     point×ragged-polygon (either direction, inside→0), point×ragged-line,
     and polygon/line × polygon/line via the ``pairs_distance`` candidate

@@ -1423,18 +1423,15 @@ def _areal_cluster(kept: list[Geometry], kb: np.ndarray, i: int, j: int,
     """Sorted indices of the connected component holding ``i`` and ``j``
     in the graph whose edges join areal parts with ``eps``-overlapping
     boxes and ``interiors_intersect``. The component does not depend on
-    the order its edges are found in, so it grows through witness edges
-    first (``intersects`` plus ``_interiors_witness``: no ``relate``
-    call), depth first — a member's scan pauses at each new member and
-    resumes after it, so a chain of overlaps is walked with few failed
-    tests and no pair is tested twice — and only then tests each part
-    still outside it exactly against every member. A group whose overlaps
-    all have witnesses (a polygon tiled by overlapping pieces) takes no
-    ``relate`` call at all."""
+    the order its edges are found in, so a breadth-first pass grows it
+    through witness edges (``intersects`` plus ``_interiors_witness``: no
+    ``relate`` call) and keeps the intersecting pairs that have no
+    witness; only then does ``touches`` decide those pairs, and each part
+    it admits is grown from in turn. Every (member, part) pair is tested
+    at most once by each predicate, and a group whose overlaps all have
+    witnesses (a polygon tiled by overlapping pieces) takes no ``relate``
+    call at all."""
     from polars_st_spark.geo.predicates import _interiors_witness
-
-    n = len(kept)
-    areal = [g.dimensions() == 2 for g in kept]
 
     def boxok(u: int, v: int) -> bool:
         with np.errstate(invalid="ignore"):
@@ -1443,29 +1440,26 @@ def _areal_cluster(kept: list[Geometry], kb: np.ndarray, i: int, j: int,
                 and kb[v, 1] <= kb[u, 3] + eps and kb[u, 1] <= kb[v, 3] + eps
             )
 
+    areal = [g.dimensions() == 2 for g in kept]
     comp = {i, j}
-    stack = [(i, 0), (j, 0)]  # (member, next part index to test against it)
-    while stack:
-        while stack:
-            u, start = stack.pop()
-            for v in range(start, n):
-                if (v not in comp and areal[v] and boxok(u, v)
-                        and intersects(kept[u], kept[v])
-                        and _interiors_witness(kept[u], kept[v])):
+    frontier = [i, j]
+    while frontier:
+        exact = []  # (member, part) pairs that intersect with no witness
+        while frontier:
+            u = frontier.pop()
+            for v in range(len(kept)):
+                if (v in comp or not areal[v] or not boxok(u, v)
+                        or not intersects(kept[u], kept[v])):
+                    continue
+                if _interiors_witness(kept[u], kept[v]):
                     comp.add(v)
-                    stack.append((u, v + 1))
-                    stack.append((v, 0))
-                    break
-        # every (member, outsider) pair has had its witness test: the
-        # exact expression decides the rest
-        for v in range(n):
-            if v in comp or not areal[v]:
-                continue
-            if any(boxok(u, v) and intersects(kept[u], kept[v])
-                   and not touches(kept[u], kept[v]) for u in sorted(comp)):
+                    frontier.append(v)
+                else:
+                    exact.append((u, v))
+        for u, v in exact:
+            if v not in comp and not touches(kept[u], kept[v]):
                 comp.add(v)
-                stack.append((v, 0))
-                break
+                frontier.append(v)
     return sorted(comp)
 
 

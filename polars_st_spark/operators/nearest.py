@@ -303,8 +303,8 @@ def _nearest_strtree(
     left batch and the right table, so every column keeps its Arrow type.
     Null/empty left rows emit nothing — how='left' routes them to the
     unmatched set. The ring rounds run per Arrow batch for all unresolved
-    left rows together, scoring each round's candidate pairs in one batch
-    distance call (:func:`_knn_rounds`)."""
+    left rows together, scoring each round's candidate pairs with one
+    batch distance lane (:func:`_knn_rounds`)."""
     import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -328,8 +328,10 @@ def _nearest_strtree(
         rbatch_, rb, dg = bc.value
         rgeo = rbatch_.column(r_geom)
         tree = STRtree(rb)
+        rcache: dict = {}  # right row -> decoded geometry, for the whole task
         for batch in batches:
-            li, ri, d = _knn_rounds(batch.column(left_on), rgeo, tree, rb, dg, k)
+            li, ri, d = _knn_rounds(batch.column(left_on), rgeo, tree, rb, dg, k,
+                                    rcache)
             if not len(li):
                 continue
             lpart = batch.take(pa.array(li, type=pa.int64()))
@@ -341,7 +343,8 @@ def _nearest_strtree(
     return lstaged.mapInArrow(fn, schema=out_schema)
 
 
-def _knn_rounds(lgeo, rgeo, tree, rb: np.ndarray, dg: np.ndarray, k: int):
+def _knn_rounds(lgeo, rgeo, tree, rb: np.ndarray, dg: np.ndarray, k: int,
+                rcache: dict):
     """(left rows, right rows, distances) of the ``k`` nearest right rows
     of every non-empty row of the left EWKB array ``lgeo``, by expanding
     rings over ``tree`` (the STRtree of the right bboxes ``rb``); ties
@@ -351,13 +354,24 @@ def _knn_rounds(lgeo, rgeo, tree, rb: np.ndarray, dg: np.ndarray, k: int):
     Every unresolved left row takes one ring round per pass: its
     candidates are ``tree.query`` of its box grown by its radius; a row
     with enough candidates is scored, and all scored rows' pairs are
-    gathered with ``take`` and scored by ONE ``distance_pairs`` call. A
-    row resolves when its k-th distance fits inside its ring, or when
-    the ring holds every valid right row; otherwise its radius doubles.
-    Each row's rounds, candidates and ranking are those of a
-    row-at-a-time loop."""
-    from polars_st_spark.functions.scalar import distance_pairs
+    gathered with ``take`` and scored by ONE ``scalar.distance_lanes``
+    call. When no lane takes the round, each pair pays one
+    ``algos.distance`` on geometries decoded once: left rows per batch,
+    right rows per task through ``rcache``. A row resolves when its k-th
+    distance fits inside its ring, or when the ring holds every valid
+    right row; otherwise its radius doubles. Each row's rounds,
+    candidates and ranking are those of a row-at-a-time loop."""
+    from polars_st_spark.functions.scalar import distance_lanes
+    from polars_st_spark.geo import algos
+    from polars_st_spark.geo.wkb import from_ewkb
 
+    def decoded(cache, geo, j):
+        g = cache.get(j)
+        if g is None:
+            g = cache[j] = from_ewkb(geo[j].as_py())
+        return g
+
+    lcache: dict = {}
     with np.errstate(invalid="ignore"):
         nv = int((~np.isnan(rb[:, 0])).sum())
     empty = np.empty(0, dtype=np.int64)
@@ -379,9 +393,13 @@ def _knn_rounds(lgeo, rgeo, tree, rb: np.ndarray, dg: np.ndarray, k: int):
         done = np.zeros(len(rows), dtype=bool)
         if scored:
             lens = [len(cands[t]) for t in scored]
-            ds_all = distance_pairs(
-                lgeo.take(np.repeat(rows[scored], lens)),
-                rgeo.take(np.concatenate([cands[t] for t in scored])))
+            li = np.repeat(rows[scored], lens)
+            ri = np.concatenate([cands[t] for t in scored])
+            ds_all = distance_lanes(lgeo.take(li), rgeo.take(ri))
+            if ds_all is None:
+                ds_all = np.array([
+                    algos.distance(decoded(lcache, lgeo, i), decoded(rcache, rgeo, j))
+                    for i, j in zip(li.tolist(), ri.tolist())], dtype=float)
             for t, ds in zip(scored, np.split(ds_all, np.cumsum(lens)[:-1])):
                 cand = cands[t]
                 ok = ~np.isnan(ds)

@@ -69,17 +69,17 @@ def _prune(predicate: str, lb, rb, distance: float | None) -> Column:
 def _with_box(df: DataFrame, geom: str, box, tag: str) -> DataFrame:
     """Attach ``_{tag}box`` array<double>[4]. ``box`` = names of existing
     native xmin/ymin/xmax/ymax columns (zero Python); None derives it from
-    the geometry with ONE bounds evaluation (single Arrow pass per side —
-    n + m rows instead of n*m pairs), through the evaluate-once copy of
-    ``st_bounds``'s kernel (see :func:`filter_pairs`)."""
+    the geometry with ONE ``st_bounds`` evaluation (single Arrow pass per
+    side — n + m rows instead of n*m pairs). A null geometry never passes
+    the exact predicate, so its rows are dropped first; the derived box is
+    made non-nullable (see :func:`filter_pairs`)."""
     if box is not None:
-        expr = F.array(*[F.col(c).cast("double") for c in box])
-    else:
-        from polars_st_spark.functions.factory import evaluate_once
-        from polars_st_spark.functions.scalar import _bounds_udf
+        return df.withColumn(f"_{tag}box", F.array(*[F.col(c).cast("double") for c in box]))
+    from polars_st_spark.functions.scalar import st_bounds
 
-        expr = evaluate_once(_bounds_udf)(F.col(geom))
-    return df.withColumn(f"_{tag}box", expr)
+    nan_box = F.array(*[F.lit(float("nan"))] * 4)
+    return (df.where(F.col(geom).isNotNull())
+            .withColumn(f"_{tag}box", F.coalesce(st_bounds(geom), nan_box)))
 
 
 def filter_pairs(
@@ -103,11 +103,14 @@ def filter_pairs(
     ``<``, matching ``st_dwithin``).
 
     Derived boxes (``lbox``/``rbox`` None) cost one bounds evaluation per
-    side. The box join condition rejects nulls, so Catalyst infers
-    ``isnotnull`` on each box and pushes it below the projection that
-    computes the box; a deterministic bounds UDF would be cloned into
-    that filter as a second Python pass per side. The boxes use
-    ``factory.evaluate_once``, which Catalyst does not clone.
+    side. The box join condition rejects nulls, so on a nullable box
+    column Catalyst infers ``isnotnull(_lbox)``/``isnotnull(_rbox)`` and
+    pushes it below the projection that computes the box, cloning the
+    bounds UDF into that filter as a second Python pass per side. The
+    derived box is ``coalesce(st_bounds(g), NaN box)`` over the non-null
+    geometries: a non-nullable column, so no such filter is inferred. The
+    UDF stays deterministic, so a later filter on a left or right column
+    is still pushed below the bounds pass, down to the scan.
 
     ``exact`` picks the physical lane for the refinement that runs on the
     bbox-prune survivors: ``"udf"`` (default) evaluates the pandas-UDF

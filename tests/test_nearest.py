@@ -432,8 +432,11 @@ def test_batched_rounds_match_per_pair_loop(case, k):
     rb = _driver_bounds(rgeo)
     # a digest with collisions, so exact (distance, digest) ties also occur
     dg = (np.arange(len(right), dtype=np.uint64) * np.uint64(7)) % np.uint64(3)
-    li, ri, d = _knn_rounds(lgeo, rgeo, STRtree(rb), rb, dg, k)
+    rcache: dict = {}
+    li, ri, d = _knn_rounds(lgeo, rgeo, STRtree(rb), rb, dg, k, rcache)
     wl, wr, wd = _rounds_per_row(lgeo, rgeo, rb, dg, k)
     assert list(li) == wl and list(ri) == wr
     assert np.asarray(d, dtype=np.float64).tobytes() == np.asarray(wd, dtype=np.float64).tobytes()
     assert len(wl) > 0
+    # only rounds no distance lane takes decode right rows, into the cache
+    assert bool(rcache) == case.startswith("mixed")

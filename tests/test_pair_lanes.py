@@ -2,10 +2,11 @@
 the code they replace:
 
 - ``predicates.interiors_intersect`` == ``intersects and not touches``
-  (the overlay-cluster test of ``setops.union_all``), and a polygon tiled
-  by overlapping kites takes no ``relate`` call
+  (the overlay-cluster test of ``setops.union_all``), a polygon tiled
+  by overlapping kites takes no ``relate`` call, and the cluster search
+  tests each (member, part) pair with ``touches`` at most once
 - ``agg._intersection_all``'s rectangle lane == the pairwise fold
-- ``scalar.distance_pairs`` == per-row ``algos.distance`` (point pairs use
+- ``scalar.distance_lanes`` == per-row ``algos.distance`` (point pairs use
   ``math.hypot``, not ``np.hypot``)
 """
 
@@ -17,7 +18,7 @@ import pytest
 from hypothesis import given, settings, strategies as st_h
 
 from polars_st_spark.functions import agg
-from polars_st_spark.functions.scalar import distance_pairs
+from polars_st_spark.functions.scalar import _distance_pair_udf, distance_lanes
 from polars_st_spark.geo import algos, predicates, setops
 from polars_st_spark.geo.predicates import interiors_intersect, intersects, touches
 from polars_st_spark.geo.types import Geometry, GeometryType
@@ -168,6 +169,35 @@ def test_kite_group_takes_no_relate_call(monkeypatch):
     assert to_ewkb(out) == _union_all_exact(group)
 
 
+def test_cluster_tests_each_pair_once(monkeypatch):
+    """Big overlapping polygons (past relate's size gate, so no witness)
+    join the cluster one exact test at a time; the small triangles that
+    touch the first one are tested with ``touches`` once each, not once
+    per member the cluster gains."""
+    big = [ngon(0.3 * b, 0.0, 10.0, 300) for b in range(5)]
+    tris = []
+    for t in (140, 145, 148, 150, 152, 155, 160):
+        x, y = big[0][t]
+        ux, uy = x / 10.0, y / 10.0
+        tris.append(poly([(x, y), (x + 2 * ux - 0.3 * uy, y + 2 * uy + 0.3 * ux),
+                          (x + 2 * ux + 0.3 * uy, y + 2 * uy - 0.3 * ux)]))
+    group = [poly(big[0])] + tris + [poly(b) for b in big[1:]]
+    pairs, calls = [], []
+    real_touches, real_relate = setops.touches, predicates.relate
+    monkeypatch.setattr(setops, "touches",
+                        lambda a, b: pairs.append((id(a), id(b))) or real_touches(a, b))
+    monkeypatch.setattr(predicates, "relate",
+                        lambda a, b: calls.append(1) or real_relate(a, b))
+    out = setops.union_all(group)
+    assert pairs and len(set(pairs)) == len(pairs)
+    # 30 relate calls for this group with a breadth-first search that
+    # tests each pair with intersects-and-not-touches once
+    assert len(calls) <= 30
+    monkeypatch.setattr(setops, "touches", real_touches)
+    monkeypatch.setattr(predicates, "relate", real_relate)
+    assert to_ewkb(out) == _union_all_exact(group)
+
+
 # ---------------------------------------------------------------------------
 # intersection_all rectangle lane
 # ---------------------------------------------------------------------------
@@ -219,7 +249,7 @@ def test_intersection_all_rect_lane_random():
 
 
 # ---------------------------------------------------------------------------
-# distance_pairs
+# distance lanes
 # ---------------------------------------------------------------------------
 
 def _pt(x, y, srid=0):
@@ -241,7 +271,8 @@ def test_point_pair_distance_bytes_equal_math_hypot():
     xy = rng.uniform(-1000, 1000, (2000, 4))
     a1 = pa.array([_pt(x, y) for x, y, _, _ in xy], pa.binary())
     a2 = pa.array([_pt(x, y) for _, _, x, y in xy], pa.binary())
-    got = distance_pairs(a1, a2)
+    got = distance_lanes(a1, a2)
+    assert got is not None
     want = np.array([math.hypot(x1 - x2, y1 - y2) for x1, y1, x2, y2 in xy])
     assert _same_bits(got, want)
     # np.hypot differs from math.hypot in the last bit on some of these
@@ -254,8 +285,8 @@ def test_point_pair_distance_near_coincident():
     # equal points: near-coincident ones keep their hypot
     a1 = pa.array([_pt(0.0, 0.0), _pt(1.0, 1.0), _pt(2.0, 2.0)], pa.binary())
     a2 = pa.array([_pt(1e-13, 0.0), _pt(1.0, 1.0 + 1e-13), _pt(2.0, 2.0)], pa.binary())
-    got = distance_pairs(a1, a2)
-    assert _same_bits(got, _per_row(a1, a2))
+    got = distance_lanes(a1, a2)
+    assert got is not None and _same_bits(got, _per_row(a1, a2))
     assert got[0] > 0 and got[2] == 0.0
 
 
@@ -263,7 +294,31 @@ def _line(*pts):
     return to_ewkb(Geometry(GeometryType.LineString, coords=np.asarray(pts, dtype=float)))
 
 
+def _family_rows(rng, n):
+    """n random rows of each family: points, polygons, lines."""
+    out = {"point": [], "poly": [], "line": []}
+    for _ in range(n):
+        x, y = rng.uniform(-50, 50, 2)
+        out["point"].append(_pt(x, y))
+        out["poly"].append(to_ewkb(poly(ngon(x, y, rng.uniform(1, 4), 6))))
+        out["line"].append(_line((x, y), (x + 1, y + 4), (x - 2, y)))
+    return out
+
+
+def test_family_lanes_match_per_row():
+    rng = np.random.default_rng(9)
+    fa, fb = _family_rows(rng, 200), _family_rows(rng, 200)
+    for ka in fa:
+        for kb in fb:
+            a1, a2 = pa.array(fa[ka], pa.binary()), pa.array(fb[kb], pa.binary())
+            got = distance_lanes(a1, a2)
+            assert got is not None, (ka, kb)
+            assert _same_bits(got, _per_row(a1, a2)), (ka, kb)
+
+
 def test_mixed_family_batch_matches_per_row():
+    # a batch no lane takes whole (mixed families, a null, an empty point,
+    # a one-point line, an SRID) is scored per row
     rng = np.random.default_rng(9)
     left, right = [], []
     for i in range(300):
@@ -276,14 +331,17 @@ def test_mixed_family_batch_matches_per_row():
                       to_ewkb(Geometry(GeometryType.Point, coords=None)),
                       _line((u, v))][i % 5 if i % 7 else (i // 7) % 5])
     a1, a2 = pa.array(left, pa.binary()), pa.array(right, pa.binary())
-    assert _same_bits(distance_pairs(a1, a2), _per_row(a1, a2))
+    assert distance_lanes(a1.drop_null(), a2.filter(a1.is_valid())) is None
+    got = _distance_pair_udf.func(a1, a2).to_numpy(zero_copy_only=False)
+    got = np.array([np.nan if v is None else v for v in got], dtype=float)
+    assert _same_bits(got, _per_row(a1, a2))
 
 
 def test_point_on_line_is_zero():
     a1 = pa.array([_pt(0.5, 0.5), _pt(1.0, 1.0)], pa.binary())
     a2 = pa.array([_line((0, 0), (1, 1)), _line((0, 0), (1, 1), (1, 3))], pa.binary())
-    got = distance_pairs(a1, a2)
-    assert _same_bits(got, _per_row(a1, a2))
+    got = distance_lanes(a1, a2)
+    assert got is not None and _same_bits(got, _per_row(a1, a2))
     assert (got == 0.0).all()
 
 

@@ -83,6 +83,47 @@ def test_filter_pairs_one_bounds_pass_per_side(spark):
         if i <= z * 10.0 + 4.0 and z * 10.0 <= i + 1.5)
 
 
+def _ancestors(plan: str, token: str) -> list[str]:
+    """Node lines above the first plan-tree line holding ``token``."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    at = next(i for i, ln in enumerate(lines) if token in ln)
+    out, d = [], depth[at]
+    for i in range(at - 1, -1, -1):
+        if depth[i] < d:
+            out.append(lines[i].strip(" :+-"))
+            d = depth[i]
+    return out
+
+
+def test_filter_pairs_later_filter_reaches_scan(spark, tmp_path):
+    """A filter on a left column after filter_pairs is pushed through the
+    join and below the left bounds pass, down to the parquet scan: the
+    bounds UDF only sees the rows that survive it."""
+    import numpy as np
+
+    from polars_st_spark.geo.types import Geometry, GeometryType
+    from polars_st_spark.geo.wkb import to_ewkb
+
+    def rect(i, x0, x1):
+        ring = np.array([[x0, 0.0], [x1, 0.0], [x1, 1.0], [x0, 1.0], [x0, 0.0]])
+        return (i, bytearray(to_ewkb(Geometry(GeometryType.Polygon, rings=[ring]))))
+
+    path = str(tmp_path / "parcels")
+    spark.createDataFrame([rect(i, i * 1.0, i + 1.5) for i in range(40)],
+                          "pid long, geom binary").write.parquet(path)
+    parcels = spark.read.parquet(path)
+    zones = spark.createDataFrame([rect(i, i * 10.0, i * 10.0 + 4.0) for i in range(4)],
+                                  "zid long, geom binary")
+    out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom",
+                          rcol="geom").where(F.col("pid") < 5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    above = _ancestors(plan, "(pid#")
+    assert any(a.startswith("ArrowEvalPython") and "_bounds_udf" in a for a in above), plan
+    assert "LessThan(pid,5)" in explain_str(out)
+    assert sorted((r.pid, r.zid) for r in out.collect()) == [(i, 0) for i in range(5)]
+
+
 def test_geoparquet_pushdown(spark, tmp_path):
     """bbox-materialized parquet: the window filter must reach the scan."""
     from polars_st_spark.plans import materialize_bbox, push_window_filter
