@@ -139,7 +139,9 @@ def evaluate_once(udf):
     clones nor moves a non-deterministic expression, so the copy is
     evaluated exactly once, where it is staged, and later filters and
     sorts read the materialized column. Values are unchanged: the kernel
-    is pure, only the plan moves."""
+    is pure, only the plan moves. The price: a later filter on any other
+    column of the same projection is not pushed below it either, so the
+    kernel also sees the rows that filter drops."""
     return arrow_udf(udf.func, udf.returnType).asNondeterministic()
 
 
