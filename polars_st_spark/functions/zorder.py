@@ -95,10 +95,11 @@ def zorder_repartition(
 
     ``extent`` defaults to the dataset's total bounds (one extra aggregation
     job — pass it explicitly in pipelines that already know it). The key
-    column is dropped unless ``key_name`` is given. Downstream
-    ``write.parquet`` produces files whose per-file bbox min/max stats are
-    tight; ``read_geoparquet(bbox=...)`` then skips non-overlapping files
-    via ordinary parquet stats pruning — no spatial index structure needed.
+    column is dropped unless ``key_name`` is given. Written with its bbox
+    columns (``write_geoparquet(zorder=True)``), each file's row groups get
+    tight bbox min/max stats; ``read_geoparquet(bbox=...)`` then skips
+    non-overlapping row groups via ordinary parquet stats pruning — no
+    spatial index structure needed.
     """
     from polars_st_spark.functions.scalar import st_bounds
 

@@ -341,7 +341,7 @@ def _hot_cells(left, right, left_on, right_on, prepare, threshold, fraction):
     hot: dict[tuple[int, int], list[bool]] = {}
     for side, (df, geom) in enumerate(((left, left_on), (right, right_on))):
         probe = df.sample(fraction=fraction, seed=7) if fraction < 1.0 else df
-        cells = prepare(probe, [geom], geom, "_prow", "_pbox")
+        cells = prepare(probe, [geom], geom, "p")
         # cap+1 so a bound cap is DETECTABLE: beyond-cap hot cells would go
         # unsalted silently and reintroduce the single-reducer cell at
         # pathological skew (VERDICT r9 "What's wrong" #3) — warn loudly so
@@ -381,9 +381,8 @@ def _sjoin_grid(left, right, predicate, how, lsuffix, rsuffix, left_on, right_on
     cs = float(cell_size)
 
     def cell_array(box):
-        # covering-cell (cx, cy) structs, computed in the SAME projection as
-        # the bounds so the Generate consumes plain attributes (Catalyst would
-        # otherwise duplicate the geometry/bounds UDF stack through the explode)
+        # covering-cell (cx, cy) structs, computed in a projection of their
+        # own so the Generate consumes a plain attribute
         cx0 = F.floor(box[0] / cs).cast("long")
         cx1 = F.floor(box[2] / cs).cast("long")
         cy0 = F.floor(box[1] / cs).cast("long")
@@ -398,27 +397,28 @@ def _sjoin_grid(left, right, predicate, how, lsuffix, rsuffix, left_on, right_on
             )
         )
 
-    # the evaluate-once copy of st_bounds' kernel stops Catalyst from
-    # duplicating the bounds UDF through the explode (it is pure; the
-    # marking is purely a placement constraint so each side evaluates
-    # geometry→bounds exactly once)
-    from polars_st_spark.functions.factory import evaluate_once
-    from polars_st_spark.functions.scalar import _bounds_udf
+    from polars_st_spark.operators.predjoin import _with_box
 
-    def prepare(df, cols, geom_col, row_name, box_name):
-        boxed = df.select(
-            F.struct(*[F.col(c) for c in cols]).alias(row_name),
-            evaluate_once(_bounds_udf)(F.col(geom_col)).alias(box_name),
-        ).where(~F.isnan(F.col(box_name)[0]))
-        boxed = boxed.select(row_name, box_name, cell_array(F.col(box_name)).alias("_cells"))
-        exploded = boxed.select(row_name, box_name, F.explode("_cells").alias("_cell"))
-        return exploded.select(
+    def prepare(df, cols, geom_col, tag):
+        # filter_pairs' deterministic, non-nullable box, so a caller's later
+        # filter on an input column reaches the scan. No filter may read the
+        # box (Catalyst would clone the bounds UDF into it): an empty
+        # geometry gets null cells, which explode_outer (no inferred
+        # size > 0 filter) keeps until the filter on the generated cell.
+        row_name, box_name = f"_{tag}row", f"_{tag}box"
+        boxed = _with_box(df, geom_col, None, tag).select(
+            F.struct(*[F.col(c) for c in cols]).alias(row_name), box_name)
+        box = F.col(box_name)
+        boxed = boxed.select(row_name, box_name,
+                             F.when(~F.isnan(box[0]), cell_array(box)).alias("_cells"))
+        exploded = boxed.select(row_name, box_name, F.explode_outer("_cells").alias("_cell"))
+        return exploded.where(F.col("_cell").isNotNull()).select(
             row_name, box_name,
             F.col("_cell.cx").alias("_cx"), F.col("_cell.cy").alias("_cy"),
         )
 
-    le = prepare(left, left.columns, left_on, "_lrow", "_lbox")
-    re_ = prepare(right, right.columns, right_on, "_rrow", "_rbox")
+    le = prepare(left, left.columns, left_on, "l")
+    re_ = prepare(right, right.columns, right_on, "r")
     join_keys = ["_cx", "_cy"]
     if hot_cell_salt and hot_cell_salt > 1:
         hot = _hot_cells(left, right, left_on, right_on, prepare,

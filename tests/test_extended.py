@@ -110,6 +110,22 @@ def test_geoparquet_partition_pruning(spark, tmp_path):
     assert len(ids) > 0
 
 
+def test_geoparquet_cell_prune_keeps_geometry_from_lower_cells(spark, tmp_path):
+    """Cells are keyed by the bbox min corner, so a geometry whose min corner
+    lies several cells left of (or below) the window still overlaps it;
+    the grid read must return it, as the read without a grid does."""
+    path = str(tmp_path / "gp")
+    df = spark.createDataFrame(
+        [(1, "POLYGON ((0 0, 2000 0, 2000 100, 0 100, 0 0))"),
+         (2, "POLYGON ((0 1000, 100 1000, 100 1100, 0 1100, 0 1000))")],
+        "id long, wkt string").select("id", st.st_from_wkt("wkt").alias("geometry"))
+    write_geoparquet(df, path, partition_grid=500.0)
+    window = (1500.0, 0.0, 1600.0, 100.0)
+    for grid in (500.0, None):
+        got = read_geoparquet(spark, path, bbox=window, partition_grid=grid)
+        assert [r["id"] for r in got.collect()] == [1]
+
+
 def test_plans_bbox_pushdown(spark, tmp_path):
     path = str(tmp_path / "pq")
     df = spark.range(1000).select(

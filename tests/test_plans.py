@@ -17,6 +17,53 @@ def _count(plan: str, token: str) -> int:
     )
 
 
+_PYTHON_NODES = ("ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
+                 "MapInArrow", "MapInPandas", "FlatMapGroupsInArrow",
+                 "FlatMapGroupsInPandas", "AggregateInPandas")
+
+
+def _stages(df):
+    """The nodes of ``df``'s executed plan (the final adaptive plan once an
+    action ran on ``df``), one list per stage. A stage ends at an Exchange
+    or a BroadcastExchange; an InMemoryTableScan is a leaf (the plan it
+    caches ran in a job of its own)."""
+    def kids(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    roots = [df._jdf.queryExecution().executedPlan()]
+    while roots:
+        nodes, stack = [], [roots.pop()]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if name.startswith("AdaptiveSparkPlan"):
+                stack.append(node.executedPlan())
+            elif "QueryStage" in name:
+                roots.append(node.plan())
+            elif name in ("Exchange", "BroadcastExchange"):
+                roots.extend(kids(node))
+            else:
+                nodes.append(node)
+                stack.extend(kids(node))
+        yield nodes
+
+
+def _python_fanout(df) -> int:
+    """Most Python nodes inside one stage of ``df``'s executed plan. Each
+    Python node of a stage holds a worker of its own in every task of that
+    stage, so this is the number of Python workers a stage needs per core."""
+    return max(sum(n.nodeName().startswith(_PYTHON_NODES) for n in stage)
+               for stage in _stages(df))
+
+
+def _scan_rows(df) -> int:
+    """Rows the parquet scans of ``df``'s executed plan output."""
+    return sum(n.metrics().apply("numOutputRows").value()
+               for stage in _stages(df) for n in stage
+               if n.nodeName().startswith("Scan parquet"))
+
+
 def test_predicate_join_single_udf_eval(spark):
     """b2 shape: broadcast pairs + one predicate UDF — exactly one
     ArrowEvalPython, and the join stays a BroadcastNestedLoop/Broadcast
@@ -83,6 +130,100 @@ def test_filter_pairs_one_bounds_pass_per_side(spark):
         if i <= z * 10.0 + 4.0 and z * 10.0 <= i + 1.5)
 
 
+def _rects(spark, n=200):
+    """``n`` 3x2 rectangles on a 20-wide lattice, pitch 5, with their
+    corners as columns."""
+    return spark.range(n).select(
+        F.col("id"),
+        ((F.col("id") % 20) * 5.0).alias("x"),
+        (F.floor(F.col("id") / 20) * 5.0).alias("y"),
+    ).select("id", "x", "y", st.st_rectangle(
+        "x", "y", F.col("x") + 3.0, F.col("y") + 2.0).alias("geometry"))
+
+
+def _in_window(rows, window):
+    x0, y0, x1, y1 = window
+    return {r["id"] for r in rows
+            if r["x"] <= x1 and r["x"] + 3.0 >= x0 and r["y"] <= y1 and r["y"] + 2.0 >= y0}
+
+
+def test_geoparquet_bbox_read_one_python_node(spark, tmp_path):
+    """read_geoparquet(bbox) + st_area: the window is plain comparisons on
+    the stored bbox columns, pushed into the parquet scan, and st_area is
+    the only Python node, so the stage runs one Python worker per core."""
+    from polars_st_spark.sources.parquet_io import read_geoparquet, write_geoparquet
+
+    src = _rects(spark)
+    path = str(tmp_path / "gpq")
+    write_geoparquet(src, path, partition_grid=40.0)
+    window = (12.0, 7.0, 31.0, 24.0)
+    out = read_geoparquet(spark, path, bbox=window, partition_grid=40.0).select(
+        "id", st.st_area("geometry").alias("a"))
+    plan = explain_str(out)
+    assert _count(plan, "ArrowEvalPython") == 1, plan
+    pushed = next(ln for ln in plan.splitlines() if ln.startswith("PushedFilters"))
+    for c in ("LessThanOrEqual(bbox_xmin,31.0)", "GreaterThanOrEqual(bbox_xmax,12.0)",
+              "LessThanOrEqual(bbox_ymin,24.0)", "GreaterThanOrEqual(bbox_ymax,7.0)"):
+        assert c in pushed, pushed
+    rows = out.collect()
+    assert _python_fanout(out) == 1
+    assert {r["id"] for r in rows} == _in_window(src.collect(), window)
+    assert {r["a"] for r in rows} == {6.0}
+
+
+def test_geoparquet_bbox_columns_native_and_foreign(spark, tmp_path):
+    """write_geoparquet stores the bbox columns and read_geoparquet drops
+    them, with or without a window. A plain parquet file without them
+    returns the same rows for a window: its bbox is derived from the
+    geometry by one bounds pass."""
+    from polars_st_spark.plans import BBOX_COLS
+    from polars_st_spark.sources.parquet_io import read_geoparquet, write_geoparquet
+
+    src = _rects(spark)
+    native, foreign = str(tmp_path / "native"), str(tmp_path / "foreign")
+    write_geoparquet(src, native)
+    src.write.parquet(foreign)
+    assert set(BBOX_COLS) <= set(spark.read.parquet(native).columns)
+    assert read_geoparquet(spark, native).columns == src.columns
+    window = (12.0, 7.0, 31.0, 24.0)
+    want = _in_window(src.collect(), window)
+    for path in (native, foreign):
+        out = read_geoparquet(spark, path, bbox=window)
+        assert out.columns == src.columns
+        assert {r["id"] for r in out.collect()} == want
+
+
+def test_geoparquet_zorder_bbox_read_scans_fewer_rows(spark, tmp_path):
+    """A Z-ordered GeoParquet file has spatially tight bbox min/max stats
+    per file, so a small window skips whole row groups in the scan: it
+    outputs fewer rows than the file holds."""
+    from polars_st_spark.sources.parquet_io import read_geoparquet, write_geoparquet
+
+    src = _rects(spark, 400)
+    path = str(tmp_path / "zgpq")
+    write_geoparquet(src, path, zorder=True, extent=(0.0, 0.0, 100.0, 100.0))
+    window = (0.0, 0.0, 12.0, 12.0)
+    out = read_geoparquet(spark, path, bbox=window)
+    rows = out.collect()
+    assert {r["id"] for r in rows} == _in_window(src.collect(), window)
+    assert len(rows) <= _scan_rows(out) < 400
+
+
+def test_filter_pairs_python_fanout_is_two(spark, tmp_path):
+    """filter_pairs with a broadcast right side: the streamed side chains
+    its bounds pass and the refine in one stage, two Python workers per
+    core. Breaking the chain needs a shuffle or a driver fetch; a change
+    that does so updates this pin on purpose."""
+    path = str(tmp_path / "rects")
+    _rects(spark, 60).write.parquet(path)
+    rects = spark.read.parquet(path)
+    parcels = rects.select(F.col("id").alias("pid"), "geometry")
+    zones = rects.where(F.col("id") < 4).select(F.col("id").alias("zid"), "geometry")
+    out = st.filter_pairs(parcels, zones, predicate="intersects")
+    assert sorted((r.pid, r.zid) for r in out.collect()) == [(i, i) for i in range(4)]
+    assert _python_fanout(out) == 2
+
+
 def _ancestors(plan: str, token: str) -> list[str]:
     """Node lines above the first plan-tree line holding ``token``."""
     lines = plan.splitlines()
@@ -124,6 +265,26 @@ def test_filter_pairs_later_filter_reaches_scan(spark, tmp_path):
     assert sorted((r.pid, r.zid) for r in out.collect()) == [(i, 0) for i in range(5)]
 
 
+def test_grid_sjoin_later_filter_reaches_scan(spark, tmp_path):
+    """Grid st_sjoin: one bounds pass per side, and a filter on a left
+    column after the join is pushed below the left bounds pass, down to
+    the parquet scan."""
+    from polars_st_spark.operators.sjoin import st_sjoin
+
+    path = str(tmp_path / "rects")
+    _rects(spark, 60).write.parquet(path)
+    rects = spark.read.parquet(path)
+    parcels = rects.select(F.col("id").alias("pid"), "geometry")
+    zones = rects.where(F.col("id") < 4).select(F.col("id").alias("zid"), "geometry")
+    out = st_sjoin(parcels, zones, predicate="intersects", strategy="grid",
+                   cell_size=5.0).where(F.col("pid") < 2)
+    plan = explain_str(out)
+    assert plan.count("_bounds_udf(geometry") == 2, plan
+    above = _ancestors(out._jdf.queryExecution().executedPlan().toString(), "LessThan(id,2)")
+    assert any(a.startswith("ArrowEvalPython") and "_bounds_udf" in a for a in above)
+    assert sorted((r.pid, r.zid) for r in out.collect()) == [(0, 0), (1, 1)]
+
+
 def test_geoparquet_pushdown(spark, tmp_path):
     """bbox-materialized parquet: the window filter must reach the scan."""
     from polars_st_spark.plans import materialize_bbox, push_window_filter
@@ -138,6 +299,11 @@ def test_geoparquet_pushdown(spark, tmp_path):
     filtered = push_window_filter(back, (2.0, 2.0, 6.0, 6.0))
     plan = explain_str(filtered)
     assert "PushedFilters" in plan and "bbox_xmin" in plan
+    # the prefilter is codegen; the exact predicate is the stage's only
+    # Python node
+    assert {r["id"] for r in filtered.collect()} == {
+        i for i in range(100) if 2 <= i % 10 <= 6 and 2 <= i % 7 <= 6}
+    assert _python_fanout(filtered) == 1
 
 
 def test_dedup_sig_single_pass_with_cache(spark):
