@@ -1,14 +1,32 @@
 """Spatial aggregations (reference: §2.7, expressions.rs:873-999).
 
-Every geometry aggregate is an Arrow grouped-aggregate UDF (evalType 252,
-planned as ``ArrowAggregatePython``; usable in ``groupBy().agg(...)``,
-whole-frame ``select`` and SQL ``GROUP BY``): one kernel per aggregate,
-``pa.Array`` of EWKB in, EWKB bytes out. ``st_total_bounds`` is pure Spark
-SQL and needs no Python at all for the aggregation step.
+Every DataFrame-API geometry aggregate is ``F.collect_list`` plus one
+scalar Arrow UDF (:func:`list_udf`, evalType 250, like every other
+``functions/`` UDF): the kernel runs once per list row, on a zero-copy
+slice of the list's ``pa.Array`` of EWKB, and returns EWKB bytes. One
+kernel per aggregate (:data:`AGG_KERNELS`). ``collect_list`` aggregates
+partially on the map side (``ObjectHashAggregate``) and needs no sort;
+Catalyst lifts the UDF out of the ``Aggregate`` into a projection, so the
+caller's next UDF (``select(st_area("u"))``) chains into the same
+``ArrowEvalPython`` node and the stage runs one Python worker per core.
+A grouped-aggregate UDF (evalType 252, ``ArrowAggregatePython``) is a
+node of its own, and the next UDF needs a second one in the same stage.
 
-Spark plans one eval type per ``.agg()``: a user's own pandas
-``GROUPED_AGG`` UDF (evalType 202) cannot share a ``.agg()`` with these;
-write it as an ``arrow_udf`` or aggregate it separately and join.
+SQL ``GROUP BY`` keeps the grouped-aggregate form (:func:`geom_agg`,
+evalType 252) on the same kernels: Spark rejects a SQL function that wraps
+an aggregate (``USER_DEFINED_FUNCTIONS.CANNOT_CONTAIN_COMPLEX_FUNCTIONS``).
+A pandas ``GROUPED_AGG`` UDF (evalType 202) shares a ``.agg()`` with
+neither form: write it as an ``arrow_udf`` or aggregate it separately and
+join. ``st_total_bounds`` is pure Spark SQL and needs no Python at all for
+the aggregation step.
+
+Memory: a list batch holds at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` groups, and
+``spark.sql.execution.arrow.maxBytesPerBatch`` bounds its bytes; a group
+is one list row, so it is never split. ``union_all_grouped(auto)`` picks
+its ``"single"`` plan (this path) only when its estimate of the largest
+group is at most ``hot_group_threshold`` rows, and the two-phase plan
+otherwise.
 
 Scale notes (100 TB):
 - A grouped aggregate ships all group values to one task. ``union_all`` /
@@ -49,12 +67,32 @@ __all__ = [
 
 def geom_agg(kernel, **params):
     """Arrow grouped aggregate (evalType 252) running
-    ``kernel(a, **params)`` on each group's ``pa.Array`` of EWKB."""
+    ``kernel(a, **params)`` on each group's ``pa.Array`` of EWKB — the
+    SQL ``GROUP BY`` form."""
 
     def agg(a: pa.Array) -> bytes:
         return kernel(a, **params)
 
     return arrow_udf(agg, spark_dt("binary"))
+
+
+def list_udf(kernel, **params):
+    """Scalar Arrow UDF (evalType 250) over a ``collect_list`` column
+    (``array<binary>``, never null): ``kernel(values, **params)`` once per
+    list row, where ``values`` is a zero-copy slice of the list array's
+    values."""
+
+    def list_agg(lists: pa.Array) -> pa.Array:
+        vals = lists.values
+        off = lists.offsets.to_pylist()
+        return pa.array([kernel(vals.slice(s, e - s), **params)
+                         for s, e in zip(off[:-1], off[1:])], pa.binary())
+
+    return arrow_udf(list_agg, spark_dt("binary"))
+
+
+def _list_agg(name: str, col, **params) -> Column:
+    return list_udf(AGG_KERNELS[name], **params)(F.collect_list(col_or_lit(col)))
 
 
 def _decode(a: pa.Array) -> list:
@@ -207,16 +245,29 @@ def _delaunay_triangles_agg(a: pa.Array, tolerance: float = 0.0,
     return to_ewkb(delaunay_triangles(setops.collect(gs), tolerance, only_edges))
 
 
+AGG_KERNELS = {
+    "st_union_all": union_array,
+    "st_intersection_all": _intersection_all,
+    "st_difference_all": _difference_all,
+    "st_symmetric_difference_all": _symmetric_difference_all,
+    "st_coverage_union_all": _coverage_union_all,
+    "st_collect": _collect,
+    "st_polygonize_agg": _polygonize_agg,
+    "st_voronoi_polygons_agg": _voronoi_polygons_agg,
+    "st_delaunay_triangles_agg": _delaunay_triangles_agg,
+}
+
+
 def st_union_all(col, grid_size: float | None = None) -> Column:
     """Aggregate union; empty/all-null → GEOMETRYCOLLECTION EMPTY
     (reference: expressions.rs:985-999). Uniform axis-rect groups take a
     vectorized slab-union path with no per-row decode."""
-    return geom_agg(union_array, grid_size=grid_size)(col_or_lit(col))
+    return _list_agg("st_union_all", col, grid_size=grid_size)
 
 
 def st_intersection_all(col, grid_size: float | None = None) -> Column:
     """(reference: expressions.rs:901-914)"""
-    return geom_agg(_intersection_all, grid_size=grid_size)(col_or_lit(col))
+    return _list_agg("st_intersection_all", col, grid_size=grid_size)
 
 
 def st_difference_all(col, grid_size: float | None = None) -> Column:
@@ -226,40 +277,40 @@ def st_difference_all(col, grid_size: float | None = None) -> Column:
     shuffle delivers. For deterministic results use
     :func:`polars_st_spark.operators.grouped.difference_all_ordered` with an
     explicit sort key (SURVEY §7 hard part 4)."""
-    return geom_agg(_difference_all, grid_size=grid_size)(col_or_lit(col))
+    return _list_agg("st_difference_all", col, grid_size=grid_size)
 
 
 def st_symmetric_difference_all(col, grid_size: float | None = None) -> Column:
     """Order-dependent left fold (reference: expressions.rs:932-948); same
     ordering caveat as st_difference_all."""
-    return geom_agg(_symmetric_difference_all, grid_size=grid_size)(col_or_lit(col))
+    return _list_agg("st_symmetric_difference_all", col, grid_size=grid_size)
 
 
 def st_polygonize_agg(col) -> Column:
     """Polygonize the group's combined linework (reference: functions.rs:1221-1226)."""
-    return geom_agg(_polygonize_agg)(col_or_lit(col))
+    return _list_agg("st_polygonize_agg", col)
 
 
 def st_voronoi_polygons_agg(col, tolerance: float = 0.0) -> Column:
     """Voronoi diagram of all the group's vertices (reference: functions.rs:1791-1802)."""
-    return geom_agg(_voronoi_polygons_agg, tolerance=tolerance)(col_or_lit(col))
+    return _list_agg("st_voronoi_polygons_agg", col, tolerance=tolerance)
 
 
 def st_delaunay_triangles_agg(col, tolerance: float = 0.0, only_edges: bool = False) -> Column:
     """Triangulation of all the group's vertices (reference: functions.rs:1364-1373)."""
-    return geom_agg(_delaunay_triangles_agg, tolerance=tolerance,
-                    only_edges=only_edges)(col_or_lit(col))
+    return _list_agg("st_delaunay_triangles_agg", col, tolerance=tolerance,
+                     only_edges=only_edges)
 
 
 def st_coverage_union_all(col) -> Column:
     """Union of a non-overlapping coverage (reference: functions.rs:1213-1219)."""
-    return geom_agg(_coverage_union_all)(col_or_lit(col))
+    return _list_agg("st_coverage_union_all", col)
 
 
 def st_collect(col, into: int | None = None) -> Column:
     """Gather group geometries into Multi*/GeometryCollection with supertype
     inference (reference: functions.rs:1238-1276)."""
-    return geom_agg(_collect, into=into)(col_or_lit(col))
+    return _list_agg("st_collect", col, into=into)
 
 
 def st_total_bounds(bounds_col) -> list[Column]:

@@ -336,16 +336,11 @@ def _to_srid_builder(T):
 
 
 def _agg_registry():
-    """name -> Arrow grouped-aggregate UDF (usable in SQL GROUP BY)."""
+    """name -> Arrow grouped-aggregate UDF (usable in SQL GROUP BY), on the
+    kernel the Column API's aggregate of the same name runs."""
     from polars_st_spark.functions import agg as A
 
-    return {
-        "st_union_all": A.geom_agg(A.union_array),
-        "st_intersection_all": A.geom_agg(A._intersection_all),
-        "st_coverage_union_all": A.geom_agg(A._coverage_union_all),
-        "st_collect": A.geom_agg(A._collect),
-        "st_polygonize_agg": A.geom_agg(A._polygonize_agg),
-    }
+    return {name: A.geom_agg(A.AGG_KERNELS[name]) for name in SQL_AGGREGATES}
 
 
 SQL_AGGREGATES = (

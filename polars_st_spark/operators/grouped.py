@@ -156,17 +156,18 @@ def union_all_two_phase(df: DataFrame, group_cols: list[str], geom_col: str,
                         result_col: str = "union_geom",
                         min_partitions: int | str | None = "auto") -> DataFrame:
     """groupBy(group_cols).agg(union_all) with a TRUE map-side partial:
-    phase 1 is a NARROW ``mapInArrow`` pass (no shuffle — Spark's grouped
-    aggregate UDFs have no partial-merge support, and a
+    phase 1 is a NARROW ``mapInArrow`` pass (no shuffle — ``st_union_all``'s
+    ``collect_list`` combines on the map side only by concatenating the
+    rows into lists, so its shuffle still carries every row, and a
     ``groupBy(group, spark_partition_id())`` first stage would still hash-
     shuffle every row because ``_pid`` carries no co-partitioning
-    guarantee to Catalyst; r10 fixed exactly that) that unions each
-    group's rows WITHIN each input partition through the identical
-    ``union_array`` kernel as ``st_union_all`` (slab fast lane included),
-    emitting one partial geometry per (group, partition). Phase 2 shuffles
-    only those partials — at 100 TB the shuffle payload drops from all
-    rows to ≤ groups × partitions geometries, and a hot group's rows
-    never meet in a single reducer."""
+    guarantee to Catalyst) that unions each group's rows WITHIN each input
+    partition through the identical ``union_array`` kernel as
+    ``st_union_all`` (slab fast lane included), emitting one partial
+    geometry per (group, partition). Phase 2 is ``st_union_all`` over
+    those partials, so it shuffles only them — at 100 TB the shuffle
+    payload drops from all rows to ≤ groups × partitions geometries, and a
+    hot group's rows never meet in a single reducer."""
     from polars_st_spark.functions.agg import st_union_all, union_array
 
     # phase-1 parallelism is the INPUT partitioning (that's the point — no

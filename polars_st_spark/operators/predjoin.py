@@ -1,7 +1,7 @@
 """Pair-predicate join: evaluate a spatial predicate over an explicit pair
-relation (cross-with-small-side, equi-, or theta-join) with a Catalyst-visible
-bounding-box prune, so the Arrow-batched exact predicate only ever sees pairs
-whose boxes could match.
+relation (cross-with-small-side, equi-, or theta-join), with a
+Catalyst-visible bounding-box prune where it pays, so the Arrow-batched
+exact predicate only sees pairs whose boxes could match.
 
 This is the column-vs-column complement of ``st_sjoin`` (reference sjoin:
 polars-st ``DataFrame.st.join``): sjoin builds a spatial index when there is
@@ -9,16 +9,19 @@ no join condition at all; ``filter_pairs`` is for when the pair relation is
 already decided (a business key, a cross with a tiny dimension) and only the
 predicate evaluation needs to scale.
 
-Why it scales: a pandas-UDF predicate is opaque to Catalyst, so
+Two plans. ``"prune"``: a Python predicate is opaque to Catalyst, so
 ``pairs.where(st_intersects(a, b))`` ships EVERY pair's two EWKB blobs
 through Arrow to Python. Here the box prune is plain double comparisons on
 native (or once-derived) bbox columns — whole-stage codegen, evaluated
 join-side — and Spark's python-UDF-in-filter extraction keeps the exact
 predicate physically AFTER that filter, so Arrow transfer shrinks by the
-prune selectivity (5x on the B2 bench shape). At 100 TB the prune also
-avoids materializing the non-candidate pairs into the Python stage at all;
-with ``lbox``/``rbox`` pointing at ingest-materialized native columns
-(``plans.materialize_bbox``) the prune stage runs with ZERO Python.
+prune selectivity. At 100 TB the prune also avoids materializing the
+non-candidate pairs into the Python stage at all; with ``lbox``/``rbox``
+pointing at ingest-materialized native columns (``plans.materialize_bbox``)
+the prune stage runs with ZERO Python. ``"cross"``: a broadcast cross join
+and the predicate alone, one Python node, for pair sets small enough that
+shipping every pair costs less than the two bounds passes (the predicate
+UDFs run their own box lanes).
 """
 
 from __future__ import annotations
@@ -94,6 +97,7 @@ def filter_pairs(
     distance: float | None = None,
     broadcast: str | bool = "auto",
     exact: str = "udf",
+    strategy: str = "auto",
 ) -> DataFrame:
     """Pairs (all left columns + all right columns) where ``predicate(lcol,
     rcol)`` holds. ``on=None`` is a cross join — only sensible when one side
@@ -101,6 +105,21 @@ def filter_pairs(
     stats say it fits (<=64MB). Right columns that clash with left names get
     a ``_right`` suffix. ``distance`` is required for ``dwithin`` (strict
     ``<``, matching ``st_dwithin``).
+
+    ``strategy`` picks the plan; the result carries the choice as
+    ``_chosen_strategy``:
+
+    - ``"cross"``: the non-null pairs and the exact predicate, one
+      ArrowEvalPython node. Every pair's two geometries cross to Python.
+    - ``"prune"``: one bounds pass per side, the box test in the join
+      condition, the exact predicate on the survivors: 3 ArrowEvalPython
+      nodes with derived boxes, 1 with ``lbox``/``rbox``.
+    - ``"auto"`` picks ``"cross"`` for a cross join (``on=None``) of
+      derived boxes with ``exact="udf"`` when Catalyst's statistics
+      (:func:`~polars_st_spark.plans.plan_stats`, no job) size both sides,
+      the right side fits the broadcast guard (64 MB) and so does the pair
+      payload ``rows_l * size_r + rows_r * size_l``; ``"prune"`` otherwise.
+      ``disjoint`` always runs ``"cross"``: a box test cannot prune it.
 
     Derived boxes (``lbox``/``rbox`` None) cost one bounds evaluation per
     side. The box join condition rejects nulls, so on a nullable box
@@ -110,88 +129,105 @@ def filter_pairs(
     derived box is ``coalesce(st_bounds(g), NaN box)`` over the non-null
     geometries: a non-nullable column, so no such filter is inferred. The
     UDF stays deterministic, so a later filter on a left or right column
-    is still pushed below the bounds pass, down to the scan.
+    is still pushed below the bounds pass, down to the scan. A prune cross
+    join that does not broadcast repartitions the boxed right side, so
+    its bounds pass runs once, in a map stage of its own; a
+    ``CartesianProduct`` would otherwise re-evaluate it per left
+    partition, in the stage of the left bounds pass and the refine.
 
-    ``exact`` picks the physical lane for the refinement that runs on the
-    bbox-prune survivors: ``"udf"`` (default) evaluates the pandas-UDF
-    column predicate inside the filter; ``"arrow"`` (supports all five of
-    intersects/within/contains/covers/covered_by) routes survivors through
-    the zero-copy ``operators.arrowpath.predicate_arrow`` kernel, which
-    skips the one-bytes-object-per-row pandas materialization.
-
-    Operand envelope for the arrow lane's closed-form path: only rows where
-    BOTH operands are points or axis-aligned rectangles (verified per row by
-    ``arrowpath._rect_box``) take the O(1) interval test; every other row —
-    general polygons, lines, multi-parts — falls back to the same per-row
-    DE-9IM kernels the UDF lane uses, so for non-bbox-shaped data the arrow
-    lane has no closed-form advantage. Measured verdict (r10, 10x/100x
-    grains, BENCH_SCALE_NOTES_r10.md ``b2_lane_comparison``): Spark's fused
-    ArrowEvalPython refinement (``exact="udf"``) beats mapInArrow at every
-    grain for the b2 shape (9.1s vs 25.3-30.4s at 100x) because mapInArrow
-    round-trips all columns JVM->Python->JVM; ``exact="arrow"`` is kept for
-    narrow keys+verdict consumers (see ``predicate_arrow(keep=...)``), not
-    as the default. Identical results either way (tests/test_arrowpath.py
-    parity + ``arrow_predicate`` driver gate)."""
+    ``exact`` picks the physical lane for the refinement: ``"udf"``
+    (default) evaluates the ``functions.predicate`` UDF inside the filter,
+    chained into one ArrowEvalPython node that reads only the two
+    geometry columns; ``"arrow"`` (intersects/within/contains/covers/
+    covered_by) routes the pairs through
+    ``operators.arrowpath.predicate_arrow``, a ``mapInArrow`` pass that
+    round-trips every column, for narrow keys-and-verdict consumers (see
+    ``predicate_arrow(keep=...)``). Identical results either way
+    (tests/test_arrowpath.py parity + the ``arrow_predicate`` query in
+    ``scripts/check_oracle.py``)."""
     if predicate not in _PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     if predicate == "dwithin" and distance is None:
         raise ValueError("dwithin requires distance=")
+    if exact not in ("udf", "arrow"):
+        raise ValueError(f"exact must be 'udf' or 'arrow', got {exact!r}")
+    if exact == "arrow" and predicate not in _ARROW_PREDICATES:
+        raise ValueError(
+            "exact='arrow' supports intersects/within/contains/"
+            f"covers/covered_by, got {predicate!r}")
+    if strategy not in ("auto", "cross", "prune"):
+        raise ValueError(f"strategy must be auto/cross/prune, got {strategy!r}")
+    if predicate == "disjoint":
+        strategy = "cross"
+    elif strategy == "auto":
+        strategy = _pick(left, right, on, lbox, rbox, broadcast, exact)
     from polars_st_spark.functions import predicate as P
 
-    if predicate == "disjoint":
-        # Pruning cannot help (non-overlap PROVES disjoint but overlapping
-        # boxes still need the exact check — nearly all pairs at typical
-        # selectivity) and a two-branch union would re-evaluate the join.
-        pairs = _suffixed(left, right, on, broadcast)
-        return pairs.where(P.st_disjoint(lcol, _rname(left, right, rcol)))
-
-    lb = _with_box(left, lcol, lbox, "l")
-    rb = _with_box(right, rcol, rbox, "r")
+    if strategy == "cross":
+        lb = left.where(F.col(lcol).isNotNull())
+        rb = right.where(F.col(rcol).isNotNull())
+        keep = None
+    else:
+        lb = _with_box(left, lcol, lbox, "l")
+        rb = _with_box(right, rcol, rbox, "r")
+        keep = _prune(predicate, F.col("_lbox"), F.col("_rbox"), distance)
+    broadcast = _broadcasts(rb, broadcast)
+    if keep is not None and on is None and not broadcast:
+        rb = rb.repartition("_rbox")
     pairs = _suffixed(lb, rb, on, broadcast)
     rgeom = _rname(lb, rb, rcol)
-
-    prune = _prune(predicate, F.col("_lbox"), F.col("_rbox"), distance)
     if exact == "arrow":
-        if predicate not in ("intersects", "within", "contains",
-                             "covers", "covered_by"):
-            raise ValueError(
-                "exact='arrow' supports intersects/within/contains/"
-                f"covers/covered_by, got {predicate!r}")
         from polars_st_spark.operators.arrowpath import predicate_arrow
 
-        survivors = pairs.where(prune).drop("_lbox", "_rbox")
-        out = predicate_arrow(survivors, lcol, rgeom, predicate=predicate,
-                              out_col="__pred")
-        return out.where(F.col("__pred")).drop("__pred")
-    if exact != "udf":
-        raise ValueError(f"exact must be 'udf' or 'arrow', got {exact!r}")
-    if predicate == "dwithin":
-        refine = P.st_dwithin(lcol, rgeom, float(distance))
+        if keep is not None:
+            pairs = pairs.where(keep).drop("_lbox", "_rbox")
+        out = predicate_arrow(pairs, lcol, rgeom, predicate=predicate, out_col="__pred")
+        out = out.where(F.col("__pred")).drop("__pred")
     else:
-        refine = getattr(P, f"st_{predicate}")(lcol, rgeom)
-    # One AND-filter: Catalyst's python-UDF extraction evaluates the bbox
-    # conjunct join-side (codegen) and places ArrowEvalPython after it, so
-    # only prune survivors reach Python. With one bounds pass per side the
-    # plan has 3 ArrowEvalPython nodes: 2 bounds + 1 refine (asserted in
-    # tests/test_plans.py).
-    return pairs.where(prune & refine).drop("_lbox", "_rbox")
+        if predicate == "dwithin":
+            refine = P.st_dwithin(lcol, rgeom, float(distance))
+        else:
+            refine = getattr(P, f"st_{predicate}")(lcol, rgeom)
+        # One AND-filter: Catalyst's python-UDF extraction evaluates the
+        # bbox conjunct join-side (codegen) and places ArrowEvalPython after
+        # it, so only prune survivors reach Python.
+        cond = refine if keep is None else keep & refine
+        out = pairs.where(cond).drop("_lbox", "_rbox")
+    out._chosen_strategy = strategy
+    return out
+
+
+_ARROW_PREDICATES = ("intersects", "within", "contains", "covers", "covered_by")
+_BROADCAST_BYTES = 64 * 1024 * 1024
+
+
+def _pick(left: DataFrame, right: DataFrame, on, lbox, rbox, broadcast, exact) -> str:
+    """``filter_pairs``' auto choice (see there), from plan statistics."""
+    if (on is not None or lbox is not None or rbox is not None
+            or broadcast is False or exact != "udf"):
+        return "prune"
+    size_l, rows_l = plan_stats(left)
+    size_r, rows_r = plan_stats(right)
+    if None in (size_l, rows_l, size_r, rows_r) or size_r > _BROADCAST_BYTES:
+        return "prune"
+    return "cross" if rows_l * size_r + rows_r * size_l <= _BROADCAST_BYTES else "prune"
+
+
+def _broadcasts(r: DataFrame, broadcast) -> bool:
+    if broadcast == "auto":
+        size, _ = plan_stats(r)
+        return size is not None and size <= _BROADCAST_BYTES
+    return bool(broadcast)
 
 
 def _rname(l: DataFrame, r: DataFrame, rcol: str) -> str:
     return rcol + "_right" if rcol in l.columns else rcol
 
 
-def _suffixed(l: DataFrame, r: DataFrame, on, broadcast) -> DataFrame:
+def _suffixed(l: DataFrame, r: DataFrame, on, broadcast: bool) -> DataFrame:
     clashes = [c for c in r.columns if c in l.columns]
     for c in clashes:
         r = r.withColumnRenamed(c, c + "_right")
-    return _cross_or_join(l, r, on, broadcast)
-
-
-def _cross_or_join(l: DataFrame, r: DataFrame, on, broadcast) -> DataFrame:
-    if broadcast == "auto":
-        size, _ = plan_stats(r)
-        broadcast = size is not None and size <= 64 * 1024 * 1024
     if broadcast:
         r = F.broadcast(r)
     return l.crossJoin(r) if on is None else l.join(r, on)

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["materialize_bbox", "bbox_filter", "push_window_filter", "explain_str",
-           "plan_stats", "bounded_fetch", "write_bucketed"]
+           "plan_stats", "bounded_fetch", "write_bucketed", "stages", "python_fanout"]
 
 BBOX_COLS = ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")
 
@@ -66,6 +66,48 @@ def push_window_filter(
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     """The formatted plan as a string (for assertions on pushdown/codegen)."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)  # type: ignore[attr-defined]
+
+
+PYTHON_NODES = ("ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
+                "MapInArrow", "MapInPandas", "FlatMapGroupsInArrow",
+                "FlatMapGroupsInPandas", "AggregateInPandas")
+
+
+def stages(df: DataFrame):
+    """The nodes of ``df``'s executed plan (the final adaptive plan once an
+    action ran on ``df``), one list per stage. A stage ends at an Exchange
+    or a BroadcastExchange; an InMemoryTableScan is a leaf (the plan it
+    caches ran in a job of its own). The nodes are JVM ``SparkPlan``
+    objects."""
+    def kids(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    roots = [df._jdf.queryExecution().executedPlan()]
+    while roots:
+        nodes, stack = [], [roots.pop()]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if name.startswith("AdaptiveSparkPlan"):
+                stack.append(node.executedPlan())
+            elif "QueryStage" in name:
+                roots.append(node.plan())
+            elif name in ("Exchange", "BroadcastExchange"):
+                roots.extend(kids(node))
+            else:
+                nodes.append(node)
+                stack.extend(kids(node))
+        yield nodes
+
+
+def python_fanout(df: DataFrame) -> int:
+    """Most Python nodes inside one stage of ``df``'s executed plan. Each
+    Python node of a stage holds a worker of its own in every task of that
+    stage, and the worker daemon keeps it for the rest of the session, so
+    this is the number of Python workers a stage needs per core."""
+    return max(sum(n.nodeName().startswith(PYTHON_NODES) for n in stage)
+               for stage in stages(df))
 
 
 def plan_stats(df: DataFrame) -> tuple[int | None, int | None]:

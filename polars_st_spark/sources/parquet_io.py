@@ -51,21 +51,30 @@ def write_geoparquet(
     At 100 TB the partition_grid is the difference between scanning every
     file and scanning only the files whose cells intersect a query window.
     """
+    df = _with_layout(df, geometry_name, partition_grid, zorder, extent, zorder_bits)
+    if partition_grid:
+        df.write.mode(mode).partitionBy("_cell_x", "_cell_y").parquet(path)
+    else:
+        df.write.mode(mode).parquet(path)
+
+
+def _with_layout(df: DataFrame, geometry_name: str, partition_grid: float | None,
+                 zorder: bool, extent, zorder_bits: int) -> DataFrame:
+    """The frame :func:`write_geoparquet` writes: ``df`` with its bbox
+    columns (one bounds pass), clustered and partitioned by them."""
+    df = materialize_bbox(df, geometry_name)
     if zorder:
         from polars_st_spark.functions.zorder import zorder_repartition
 
         df = zorder_repartition(
             df, geometry_name=geometry_name, extent=extent, bits=zorder_bits
         )
-    df = materialize_bbox(df, geometry_name)
     if partition_grid:
         df = (
             df.withColumn("_cell_x", F.floor(F.col(BBOX_COLS[0]) / partition_grid).cast("long"))
             .withColumn("_cell_y", F.floor(F.col(BBOX_COLS[1]) / partition_grid).cast("long"))
         )
-        df.write.mode(mode).partitionBy("_cell_x", "_cell_y").parquet(path)
-    else:
-        df.write.mode(mode).parquet(path)
+    return df
 
 
 def read_geoparquet(

@@ -7,6 +7,7 @@ aggregate must keep."""
 
 import datetime
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -142,8 +143,14 @@ def test_every_library_aggregate_in_one_agg_node(spark):
         st.st_collect("g"), st.st_polygonize_agg("g"), st.st_voronoi_polygons_agg("g"),
         st.st_delaunay_triangles_agg("g"))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    (node,) = [ln for ln in plan.splitlines() if "ArrowAggregatePython" in ln]
-    assert node.rstrip().endswith(", 252"), plan  # Arrow grouped agg, not pandas (202)
+    # one map-side and one final collect_list, shared by all nine UDFs,
+    # which run in one scalar Arrow node (250), not a grouped one (252)
+    assert "ArrowAggregatePython" not in plan, plan
+    (node,) = [ln for ln in plan.splitlines()
+               if "ArrowEvalPython" in ln and "list_agg(" in ln]
+    assert node.count("list_agg(") == 9 and node.rstrip().endswith(", 250"), plan
+    aggs = [ln for ln in plan.splitlines() if "ObjectHashAggregate" in ln]
+    assert len(aggs) == 2 and all(ln.count("collect_list(") == 1 for ln in aggs), plan
     (row,) = out.collect()
     assert all(v is not None for v in row)
 
@@ -166,3 +173,72 @@ def test_null_rows_across_batches_and_all_null_group(spark):
     assert out[1]["n"] == 6
     assert out[2]["w"] == "GEOMETRYCOLLECTION EMPTY"
     assert out[2]["a"] == 0.0
+
+
+_AGG_WKT = {
+    # a leading null, nulls between, overlapping and disjoint rectangles
+    1: [None, "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", None,
+        "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))", "POLYGON ((5 0, 6 0, 6 1, 5 1, 5 0))"],
+    2: [None, None],
+    # rectangles without nulls, SRID 4326
+    3: ["SRID=4326;POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+        "SRID=4326;POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))"],
+    # non-rectangles, SRID 4326, a null after the first row
+    4: ["SRID=4326;POLYGON ((0 0, 4 0, 2 3, 0 0))", None,
+        "SRID=4326;POLYGON ((1 0, 5 0, 3 3, 1 0))",
+        "SRID=4326;POLYGON ((0 1, 4 1, 2 4, 0 1))"],
+    # Z inputs
+    5: ["POLYGON Z ((0 0 1, 3 0 1, 3 3 1, 0 3 1, 0 0 1))",
+        "POLYGON Z ((1 1 2, 4 1 2, 4 4 2, 1 4 2, 1 1 2))"],
+    6: ["POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"],
+    7: ["LINESTRING (0 0, 2 0, 2 2)", "LINESTRING (2 2, 0 2, 0 0)", None],
+}
+
+
+def _agg_frame(spark):
+    """(k, EWKB) rows of ``_AGG_WKT`` in ONE partition, in listed order."""
+    from polars_st_spark.geo.wkb import to_ewkb
+    from polars_st_spark.geo.wkt import from_ewkt
+
+    rows = [(k, None if w is None else bytearray(to_ewkb(from_ewkt(w))))
+            for k, ws in _AGG_WKT.items() for w in ws]
+    return spark.createDataFrame(rows, "k long, g binary").coalesce(1)
+
+
+_LIST_AGGS = {
+    "st_union_all": {}, "st_intersection_all": {}, "st_difference_all": {},
+    "st_symmetric_difference_all": {}, "st_coverage_union_all": {},
+    "st_collect": {}, "st_polygonize_agg": {}, "st_voronoi_polygons_agg": {},
+    "st_delaunay_triangles_agg": {"only_edges": True},
+}
+
+
+def test_list_aggregates_match_grouped_aggregates(spark):
+    """Each aggregate's Column form (collect_list + one scalar Arrow UDF)
+    returns the bytes its grouped-aggregate form (the SQL form) returns on
+    the same kernel: over nulls (collect_list drops them before the
+    kernel), an all-null group, SRID and Z inputs, rectangle and
+    non-rectangle groups, and list batches of 3 groups, so most slices
+    start at a non-zero offset. A whole-frame aggregate over an empty
+    frame is one row holding the kernel's empty result (the grouped form
+    returns no row there)."""
+    from polars_st_spark.functions import agg as A
+
+    df = _agg_frame(spark)
+    empty = df.where(F.lit(False))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        for name, params in _LIST_AGGS.items():
+            listed = getattr(st, name)("g", **params).alias("v")
+            grouped = A.geom_agg(A.AGG_KERNELS[name], **params)(F.col("g")).alias("v")
+            got = df.groupBy("k").agg(listed).orderBy("k").collect()
+            want = df.groupBy("k").agg(grouped).orderBy("k").collect()
+            assert [r["k"] for r in got] == list(_AGG_WKT), name
+            for g, w in zip(got, want):
+                assert g["v"] is not None and bytes(g["v"]) == bytes(w["v"]), (name, g["k"])
+            (g,) = empty.select(listed, st.st_to_wkt(listed).alias("w")).collect()
+            assert bytes(g["v"]) == A.AGG_KERNELS[name](pa.array([], pa.binary()), **params)
+            assert g["w"].endswith(" EMPTY"), name
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

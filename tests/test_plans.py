@@ -5,7 +5,7 @@ the formatted plan, not on timings (VERDICT r1 plan-audit discipline)."""
 from pyspark.sql import functions as F
 
 import polars_st_spark as st
-from polars_st_spark.plans import explain_str
+from polars_st_spark.plans import explain_str, python_fanout, stages
 
 
 def _count(plan: str, token: str) -> int:
@@ -17,50 +17,10 @@ def _count(plan: str, token: str) -> int:
     )
 
 
-_PYTHON_NODES = ("ArrowEvalPython", "ArrowAggregatePython", "BatchEvalPython",
-                 "MapInArrow", "MapInPandas", "FlatMapGroupsInArrow",
-                 "FlatMapGroupsInPandas", "AggregateInPandas")
-
-
-def _stages(df):
-    """The nodes of ``df``'s executed plan (the final adaptive plan once an
-    action ran on ``df``), one list per stage. A stage ends at an Exchange
-    or a BroadcastExchange; an InMemoryTableScan is a leaf (the plan it
-    caches ran in a job of its own)."""
-    def kids(node):
-        seq = node.children()
-        return [seq.apply(i) for i in range(seq.size())]
-
-    roots = [df._jdf.queryExecution().executedPlan()]
-    while roots:
-        nodes, stack = [], [roots.pop()]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            if name.startswith("AdaptiveSparkPlan"):
-                stack.append(node.executedPlan())
-            elif "QueryStage" in name:
-                roots.append(node.plan())
-            elif name in ("Exchange", "BroadcastExchange"):
-                roots.extend(kids(node))
-            else:
-                nodes.append(node)
-                stack.extend(kids(node))
-        yield nodes
-
-
-def _python_fanout(df) -> int:
-    """Most Python nodes inside one stage of ``df``'s executed plan. Each
-    Python node of a stage holds a worker of its own in every task of that
-    stage, so this is the number of Python workers a stage needs per core."""
-    return max(sum(n.nodeName().startswith(_PYTHON_NODES) for n in stage)
-               for stage in _stages(df))
-
-
 def _scan_rows(df) -> int:
     """Rows the parquet scans of ``df``'s executed plan output."""
     return sum(n.metrics().apply("numOutputRows").value()
-               for stage in _stages(df) for n in stage
+               for stage in stages(df) for n in stage
                if n.nodeName().startswith("Scan parquet"))
 
 
@@ -103,12 +63,9 @@ def test_grid_sjoin_no_udf_duplication(spark):
     assert _count(plan, "ArrowEvalPython") <= 6
 
 
-def test_filter_pairs_one_bounds_pass_per_side(spark):
-    """filter_pairs plans exactly 3 ArrowEvalPython nodes: one bounds pass
-    per side and the refine. The bbox join condition rejects nulls, so
-    Catalyst infers isnotnull(_lbox)/isnotnull(_rbox) and pushes it below
-    the box projection; a deterministic bounds UDF was cloned into that
-    filter (5 nodes)."""
+def _rect_rows(spark, rows, schema):
+    """``(id, x0, y0, x1, y1)`` tuples -> a frame of ``(id, EWKB)`` built
+    from a Python list: Catalyst has no statistics for it."""
     import numpy as np
 
     from polars_st_spark.geo.types import Geometry, GeometryType
@@ -118,16 +75,54 @@ def test_filter_pairs_one_bounds_pass_per_side(spark):
         ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
         return (i, bytearray(to_ewkb(Geometry(GeometryType.Polygon, rings=[ring]))))
 
-    parcels = spark.createDataFrame(
-        [rect(i, i * 1.0, 0.0, i + 1.5, 1.0) for i in range(40)], "pid long, geom binary")
-    zones = spark.createDataFrame(
-        [rect(i, i * 10.0, -1.0, i * 10.0 + 4.0, 2.0) for i in range(4)], "zid long, geom binary")
+    return spark.createDataFrame([rect(*r) for r in rows], schema)
+
+
+def _parcels_zones(spark):
+    parcels = _rect_rows(spark, [(i, i * 1.0, 0.0, i + 1.5, 1.0) for i in range(40)],
+                         "pid long, geom binary")
+    zones = _rect_rows(spark, [(i, i * 10.0, -1.0, i * 10.0 + 4.0, 2.0) for i in range(4)],
+                       "zid long, geom binary")
+    want = sum(1 for i in range(40) for z in range(4)
+               if i <= z * 10.0 + 4.0 and z * 10.0 <= i + 1.5)
+    return parcels, zones, want
+
+
+def _python_rows(df, token: str) -> list[int]:
+    """Rows each Python node of ``df``'s executed plan whose description
+    holds ``token`` received, one entry per node."""
+    return [n.metrics().apply("pythonNumRowsReceived").value()
+            for stage in stages(df) for n in stage
+            if n.nodeName().startswith("ArrowEvalPython") and token in n.simpleString(25)]
+
+
+def test_filter_pairs_one_bounds_pass_per_side(spark):
+    """filter_pairs plans exactly 3 ArrowEvalPython nodes: one bounds pass
+    per side and the refine. The bbox join condition rejects nulls, so
+    Catalyst infers isnotnull(_lbox)/isnotnull(_rbox) and pushes it below
+    the box projection; a deterministic bounds UDF was cloned into that
+    filter (5 nodes)."""
+    parcels, zones, want = _parcels_zones(spark)
     out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom", rcol="geom")
     plan = explain_str(out)
     assert _count(plan, "ArrowEvalPython") == 3, plan
-    assert out.count() == sum(
-        1 for i in range(40) for z in range(4)
-        if i <= z * 10.0 + 4.0 and z * 10.0 <= i + 1.5)
+    assert out.count() == want
+
+
+def test_filter_pairs_without_statistics_bounds_right_side_once(spark):
+    """Inputs Catalyst cannot size take the prune plan, and the right side
+    is not broadcast: the cross join is a CartesianProduct, which reads
+    its right side once per left partition. The boxed right side is
+    repartitioned, so its bounds pass runs once in a map stage of its own
+    (4 rows in) and the product's stage holds the left bounds pass and
+    the refine: fan-out 2, not 3."""
+    parcels, zones, want = _parcels_zones(spark)
+    out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom", rcol="geom")
+    assert out._chosen_strategy == "prune"
+    assert len(out.collect()) == want
+    assert "CartesianProduct" in explain_str(out)
+    assert python_fanout(out) == 2
+    assert sorted(_python_rows(out, "_bounds_udf(geom#")) == [4, 40]
 
 
 def _rects(spark, n=200):
@@ -166,7 +161,7 @@ def test_geoparquet_bbox_read_one_python_node(spark, tmp_path):
               "LessThanOrEqual(bbox_ymin,24.0)", "GreaterThanOrEqual(bbox_ymax,7.0)"):
         assert c in pushed, pushed
     rows = out.collect()
-    assert _python_fanout(out) == 1
+    assert python_fanout(out) == 1
     assert {r["id"] for r in rows} == _in_window(src.collect(), window)
     assert {r["a"] for r in rows} == {6.0}
 
@@ -209,19 +204,100 @@ def test_geoparquet_zorder_bbox_read_scans_fewer_rows(spark, tmp_path):
     assert len(rows) <= _scan_rows(out) < 400
 
 
+def test_geoparquet_zorder_write_one_bounds_pass(spark):
+    """write_geoparquet(zorder=True) derives the Z-order key from the bbox
+    columns it writes: the frame it writes evaluates st_bounds once."""
+    from polars_st_spark.sources.parquet_io import _with_layout
+
+    out = _with_layout(_rects(spark, 400), "geometry", None, True,
+                       (0.0, 0.0, 100.0, 100.0), 16)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert sum(ln.count("_bounds_udf(") for ln in plan.splitlines()
+               if "ArrowEvalPython" in ln) == 1, plan
+    assert "Exchange rangepartitioning" in plan, plan
+
+
 def test_filter_pairs_python_fanout_is_two(spark, tmp_path):
-    """filter_pairs with a broadcast right side: the streamed side chains
-    its bounds pass and the refine in one stage, two Python workers per
-    core. Breaking the chain needs a shuffle or a driver fetch; a change
-    that does so updates this pin on purpose."""
+    """The prune plan with a broadcast right side: the streamed side
+    chains its bounds pass and the refine in one stage, two Python workers
+    per core. Small pair sets take the cross plan instead (one node, see
+    test_join_agg_shapes_one_python_node_per_stage)."""
     path = str(tmp_path / "rects")
     _rects(spark, 60).write.parquet(path)
     rects = spark.read.parquet(path)
     parcels = rects.select(F.col("id").alias("pid"), "geometry")
     zones = rects.where(F.col("id") < 4).select(F.col("id").alias("zid"), "geometry")
-    out = st.filter_pairs(parcels, zones, predicate="intersects")
+    out = st.filter_pairs(parcels, zones, predicate="intersects", strategy="prune")
     assert sorted((r.pid, r.zid) for r in out.collect()) == [(i, i) for i in range(4)]
-    assert _python_fanout(out) == 2
+    assert python_fanout(out) == 2
+
+
+def _local(spark, n, key, x0=0.0, pitch=1.0):
+    """``n`` unit squares at ``x0 + i * pitch`` as a local (Arrow-built)
+    frame: Catalyst knows its size and row count."""
+    import numpy as np
+    import pyarrow as pa
+
+    from polars_st_spark.geo.types import Geometry, GeometryType
+    from polars_st_spark.geo.wkb import to_ewkb
+
+    def square(x):
+        ring = np.array([[x, 0.0], [x + 1.5, 0.0], [x + 1.5, 1.0], [x, 1.0], [x, 0.0]])
+        return to_ewkb(Geometry(GeometryType.Polygon, rings=[ring]))
+
+    return spark.createDataFrame(pa.table({
+        key: pa.array(range(n), pa.int64()),
+        "grp": pa.array([i % 5 for i in range(n)], pa.int64()),
+        "geom": pa.array([square(x0 + i * pitch) for i in range(n)], pa.binary())}))
+
+
+def test_join_agg_shapes_one_python_node_per_stage(spark):
+    """Each join_agg query shape runs one Python node per stage: a grouped
+    union (single and two-phase) or intersection_all followed by st_area
+    (the aggregate's UDF and st_area chain in one ArrowEvalPython node
+    above the collect_list), and filter_pairs over a small cross (the
+    cross plan: one refine node)."""
+    from polars_st_spark.operators.grouped import union_all_grouped, union_all_two_phase
+
+    parcels = _local(spark, 40, "pid").cache()
+    zones = _local(spark, 4, "zid", pitch=10.0).cache()
+
+    def area_sum(d, col):
+        return d.select(st.st_area(col).alias("a")).agg(F.count(F.lit(1)), F.sum("a"))
+
+    single = union_all_grouped(parcels, ["grp"], "geom")
+    assert single._chosen_strategy == "single"
+    shapes = [
+        area_sum(single, "union_geom"),
+        area_sum(union_all_two_phase(parcels, ["grp"], "geom"), "union_geom"),
+        area_sum(parcels.groupBy("grp").agg(st.st_intersection_all("geom").alias("g")), "g"),
+    ]
+    pairs = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom", rcol="geom")
+    assert pairs._chosen_strategy == "cross"
+    shapes.append(pairs.agg(F.count(F.lit(1))))
+    for d in shapes:
+        d.collect()
+        assert python_fanout(d) == 1, explain_str(d)
+    assert pairs.count() == sum(1 for i in range(40) for z in range(4)
+                                if i <= z * 10.0 + 1.5 and z * 10.0 <= i + 1.5)
+
+
+def test_filter_pairs_prunes_when_pairs_exceed_broadcast_guard(spark):
+    """Two sized sides whose pair payload (rows_l * size_r + rows_r *
+    size_l) exceeds 64 MB take the prune plan; the same sides cut to 40
+    rows take the cross plan. No job runs to decide."""
+    from polars_st_spark.plans import plan_stats
+
+    big = _local(spark, 3000, "pid")
+    (size, rows) = plan_stats(big)
+    assert rows == 3000 and 2 * rows * size > 64 * 1024 * 1024
+    out = st.filter_pairs(big, big.withColumnRenamed("pid", "zid"), lcol="geom", rcol="geom")
+    assert out._chosen_strategy == "prune"
+    assert _count(explain_str(out), "ArrowEvalPython") == 3
+    small = big.limit(40)
+    out = st.filter_pairs(small, small.withColumnRenamed("pid", "zid"), lcol="geom", rcol="geom")
+    assert out._chosen_strategy == "cross"
+    assert _count(explain_str(out), "ArrowEvalPython") == 1
 
 
 def _ancestors(plan: str, token: str) -> list[str]:
@@ -241,21 +317,12 @@ def test_filter_pairs_later_filter_reaches_scan(spark, tmp_path):
     """A filter on a left column after filter_pairs is pushed through the
     join and below the left bounds pass, down to the parquet scan: the
     bounds UDF only sees the rows that survive it."""
-    import numpy as np
-
-    from polars_st_spark.geo.types import Geometry, GeometryType
-    from polars_st_spark.geo.wkb import to_ewkb
-
-    def rect(i, x0, x1):
-        ring = np.array([[x0, 0.0], [x1, 0.0], [x1, 1.0], [x0, 1.0], [x0, 0.0]])
-        return (i, bytearray(to_ewkb(Geometry(GeometryType.Polygon, rings=[ring]))))
-
     path = str(tmp_path / "parcels")
-    spark.createDataFrame([rect(i, i * 1.0, i + 1.5) for i in range(40)],
-                          "pid long, geom binary").write.parquet(path)
+    _rect_rows(spark, [(i, i * 1.0, 0.0, i + 1.5, 1.0) for i in range(40)],
+               "pid long, geom binary").write.parquet(path)
     parcels = spark.read.parquet(path)
-    zones = spark.createDataFrame([rect(i, i * 10.0, i * 10.0 + 4.0) for i in range(4)],
-                                  "zid long, geom binary")
+    zones = _rect_rows(spark, [(i, i * 10.0, 0.0, i * 10.0 + 4.0, 1.0) for i in range(4)],
+                       "zid long, geom binary")
     out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom",
                           rcol="geom").where(F.col("pid") < 5)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -303,7 +370,7 @@ def test_geoparquet_pushdown(spark, tmp_path):
     # Python node
     assert {r["id"] for r in filtered.collect()} == {
         i for i in range(100) if 2 <= i % 10 <= 6 and 2 <= i % 7 <= 6}
-    assert _python_fanout(filtered) == 1
+    assert python_fanout(filtered) == 1
 
 
 def test_dedup_sig_single_pass_with_cache(spark):

@@ -62,14 +62,16 @@ def _pairset(df):
 def test_matches_naive(spark, sides, predicate):
     left, right = sides
     expected = _pairset(_naive(spark, left, right, predicate))
-    got_derived = _pairset(filter_pairs(left, right, predicate, lcol="g", rcol="g"))
+    for strategy in ("auto", "cross", "prune"):
+        got_derived = _pairset(filter_pairs(left, right, predicate, lcol="g", rcol="g",
+                                            strategy=strategy))
+        assert got_derived == expected, strategy
     got_native = _pairset(
         filter_pairs(
             left, right, predicate, lcol="g", rcol="g",
             lbox=("x0", "y0", "x1", "y1"), rbox=("a0", "b0", "a1", "b1"),
         )
     )
-    assert got_derived == expected
     assert got_native == expected
 
 
@@ -122,8 +124,27 @@ def test_prune_below_python(spark, sides):
     assert final_filter, plan
 
 
+def test_strategy_choice(spark, sides):
+    """auto takes the cross plan for two small sized sides, and the prune
+    plan with native boxes, an equi-join or the arrow lane; disjoint is
+    always a cross."""
+    left, right = sides
+    kw = dict(lcol="g", rcol="g")
+    assert filter_pairs(left, right, **kw)._chosen_strategy == "cross"
+    assert filter_pairs(left, right, lbox=("x0", "y0", "x1", "y1"),
+                        **kw)._chosen_strategy == "prune"
+    assert filter_pairs(left, right, on=F.col("lid") == F.col("rid"),
+                        **kw)._chosen_strategy == "prune"
+    assert filter_pairs(left, right, exact="arrow", **kw)._chosen_strategy == "prune"
+    assert filter_pairs(left, right, broadcast=False, **kw)._chosen_strategy == "prune"
+    assert filter_pairs(left, right, "disjoint", strategy="prune",
+                        **kw)._chosen_strategy == "cross"
+
+
 def test_validation(spark, sides):
     left, right = sides
+    with pytest.raises(ValueError, match="strategy"):
+        filter_pairs(left, right, "intersects", lcol="g", rcol="g", strategy="nope")
     with pytest.raises(ValueError, match="unknown predicate"):
         filter_pairs(left, right, "nope", lcol="g", rcol="g")
     with pytest.raises(ValueError, match="distance"):

@@ -234,15 +234,20 @@ def test_sql_per_row_parameter_dispatch(sql_ready):
 
 
 def test_sql_aggregates_in_group_by(sql_ready):
-    got = sql_ready.sql("""
+    """SQL GROUP BY runs the aggregates as Arrow grouped-aggregate UDFs
+    (evalType 252): Spark rejects a SQL function that wraps an aggregate,
+    so the Column API's collect_list form is not registered."""
+    sql = sql_ready.sql("""
         SELECT k % 2 AS b, st_area(st_union_all(rect)) AS a,
                st_count_geometries(st_collect(pt)) AS n
         FROM sqlreg_t GROUP BY k % 2 ORDER BY b
-    """).collect()
-    import pyspark.sql.functions as _F
-
+    """)
+    plan = sql._jdf.queryExecution().executedPlan().toString()
+    (node,) = [ln for ln in plan.splitlines() if "ArrowAggregatePython" in ln]
+    assert node.rstrip().endswith(", 252"), plan
+    got = sql.collect()
     ref = (sql_ready.table("sqlreg_t")
-           .groupBy((_F.col("k") % 2).alias("b"))
+           .groupBy((F.col("k") % 2).alias("b"))
            .agg(st.st_area(st.st_union_all("rect")).alias("a"),
                 st.st_count_geometries(st.st_collect("pt")).alias("n"))
            .orderBy("b").collect())
