@@ -95,27 +95,29 @@ def zorder_repartition(
 
     ``extent`` defaults to the dataset's total bounds (one extra aggregation
     job — pass it explicitly in pipelines that already know it). The key
-    column is dropped unless ``key_name`` is given. A frame that carries
-    the ``plans.BBOX_COLS`` columns (``plans.materialize_bbox``) keys on
-    them, with no bounds pass of its own. Written with its bbox columns
-    (``write_geoparquet(zorder=True)``), each file's row groups get tight
-    bbox min/max stats; ``read_geoparquet(bbox=...)`` then skips
+    column is dropped unless ``key_name`` is given. Written with its bbox
+    columns (``write_geoparquet(zorder=True)``), each file's row groups get
+    tight bbox min/max stats; ``read_geoparquet(bbox=...)`` then skips
     non-overlapping row groups via ordinary parquet stats pruning — no
     spatial index structure needed.
     """
-    from polars_st_spark.plans import BBOX_COLS
+    from polars_st_spark.functions.scalar import st_bounds
 
-    if set(BBOX_COLS) <= set(df.columns):
-        x0, y0, x1, y1 = (F.col(c) for c in BBOX_COLS)
-    else:
-        from polars_st_spark.functions.scalar import st_bounds
+    return _zorder_by_box(df, st_bounds(geometry_name), extent, bits,
+                          num_partitions, key_name)
 
-        b = st_bounds(geometry_name)
-        x0, y0, x1, y1 = b[0], b[1], b[2], b[3]
+
+def _zorder_by_box(df, box, extent, bits, num_partitions=None, key_name=None):
+    """:func:`zorder_repartition` keyed on the center of ``box``, each
+    row's ``[xmin, ymin, xmax, ymax]`` array — ``write_geoparquet`` passes
+    the ``plans.BBOX_COLS`` it just materialised, so the key costs no
+    bounds pass of its own."""
     if extent is None:
-        row = df.select(
-            F.min(x0).alias("x0"), F.min(y0).alias("y0"),
-            F.max(x1).alias("x1"), F.max(y1).alias("y1"),
+        row = df.select(box.alias("_b")).select(
+            F.min(F.col("_b")[0]).alias("x0"),
+            F.min(F.col("_b")[1]).alias("y0"),
+            F.max(F.col("_b")[2]).alias("x1"),
+            F.max(F.col("_b")[3]).alias("y1"),
         ).first()
         extent = (row["x0"], row["y0"], row["x1"], row["y1"])
         if extent[0] is None:
@@ -123,7 +125,7 @@ def zorder_repartition(
         if extent[2] <= extent[0] or extent[3] <= extent[1]:
             # degenerate extent (single location): nothing to cluster by
             return df
-    key = zorder_key_xy((x0 + x1) / 2, (y0 + y1) / 2, extent, bits)
+    key = zorder_key_xy((box[0] + box[2]) / 2, (box[1] + box[3]) / 2, extent, bits)
     tmp = key_name or "_zkey"
     out = df.withColumn(tmp, key)
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism

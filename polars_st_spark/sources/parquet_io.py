@@ -64,11 +64,9 @@ def _with_layout(df: DataFrame, geometry_name: str, partition_grid: float | None
     columns (one bounds pass), clustered and partitioned by them."""
     df = materialize_bbox(df, geometry_name)
     if zorder:
-        from polars_st_spark.functions.zorder import zorder_repartition
+        from polars_st_spark.functions.zorder import _zorder_by_box
 
-        df = zorder_repartition(
-            df, geometry_name=geometry_name, extent=extent, bits=zorder_bits
-        )
+        df = _zorder_by_box(df, F.array(*BBOX_COLS), extent, zorder_bits)
     if partition_grid:
         df = (
             df.withColumn("_cell_x", F.floor(F.col(BBOX_COLS[0]) / partition_grid).cast("long"))

@@ -115,9 +115,20 @@ def test_filter_pairs_without_statistics_bounds_right_side_once(spark):
     its right side once per left partition. The boxed right side is
     repartitioned, so its bounds pass runs once in a map stage of its own
     (4 rows in) and the product's stage holds the left bounds pass and
-    the refine: fan-out 2, not 3."""
+    the refine: fan-out 2, not 3. The repartition keeps
+    defaultParallelism partitions whatever spark.sql.shuffle.partitions
+    is, so the product does not run one task per shuffle partition."""
     parcels, zones, want = _parcels_zones(spark)
-    out = st.filter_pairs(parcels, zones, predicate="intersects", lcol="geom", rcol="geom")
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        out = st.filter_pairs(parcels, zones, predicate="intersects",
+                              lcol="geom", rcol="geom")
+        plan = explain_str(out)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    n = spark.sparkContext.defaultParallelism
+    assert f", {n}), REPARTITION_BY_NUM" in plan, plan
     assert out._chosen_strategy == "prune"
     assert len(out.collect()) == want
     assert "CartesianProduct" in explain_str(out)
@@ -220,14 +231,17 @@ def test_geoparquet_zorder_write_one_bounds_pass(spark):
 def test_filter_pairs_python_fanout_is_two(spark, tmp_path):
     """The prune plan with a broadcast right side: the streamed side
     chains its bounds pass and the refine in one stage, two Python workers
-    per core. Small pair sets take the cross plan instead (one node, see
+    per core. Parquet reads take that plan: Catalyst sizes them but has no
+    row count for them. Sides with a row count and a small pair payload
+    take the cross plan instead (one node, see
     test_join_agg_shapes_one_python_node_per_stage)."""
     path = str(tmp_path / "rects")
     _rects(spark, 60).write.parquet(path)
     rects = spark.read.parquet(path)
     parcels = rects.select(F.col("id").alias("pid"), "geometry")
     zones = rects.where(F.col("id") < 4).select(F.col("id").alias("zid"), "geometry")
-    out = st.filter_pairs(parcels, zones, predicate="intersects", strategy="prune")
+    out = st.filter_pairs(parcels, zones, predicate="intersects")
+    assert out._chosen_strategy == "prune"
     assert sorted((r.pid, r.zid) for r in out.collect()) == [(i, i) for i in range(4)]
     assert python_fanout(out) == 2
 
